@@ -5,9 +5,11 @@ import org.apache.spark.sql.SparkSession
 /** Dev-only plan dumper for the optimization-round deliverables: writes
   * `.explain("formatted")` of each named query's RETURNED DataFrame to
   * `<outDir>/<name>.txt`. For the engine queries the returned plan is the
-  * final table read; their interesting internal per-epoch merge plans are
-  * captured separately via SPARK_GRAFT_EXPLAIN=1 (MergeEngine prints the
-  * executed merge plan per epoch) with stderr redirected to a file.
+  * final table read; their per-epoch merge plans run inside the epoch's
+  * write, so capture them with a `QueryExecutionListener` registered on
+  * the session (each write's `qe.executedPlan`; see ReplayEndToEndSpec).
+  * The `EpochCommitted` event says which plan shape each epoch took
+  * (`dedupMode`, `aqe`, `aligned`).
   * Usage: runMain graft.PlanDump <outDir> [name,...] */
 object PlanDump {
   def main(args: Array[String]): Unit = {

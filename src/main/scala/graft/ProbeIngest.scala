@@ -5,13 +5,14 @@ import graft.table.IceTable
 import org.apache.spark.sql.SparkSession
 
 /**
- * Dev-only ingest-leg profiler (guide §1.4). NOT a round artifact —
- * `graft.Bench` stays the frozen measurement contract; this main exists so
- * the ingest legs' per-epoch fixed cost can be phase-timed
- * (SPARK_GRAFT_TIMING=1 prints dedup+stats / merge+write / publish /
- * footer-stats / commit from inside MergeEngine.applyEpoch) without
- * touching Bench. Mirrors one scaling leg exactly: same session confs,
- * same warmup, same LogSpec workload, same epoch slicing.
+ * Dev-only ingest-leg profiler. NOT a round artifact — `graft.Bench` stays
+ * the frozen measurement contract; this main exists so the ingest legs'
+ * per-epoch fixed cost can be phase-timed without touching Bench: it
+ * registers the console metrics reporter, which prints every
+ * `EpochCommitted` event with its per-stage wall times (`<stage>Ms` for
+ * each of MergeEngine.Stages, plus writeJobMs / publishMs / footerStatsMs)
+ * and the dedup mode it chose. Mirrors one scaling leg exactly: same
+ * session confs, same warmup, same LogSpec workload, same epoch slicing.
  * Envs: SPARK_GRAFT_PROBE_CORES (8), SPARK_GRAFT_BENCH_EVENTS (16M),
  * SPARK_GRAFT_BENCH_EPOCHS (2), SPARK_GRAFT_PROBE_REPS (1).
  */
@@ -44,6 +45,7 @@ object ProbeIngest {
       } finally
         org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
     }
+    graft.metrics.Metrics.addReporter(new graft.metrics.Metrics.ConsoleReporter)
     (1 to reps).foreach { rep =>
       val dir = java.nio.file.Files.createTempDirectory("graft-probe")
       try {

@@ -164,8 +164,6 @@ object ReplayJob {
         nLogPartitions, stateDir.map(d => s"$d/quarantine"),
         claimedRange = Some((lo, hi)))
       val secs = (System.nanoTime() - t0) / 1e9
-      if (sys.env.get("SPARK_GRAFT_TIMING").contains("1"))
-        System.err.println(f"[timing] epoch $epochId total $secs%.3f s")
       stateDir.foreach { d =>
         if (!out.skipped) {
           MergeEngine.writeLineage(spark, d, epochId, prev,

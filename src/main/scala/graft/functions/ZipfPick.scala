@@ -7,7 +7,7 @@ import org.apache.spark.sql.types.{DataType, IntegerType, LongType}
 
 /**
  * Zipf-rank pick for the deterministic generator as a native codegen
- * Expression: `pickZipf(cdf, unit(h))` — uniform-in-[0,1) from the hash's
+ * Expression: `pick(h, cdf)` — uniform-in-[0,1) from the hash's
  * top 53 bits, then a BINARY SEARCH over the precomputed CDF. The pure-
  * Column formulation (`size(filter(cdfArr, c => c < u))`) evaluates the
  * predicate for EVERY CDF entry per row and, because Catalyst does not CSE
@@ -53,12 +53,14 @@ case class ZipfPick(child: Expression, cdf: Seq[Double])
 
 object ZipfPick {
 
-  /** EXACTLY ChangeLogGen.eventAt's `pickZipf(cdf, unit(h))`: same
-    * top-53-bit uniform, same insertion-point handling — bit-identical
-    * rank selection (GeneratorParitySpec holds the two to equality). */
+  /** Uniform double in [0, 1) from a hash's top 53 bits. */
+  def unit(h: Long): Double = (h >>> 11).toDouble / (1L << 53).toDouble
+
+  /** The generator's repo-rank pick: ChangeLogGen.eventAt calls this same
+    * function, so the row and expression generators agree by construction
+    * (GeneratorParitySpec stays as the backstop). */
   def pick(h: Long, cdf: Array[Double]): Int = {
-    val u = (h >>> 11).toDouble / (1L << 53).toDouble
-    val i = java.util.Arrays.binarySearch(cdf, u)
+    val i = java.util.Arrays.binarySearch(cdf, unit(h))
     if (i >= 0) i else math.min(cdf.length - 1, -i - 1)
   }
 

@@ -1,5 +1,7 @@
 package graft.log
 
+import graft.functions.ZipfPick
+import graft.functions.ZipfPick.unit
 import graft.model.ChangeEvent
 import org.apache.spark.sql.{Dataset, SparkSession}
 
@@ -37,9 +39,6 @@ object ChangeLogGen {
     x ^ (x >>> 31)
   }
 
-  /** Uniform double in [0, 1) from a hash. */
-  private def unit(h: Long): Double = (h >>> 11).toDouble / (1L << 53).toDouble
-
   private val wordList: Array[String] = Array(
     "def", "class", "object", "val", "var", "match", "case", "import",
     "return", "public", "static", "void", "int", "string", "map", "list",
@@ -61,15 +60,10 @@ object ChangeLogGen {
     cdf
   }
 
-  private def pickZipf(cdf: Array[Double], u: Double): Int = {
-    val i = java.util.Arrays.binarySearch(cdf, u)
-    if (i >= 0) i else math.min(cdf.length - 1, -i - 1)
-  }
-
   /** The pure per-sequence event function. */
   def eventAt(spec: LogSpec, cdf: Array[Double], seq: Long): ChangeEvent = {
     val h0 = mix64(spec.seed ^ seq)
-    val repoIdx = pickZipf(cdf, unit(h0))
+    val repoIdx = ZipfPick.pick(h0, cdf)
     val h1 = mix64(h0 ^ 0x51L)
     val pathIdx = ((h1 >>> 17) % spec.nPathsPerRepo).toInt
     val h2 = mix64(h1 ^ 0x52L)

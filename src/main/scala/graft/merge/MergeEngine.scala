@@ -1,20 +1,20 @@
 package graft.merge
 
 import graft.model._
-import graft.pipeline.RowPolicies
+import graft.pipeline.{RowPolicies, TaskPolicies}
 import graft.table.{IceTable, SchemaRegistry}
-import org.apache.spark.sql.{Column, Dataset, Observation, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, GraftSqlBridge,
+  Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
 /**
- * Epoch apply: quality-check → offset-interval fence → key dedup →
- * seq-aware copy-on-write MERGE into the IceTable → atomic manifest commit.
- *
- * This is the Spark-native re-expression of the reference's task dataflow
- * (extractor → converters → row-quality → writer → publisher,
- * gobblin-runtime/.../StreamModelTaskRunner.java:79-170) collapsed into one
- * declarative plan per epoch, with Gobblin's commit machinery
+ * Epoch apply as named stages: scope → admit (converters, row policies,
+ * offset-interval fence) → dedup → claims → layout → write (seq-aware
+ * copy-on-write MERGE into the IceTable) → commit. This is the Spark-native
+ * re-expression of the reference's task dataflow (extractor → converters →
+ * row-quality → writer → publisher, gobblin-runtime/.../
+ * StreamModelTaskRunner.java:79-170), with Gobblin's commit machinery
  * (FineGrainedWatermarkTracker + IcebergMetadataWriter.flush) replaced by a
  * single atomic snapshot commit whose manifest carries the committed
  * per-partition offset ranges (the replay fence).
@@ -31,13 +31,9 @@ import org.apache.spark.storage.StorageLevel
  *    job purges them once the log horizon passes (SURVEY.md §2.9).
  *
  * Scale notes (designed for 1000 executors / 100 TB):
- *  - Dedup is two-phase argmax: a 24-byte-per-key envelope aggregate (the
- *    payload columns are pruned out of the scan) plus a broadcast winner
- *    join — no payload bytes ever shuffle. Falls back to a single-shuffle
- *    max_by(struct) hash aggregate (map-side combined, NOT a window sort)
- *    when the winner set is too large to broadcast. Either way a hot key
- *    collapses map-side, so Zipf skew costs one combined row per task,
- *    not a skewed reducer.
+ *  - Every dedup mode (see dedupWinners) is a hash aggregate that combines
+ *    map-side, so Zipf skew costs one combined row per task, not a skewed
+ *    reducer.
  *  - The MERGE join runs only over buckets the epoch touches (bucket pruning
  *    via the manifest file list); untouched buckets' files carry forward by
  *    reference — rewrite amplification is bounded by bucket width.
@@ -46,26 +42,42 @@ import org.apache.spark.storage.StorageLevel
  */
 object MergeEngine {
 
-  private val timing = sys.env.get("SPARK_GRAFT_TIMING").contains("1")
-
-  /** winner sets up to this ESTIMATED SIZE (key bytes + per-row overhead)
-    * dedup via broadcast argmax join; larger epochs fall back to the shuffle
-    * max_by aggregate. Bytes-based, not row-count-based: 2M long-string keys
-    * would be a multi-hundred-MB broadcast (driver/executor OOM risk at 1000
-    * executors) while 2M short keys are fine — the decision must follow the
-    * actual payload. Conf `spark.graft.maxBroadcastBytes` overrides per
-    * session (also how the fallback path is forced under test). */
+  /** winner sets up to this ESTIMATED SIZE (key octets + per-row overhead)
+    * dedup via broadcast join; larger ones fall back to the shuffle max_by.
+    * Bytes, not rows: 2M long-string keys would be a multi-hundred-MB
+    * broadcast (OOM risk at 1000 executors) while 2M short keys are fine.
+    * Conf `spark.graft.maxBroadcastBytes` (also forces the fallback in tests). */
   private def maxBroadcastBytes(spark: SparkSession): Long =
     spark.conf.getOption("spark.graft.maxBroadcastBytes")
-      .orElse(sys.env.get("SPARK_GRAFT_MAX_BCAST_BYTES"))
       .map(_.toLong).getOrElse(67108864L) // 64 MB
-  private def timed[T](name: String)(f: => T): T =
-    if (!timing) f else {
+
+  /** the change-event columns the merge carries, in winner-struct order */
+  private val EventCols = Seq("op", "seq", "commit", "lang", "content")
+
+  /** LWW order among one key's events: the highest seq wins, and same-seq
+    * duplicates (at-least-once redelivery inside one batch, which the fence
+    * cannot see) resolve by the lexicographic max of the rest. Every dedup
+    * mode orders by this one list, so the mode an epoch lands in can never
+    * change the table. */
+  private val LwwOrder = Seq("seq", "commit", "op", "lang", "content")
+
+  /** a key group's LWW winner, as a struct of [[EventCols]] */
+  private def lwwMaxBy: Column =
+    max_by(struct(EventCols.map(col): _*), struct(LwwOrder.map(col): _*))
+
+  /** The named stages of [[applyEpoch]], in order. Every `EpochCommitted`
+    * event carries each stage's wall time as `<stage>Ms`. */
+  val Stages: Seq[String] =
+    Seq("scope", "admit", "dedup", "claims", "layout", "write", "commit")
+
+  private final class StageClock {
+    private val nanos = scala.collection.mutable.Map(Stages.map(_ -> 0L): _*)
+    def apply[T](stage: String)(f: => T): T = {
       val t0 = System.nanoTime()
-      val r = f
-      System.err.println(f"[timing] $name ${(System.nanoTime() - t0) / 1e9}%.3f s")
-      r
+      try f finally nanos(stage) += System.nanoTime() - t0
     }
+    def millis: Seq[(String, Long)] = Stages.map(s => s -> nanos(s) / 1000000L)
+  }
 
   final case class EpochOutcome(
       manifest: EpochManifest,
@@ -209,12 +221,20 @@ object MergeEngine {
     throw new IllegalStateException("unreachable")
   }
 
+  /** What an epoch did beyond its counters: dedup mode (`payload`,
+    * `broadcast` or `shuffle`), AQE on/off, bucket-aligned target scan,
+    * touched-bucket files skipped by stats, and the write's files and time. */
+  private final case class EpochFacts(dedupMode: String, aqe: Boolean,
+      aligned: Boolean = false, filesSkipped: Int = 0,
+      write: IceTable.EpochWrite = IceTable.EpochWrite(Nil, 0L, 0L, 0L))
+
   /** post-commit tracking event (gobblin-metrics GobblinTrackingEvent
     * analog; see graft.metrics.Metrics) — emitted AFTER the snapshot is
     * durable, so external consumers never see an event for a snapshot that
     * does not exist. No reporters registered ⇒ nothing is built. */
   private def emitCommitEvent(table: IceTable, m: EpochManifest,
-      st: EpochStats, skipped: Boolean): Unit =
+      st: EpochStats, skipped: Boolean, facts: EpochFacts,
+      clock: StageClock): Unit =
     graft.metrics.Metrics.emit("graft.ingest", "EpochCommitted", Map(
       "table" -> table.dir,
       "epochId" -> m.epochId.toString,
@@ -226,7 +246,49 @@ object MergeEngine {
       "dedupDrops" -> st.dedupDrops.toString,
       "rowsApplied" -> st.rowsApplied.toString,
       "deletesApplied" -> st.deletesApplied.toString,
-      "staleDrops" -> st.staleDrops.toString))
+      "staleDrops" -> st.staleDrops.toString,
+      "dedupMode" -> facts.dedupMode,
+      "aqe" -> facts.aqe.toString,
+      "aligned" -> facts.aligned.toString,
+      "filesSkipped" -> facts.filesSkipped.toString,
+      "filesWritten" -> facts.write.files.size.toString,
+      "writeJobMs" -> facts.write.writeJobMs.toString,
+      "publishMs" -> facts.write.publishMs.toString,
+      "footerStatsMs" -> facts.write.footerStatsMs.toString) ++
+      clock.millis.map { case (s, ms) => s"${s}Ms" -> ms.toString })
+
+  /** The epoch's parent and the plan policy its declared size selects. */
+  private final case class Scope(parent: Option[EpochManifest],
+      nBuckets: Int, tiny: Boolean, aqe: Boolean) {
+    def parentVersion: Long = parent.map(_.version).getOrElse(-1L)
+    def schemaId: Int =
+      parent.map(_.schemaId).getOrElse(SchemaRegistry.baseSchemaId)
+  }
+
+  /** The epoch's events after the converter chain (`withPart`) and after
+    * the row policies and the fence (`fresh`). `quarantined` may ride the
+    * first action over `fresh` as an Observation: read it only after. */
+  private final case class Admitted(withPart: DataFrame, fresh: DataFrame,
+      committedIv: Map[Int, Seq[(Long, Long)]], quarantined: () => Long)
+
+  /** The persisted winners, their per-bucket stats (`bucket`, `nKeys`, `nEv`,
+    * `keyBytes`), winner key range per bucket (if skippable), dedup mode. */
+  private final case class Dedup(winners: DataFrame, perBucket: Seq[Row],
+      keyRange: Map[Int, (String, String)], quarantined: Long, mode: String) {
+    def freshCount: Long = perBucket.map(_.getAs[Long]("nEv")).sum
+    def upsertCount: Long = perBucket.map(_.getAs[Long]("nKeys")).sum
+    def buckets: Set[Int] = perBucket.map(_.getAs[Int]("bucket")).toSet
+  }
+
+  /** The seq intervals the epoch claims per log partition, and the merged
+    * offsets its commit records. */
+  private final case class Claims(ivs: Seq[(Long, Long)],
+      claimsFor: Int => Seq[(Long, Long)], offsets: Seq[OffsetRange])
+
+  /** The merge target: parent files carried forward (`skipped` of them by
+    * stats) and the rewritten files' rows, read bucket-aligned or not. */
+  private final case class Layout(kept: Seq[DataFileEntry], skipped: Int,
+      target: DataFrame, aligned: Boolean, buckets: Seq[Int])
 
   /**
    * Apply one epoch of change events to `table`. Idempotent: events inside
@@ -242,18 +304,16 @@ object MergeEngine {
       nLogPartitions: Int = 32,
       quarantineDir: Option[String] = None,
       pipeline: graft.pipeline.Transform.T = graft.pipeline.Transform.identity,
-      taskPolicies: Seq[graft.pipeline.TaskPolicies.Policy] =
-        Seq(graft.pipeline.TaskPolicies.RowCountReconciliation()),
+      taskPolicies: Seq[TaskPolicies.Policy] =
+        Seq(TaskPolicies.RowCountReconciliation()),
       rowPolicies: Seq[RowPolicies.Policy] = RowPolicies.defaults,
       claimedRange: Option[(Long, Long)] = None,
       // PER-PARTITION claim sets (takes precedence over claimedRange): for
       // callers that know exactly which seq intervals each log partition
       // completely observed — e.g. a MIRROR claiming the upstream's
-      // committed-interval delta so its offset state converges to the
-      // upstream's partition by partition. A union claim would be WRONG
-      // there: claiming a lagging partition's still-unobserved range on
-      // its behalf fences those events when the upstream later commits
-      // them — silent data loss on the mirror.
+      // committed-interval delta. A union claim would be WRONG there: it
+      // claims a lagging partition's unobserved range, fencing those events
+      // when the upstream later commits them — silent loss on the mirror.
       claimedSet: Option[Map[Int, Seq[(Long, Long)]]] = None,
       // ONLY for quarantine reprocess (QuarantineReprocess.run): admit rows
       // whose seqs sit inside committed intervals. Quarantine is terminal —
@@ -262,41 +322,72 @@ object MergeEngine {
       // LWW merge is STRICT (`u.seq > c.lastSeq`), so even a repeated
       // reprocess of the same survivor is a stale-drop, not a re-apply.
       admitClaimed: Boolean = false): EpochOutcome = {
-    import spark.implicits._
+    val clock = new StageClock
+    val (scope, restoreConfs) = clock("scope")(scopeConfs(spark, table,
+      rawEvents.sparkSession, claimedRange, claimedSet))
+    try {
+      val in = clock("admit")(admit(spark, scope, rawEvents, epochId,
+        nLogPartitions, quarantineDir, pipeline, rowPolicies, admitClaimed))
+      val winners = clock("dedup")(dedupWinners(table, scope, in.fresh))
+      try {
+        val dd = clock("dedup")(dedupStats(spark, scope, in, winners))
+        val claims = clock("claims")(resolveClaims(spark, in,
+          nLogPartitions, claimedRange, claimedSet))
+        if (dd.freshCount == 0) {
+          // everything was fenced or quarantined: only new claims commit
+          val st = EpochStats(dd.quarantined, dd.quarantined, 0, 0, 0, 0)
+          clock("commit")(commitClaims(table, scope, st, claims, epochId,
+            nLogPartitions, taskPolicies)) match {
+            case Some(m) =>
+              emitCommitEvent(table, m, st, skipped = true,
+                EpochFacts(dd.mode, scope.aqe), clock)
+              EpochOutcome(m, skipped = true, st)
+            case None => // pure replay of fenced/re-quarantined data
+              EpochOutcome(scope.parent.getOrElse(EpochManifest(-1L, epochId,
+                SchemaRegistry.baseSchemaId, Nil, Nil, st, -1L)),
+                skipped = true, st)
+          }
+        } else {
+          val lay = clock("layout")(layout(spark, table, scope, dd))
+          val (write, st) = clock("write")(mergeAndWrite(spark, table, scope,
+            in.fresh, dd, lay, epochId))
+          val m = clock("commit")(commitEpoch(table, scope, dd, claims,
+            lay.kept ++ write.files, st, epochId, nLogPartitions,
+            taskPolicies))
+          emitCommitEvent(table, m, st, skipped = false, EpochFacts(dd.mode,
+            scope.aqe, lay.aligned, lay.skipped, write), clock)
+          EpochOutcome(m, skipped = false, st)
+        }
+      } finally { winners.unpersist(); () }
+    } finally restoreConfs()
+  }
 
+  /** Stage `scope`: resolve the parent and the tiny-epoch policy, and set
+    * the epoch's plan confs on every session its plans run in. Returns the
+    * scope and the undo of those confs. */
+  private def scopeConfs(spark: SparkSession, table: IceTable,
+      batchSession: SparkSession, claimedRange: Option[(Long, Long)],
+      claimedSet: Option[Map[Int, Seq[(Long, Long)]]])
+      : (Scope, () => Unit) = {
     // The merge join is co-partitioned on `bucket` ALONE (a function of the
-    // join key, same partition count both sides). Spark's default co-
-    // partition check demands ALL join keys in the partitioning, which would
-    // stack a second (repo,path)-keyed exchange on each side; relaxing it is
-    // safe — hash-partitioning on a subset of the join keys still co-locates
-    // equal keys — and is scoped to this epoch's plan construction.
-    // The two v2.bucketing confs make Catalyst honor the bucket-aligned
-    // scan's reported KeyGroupedPartitioning and accept co-partitioning
-    // against the winner side laid out in the same key-grouped layout
-    // (storage-partitioned join; without `shuffle.enabled` EnsureRequirements
-    // refuses the match and re-shuffles BOTH sides).
-    // The excludedRules entry keeps AQE's empty-relation propagation from
-    // pruning CollectMetrics nodes out of runtime-empty plans — on a
-    // FULLY-FENCED replay epoch the winner aggregate is empty by design,
-    // and without this the epoch's observations would never fire (see
-    // graft.table.AqeSafety).
-    // the excludedRules value is derived PER SESSION below (merging with
-    // that session's own exclusions, not the outer session's)
+    // join key). Spark's default co-partition check demands ALL join keys,
+    // which would stack a second (repo,path)-keyed exchange on each side;
+    // relaxing it is safe — a subset of the join keys still co-locates
+    // equal keys. The two v2.bucketing confs make Catalyst honor the
+    // bucket-aligned scan's KeyGroupedPartitioning against the winner side
+    // laid out the same way (without `shuffle.enabled` EnsureRequirements
+    // re-shuffles BOTH sides). The excludedRules entry (merged PER SESSION
+    // with its own exclusions) keeps AQE's empty-relation propagation from
+    // pruning CollectMetrics out of a FULLY-FENCED epoch's empty plans, or
+    // its observations would never fire (see graft.table.AqeSafety).
     val AqeKey = "spark.sql.adaptive.optimizer.excludedRules"
-    // TINY-EPOCH AQE GATE (guide §1.2 step 3, measured r7): AQE's value —
-    // runtime skew splitting and partition coalescing — is proportional to
-    // data volume, but its cost (one driver re-planning round-trip plus a
-    // separate scheduled job per materialized exchange) is paid per STAGE
-    // regardless of size. An epoch admitting a small offset span (catch-up
-    // trickle, replay tail, mirror delta of a quiet window) runs its 2
-    // multi-stage jobs fastest as static plans: measured on the c3 replay
-    // (4 epochs × ~37k events), AQE-off cut the query ~20% with no plan
-    // regression (the engine's own salting handles write skew, and
-    // shuffle partitioning is already keyed by bucket). Epochs above
-    // `spark.graft.aqeMinClaimedEvents` (default 1M) — and epochs whose
-    // size is UNKNOWN (segment-claimed batches) — keep AQE on: at real
-    // scale skew-join splitting and coalescing matter far more than the
-    // per-stage overhead.
+    // TINY-EPOCH GATE: AQE's value (skew splitting, coalescing) grows with
+    // data volume, but its cost (a re-planning round-trip and a separate job
+    // per materialized exchange) is paid per STAGE. Measured on the c3
+    // replay (4 epochs × ~37k events): AQE-off cut the query ~20% with no
+    // plan regression. Epochs above `spark.graft.aqeMinClaimedEvents`
+    // (default 1M) and epochs of UNKNOWN size (segment-claimed batches) keep
+    // AQE on. The same gate picks the dedup mode (see dedupWinners).
     val claimedSpan: Option[Long] = claimedSet match {
       case Some(m) => Some(Intervals.normalize(m.values.flatten.toSeq)
         .map { case (lo, hi) => hi - lo }.sum)
@@ -304,22 +395,17 @@ object MergeEngine {
     }
     val aqeMinEvents = spark.conf.getOption("spark.graft.aqeMinClaimedEvents")
       .map(_.toLong).getOrElse(1000000L)
-    val tinyEpoch = claimedSpan.exists(_ < aqeMinEvents)
-    // parent + bucket count resolved BEFORE the conf scope (plain metadata
-    // reads; the tiny-epoch partition clamp below needs the bucket count)
+    val tiny = claimedSpan.exists(_ < aqeMinEvents)
     val parent = table.currentManifest()
-    val parentVersion = parent.map(_.version).getOrElse(-1L)
     // bucket count of THIS table's committed layout, resolved ONCE from the
     // parent manifest (rebucket migrations record it per snapshot)
     val nBuckets = table.bucketCountOf(parent)
-    // Tiny epochs also CLAMP shuffle partitions to the table's bucket count
-    // (never raising the session's setting): with AQE off there is no
-    // runtime coalescing, and a trickle epoch's aggregate shuffles gain
-    // nothing from the cluster-wide default sized for big jobs — the
-    // write-parallelism unit of a tiny epoch IS the bucket. Measured on the
-    // c3 replay at 32-core local: 32→16 partitions cut the query ~15%.
+    // Tiny epochs also CLAMP shuffle partitions to the bucket count (never
+    // raising it): with AQE off nothing coalesces, and a tiny epoch's write
+    // unit IS the bucket. Measured on the c3 replay at local[32]: 32→16
+    // partitions cut the query ~15%.
     val tinyParts: Seq[(String, String)] =
-      if (!tinyEpoch) Nil
+      if (!tiny) Nil
       else {
         val cur = spark.conf.getOption("spark.sql.shuffle.partitions")
           .map(_.toInt).getOrElse(200)
@@ -330,38 +416,48 @@ object MergeEngine {
       "spark.sql.requireAllClusterKeysForCoPartition" -> "false",
       "spark.sql.sources.v2.bucketing.enabled" -> "true",
       "spark.sql.sources.v2.bucketing.shuffle.enabled" -> "true") ++
-      (if (tinyEpoch) Seq("spark.sql.adaptive.enabled" -> "false") else Nil) ++
+      (if (tiny) Seq("spark.sql.adaptive.enabled" -> "false") else Nil) ++
       tinyParts
     // Inside foreachBatch the batch Dataset is bound to the STREAM'S CLONED
     // session (own SQLConf); a conf set only on the outer session would not
     // reach the batch plans' adaptive re-optimization. Scope the confs on
     // BOTH sessions (they share one SparkContext).
     val confSessions =
-      if (rawEvents.sparkSession eq spark) Seq(spark)
-      else Seq(spark, rawEvents.sparkSession)
+      if (batchSession eq spark) Seq(spark) else Seq(spark, batchSession)
     val prevConfs = confSessions.flatMap(s =>
       (scopedConfs.map(_._1) :+ AqeKey).map(k => (s, k, s.conf.getOption(k))))
     confSessions.foreach { s =>
       scopedConfs.foreach { case (k, v) => s.conf.set(k, v) }
       s.conf.set(AqeKey, graft.table.AqeSafety.mergedExcludedRules(s))
     }
-    try {
+    val restore = () => prevConfs.foreach {
+      case (s, k, Some(v)) => s.conf.set(k, v)
+      case (s, k, None) => s.conf.unset(k)
+    }
+    (Scope(parent, nBuckets, tiny,
+      spark.conf.get("spark.sql.adaptive.enabled").toBoolean), restore)
+  }
+
+  /** Stage `admit`: widen the committed log-partition universe, run the
+    * converter chain and the row policies (quarantining what fails), and
+    * fence out events inside committed offset intervals. */
+  private def admit(spark: SparkSession, scope: Scope,
+      rawEvents: Dataset[ChangeEvent], epochId: Long, nLogPartitions: Int,
+      quarantineDir: Option[String], pipeline: graft.pipeline.Transform.T,
+      rowPolicies: Seq[RowPolicies.Policy], admitClaimed: Boolean)
+      : Admitted = {
     // Log-partition-universe GROWTH (the reference discovers partitions at
-    // runtime, KafkaSource.java:198, and persists offsets even for empty
-    // WUs, :404-411): partitions NEW to the committed universe enter fenced
-    // by the INTERSECTION of all existing partitions' committed intervals.
-    // Every commit stamps its claims onto ALL partitions, so a seq present
-    // in every existing set was observed-and-committed regardless of which
-    // partition its key hashes to under the grown universe — fencing it on
-    // the new partition is safe, and an origin-anchored intersection keeps
-    // the completeness/purge horizons advancing instead of freezing them at
-    // MinValue. (Conservative: a seq fenced on no/only some old partitions
-    // stays unfenced here; the LWW merge absorbs any such replay.) The
-    // widened universe persists with this epoch's commit. SHRINKING remains
-    // a fail-fast — dropping partitions would strand their claims and pin
-    // the horizons forever.
+    // runtime, KafkaSource.java:198): partitions NEW to the committed
+    // universe enter fenced by the INTERSECTION of all existing partitions'
+    // committed intervals. Every commit stamps its claims onto ALL
+    // partitions, so a seq in every existing set was committed whichever
+    // partition its key hashes to now — fencing it is safe, and the
+    // intersection keeps the completeness/purge horizons advancing. (A seq
+    // fenced on only some old partitions stays unfenced; LWW absorbs the
+    // replay.) SHRINKING fails fast — dropped partitions would strand their
+    // claims and pin the horizons forever.
     val committedIv: Map[Int, Seq[(Long, Long)]] = {
-      val base = committedIntervals(parent)
+      val base = committedIntervals(scope.parent)
       if (base.isEmpty) base
       else {
         require(base.keySet.subsetOf((0 until nLogPartitions).toSet),
@@ -378,173 +474,153 @@ object MergeEngine {
       }
     }
 
-    // --- 1. converter chain + quality gate (Converter/RowLevelPolicy) ----
+    // converter chain + quality gate (Converter/RowLevelPolicy)
     val withPart = pipeline(rawEvents.toDF())
       .withColumn("logPart", logPartitionCol(nLogPartitions))
+    val pass = RowPolicies.passAll(rowPolicies)
 
     // quarantine write + count in ONE pass (Observation rides the write
     // job); a separate count() would re-scan the whole epoch input. With NO
     // quarantine sink configured, policy-discarded rows must still be
     // COUNTED (a silent drop would under-report extraction and hide the
     // discard from reconciliation): their count rides the winners aggregate
-    // below as an Observation on the shared input plan — no extra pass.
-    val inObs = Observation(s"input-$epochId-${System.nanoTime()}")
-    val withPartObs =
-      if (quarantineDir.isEmpty)
-        withPart.observe(inObs,
-          sum(when(!RowPolicies.passAll(rowPolicies), 1L).otherwise(0L))
-            .as("bad"))
-      else withPart
-    val good = withPartObs.filter(RowPolicies.passAll(rowPolicies))
-    val quarantinedEarly: Option[Long] = quarantineDir.map { dir =>
-      val bad = withPart.filter(!RowPolicies.passAll(rowPolicies))
-        .withColumn("reason", RowPolicies.failReason(rowPolicies))
-      val qObs = Observation(s"quarantine-$epochId-${System.nanoTime()}")
-      bad.observe(qObs, count(lit(1)).as("n"))
-        .drop("logPart")
-        .write.mode("overwrite").parquet(s"$dir/epoch=$epochId")
-      org.apache.spark.sql.GraftSqlBridge
-        .awaitObservation(spark, qObs, "quarantine-count")
-        .apply("n").asInstanceOf[Long]
+    // as an Observation on the shared input plan — no extra pass.
+    val (good, quarantined) = quarantineDir match {
+      case Some(dir) =>
+        val qObs = Observation(s"quarantine-$epochId-${System.nanoTime()}")
+        withPart.filter(!pass)
+          .withColumn("reason", RowPolicies.failReason(rowPolicies))
+          .observe(qObs, count(lit(1)).as("n"))
+          .drop("logPart")
+          .write.mode("overwrite").parquet(s"$dir/epoch=$epochId")
+        val n = GraftSqlBridge.awaitObservation(spark, qObs,
+          "quarantine-count").apply("n").asInstanceOf[Long]
+        (withPart.filter(pass), () => n)
+      case None =>
+        val inObs = Observation(s"input-$epochId-${System.nanoTime()}")
+        // Bounded read (never a silent 0, never an unbounded block — see
+        // GraftSqlBridge.awaitObservation); sum over zero bad rows is null.
+        (withPart.observe(inObs,
+          sum(when(!pass, 1L).otherwise(0L)).as("bad")).filter(pass),
+          () => GraftSqlBridge.awaitObservation(spark, inObs,
+            "policy-discard").get("bad").orNull match {
+            case null => 0L
+            case v => v.asInstanceOf[Long]
+          })
     }
 
-    // --- 2. offset-interval fence (exact-replay dedup) -------------------
-    // ALWAYS the native binary-search expression (graft.functions.
-    // IntervalInside): O(log n) per row, constant plan size at ANY interval
-    // count (no 64KB-codegen or optimizer-depth blowup on gap-dense
-    // histories), and — the r7 motivation for dropping the old literal-tree
-    // path for small sets — CODEGEN-STABLE ACROSS EPOCHS: the interval
-    // bounds ride the plan as a codegen reference object
-    // (ctx.addReferenceObj), not inlined literals, so every epoch's scan
-    // stage generates the SAME source and hits the whole-stage-codegen
-    // cache instead of paying a fresh Janino compile per epoch (measured
-    // ~0.2 s/epoch of pure compilation on the c3 replay; the literal tree
-    // changed with every newly committed interval). The search stays inside
-    // whole-stage codegen with primitive arguments (the r3 scalar UDF here
-    // boxed every row and leaked its broadcast).
-    val fence: Column =
-      if (committedIv.isEmpty) lit(true)
-      else
-        !graft.functions.IntervalInside(col("logPart"), col("seq"), committedIv)
-    val fresh = if (admitClaimed) good else good.filter(fence)
+    // Offset-interval fence (exact-replay dedup): the native binary-search
+    // expression graft.functions.IntervalInside — O(log n) per row, constant
+    // plan size at any interval count, and CODEGEN-STABLE ACROSS EPOCHS (the
+    // bounds ride as a reference object, not inlined literals, so each
+    // epoch's scan stage hits the codegen cache; measured ~0.2 s/epoch of
+    // Janino time on the c3 replay otherwise).
+    val fresh =
+      if (admitClaimed || committedIv.isEmpty) good
+      else good.filter(
+        !graft.functions.IntervalInside(col("logPart"), col("seq"), committedIv))
+    Admitted(withPart, fresh, committedIv, quarantined)
+  }
 
-    // --- 3. dedup: last-writer-wins by seq per key -----------------------
-    // Two-phase argmax: phase A aggregates ONLY (key → max seq, count) —
-    // a 16-byte-per-key state, so the scan is column-pruned to the envelope
-    // (payload columns are never materialized; with a columnar/expression
-    // source the content bytes aren't even generated/decoded). Phase B
-    // broadcast-joins the winner (key, seq) set back onto the stream to pick
-    // the winning rows — no shuffle of payload bytes at all. Falls back to
-    // a single-shuffle max_by(struct) aggregate when the winner set is too
-    // large to broadcast (the state-heavy but still skew-immune plan).
-    //
-    // TINY epochs (same gate as the AQE policy above) instead carry the
-    // winning ROW through phase A itself: the max_by(struct) aggregate —
-    // the SAME tie-break rule as the fallback path, so the chosen mode can
-    // never change the table — rides the one pass that phase A must make
-    // anyway, and phase B disappears entirely (no second source scan, no
-    // broadcast build, no window rank in the merge job: one pass over the
-    // input instead of two). Shuffling the payload once is the right trade
-    // exactly when the claimed span bounds it small; big epochs keep the
-    // payload-never-shuffles envelope discipline (guide §2.3/§8).
-    val payloadDedup = tinyEpoch
-    val winners = (
-      if (payloadDedup)
-        fresh.groupBy($"repo", $"path")
-          .agg(max_by(struct($"op", $"seq", $"commit", $"lang", $"content"),
-            struct($"seq", $"commit", $"op", $"lang", $"content")).as("e"),
-            count(lit(1)).as("nEvents"))
-          .select($"repo", $"path", $"e", $"e.seq".as("seq"), $"nEvents")
-      else
-        fresh.groupBy($"repo", $"path")
-          .agg(max($"seq").as("seq"),
-            count(lit(1)).as("nEvents")))
-      .withColumn("bucket", table.bucketCol($"repo", $"path", nBuckets))
+  /** Stage `dedup`, its plan: one row per key with its max seq, event count
+    * and bucket — plus, in `payload` mode, the winning event itself.
+    * Persisted; the caller unpersists. */
+  private def dedupWinners(table: IceTable, scope: Scope, fresh: DataFrame)
+      : DataFrame = {
+    // Two dedup strategies, each with a measured reason, selected by the
+    // tiny-epoch gate (declared claimed span < aqeMinClaimedEvents):
+    //  - ENVELOPE (large or unknown-size epochs): phase A aggregates ONLY
+    //    (key → max seq, count), so the scan is column-pruned to the
+    //    envelope and payload bytes never shuffle; phase B broadcast-joins
+    //    the winner (key, seq) set back onto the input (or, past
+    //    maxBroadcastBytes, falls back to a shuffle max_by aggregate).
+    //  - PAYLOAD (tiny epochs): the winning ROW rides phase A's one pass as
+    //    an LWW max_by — no second source scan, no broadcast, no rank.
+    // Payload-for-every-epoch was measured against this split on a 4-CPU
+    // host (local[4], bulk backfill, alternating runs): at a 1.2M-event
+    // epoch it was within noise of the envelope path (~3% slower); at 8M
+    // events it lost both pairs by 15-20%. Shuffling the payload once pays
+    // only while the claimed span bounds it small.
+    val byKey = fresh.groupBy(col("repo"), col("path"))
+    (if (scope.tiny)
+       byKey.agg(lwwMaxBy.as("e"), count(lit(1)).as("nEvents"))
+         .select(col("repo"), col("path"), col("e"), col("e.seq").as("seq"),
+           col("nEvents"))
+     else byKey.agg(max(col("seq")).as("seq"), count(lit(1)).as("nEvents")))
+      .withColumn("bucket",
+        table.bucketCol(col("repo"), col("path"), scope.nBuckets))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    try { // unpersist `winners` on every exit (skip, abort, commit)
+  }
 
-    // spark.graft.fileSkipping=false disables file-level pruning (A/B +
-    // escape hatch); correctness never depends on it — a skipped file is
-    // identical to its rewritten copy. Resolved once, up front, so the
-    // disabled path pays NONE of the skipping machinery's cost.
-    val skipEnabled = spark.conf
-      .getOption("spark.graft.fileSkipping").forall(_.toBoolean)
-    // key bounds are only worth aggregating when there is something they
-    // could skip: parent files carrying key stats. Guarding here keeps the
-    // per-row concat + min/max string work (and the per-bucket string
-    // collect) out of the hot dedup aggregate for stats-less tables and
-    // for skip-disabled runs.
-    val wantKeyBounds = skipEnabled &&
-      parent.exists(_.files.exists(f => f.minKey.isDefined))
-
-    // one small collect (per-BUCKET rows): counters, bucket pruning,
-    // broadcast sizing, salting weights, file-skip key bounds, all at once.
-    // The key bounds use the SAME NUL-composed key encoding as the per-file
-    // footer stats (graft.table.FileStats) so driver-side comparisons are
-    // byte-order consistent with the recorded min/max.
+  /** Stage `dedup`, its run: one small per-bucket collect over the winners
+    * feeds the counters, bucket pruning, broadcast sizing, salting weights
+    * and file-skip key bounds at once. */
+  private def dedupStats(spark: SparkSession, scope: Scope, in: Admitted,
+      winners: DataFrame): Dedup = {
+    import spark.implicits._
+    // key bounds cost per-row string work, so they are aggregated only when
+    // parent files carry key stats they could skip; they use the footer
+    // stats' NUL-composed key encoding (graft.table.FileStats), so driver-
+    // side comparisons match the recorded min/max byte order.
+    val wantKeyBounds = scope.parent.exists(_.files.exists(_.minKey.isDefined))
     val keyExpr = concat($"repo", lit(graft.table.FileStats.KeySep), $"path")
     val baseAggs = Seq(count(lit(1)).as("nKeys"), sum($"nEvents").as("nEv"),
       sum(octet_length($"repo") + octet_length($"path")).as("keyBytes"))
     val aggs = if (wantKeyBounds)
       baseAggs ++ Seq(min(keyExpr).as("minKey"), max(keyExpr).as("maxKey"))
     else baseAggs
-    val perGroup = timed("dedup+stats")(winners.groupBy($"bucket")
+    val perBucket = winners.groupBy($"bucket")
       .agg(aggs.head, aggs.tail: _*)
-      .collect())
-    val freshCount = perGroup.map(_.getAs[Long]("nEv")).sum
-    val upsertCountEarly = perGroup.map(_.getAs[Long]("nKeys")).sum
+      .collect().toSeq
+    val keyRange: Map[Int, (String, String)] =
+      if (!wantKeyBounds) Map.empty
+      else perBucket.map(r => r.getAs[Int]("bucket") ->
+        (r.getAs[String]("minKey"), r.getAs[String]("maxKey"))).toMap
     // estimated broadcast payload: key OCTETS (length() counts chars and
     // would undercount multi-byte UTF-8 keys up to 3-4x against a gate
     // whose whole point is actual bytes) + ~48B row overhead
-    val winnerBytes = perGroup.map(_.getAs[Long]("keyBytes")).sum +
-      48L * upsertCountEarly
+    val winnerBytes = perBucket.map(r =>
+      r.getAs[Long]("keyBytes") + 48L * r.getAs[Long]("nKeys")).sum
+    val mode =
+      if (scope.tiny) "payload"
+      else if (winnerBytes <= maxBroadcastBytes(spark)) "broadcast"
+      else "shuffle"
+    Dedup(winners, perBucket, keyRange, in.quarantined(), mode)
+  }
 
-    val quarantined: Long = quarantinedEarly.getOrElse {
-      // the winners job above was the first action over the observed input.
-      // Bounded read (never a silent 0, never an unbounded block — see
-      // GraftSqlBridge.awaitObservation); sum over zero bad rows is null.
-      val v = org.apache.spark.sql.GraftSqlBridge
-        .awaitObservation(spark, inObs, "policy-discard").get("bad").orNull
-      if (v == null) 0L else v.asInstanceOf[Long]
-    }
-
-    // This epoch's claimed offset intervals, applied to EVERY partition —
-    // including partitions with no events this epoch, which must still
-    // persist offsets (the reference's empty-WorkUnit rule,
-    // KafkaSource.java:404-411) so the purge horizon can advance and the
-    // manifest stays at one merged interval per partition.
-    //
+  /** Stage `claims`: the seq intervals this epoch claims, applied to EVERY
+    * log partition — including partitions with no events this epoch, which
+    * must still persist offsets (the reference's empty-WorkUnit rule,
+    * KafkaSource.java:404-411) so the purge horizon can advance and the
+    * manifest stays at one merged interval per partition. */
+  private def resolveClaims(spark: SparkSession, in: Admitted,
+      nLogPartitions: Int, claimedRange: Option[(Long, Long)],
+      claimedSet: Option[Map[Int, Seq[(Long, Long)]]]): Claims = {
+    import spark.implicits._
     //  - Declared (batch replay knows its slice): one interval (lo, hi].
     //  - Segment (unknown batch provenance, e.g. a file-stream micro-batch):
-    //    the EXACT contiguous runs of the batch's OBSERVED valid seqs — a
-    //    gap inside the batch is NOT claimed (claiming it would fence its
-    //    events when they arrive later: silent data loss), while claims
-    //    include quarantined rows' seqs (quarantine is terminal; leaving
-    //    them unclaimed would stall the completeness/purge horizon on a
-    //    permanent gap). Runs are found distributedly in ONE pass: each
+    //    the EXACT contiguous runs of the batch's OBSERVED valid seqs — an
+    //    in-batch gap is NOT claimed (that would fence its events when they
+    //    arrive later: silent data loss), quarantined rows' seqs are (a
+    //    permanent gap would stall the horizons). One distributed pass: each
     //    distinct seq emits a "present" marker for itself and a
-    //    "has-predecessor" marker for seq+1; after a single marker
-    //    aggregation, a value where the two disagree is a run boundary
-    //    (present-only = run start at v; predecessor-only = run end at v-1),
-    //    and ONLY boundaries survive the filter. The driver collects them
-    //    through an ordered top-k bounded by `spark.graft.maxClaimRuns`
-    //    (default 65536 runs): a pathologically gap-dense batch (alternating
-    //    seqs → millions of runs) claims only the lowest `cap` complete runs
-    //    and logs the truncation — unclaimed seqs are simply re-observed
-    //    later (the fence + LWW merge make re-pulls idempotent), so bounded
-    //    driver memory costs no correctness.
-    val claimedIvs: Seq[(Long, Long)] = claimedSet match {
-      case Some(m) =>
+    //    "has-predecessor" marker for seq+1; a value where the two disagree
+    //    is a run boundary (present-only = run start at v, predecessor-only
+    //    = run end at v-1). The driver collects boundaries through an
+    //    ordered top-k bounded by `spark.graft.maxClaimRuns` (default 65536
+    //    runs): a gap-dense batch claims only the lowest `cap` runs; the
+    //    rest are re-observed later (fence + LWW make re-pulls idempotent).
+    val ivs: Seq[(Long, Long)] = (claimedSet, claimedRange) match {
+      case (Some(m), _) =>
         require(m.keySet.subsetOf((0 until nLogPartitions).toSet),
           s"claimedSet partitions ${m.keySet.toSeq.sorted.mkString(",")} " +
             s"outside universe 0..${nLogPartitions - 1}")
         Intervals.normalize(m.values.flatten.toSeq)
-      case None => claimedRange match {
-      case Some((lo, hi)) => Seq((lo, hi))
-      case None =>
+      case (None, Some((lo, hi))) => Seq((lo, hi))
+      case (None, None) =>
         val cap = spark.conf.getOption("spark.graft.maxClaimRuns")
           .map(_.toInt).getOrElse(65536)
-        val boundaries = withPart.filter($"seq".isNotNull && $"seq" >= 0)
+        val boundaries = in.withPart.filter($"seq".isNotNull && $"seq" >= 0)
           .select($"seq").distinct()
           .select(explode(array(
             struct($"seq".as("v"), lit(1).as("self"), lit(0).as("succ")),
@@ -559,14 +635,11 @@ object MergeEngine {
           .map(r => (r.getAs[Long]("v"), r.getAs[Int]("s")))
         // sorted boundaries strictly alternate start(s=1), end-marker(s=0);
         // an odd count means the cap truncated a trailing unfinished run.
-        // Truncation is safe ONLY for re-observable sources (the unclaimed
-        // seqs come around again and the fence/LWW make the re-pull
-        // idempotent); an exactly-once checkpointed source never redelivers,
-        // so unclaimed-but-applied seqs would freeze the completeness and
-        // purge horizons forever — such callers (StreamingIngest) set
-        // spark.graft.claimRunOverflow=fail to abort the epoch UNCOMMITTED
-        // instead (operator raises the cap and restarts; the stream replays
-        // the batch).
+        // Truncation is safe ONLY for re-observable sources: an exactly-once
+        // checkpointed source never redelivers, so unclaimed-but-applied
+        // seqs would freeze the horizons forever — such callers
+        // (StreamingIngest) set spark.graft.claimRunOverflow=fail to abort
+        // the epoch UNCOMMITTED (raise the cap, restart, the batch replays).
         val complete =
           if (boundaries.length > 2 * cap) {
             val policy = spark.conf
@@ -583,101 +656,78 @@ object MergeEngine {
         complete.grouped(2).collect {
           case Array((vs, 1), (ve, 0)) => (vs - 1, ve - 1)
         }.toSeq
-    } }
+    }
     val claimsFor: Int => Seq[(Long, Long)] = claimedSet match {
       case Some(m) => p => m.getOrElse(p, Nil)
-      case None => _ => claimedIvs
+      case None => _ => ivs
     }
-    def mergedOffsets: Seq[OffsetRange] =
-      Intervals.mergeClaims(committedIv, nLogPartitions, claimsFor)
+    Claims(ivs, claimsFor,
+      Intervals.mergeClaims(in.committedIv, nLogPartitions, claimsFor))
+  }
 
-    if (freshCount == 0) {
-      // everything was fenced or quarantined; counters must still reconcile
-      // (extracted == quarantined here) and any NEW claims (a declared empty
-      // slice, or quarantined-only segment runs) must persist so the fence
-      // and completeness horizon advance — gated like every commit.
-      val st = EpochStats(quarantined, quarantined, 0, 0, 0, 0)
-      val mo = mergedOffsets
-      val unchanged = parent match {
-        case Some(pm) => pm.offsets.toSet == mo.toSet
-        case None => mo.isEmpty || claimedIvs.isEmpty
-      }
-      if (unchanged) {
-        // pure replay of fenced (and/or re-quarantined) data — no commit.
-        val m = parent.getOrElse(
-          EpochManifest(-1L, epochId, SchemaRegistry.baseSchemaId, Nil, Nil,
-            st, -1L))
-        return EpochOutcome(m, skipped = true, st)
-      }
-      graft.pipeline.TaskPolicies.enforce(taskPolicies, st)
+  /** Stage `commit` of an epoch that applies no row: its claims commit only
+    * if they are new (a declared empty slice, quarantined-only segment
+    * runs), so the fence and completeness horizon advance — gated like
+    * every commit. None: nothing new, no commit (a pure replay). */
+  private def commitClaims(table: IceTable, scope: Scope, st: EpochStats,
+      claims: Claims, epochId: Long, nLogPartitions: Int,
+      taskPolicies: Seq[TaskPolicies.Policy]): Option[EpochManifest] = {
+    val mo = claims.offsets
+    val unchanged = scope.parent match {
+      case Some(pm) => pm.offsets.toSet == mo.toSet
+      case None => mo.isEmpty || claims.ivs.isEmpty
+    }
+    if (unchanged) None
+    else {
+      TaskPolicies.enforce(taskPolicies, st)
       val complete0 = math.max(
-        parent.map(_.completeUntilSeq).getOrElse(Long.MinValue),
+        scope.parent.map(_.completeUntilSeq).getOrElse(Long.MinValue),
         Intervals.contiguousOriginPrefix(mo))
-      val m = parent
+      val m = scope.parent
         .map(pm => pm.copy(version = pm.version + 1, epochId = epochId,
           offsets = mo, stats = st, parentVersion = pm.version,
-          completeUntilSeq = complete0, numBuckets = nBuckets))
+          completeUntilSeq = complete0, numBuckets = scope.nBuckets))
         .getOrElse(EpochManifest(0L, epochId, SchemaRegistry.baseSchemaId,
-          Nil, mo, st, -1L, complete0, numBuckets = nBuckets))
-      val committed = commitWithRebase(table, m, parent, Set.empty,
-        claimsFor, nLogPartitions)
-      emitCommitEvent(table, committed, st, skipped = true)
-      return EpochOutcome(committed, skipped = true, st)
+          Nil, mo, st, -1L, complete0, numBuckets = scope.nBuckets))
+      Some(commitWithRebase(table, m, scope.parent, Set.empty,
+        claims.claimsFor, nLogPartitions))
     }
+  }
 
-    val upsertCount = upsertCountEarly
-    val dedupDrops = freshCount - upsertCount
-
-    // --- 4. seq-aware copy-on-write MERGE over affected buckets ----------
-    val affectedBuckets: Set[Int] = perGroup.map(_.getAs[Int]("bucket")).toSet
-
-    val schemaIdNow = parent.map(_.schemaId).getOrElse(SchemaRegistry.baseSchemaId)
-    val targetSchema = SchemaRegistry.schemaFor(schemaIdNow)
-
-    val parentFiles = parent.map(_.files).getOrElse(Seq.empty)
-    val (bucketTouched, untouchedFiles) =
-      parentFiles.partition(f => affectedBuckets.contains(f.bucket))
+  /** Stage `layout`: which parent files the merge rewrites, and how it
+    * reads them. */
+  private def layout(spark: SparkSession, table: IceTable, scope: Scope,
+      dd: Dedup): Layout = {
+    import spark.implicits._
+    val affected = dd.buckets
+    val (bucketTouched, untouchedFiles) = scope.parent.map(_.files)
+      .getOrElse(Seq.empty).partition(f => affected.contains(f.bucket))
 
     // FILE-LEVEL DATA SKIPPING within touched buckets (Iceberg-metrics-
-    // style scan pruning — the contract behind the reference's metadata
-    // writer, IcebergMetadataWriter.java:349-383,664-672): a file of a
-    // touched bucket whose manifest stats PROVE it holds no winner key is
-    // carried forward BY REFERENCE instead of being read and rewritten.
-    // Correct because the full-outer merge would emit such a file's rows
-    // unchanged ("keep"), and key-disjointness guarantees the rewritten
-    // bucket output shares no key with the skipped file. Two proofs:
-    //  - key-range: the file's conservative [minKey, maxKey] (footer
-    //    stats, NUL-composed) is disjoint from the bucket's winner key
-    //    range (unsigned-byte comparison matching UTF8String order);
-    //  - salt residue: a salted write recorded the exact residue class
-    //    pmod(xxhash64(path), saltMod) = saltRes its file holds; if no
-    //    winner in the bucket lands in that class, the file cannot match.
-    //    This is THE post-salting payoff: a later small epoch touching a
-    //    previously-salted hot bucket rewrites one salt slice, not all.
-    // Files without stats are never skipped. Matches at 100 TB: the merge
-    // reads what the epoch can change, not what the bucket holds.
-    // (`skipEnabled`/`wantKeyBounds` were resolved up front, before the
-    // winners aggregate, so a disabled run pays none of this cost.)
-    val winnerKeyRange: Map[Int, (String, String)] =
-      if (!wantKeyBounds) Map.empty
-      else perGroup.map(r =>
-        r.getAs[Int]("bucket") ->
-          (r.getAs[String]("minKey"), r.getAs[String]("maxKey"))).toMap
-    val saltMods =
-      if (!skipEnabled) Seq.empty[Int]
-      else bucketTouched
-        .filter(f => f.saltMod > 1 && f.saltRes >= 0).map(_.saltMod).distinct
+    // style pruning, IcebergMetadataWriter.java:349-383,664-672): a file
+    // whose manifest stats PROVE it holds no winner key is carried forward
+    // BY REFERENCE — the merge would emit its rows unchanged, and no
+    // rewritten row shares its keys. Two proofs:
+    //  - key-range: the file's [minKey, maxKey] is disjoint from the
+    //    bucket's winner key range (unsigned-byte UTF8String order);
+    //  - salt residue: a salted file holds exactly the keys with
+    //    pmod(xxhash64(path), saltMod) = saltRes; if no winner of the
+    //    bucket lands in that class, a small epoch touching a salted hot
+    //    bucket rewrites one salt slice, not all of it.
+    // Files without stats are never skipped.
+    val saltMods = bucketTouched
+      .filter(f => f.saltMod > 1 && f.saltRes >= 0).map(_.saltMod).distinct
     // winner residue classes per bucket, one tiny aggregate per distinct
     // saltMod over the persisted winner envelopes (usually zero or one)
     val winnerResidues: Map[Int, Map[Int, Set[Int]]] = saltMods.map { m =>
-      m -> winners.groupBy($"bucket")
+      m -> dd.winners.groupBy($"bucket")
         .agg(collect_set(pmod(xxhash64($"path"), lit(m)).cast("int")).as("rs"))
         .collect()
         .map(r => r.getAs[Int]("bucket") -> r.getAs[Seq[Int]]("rs").toSet)
         .toMap
     }.toMap
-    def fileSkippable(f: graft.model.DataFileEntry): Boolean = {
-      val keyDisjoint = (f.minKey, f.maxKey, winnerKeyRange.get(f.bucket)) match {
+    def fileSkippable(f: DataFileEntry): Boolean = {
+      val keyDisjoint = (f.minKey, f.maxKey, dd.keyRange.get(f.bucket)) match {
         case (Some(fmin), Some(fmax), Some((wmin, wmax)))
           if wmin != null && wmax != null =>
           graft.table.FileStats.keyCompare(fmax, wmin) < 0 ||
@@ -689,115 +739,72 @@ object MergeEngine {
           .contains(f.saltRes)
       keyDisjoint || residueMiss
     }
-    val (skippedFiles, touchedFiles) =
-      if (skipEnabled) bucketTouched.partition(fileSkippable)
-      else (Seq.empty[graft.model.DataFileEntry], bucketTouched)
-    val keptFiles = untouchedFiles ++ skippedFiles
+    val (skippedFiles, touchedFiles) = bucketTouched.partition(fileSkippable)
 
-    // Bucket-aligned merge (storage-partitioned join): the target side is a
-    // DSv2 scan over the touched buckets' files reporting
-    // KeyGroupedPartitioning(bucket), and the winner side is laid out in the
-    // EXACT same key-grouped layout (one partition per affected bucket,
-    // ascending) — Catalyst recognises the co-partitioning, so the
-    // full-outer join needs NO exchange on either side: the 100 TB target
-    // is read in place per bucket and only the much smaller winner set
-    // moves (once, inside the layout shuffle the dedup window also rides).
-    // For a NEAR-EMPTY target the per-bucket task fan-out outweighs the
-    // avoided (tiny) shuffle, so below `spark.graft.alignedScanMinBytes`
-    // (default 16 MiB of touched files, from manifest-recorded sizes) an
-    // explicit repartition of both sides wins. The gate dropped from r2's
-    // 1 GiB: the DSv2 scan removed the per-bucket sub-plan overhead that
-    // penalized small tables (A/B in BENCH.md: aligned 15.5-15.7 s vs
-    // plain 17.0 s at 256 buckets / 2M events / 19k rows).
-    val alignedMinBytes: Long = spark.conf
-      .getOption("spark.graft.alignedScanMinBytes").map(_.toLong)
-      .getOrElse(16L << 20)
-    val touchedBytes = touchedFiles.map(f => math.max(0L, f.bytes)).sum
-    // payload-dedup epochs ALWAYS use the aligned layout when the target has
-    // files: their winner side has no window/rank on top, and
-    // EnsureRequirements strips a bare user repartition directly under a
-    // join (rewriting it to a full-key shuffle at the default partition
-    // count, which un-clusters the bucket write into ~#buckets files per
-    // task — measured 490 files/epoch instead of 16). The KGP layout is an
-    // RDD-level barrier the planner cannot strip, and it is also the
-    // zero-exchange plan.
-    val useAligned = touchedFiles.nonEmpty &&
-      (touchedBytes >= alignedMinBytes || payloadDedup)
-    if (timing)
-      System.err.println(s"[timing]   useAligned=$useAligned touchedBytes=" +
-        s"$touchedBytes touched=${touchedFiles.size} skipped=" +
-        s"${skippedFiles.size} payload=$payloadDedup")
-    // the partition-value universe BOTH sides must share: every bucket the
-    // winners touch (buckets whose parent files exist but hold no winners
-    // are untouched and carried forward — never scanned)
-    val alignedBuckets: Seq[Int] = affectedBuckets.toSeq.sorted
-    val current =
-      if (useAligned)
-        table.readFilesBucketAligned(spark, touchedFiles, schemaIdNow,
-          buckets = Some(alignedBuckets))
+    // Bucket-aligned merge (storage-partitioned join): the target is a DSv2
+    // scan reporting KeyGroupedPartitioning(bucket) and the winners are laid
+    // out identically (one partition per affected bucket, ascending), so the
+    // full-outer join needs NO exchange: the target is read in place and
+    // only the winners move. The layout is also an RDD-level barrier the
+    // planner cannot strip (a bare repartition under a join becomes a
+    // full-key shuffle that un-clusters the bucket write: measured 490
+    // files/epoch instead of 16). Only an EMPTY target takes a repartition.
+    val buckets = affected.toSeq.sorted
+    val aligned = touchedFiles.nonEmpty
+    val target =
+      if (aligned)
+        table.readFilesBucketAligned(spark, touchedFiles, scope.schemaId,
+          buckets = Some(buckets))
       else
-        table.readFiles(spark, touchedFiles, schemaIdNow)
-          .repartition(nBuckets, col("bucket"))
+        table.readFiles(spark, touchedFiles, scope.schemaId)
+          .repartition(scope.nBuckets, col("bucket"))
+    Layout(untouchedFiles ++ skippedFiles, skippedFiles.size, target,
+      aligned, buckets)
+  }
 
-    // align the winner side with the chosen target layout
-    def alignWinners(df: org.apache.spark.sql.DataFrame)
-        : org.apache.spark.sql.DataFrame =
-      if (useAligned)
-        org.apache.spark.sql.GraftSqlBridge
-          .dataFrameWithKeyGroupedPartitioning(spark, df, "bucket",
-            alignedBuckets)
-      else df.repartition(nBuckets, $"bucket")
+  /** Stage `write`: lay the winners out like the target, merge them into
+    * it by seq-aware LWW (copy-on-write over the affected buckets), and
+    * write the merged rows. Returns the write and the epoch's counters. */
+  private def mergeAndWrite(spark: SparkSession, table: IceTable,
+      scope: Scope, fresh: DataFrame, dd: Dedup, lay: Layout, epochId: Long)
+      : (IceTable.EpochWrite, EpochStats) = {
+    import spark.implicits._
+    def alignWinners(df: DataFrame): DataFrame =
+      if (lay.aligned)
+        GraftSqlBridge.dataFrameWithKeyGroupedPartitioning(spark, df,
+          "bucket", lay.buckets)
+      else df.repartition(scope.nBuckets, $"bucket")
+    val eventCols = EventCols.map(c => col(s"e.$c").as(c))
 
-    val deduped: org.apache.spark.sql.DataFrame =
-      if (payloadDedup) {
-        // winners already carry the winning row (max_by above): project the
-        // payload out of the persisted aggregate and lay it out — no second
-        // pass over the input, no broadcast, no rank. The local sort is the
-        // merge join's own required order (so it costs nothing extra) and,
-        // critically, keeps the bucket layout: EnsureRequirements REPLACES a
-        // user repartition sitting DIRECTLY under a join with a full-key
-        // shuffle at the default partition count (verified on 4.1: a bare
-        // repartition(16, bucket) under the full-outer merge became
-        // hash(bucket, repo, path, 32) on both sides, exploding the
-        // bucket-clustered write into ~bucketCount files per task), while a
-        // sandwiched operator whose partitioning still satisfies the join's
-        // clustering is accepted as-is.
-        alignWinners(winners.select($"repo", $"path", $"e.op".as("op"),
-          $"e.seq".as("seq"), $"e.commit".as("commit"),
-          $"e.lang".as("lang"), $"e.content".as("content"), $"bucket"))
+    val deduped: DataFrame = dd.mode match {
+      case "payload" =>
+        // the winners carry the winning row; the local sort is the merge
+        // join's own required order, so it costs nothing extra
+        alignWinners(dd.winners.select(
+          (Seq($"repo", $"path") ++ eventCols :+ $"bucket"): _*))
           .sortWithinPartitions($"bucket", $"repo", $"path")
-      } else if (winnerBytes <= maxBroadcastBytes(spark)) {
-        // phase B: winner rows via broadcast semi-equijoin on (key, seq),
-        // then ONE layout shuffle by bucket (aligning with the merge join)
-        // and a windowed rank that removes exact intra-batch duplicates —
-        // two events with the SAME (key, seq), which at-least-once delivery
-        // can produce inside one micro-batch and the cross-epoch fence
-        // cannot see. The window's ClusteredDistribution(bucket,·) is
-        // satisfied by the bucket layout and its sort IS the merge join's
-        // required sort order, so dedup costs no extra exchange or sort.
-        // Tie-break among same-(key, seq) rows is the LEXICOGRAPHIC MAX of
-        // (commit, op, lang, content) — the identical rule the fallback's
-        // max_by ordering applies, so which dedup path an epoch takes can
-        // never change the table.
+      case "broadcast" =>
+        // phase B: winner rows via broadcast equijoin on (key, seq), laid
+        // out by bucket, then a rank over the rest of the LWW order drops
+        // same-(key, seq) duplicates. The window's clustering is satisfied
+        // by the bucket layout and its sort IS the merge join's, so it
+        // costs no extra exchange or sort.
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy($"bucket", $"repo", $"path")
-          .orderBy($"commit".desc, $"op".desc, $"lang".desc, $"content".desc)
+          .orderBy(LwwOrder.filterNot(_ == "seq").map(c => col(c).desc): _*)
         alignWinners(fresh.join(
-          broadcast(winners.select($"repo", $"path", $"seq", $"bucket")),
+          broadcast(dd.winners.select($"repo", $"path", $"seq", $"bucket")),
           Seq("repo", "path", "seq")))
           .withColumn("_rn", row_number().over(w))
           .filter($"_rn" === 1).drop("_rn")
-      } else {
-        // ordering struct mirrors the window tie-break above exactly
+      case "shuffle" =>
         alignWinners(fresh
           .groupBy($"repo", $"path")
-          .agg(max_by(struct($"op", $"seq", $"commit", $"lang", $"content"),
-            struct($"seq", $"commit", $"op", $"lang", $"content")).as("e"))
-          .select($"repo", $"path", $"e.op".as("op"), $"e.seq".as("seq"),
-            $"e.commit".as("commit"), $"e.lang".as("lang"),
-            $"e.content".as("content"))
-          .withColumn("bucket", table.bucketCol($"repo", $"path", nBuckets)))
-      }
+          .agg(lwwMaxBy.as("e"))
+          .select((Seq($"repo", $"path") ++ eventCols): _*)
+          .withColumn("bucket",
+            table.bucketCol($"repo", $"path", scope.nBuckets)))
+    }
 
     // LWW resolution per target-schema column, by stable colId. The update
     // wins only if strictly newer than the stored row's lastSeq; a winning
@@ -806,10 +813,11 @@ object MergeEngine {
     val updateColByColId = Map(1 -> "repo", 2 -> "path", 3 -> "commit",
       4 -> "lang", 5 -> "content")
     val u = deduped.as("u")
-    val c = current.as("c")
+    val c = lay.target.as("c")
     val uWins = $"u.seq".isNotNull &&
       ($"c.lastSeq".isNull || $"u.seq" > $"c.lastSeq")
     val isDel = uWins && $"u.op" === "d"
+    val targetSchema = SchemaRegistry.schemaFor(scope.schemaId)
     val resolved: Seq[Column] = targetSchema.columns.map { tc =>
       tc.colId match {
         case 1 => col("repo")
@@ -846,7 +854,7 @@ object MergeEngine {
 
     // adaptive hot-bucket salting: if one bucket holds a disproportionate
     // share of this epoch's keys, split its write across multiple tasks.
-    val bucketWeights = perGroup.map(_.getAs[Long]("nKeys")).toSeq
+    val bucketWeights = dd.perBucket.map(_.getAs[Long]("nKeys"))
     val saltPerBucket =
       if (bucketWeights.size <= 1) 1
       else {
@@ -857,63 +865,49 @@ object MergeEngine {
     // merged output is already distributed by bucket (the aligned join), so
     // the write adds NO shuffle — unless hot-bucket salting kicked in, which
     // trades one extra exchange for write parallelism on the skewed bucket.
-    if (sys.env.get("SPARK_GRAFT_EXPLAIN").contains("1"))
-      System.err.println(merged.queryExecution.executedPlan.toString.take(8000))
-    val newFiles = timed("merge+write")(
-      table.writeEpochFiles(merged, epochId, schemaIdNow, saltPerBucket,
-        alignedByBucket = true, nBuckets = nBuckets))
+    val write = table.writeEpochFilesTimed(merged, epochId, scope.schemaId,
+      saltPerBucket, alignedByBucket = true, nBuckets = scope.nBuckets)
 
-    val metrics = org.apache.spark.sql.GraftSqlBridge
-      .awaitObservation(spark, obs, "merge-write")
-    val applied = metrics("up").asInstanceOf[Long]
-    val deletes = metrics("del").asInstanceOf[Long]
-    val stale = metrics("stale").asInstanceOf[Long]
+    val metrics = GraftSqlBridge.awaitObservation(spark, obs, "merge-write")
+    (write, EpochStats(
+      rowsExtracted = dd.freshCount + dd.quarantined,
+      rowsQuarantined = dd.quarantined,
+      dedupDrops = dd.freshCount - dd.upsertCount,
+      rowsApplied = metrics("up").asInstanceOf[Long],
+      deletesApplied = metrics("del").asInstanceOf[Long],
+      staleDrops = metrics("stale").asInstanceOf[Long]))
+  }
 
-    // --- 5. manifest: carry-forward files + interval-merged offsets ------
-    val stats = EpochStats(
-      rowsExtracted = freshCount + quarantined,
-      rowsQuarantined = quarantined,
-      dedupDrops = dedupDrops,
-      rowsApplied = applied,
-      deletesApplied = deletes,
-      staleDrops = stale)
-
+  /** Stage `commit`: the manifest (carried-forward plus new files, merged
+    * offsets), the task-policy gate — abort, no commit, on failure — and
+    * the rename-CAS commit. */
+  private def commitEpoch(table: IceTable, scope: Scope, dd: Dedup,
+      claims: Claims, files: Seq[DataFileEntry], stats: EpochStats,
+      epochId: Long, nLogPartitions: Int,
+      taskPolicies: Seq[TaskPolicies.Policy]): EpochManifest = {
     // completeness watermark: monotone advance to the contiguous origin
     // prefix — valid to publish only because the task-policy gate below
     // fail-stops the commit when this epoch's counters do NOT reconcile
     // (the reference's audit-count condition).
-    val offsetsNow = mergedOffsets
     val manifest = EpochManifest(
-      version = parentVersion + 1,
+      version = scope.parentVersion + 1,
       epochId = epochId,
-      schemaId = schemaIdNow,
-      files = (keptFiles ++ newFiles).sortBy(f => (f.bucket, f.path)),
-      offsets = offsetsNow,
+      schemaId = scope.schemaId,
+      files = files.sortBy(f => (f.bucket, f.path)),
+      offsets = claims.offsets,
       stats = stats,
-      parentVersion = parentVersion,
+      parentVersion = scope.parentVersion,
       completeUntilSeq = math.max(
-        parent.map(_.completeUntilSeq).getOrElse(Long.MinValue),
-        Intervals.contiguousOriginPrefix(offsetsNow)),
-      numBuckets = nBuckets,
+        scope.parent.map(_.completeUntilSeq).getOrElse(Long.MinValue),
+        Intervals.contiguousOriginPrefix(claims.offsets)),
+      numBuckets = scope.nBuckets,
       // purge mark is table history, not epoch output — carry it (a reset
       // would hide a purge from a change-feed window spanning this commit)
-      purgedBelowSeq = parent.map(_.purgedBelowSeq).getOrElse(Long.MinValue))
-
-    // --- 6. task-level policy gate: abort (no commit) on failure ---------
-    graft.pipeline.TaskPolicies.enforce(taskPolicies, stats)
-
-    val committed = timed("commit")(commitWithRebase(table, manifest, parent,
-      affectedBuckets, claimsFor, nLogPartitions))
-    emitCommitEvent(table, committed, stats, skipped = false)
-    EpochOutcome(committed, skipped = false, stats)
-    } finally { winners.unpersist(); () }
-
-    } finally {
-      prevConfs.foreach {
-        case (s, k, Some(v)) => s.conf.set(k, v)
-        case (s, k, None) => s.conf.unset(k)
-      }
-    }
+      purgedBelowSeq =
+        scope.parent.map(_.purgedBelowSeq).getOrElse(Long.MinValue))
+    TaskPolicies.enforce(taskPolicies, stats)
+    commitWithRebase(table, manifest, scope.parent, dd.buckets,
+      claims.claimsFor, nLogPartitions)
   }
 
   /** Append per-partition lineage rows for a committed epoch. */

@@ -928,8 +928,7 @@ final class IceTable(val dir: String, val defaultNumBuckets: Int,
     * one shuffle keyed by bucket, into a STAGING dir, then publish each file
     * into `data/bucket=<b>/e<epochId>-<name>` by rename (staging→output
     * atomicity; a crash mid-publish leaves only unreferenced orphans).
-    * `saltPerBucket > 1` splits each bucket across that many writer tasks
-    * (the north-star "salted repartitioning before the merge-apply stage"):
+    * `saltPerBucket > 1` splits each bucket across that many writer tasks:
     * a Zipf-hot bucket then produces several files in parallel instead of
     * one straggler task; readers are unaffected (manifests list all files).
     * Salted files are keyed by an explicit `_salt` staging partition column
@@ -941,26 +940,21 @@ final class IceTable(val dir: String, val defaultNumBuckets: Int,
     * already hash-partitioned by `bucket` (bucket-aligned MERGE output).
     * Published entries carry footer stats (rows + key/seq min-max) from one
     * pooled metadata pass — the skipping/verifier inputs. */
-  private val wTiming = sys.env.get("SPARK_GRAFT_TIMING").contains("1")
-  private def wTimed[T](name: String)(f: => T): T =
-    if (!wTiming) f else {
-      val t0 = System.nanoTime()
-      val r = f
-      System.err.println(
-        f"[timing]   $name ${(System.nanoTime() - t0) / 1e9}%.3f s")
-      r
-    }
-
   def writeEpochFiles(df: DataFrame, epochId: Long,
       schemaId: Int = SchemaRegistry.baseSchemaId,
       saltPerBucket: Int = 1,
       alignedByBucket: Boolean = false,
-      nBuckets: Int = -1): Seq[DataFileEntry] = {
+      nBuckets: Int = -1): Seq[DataFileEntry] = writeEpochFilesTimed(df,
+    epochId, schemaId, saltPerBucket, alignedByBucket, nBuckets).files
+
+  /** [[writeEpochFiles]], also timing its write job, publish and stats. */
+  def writeEpochFilesTimed(df: DataFrame, epochId: Long, schemaId: Int,
+      saltPerBucket: Int, alignedByBucket: Boolean,
+      nBuckets: Int): IceTable.EpochWrite = {
     val f = fs
     val nb = if (nBuckets > 0) nBuckets else numBuckets
     val salted = saltPerBucket > 1
-    val staging = new HPath(stagingDir,
-      s"e$epochId-${System.nanoTime()}")
+    val staging = new HPath(stagingDir, s"e$epochId-${System.nanoTime()}")
     val parted =
       if (alignedByBucket && !salted) df
       else if (!salted) df.repartition(nb, col("bucket"))
@@ -968,8 +962,7 @@ final class IceTable(val dir: String, val defaultNumBuckets: Int,
         .withColumn("_salt",
           pmod(xxhash64(col("path")), lit(saltPerBucket)).cast("int"))
         .repartition(nb * saltPerBucket, col("bucket"), col("_salt"))
-    val sorted = parted
-      .sortWithinPartitions("bucket", "repo", "path")
+    val sorted = parted.sortWithinPartitions("bucket", "repo", "path")
       .write.mode("overwrite")
     // Native parquet key blooms (spark.graft.keyBlooms, default on): the
     // point-lookup path tests them AFTER range/residue pruning to cut the
@@ -985,10 +978,11 @@ final class IceTable(val dir: String, val defaultNumBuckets: Int,
           .option("parquet.bloom.filter.enabled#path", "true")
           .option("parquet.bloom.filter.adaptive.enabled", "true")
       else sorted
-    wTimed("write-job")(
-      (if (salted) withBlooms.partitionBy("bucket", "_salt")
-       else withBlooms.partitionBy("bucket"))
-        .parquet(staging.toString))
+    val t0 = System.nanoTime()
+    (if (salted) withBlooms.partitionBy("bucket", "_salt")
+     else withBlooms.partitionBy("bucket"))
+      .parquet(staging.toString)
+    val t1 = System.nanoTime()
     // publish: move every staged file under the flat single-level data
     // layout (any _salt staging level is flattened into the file NAME —
     // one task can stage the same part-file name under two _salt dirs of
@@ -1009,7 +1003,7 @@ final class IceTable(val dir: String, val defaultNumBuckets: Int,
             saltRes = saltRes)
         }
     }
-    val entries = wTimed("publish")(f.listStatus(staging).iterator
+    val sortedEntries = f.listStatus(staging).iterator
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("bucket="))
       .flatMap { d =>
         val bucket = d.getPath.getName.stripPrefix("bucket=").toInt
@@ -1020,11 +1014,9 @@ final class IceTable(val dir: String, val defaultNumBuckets: Int,
             publishDir(sd.getPath, bucket,
               sd.getPath.getName.stripPrefix("_salt=").toInt)
           }
-      }.toSeq)
+      }.toSeq.sortBy(e => (e.bucket, e.path))
     f.delete(staging, true)
-    if (wTiming)
-      System.err.println(s"[timing]   files=${entries.size} salt=$saltPerBucket aligned=$alignedByBucket")
-    val sortedEntries = entries.sortBy(e => (e.bucket, e.path))
+    val t2 = System.nanoTime()
     // footer-stats pass: small batches use the bounded driver pool; past
     // the threshold it runs as a Spark job so a many-file epoch (e.g. 1024
     // salted files on an object store) doesn't serialize N/16 footer
@@ -1032,10 +1024,12 @@ final class IceTable(val dir: String, val defaultNumBuckets: Int,
     val distMin = df.sparkSession.conf
       .getOption("spark.graft.distributedStatsMinFiles")
       .map(_.toInt).getOrElse(64)
-    wTimed("footer-stats")(
+    val files =
       if (sortedEntries.size >= distMin)
         FileStats.fillAllDistributed(df.sparkSession, sortedEntries)
-      else FileStats.fillAll(hconf, sortedEntries))
+      else FileStats.fillAll(hconf, sortedEntries)
+    IceTable.EpochWrite(files, (t1 - t0) / 1000000L, (t2 - t1) / 1000000L,
+      (System.nanoTime() - t2) / 1000000L)
   }
 
   /** All PUBLISHED data files of the given epoch (committed or orphaned). */
@@ -1148,6 +1142,10 @@ final class IceTable(val dir: String, val defaultNumBuckets: Int,
 }
 
 object IceTable {
+  /** an epoch write's published files and per-phase wall milliseconds */
+  final case class EpochWrite(files: Seq[DataFileEntry], writeJobMs: Long,
+      publishMs: Long, footerStatsMs: Long)
+
   def create(dir: String, numBuckets: Int = 32,
              inlineFileThreshold: Int = 1024,
              segChunkBuckets: Int = 128): IceTable =

@@ -29,6 +29,14 @@ class MetricsSpec extends SparkSpec {
     }.toSeq
   }
 
+  /** `applyEpoch` plus its wall milliseconds as the caller sees them */
+  private def timedApply(f: => MergeEngine.EpochOutcome)
+      : (MergeEngine.EpochOutcome, Long) = {
+    val t0 = System.nanoTime()
+    val out = f
+    (out, (System.nanoTime() - t0) / 1000000L)
+  }
+
   test("post-commit events land in the jsonl reporter; counters match " +
       "EpochStats; fenced replays emit nothing new") {
     val mDir = tmpDir("mrep")
@@ -37,18 +45,20 @@ class MetricsSpec extends SparkSpec {
       spark.sessionState.newHadoopConf()))
     try {
       val t = IceTable.create(tmpDir("mtab"), numBuckets = 4)
-      val out0 = MergeEngine.applyEpoch(spark, t,
-        (0 until 50).map(i => ev("i", i.toLong, s"p$i", s"v$i")).toDS(), 0,
-        nLogPartitions = 2, claimedRange = Some((-1L, 49L)))
+      // inputs are built outside the timed calls: a cold JVM spends seconds
+      // deriving the first encoder, which is the caller's cost
+      val in0 = (0 until 50).map(i => ev("i", i.toLong, s"p$i", s"v$i")).toDS()
+      val (out0, wall0) = timedApply(MergeEngine.applyEpoch(spark, t, in0, 0,
+        nLogPartitions = 2, claimedRange = Some((-1L, 49L))))
       // pure fenced replay: no commit, no event
       val outR = MergeEngine.applyEpoch(spark, t,
         (0 until 50).map(i => ev("i", i.toLong, s"p$i", s"v$i")).toDS(), 0,
         nLogPartitions = 2, claimedRange = Some((-1L, 49L)))
       assert(outR.skipped)
       // declared-empty slice: metadata-only COMMIT -> event with the flag
-      val outE = MergeEngine.applyEpoch(spark, t,
-        spark.emptyDataset[ChangeEvent], 1, nLogPartitions = 2,
-        claimedRange = Some((49L, 60L)))
+      val inE = spark.emptyDataset[ChangeEvent]
+      val (outE, wallE) = timedApply(MergeEngine.applyEpoch(spark, t, inE, 1,
+        nLogPartitions = 2, claimedRange = Some((49L, 60L))))
       assert(outE.skipped && outE.manifest.version == out0.manifest.version + 1)
       graft.maintenance.Compaction.compact(spark, t)
       t.expireSnapshots(keepLast = 1)
@@ -65,6 +75,31 @@ class MetricsSpec extends SparkSpec {
         real("rowsExtracted") == out0.stats.rowsExtracted.toString)
       val mo = commits.find(_._3("metadataOnly") == "true").get._3
       assert(mo("epochId") == "1" && mo("completeUntilSeq") == "60")
+      // every commit event carries the full counters and per-stage wall
+      // times that account for the caller-measured applyEpoch time
+      Seq((real, out0, wall0), (mo, outE, wallE)).foreach {
+        case (e, out, wall) =>
+          val st = out.stats
+          assert(Seq("rowsExtracted", "rowsQuarantined", "dedupDrops",
+            "rowsApplied", "deletesApplied", "staleDrops").map(e(_)) ==
+            Seq(st.rowsExtracted, st.rowsQuarantined, st.dedupDrops,
+              st.rowsApplied, st.deletesApplied, st.staleDrops)
+              .map(_.toString), s"event counters != $st: $e")
+          val stageMs = MergeEngine.Stages.map(s => e(s"${s}Ms").toLong)
+          assert(stageMs.forall(_ >= 0), s"negative stage time: $e")
+          assert(math.abs(wall - stageMs.sum) <= math.max(wall / 10, 50L),
+            s"stages sum to ${stageMs.sum} ms, applyEpoch took $wall ms: $e")
+      }
+      // a tiny declared epoch onto an empty table: payload dedup, static
+      // plan, no target to align or skip
+      assert(real("dedupMode") == "payload" && real("aqe") == "false" &&
+        real("aligned") == "false" && real("filesSkipped") == "0")
+      assert(real("filesWritten").toInt ==
+        out0.manifest.files.count(_.path.contains("/e0-")))
+      assert(Seq("writeJobMs", "publishMs", "footerStatsMs")
+        .forall(k => real(k).toLong >= 0))
+      assert(mo("filesWritten") == "0" && mo("layoutMs") == "0" &&
+        mo("writeMs") == "0")
       assert(events.exists(e => e._1 == "graft.maintenance" &&
         e._2 == "CompactionFinished" && e._3("table") == t.dir))
       assert(events.exists(e => e._1 == "graft.maintenance" &&

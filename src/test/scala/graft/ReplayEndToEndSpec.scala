@@ -2,6 +2,7 @@ package graft
 
 import graft.log.{ChangeLogGen, LogSpec, OracleFold}
 import graft.driver.ReplayJob
+import graft.merge.MergeEngine
 import graft.table.IceTable
 import org.apache.spark.sql.functions._
 
@@ -151,7 +152,6 @@ class ReplayEndToEndSpec extends SparkSpec {
           exception: Exception): Unit = ()
     }
     spark.listenerManager.register(l)
-    spark.conf.set("spark.graft.alignedScanMinBytes", "0") // force aligned
     try {
       val t = IceTable.create(tmpDir("align"), numBuckets = 4)
       ReplayJob.replayGenerated(spark, t, spec.copy(nEvents = 4000),
@@ -196,10 +196,7 @@ class ReplayEndToEndSpec extends SparkSpec {
         s"the merge target must be the DSv2 bucket scan:\n$plan")
       assert(mergeSection.contains("ExistingRDD"),
         s"the winner side must be the key-grouped-laid RDD:\n$plan")
-    } finally {
-      spark.conf.unset("spark.graft.alignedScanMinBytes")
-      spark.listenerManager.unregister(l)
-    }
+    } finally spark.listenerManager.unregister(l)
   }
 
   test("merge plan stays flat in bucket count (one BatchScan at 128 buckets)") {
@@ -216,7 +213,6 @@ class ReplayEndToEndSpec extends SparkSpec {
           exception: Exception): Unit = ()
     }
     spark.listenerManager.register(l)
-    spark.conf.set("spark.graft.alignedScanMinBytes", "0")
     try {
       val t = IceTable.create(tmpDir("flat"), numBuckets = 128)
       ReplayJob.replayGenerated(spark, t,
@@ -237,10 +233,61 @@ class ReplayEndToEndSpec extends SparkSpec {
       assert(mergeSection.size < 60,
         s"merge plan must not grow with bucket count " +
           s"(${mergeSection.size} lines):\n$plan")
-    } finally {
-      spark.conf.unset("spark.graft.alignedScanMinBytes")
-      spark.listenerManager.unregister(l)
+    } finally spark.listenerManager.unregister(l)
+  }
+
+  test("segment-claimed epoch onto a small target merges bucket-aligned") {
+    // an epoch of unknown size (no declared claim) keeps AQE and the
+    // envelope dedup; onto a small non-empty target it must still read the
+    // target in place through the bucket-aligned scan, with no exchange
+    // (so AQE has nothing to wrap), and keep the one-file-per-bucket write
+    import scala.jdk.CollectionConverters._
+    import spark.implicits._
+    val captured = new java.util.concurrent.CopyOnWriteArrayList[String]()
+    val l = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          durationNs: Long): Unit = captured.add(qe.executedPlan.toString)
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          exception: Exception): Unit = ()
     }
+    val nBuckets = 4
+    val t = IceTable.create(tmpDir("segal"), numBuckets = nBuckets)
+    val sp = spec.copy(nEvents = 4000)
+    val cdf = ChangeLogGen.zipfCdf(sp.nRepos, sp.zipfExponent)
+    def slice(lo: Long, hi: Long) =
+      spark.range(lo, hi).map(s => ChangeLogGen.eventAt(sp, cdf, s))
+    MergeEngine.applyEpoch(spark, t, slice(0, 2000), 0, nLogPartitions = 4)
+    spark.listenerManager.register(l)
+    try {
+      val out = MergeEngine.applyEpoch(spark, t, slice(2000, 4000), 1,
+        nLogPartitions = 4)
+      assert(!out.skipped)
+      val written = out.manifest.files.filter(_.path.contains("/e1-"))
+      assert(written.nonEmpty && written.size <= nBuckets + 1,
+        s"epoch 1 wrote ${written.size} files for $nBuckets buckets")
+      val want = OracleFold.fold(ChangeLogGen.generateLocal(sp))
+        .map { case (k, v) => k -> (v.contentSha, v.commit) }
+      assert(tableState(t) == want, "must match the oracle fold")
+      val deadline = System.currentTimeMillis() + 120000
+      def planOpt = captured.asScala.find(p =>
+        p.contains("FullOuter") && p.contains("graft_bucket_aligned"))
+      while (planOpt.isEmpty && System.currentTimeMillis() < deadline)
+        Thread.sleep(100)
+      val plan = planOpt.getOrElse(
+        fail(s"no aligned merge plan captured in ${captured.size} plans"))
+      val mergeSection = plan.linesIterator
+        .takeWhile(x => !x.contains("InMemoryRelation") &&
+          !x.contains("== Initial Plan =="))
+        .mkString("\n")
+      assert("Exchange".r.findAllIn(mergeSection).isEmpty,
+        s"the merge must need no planner exchange:\n$plan")
+      assert(mergeSection.contains("BatchScan graft_bucket_aligned"),
+        s"the merge target must be the DSv2 bucket scan:\n$plan")
+      // the envelope dedup's rank window, not the tiny-epoch payload path
+      assert(mergeSection.contains("Window"), s"envelope dedup:\n$plan")
+    } finally spark.listenerManager.unregister(l)
   }
 
   test("skew: no reducer partition holds a disproportionate share") {

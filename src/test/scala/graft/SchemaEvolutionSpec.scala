@@ -64,25 +64,23 @@ class SchemaEvolutionSpec extends SparkSpec {
 
   test("aligned scan merges mixed-schema files correctly (claimed partitioning)") {
     // same mid-log evolution, but the CoW target is read through the
-    // claimed-partitioning bucket scan (forced via minBytes=0): v1-written
-    // files must evolve to v4 per group and line up positionally.
-    spark.conf.set("spark.graft.alignedScanMinBytes", "0")
-    try {
-      val t = IceTable.create(tmpDir("evoal"), numBuckets = 4)
-      ReplayJob.replayGenerated(spark, t, spec.copy(nEvents = 2000),
-        nEpochs = 2, nLogPartitions = 4)
-      t.evolveSchema(2); t.evolveSchema(3); t.evolveSchema(4)
-      val cdf = ChangeLogGen.zipfCdf(spec.nRepos, spec.zipfExponent)
-      val sp = spec
-      import spark.implicits._
-      ReplayJob.run(spark, t,
-        _ => spark.range(2000, 4000).map(s => ChangeLogGen.eventAt(sp, cdf, s)),
-        Seq((2L, 1999L, 3999L)), nLogPartitions = 4)
-      assert(t.currentManifest().get.schemaId == 4)
-      assert(shaState(t) == oracle,
-        "sha parity must hold through the aligned mixed-schema merge")
-      assert(t.read(spark).filter(col("language").isNull).count() == 0)
-    } finally spark.conf.unset("spark.graft.alignedScanMinBytes")
+    // claimed-partitioning bucket scan (every merge onto a non-empty
+    // target): v1-written files must evolve to v4 per group and line up
+    // positionally.
+    val t = IceTable.create(tmpDir("evoal"), numBuckets = 4)
+    ReplayJob.replayGenerated(spark, t, spec.copy(nEvents = 2000),
+      nEpochs = 2, nLogPartitions = 4)
+    t.evolveSchema(2); t.evolveSchema(3); t.evolveSchema(4)
+    val cdf = ChangeLogGen.zipfCdf(spec.nRepos, spec.zipfExponent)
+    val sp = spec
+    import spark.implicits._
+    ReplayJob.run(spark, t,
+      _ => spark.range(2000, 4000).map(s => ChangeLogGen.eventAt(sp, cdf, s)),
+      Seq((2L, 1999L, 3999L)), nLogPartitions = 4)
+    assert(t.currentManifest().get.schemaId == 4)
+    assert(shaState(t) == oracle,
+      "sha parity must hold through the aligned mixed-schema merge")
+    assert(t.read(spark).filter(col("language").isNull).count() == 0)
   }
 
   test("data skipping carries old-vintage files through an evolved merge") {

@@ -103,7 +103,6 @@ class StreamingSpec extends SparkSpec {
           exception: Exception): Unit = ()
     }
     spark.listenerManager.register(l)
-    spark.conf.set("spark.graft.alignedScanMinBytes", "0")
     try {
       val logDir = tmpDir("alog")
       val t = IceTable.create(tmpDir("atab"), numBuckets = 4)
@@ -127,10 +126,7 @@ class StreamingSpec extends SparkSpec {
         s"streaming merge must be exchange-free above both sides:\n$plan")
       assert(mergeSection.contains("BatchScan graft_bucket_aligned"),
         s"streaming merge target must be the DSv2 bucket scan:\n$plan")
-    } finally {
-      spark.conf.unset("spark.graft.alignedScanMinBytes")
-      spark.listenerManager.unregister(l)
-    }
+    } finally spark.listenerManager.unregister(l)
   }
 
   test("streaming health check surfaces a growing backlog per micro-batch") {
