@@ -79,9 +79,11 @@ object Compaction {
         carried.size)
 
     // read IN PLACE per bucket (DSv2 bucket scan): the rewrite is then
-    // filter → write with ZERO shuffle — each bucket's task reads its own
-    // files and writes its own compacted file (alignedByBucket skips the
-    // repartition). At 100 TB compaction moves no rows across the network.
+    // filter → write with ZERO shuffle — every bucket is read and written
+    // whole by one task, which writes its compacted file (alignedByBucket
+    // skips the repartition). The buckets are packed into one task per core
+    // unless their bytes need more (IceTable.packBuckets). At 100 TB
+    // compaction moves no rows across the network.
     val raw = table.readFilesBucketAligned(spark, fragFiles, parent.schemaId)
     val obs = Observation(s"compact-${parent.version}")
     // null-safe: a null `deleted` must count as live AND survive the rewrite
@@ -99,8 +101,10 @@ object Compaction {
 
     // unique data dir per compaction, disjoint from ingest epoch ids
     val compactionEpochId = 1000000000L + parent.version
-    val newFiles = table.writeEpochFiles(kept, compactionEpochId,
-      parent.schemaId, alignedByBucket = true,
+    val (packed, writeTasks) =
+      IceTable.packBuckets(kept, fragBuckets.size, fragFiles)
+    val write = table.writeEpochFilesTimed(packed, compactionEpochId,
+      parent.schemaId, saltPerBucket = 1, alignedByBucket = true,
       nBuckets = table.bucketCountOf(Some(parent)))
 
     val metrics = org.apache.spark.sql.GraftSqlBridge
@@ -121,7 +125,7 @@ object Compaction {
     //     by the same filter, cannot). The recount scans ONLY the boolean
     //     `deleted` column (column pruning — about a bit per row), not the
     //     table data, so it is not the full second read this replaced.
-    val counted = newFiles
+    val counted = write.files
     // footer counts are this verifier's evidence — a stats-less entry
     // (degraded footer read) means the check CANNOT pass; abort before
     // commit (files stay unreferenced orphans) instead of comparing junk
@@ -161,7 +165,11 @@ object Compaction {
       "liveRows" -> liveBefore.toString,
       "files" -> committed.files.size.toString,
       "compactedBuckets" -> fragBuckets.size.toString,
-      "carriedFiles" -> carried.size.toString))
+      "carriedFiles" -> carried.size.toString,
+      "writeTasks" -> writeTasks.toString,
+      "writeJobMs" -> write.writeJobMs.toString,
+      "publishMs" -> write.publishMs.toString,
+      "footerStatsMs" -> write.footerStatsMs.toString))
     CompactionReport(committed.version, purged, liveBefore,
       committed.files.size, fragBuckets.size, carried.size)
     }

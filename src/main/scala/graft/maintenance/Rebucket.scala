@@ -17,12 +17,14 @@ import org.apache.spark.sql.functions._
  *
  * Shape: one full rewrite — read every manifest-listed file, recompute
  * `bucket = pmod(xxhash64(repo, path), newN)`, one shuffle into the new
- * layout, publish, commit. A re-bucket is inherently a full-table shuffle
- * (every key can change buckets); what matters at 100 TB is that it happens
- * as ONE pass with no driver materialization, its output is verified by
- * footer counts before commit, and it runs rarely (bucket width bounds
- * rewrite amplification, so operators re-bucket when per-bucket bytes grow
- * past the compaction sweet spot).
+ * layout (hash of `bucket` into IceTable.packedTasks partitions, sized from
+ * the table's bytes, so every bucket is one file), publish, commit. A
+ * re-bucket is inherently a full-table shuffle (every key can change
+ * buckets); what matters at 100 TB is that it happens as ONE pass with no
+ * driver materialization, its output is verified by footer counts before
+ * commit, and it runs rarely (bucket width bounds rewrite amplification, so
+ * operators re-bucket when per-bucket bytes grow past the compaction sweet
+ * spot).
  *
  * Offsets/fence/completeness are carried unchanged — replay protection is
  * independent of the physical layout.
@@ -55,7 +57,7 @@ object Rebucket {
     // disjoint epoch-id range from ingest (1e9+v = compaction, 2e9+v = this)
     val epochId = 2000000000L + parent.version
     val newFiles = table.writeEpochFiles(remapped, epochId, parent.schemaId,
-      nBuckets = newNumBuckets)
+      nBuckets = newNumBuckets, sourceFiles = parent.files)
 
     val rowsIn = org.apache.spark.sql.GraftSqlBridge
       .awaitObservation(spark, obs, "rebucket-verifier")

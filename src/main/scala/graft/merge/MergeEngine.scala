@@ -223,10 +223,12 @@ object MergeEngine {
 
   /** What an epoch did beyond its counters: dedup mode (`payload`,
     * `broadcast` or `shuffle`), AQE on/off, bucket-aligned target scan,
-    * touched-bucket files skipped by stats, and the write's files and time. */
+    * touched-bucket files skipped by stats, the write's files and time, and
+    * the task count [[IceTable.packBuckets]] chose for it (0: not packed). */
   private final case class EpochFacts(dedupMode: String, aqe: Boolean,
       aligned: Boolean = false, filesSkipped: Int = 0,
-      write: IceTable.EpochWrite = IceTable.EpochWrite(Nil, 0L, 0L, 0L))
+      write: IceTable.EpochWrite = IceTable.EpochWrite(Nil, 0L, 0L, 0L),
+      writeTasks: Int = 0)
 
   /** post-commit tracking event (gobblin-metrics GobblinTrackingEvent
     * analog; see graft.metrics.Metrics) — emitted AFTER the snapshot is
@@ -252,6 +254,7 @@ object MergeEngine {
       "aligned" -> facts.aligned.toString,
       "filesSkipped" -> facts.filesSkipped.toString,
       "filesWritten" -> facts.write.files.size.toString,
+      "writeTasks" -> facts.writeTasks.toString,
       "writeJobMs" -> facts.write.writeJobMs.toString,
       "publishMs" -> facts.write.publishMs.toString,
       "footerStatsMs" -> facts.write.footerStatsMs.toString) ++
@@ -286,9 +289,11 @@ object MergeEngine {
       claimsFor: Int => Seq[(Long, Long)], offsets: Seq[OffsetRange])
 
   /** The merge target: parent files carried forward (`skipped` of them by
-    * stats) and the rewritten files' rows, read bucket-aligned or not. */
+    * stats) and the rewritten files' rows (`read`), read bucket-aligned or
+    * not. */
   private final case class Layout(kept: Seq[DataFileEntry], skipped: Int,
-      target: DataFrame, aligned: Boolean, buckets: Seq[Int])
+      read: Seq[DataFileEntry], target: DataFrame, aligned: Boolean,
+      buckets: Seq[Int])
 
   /**
    * Apply one epoch of change events to `table`. Idempotent: events inside
@@ -349,13 +354,13 @@ object MergeEngine {
           }
         } else {
           val lay = clock("layout")(layout(spark, table, scope, dd))
-          val (write, st) = clock("write")(mergeAndWrite(spark, table, scope,
-            in.fresh, dd, lay, epochId))
+          val (write, writeTasks, st) = clock("write")(mergeAndWrite(spark,
+            table, scope, in.fresh, dd, lay, epochId))
           val m = clock("commit")(commitEpoch(table, scope, dd, claims,
             lay.kept ++ write.files, st, epochId, nLogPartitions,
             taskPolicies))
           emitCommitEvent(table, m, st, skipped = false, EpochFacts(dd.mode,
-            scope.aqe, lay.aligned, lay.skipped, write), clock)
+            scope.aqe, lay.aligned, lay.skipped, write, writeTasks), clock)
           EpochOutcome(m, skipped = false, st)
         }
       } finally { winners.unpersist(); () }
@@ -758,16 +763,17 @@ object MergeEngine {
       else
         table.readFiles(spark, touchedFiles, scope.schemaId)
           .repartition(scope.nBuckets, col("bucket"))
-    Layout(untouchedFiles ++ skippedFiles, skippedFiles.size, target,
-      aligned, buckets)
+    Layout(untouchedFiles ++ skippedFiles, skippedFiles.size, touchedFiles,
+      target, aligned, buckets)
   }
 
   /** Stage `write`: lay the winners out like the target, merge them into
     * it by seq-aware LWW (copy-on-write over the affected buckets), and
-    * write the merged rows. Returns the write and the epoch's counters. */
+    * write the merged rows. Returns the write, its packed task count (0:
+    * not packed) and the epoch's counters. */
   private def mergeAndWrite(spark: SparkSession, table: IceTable,
       scope: Scope, fresh: DataFrame, dd: Dedup, lay: Layout, epochId: Long)
-      : (IceTable.EpochWrite, EpochStats) = {
+      : (IceTable.EpochWrite, Int, EpochStats) = {
     import spark.implicits._
     def alignWinners(df: DataFrame): DataFrame =
       if (lay.aligned)
@@ -865,11 +871,18 @@ object MergeEngine {
     // merged output is already distributed by bucket (the aligned join), so
     // the write adds NO shuffle — unless hot-bucket salting kicked in, which
     // trades one extra exchange for write parallelism on the skewed bucket.
-    val write = table.writeEpochFilesTimed(merged, epochId, scope.schemaId,
+    // An aligned, unsalted write packs its buckets into one task per core
+    // (unless the target's bytes need more); the empty-target and salted
+    // writes keep their own partitioning.
+    val (toWrite, writeTasks) =
+      if (lay.aligned && saltPerBucket == 1)
+        IceTable.packBuckets(merged, lay.buckets.size, lay.read)
+      else (merged, 0)
+    val write = table.writeEpochFilesTimed(toWrite, epochId, scope.schemaId,
       saltPerBucket, alignedByBucket = true, nBuckets = scope.nBuckets)
 
     val metrics = GraftSqlBridge.awaitObservation(spark, obs, "merge-write")
-    (write, EpochStats(
+    (write, writeTasks, EpochStats(
       rowsExtracted = dd.freshCount + dd.quarantined,
       rowsQuarantined = dd.quarantined,
       dedupDrops = dd.freshCount - dd.upsertCount,

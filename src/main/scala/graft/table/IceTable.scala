@@ -545,9 +545,11 @@ final class IceTable(val dir: String, val defaultNumBuckets: Int,
     * `spark.sql.sources.v2.bucketing.{enabled,shuffle.enabled}`,
     * `requireAllClusterKeysForCoPartition=false`) the full-outer diff runs
     * with ZERO exchanges; without them Catalyst falls back to a hash
-    * shuffle of just the changed-bucket rows. Tombstones purged below the
-    * safe horizon diff as (old tombstone, absent) — not a user-visible
-    * change, correctly emitted as nothing.
+    * shuffle of just the changed-bucket rows. The aligned diff's bucket
+    * partitions are packed into one task per core
+    * ([[IceTable.packBuckets]]) unless the changed files' bytes need more.
+    * Tombstones purged below the safe horizon diff as (old tombstone,
+    * absent) — not a user-visible change, correctly emitted as nothing.
     *
     * Ref: gobblin-iceberg/.../IcebergMetadataWriter.java:349-383 (snapshot
     * metadata as the incremental-consumption contract). */
@@ -608,12 +610,15 @@ final class IceTable(val dir: String, val defaultNumBuckets: Int,
       .when(oldLive && newLive && col("_o_seq") =!= col("_n_seq"),
         lit("update"))
       .when(oldLive && !newLive, lit("delete"))
-    j.withColumn("change_type", ct)
+    val changes = j.withColumn("change_type", ct)
       .filter(col("change_type").isNotNull)
       .withColumn("_img", when(col("change_type") === "delete",
         col("_o_img")).otherwise(col("_n_img")))
       .select(col("change_type") +: col("repo") +: col("path") +:
         nonKey.map(n => col(s"_img.$n").as(n)) :+ col("_n_seq").as("seq"): _*)
+    if (aligned) IceTable.packBuckets(changes, buckets.size,
+      oldOnly ++ newOnly)._1
+    else changes
   }
 
   /** Retention (SURVEY.md §2.9 cleaner analog; the reference's policy-driven
@@ -925,9 +930,12 @@ final class IceTable(val dir: String, val defaultNumBuckets: Int,
       lit(if (nBuckets > 0) nBuckets else numBuckets)).cast("int")
 
   /** Write rows (FileRow columns + `bucket`) as data files for `epochId`:
-    * one shuffle keyed by bucket, into a STAGING dir, then publish each file
-    * into `data/bucket=<b>/e<epochId>-<name>` by rename (staging→output
-    * atomicity; a crash mid-publish leaves only unreferenced orphans).
+    * one shuffle keyed by bucket into [[IceTable.packedTasks]] partitions
+    * (sized from `sourceFiles`, the manifest files the rows come from; every
+    * bucket lands whole in one partition), into a STAGING dir, then publish
+    * each file into `data/bucket=<b>/e<epochId>-<name>` by rename
+    * (staging→output atomicity; a crash mid-publish leaves only unreferenced
+    * orphans).
     * `saltPerBucket > 1` splits each bucket across that many writer tasks:
     * a Zipf-hot bucket then produces several files in parallel instead of
     * one straggler task; readers are unaffected (manifests list all files).
@@ -936,28 +944,33 @@ final class IceTable(val dir: String, val defaultNumBuckets: Int,
     * file's (saltMod, saltRes) residue class is EXACT and recorded in its
     * manifest entry: a later epoch whose winners miss the residue skips the
     * file without opening it (see MergeEngine file skipping).
-    * `alignedByBucket = true` skips the repartition when the input plan is
-    * already hash-partitioned by `bucket` (bucket-aligned MERGE output).
+    * `alignedByBucket = true` skips the repartition when every bucket
+    * already sits whole in one input partition (bucket-aligned MERGE or
+    * compaction output, possibly packed by [[IceTable.packBuckets]]); each
+    * task then writes one file per bucket it holds.
     * Published entries carry footer stats (rows + key/seq min-max) from one
     * pooled metadata pass — the skipping/verifier inputs. */
   def writeEpochFiles(df: DataFrame, epochId: Long,
       schemaId: Int = SchemaRegistry.baseSchemaId,
       saltPerBucket: Int = 1,
       alignedByBucket: Boolean = false,
-      nBuckets: Int = -1): Seq[DataFileEntry] = writeEpochFilesTimed(df,
-    epochId, schemaId, saltPerBucket, alignedByBucket, nBuckets).files
+      nBuckets: Int = -1,
+      sourceFiles: Seq[DataFileEntry] = Nil): Seq[DataFileEntry] =
+    writeEpochFilesTimed(df, epochId, schemaId, saltPerBucket,
+      alignedByBucket, nBuckets, sourceFiles).files
 
   /** [[writeEpochFiles]], also timing its write job, publish and stats. */
   def writeEpochFilesTimed(df: DataFrame, epochId: Long, schemaId: Int,
-      saltPerBucket: Int, alignedByBucket: Boolean,
-      nBuckets: Int): IceTable.EpochWrite = {
+      saltPerBucket: Int, alignedByBucket: Boolean, nBuckets: Int,
+      sourceFiles: Seq[DataFileEntry] = Nil): IceTable.EpochWrite = {
     val f = fs
     val nb = if (nBuckets > 0) nBuckets else numBuckets
     val salted = saltPerBucket > 1
     val staging = new HPath(stagingDir, s"e$epochId-${System.nanoTime()}")
     val parted =
       if (alignedByBucket && !salted) df
-      else if (!salted) df.repartition(nb, col("bucket"))
+      else if (!salted) df.repartition(
+        IceTable.packedTasks(df.sparkSession, nb, sourceFiles), col("bucket"))
       else df
         .withColumn("_salt",
           pmod(xxhash64(col("path")), lit(saltPerBucket)).cast("int"))
@@ -1145,6 +1158,34 @@ object IceTable {
   /** an epoch write's published files and per-phase wall milliseconds */
   final case class EpochWrite(files: Seq[DataFileEntry], writeJobMs: Long,
       publishMs: Long, footerStatsMs: Long)
+
+  /** Task count for a stage laid out one partition per bucket: one task per
+    * core, raised to what the stage's manifest bytes need at
+    * `spark.sql.files.maxPartitionBytes` each, capped at the bucket
+    * partitions. A small stage thus pays the fixed per-task cost once per
+    * core, not once per bucket (the reference's MultiWorkUnit bin-packing,
+    * MultiWorkUnit.java:46,68), while a large one keeps a task per bucket.
+    * A file without a recorded size counts as a full task's bytes. */
+  def packedTasks(spark: SparkSession, bucketPartitions: Int,
+      files: Seq[DataFileEntry]): Int = {
+    val maxBytes = spark.sessionState.conf.filesMaxPartitionBytes
+    val bytes = files.map(f => if (f.bytes >= 0) f.bytes else maxBytes).sum
+    val byBytes = (bytes + maxBytes - 1) / maxBytes
+    math.min(bucketPartitions.toLong,
+      math.max(spark.sparkContext.defaultParallelism.toLong, byBytes)).toInt
+  }
+
+  /** Pack a bucket-aligned `df` (one partition per bucket,
+    * `bucketPartitions` of them, reading `files`) into [[packedTasks]]
+    * tasks. `coalesce` is narrow: no shuffle, and each bucket stays whole
+    * inside one task, so an aligned join above the scans keeps zero
+    * exchanges and a bucket write keeps one file per bucket. Returns the
+    * packed frame and its task count. */
+  def packBuckets(df: DataFrame, bucketPartitions: Int,
+      files: Seq[DataFileEntry]): (DataFrame, Int) = {
+    val k = packedTasks(df.sparkSession, bucketPartitions, files)
+    (if (k < bucketPartitions) df.coalesce(k) else df, k)
+  }
 
   def create(dir: String, numBuckets: Int = 32,
              inlineFileThreshold: Int = 1024,

@@ -301,4 +301,141 @@ class ReplayEndToEndSpec extends SparkSpec {
     val (mx, avg) = (counts.max, counts.sum / counts.length)
     assert(mx < avg * 2, s"bucket skew too high: max=$mx avg=$avg")
   }
+
+  /** The task counts the three packed stages ran with, and the fixture
+    * facts they depend on. */
+  private final case class Packed(touchedBuckets: Int, minFileBytes: Long,
+      epochWriteTasks: Int, epochFilesWritten: Int, feedPartitions: Int,
+      compactWriteTasks: Int)
+
+  /** Run the three packed stages on a 32-bucket table: a 3600-event
+    * preload onto the empty target (not packed), a 400-event aligned epoch,
+    * `changesBetween` over that epoch, and a full compaction, with `confs`
+    * set from the aligned epoch on. Every answer is checked on the way: the
+    * table against the oracle fold after the epoch and after the compaction,
+    * the feed against the diff of the two `readAt` views, one file per
+    * bucket after the compaction. */
+  private def packedStages(label: String,
+      confs: Seq[(String, String)]): Packed = {
+    import spark.implicits._
+    import graft.metrics.Metrics
+    val seen =
+      new java.util.concurrent.CopyOnWriteArrayList[Metrics.MetricEvent]()
+    Metrics.clearReporters()
+    Metrics.addReporter(new Metrics.MetricsReporter {
+      def report(e: Metrics.MetricEvent): Unit = { seen.add(e); () }
+    })
+    // the storage-partitioned-join confs let the feed's diff run aligned
+    // outside applyEpoch (which scopes its own)
+    val all = confs ++ Seq(
+      "spark.sql.requireAllClusterKeysForCoPartition" -> "false",
+      "spark.sql.sources.v2.bucketing.enabled" -> "true",
+      "spark.sql.sources.v2.bucketing.shuffle.enabled" -> "true")
+    val prev = all.map { case (k, _) => k -> spark.conf.getOption(k) }
+    try {
+      val t = IceTable.create(tmpDir(label), numBuckets = 32)
+      val sp = spec.copy(seed = 53L, nEvents = 4000)
+      val evs = ChangeLogGen.generateLocal(sp).toVector
+      val (pre, tiny) = (evs.take(3600), evs.slice(3600, 4000))
+      MergeEngine.applyEpoch(spark, t, pre.toDS(), 0, nLogPartitions = 4,
+        claimedRange = Some((-1L, 3599L)))
+      all.foreach { case (k, v) => spark.conf.set(k, v) }
+      val out = MergeEngine.applyEpoch(spark, t, tiny.toDS(), 1,
+        nLogPartitions = 4, claimedRange = Some((3599L, 3999L)))
+      val v = out.manifest.version
+      val want = OracleFold.fold(evs)
+        .map { case (k, r) => k -> (r.contentSha, r.commit) }
+      assert(tableState(t) == want, "epoch: must match the oracle fold")
+      val touched = tiny.toDS()
+        .select(t.bucketCol($"repo", $"path", 32)).distinct().count().toInt
+
+      // the feed of the packed epoch is exactly the readAt diff
+      def view(version: Long): Map[(String, String), Seq[Any]] =
+        t.readAt(spark, version).collect().map { r =>
+          (r.getAs[String]("repo"), r.getAs[String]("path")) ->
+            r.toSeq.drop(2)
+        }.toMap
+      val (before, after) = (view(v - 1), view(v))
+      val feed = t.changesBetween(spark, v - 1, v)
+      // feed rows: change_type, repo, path, the user columns, seq
+      val rows = feed.collect().map { r =>
+        (r.getAs[String]("change_type"),
+          (r.getAs[String]("repo"), r.getAs[String]("path")),
+          (3 until r.length - 1).map(r.get))
+      }
+      rows.foreach {
+        case ("insert", k, img) =>
+          assert(!before.contains(k) && after.get(k).contains(img), s"$k")
+        case ("update", k, img) =>
+          assert(before.contains(k) && after.get(k).contains(img), s"$k")
+        case ("delete", k, img) =>
+          assert(!after.contains(k) && before.get(k).contains(img), s"$k")
+        case other => fail(s"unexpected feed row $other")
+      }
+      val changed = (before.keySet ++ after.keySet)
+        .filter(k => before.get(k) != after.get(k))
+      assert(changed.nonEmpty && changed.subsetOf(rows.map(_._2).toSet),
+        "every key whose user row changed must be in the feed")
+      assert(rows.map(_._2).distinct.length == rows.length,
+        "one feed row per key")
+
+      val rep = graft.maintenance.Compaction.compact(spark, t)
+      assert(tableState(t) == want, "compaction: must match the oracle fold")
+      val m = t.currentManifest().get
+      assert(rep.compactedBuckets == 32 &&
+        m.files.groupBy(_.bucket).values.forall(_.size == 1),
+        s"one file per bucket after compaction: ${m.files.map(_.bucket)}")
+
+      Metrics.clearReporters()
+      def event(name: String, version: Long) = {
+        import scala.jdk.CollectionConverters._
+        seen.asScala.find(e => e.name == name &&
+          e.metadata("table") == t.dir &&
+          e.metadata("version") == version.toString)
+          .getOrElse(fail(s"no $name event for version $version"))
+          .metadata
+      }
+      val epochEv = event("EpochCommitted", v)
+      val compactEv = event("CompactionFinished", rep.version)
+      assert(Seq("writeJobMs", "publishMs", "footerStatsMs")
+        .forall(k => compactEv(k).toLong >= 0), s"$compactEv")
+      assert(epochEv("filesWritten").toInt ==
+        out.manifest.files.count(_.path.contains("/e1-")))
+      val minFileBytes = Seq(v - 1, v)
+        .flatMap(x => t.readManifest(x).files).map(_.bytes).min
+      Packed(touched, minFileBytes, epochEv("writeTasks").toInt,
+        epochEv("filesWritten").toInt, feed.rdd.getNumPartitions,
+        compactEv("writeTasks").toInt)
+    } finally {
+      Metrics.clearReporters()
+      prev.foreach {
+        case (k, Some(x)) => spark.conf.set(k, x)
+        case (k, None) => spark.conf.unset(k)
+      }
+    }
+  }
+
+  test("packing bucket-aligned stages into one task per core keeps one " +
+      "file per bucket and the answers") {
+    assert(spark.sparkContext.defaultParallelism == 4)
+    val p = packedStages("pack", Nil)
+    assert(p.touchedBuckets > 4, s"fixture must touch many buckets: $p")
+    assert(p.epochWriteTasks == 4 && p.epochFilesWritten == p.touchedBuckets,
+      s"aligned epoch: one task per core, one file per touched bucket: $p")
+    assert(p.feedPartitions == 4, s"feed: one task per core: $p")
+    assert(p.compactWriteTasks == 4, s"compaction: one task per core: $p")
+  }
+
+  test("packing never runs a stage on fewer tasks than its bytes need") {
+    // a few KB per task: every file of this table is larger, so each
+    // stage's bytes need one task per bucket it reads
+    val p = packedStages("packguard",
+      Seq("spark.sql.files.maxPartitionBytes" -> "2k"))
+    assert(p.touchedBuckets == 32 && p.minFileBytes > 2048,
+      s"fixture must touch every bucket with files past 2k: $p")
+    assert(p.epochWriteTasks == 32 && p.epochFilesWritten == 32,
+      s"aligned epoch: one task per touched bucket: $p")
+    assert(p.feedPartitions == 32, s"feed: one task per bucket: $p")
+    assert(p.compactWriteTasks == 32, s"compaction: one task per bucket: $p")
+  }
 }
