@@ -3,7 +3,7 @@ package graft.driver
 import graft.log.{ChangeLogGen, LogSpec}
 import graft.merge.MergeEngine
 import graft.model.{ChangeEvent, EpochStats}
-import graft.table.IceTable
+import graft.table.{IceTable, LocalFs}
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -196,8 +196,8 @@ object ReplayJob {
       .toDF("epochId", "secs", "eventsPerSec", "quarantineRate",
         "rowsApplied", "deletesApplied", "dedupDrops", "staleDrops",
         "watermarkLagSpread", "completeUntilSeq")
-      .coalesce(1).write.mode("overwrite")
-      .parquet(s"$stateDir/metrics/epoch=$epochId")
+      .coalesce(1).write.options(LocalFs.keys(spark))
+      .mode("overwrite").parquet(s"$stateDir/metrics/epoch=$epochId")
   }
 
   /** Convenience: generate the log on the fly (pure function of seq — no

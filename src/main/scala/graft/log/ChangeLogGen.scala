@@ -3,6 +3,7 @@ package graft.log
 import graft.functions.ZipfPick
 import graft.functions.ZipfPick.unit
 import graft.model.ChangeEvent
+import graft.table.LocalFs
 import org.apache.spark.sql.{Dataset, SparkSession}
 
 /**
@@ -195,6 +196,6 @@ object ChangeLogGen {
                nFiles: Int = 32): Unit = {
     generate(spark, spec)
       .repartitionByRange(nFiles, org.apache.spark.sql.functions.col("seq"))
-      .write.mode("overwrite").parquet(dir)
+      .write.options(LocalFs.keys(spark)).mode("overwrite").parquet(dir)
   }
 }

@@ -2,7 +2,7 @@ package graft.merge
 
 import graft.model._
 import graft.pipeline.{RowPolicies, TaskPolicies}
-import graft.table.{IceTable, SchemaRegistry}
+import graft.table.{IceTable, LocalFs, SchemaRegistry}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, GraftSqlBridge,
   Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -497,7 +497,8 @@ object MergeEngine {
           .withColumn("reason", RowPolicies.failReason(rowPolicies))
           .observe(qObs, count(lit(1)).as("n"))
           .drop("logPart")
-          .write.mode("overwrite").parquet(s"$dir/epoch=$epochId")
+          .write.options(LocalFs.keys(spark)).mode("overwrite")
+          .parquet(s"$dir/epoch=$epochId")
         val n = GraftSqlBridge.awaitObservation(spark, qObs,
           "quarantine-count").apply("n").asInstanceOf[Long]
         (withPart.filter(pass), () => n)
@@ -935,7 +936,7 @@ object MergeEngine {
         stats.rowsApplied, stats.dedupDrops,
         watermarkLag = globalHigh - hi)
     }
-    rows.toDS().coalesce(1).write.mode("overwrite")
-      .parquet(s"$stateDir/lineage/epoch=$epochId")
+    rows.toDS().coalesce(1).write.options(LocalFs.keys(spark))
+      .mode("overwrite").parquet(s"$stateDir/lineage/epoch=$epochId")
   }
 }

@@ -71,13 +71,19 @@ object FileStats {
     if (s.isEmpty || !s.hasNonNullValue) None
     else s.genericGetMax match { case l: java.lang.Long => Some(l); case _ => None }
 
+  /** A footer reader built from `conf` itself: `ParquetFileReader.open(in)`
+    * without options builds a fresh default Configuration and re-parses
+    * `core-default.xml` (~12 ms) on every call. */
+  private def open(conf: Configuration, p: org.apache.hadoop.fs.Path) =
+    org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf),
+      org.apache.parquet.HadoopReadOptions.builder(conf).build())
+
   /** footer stats of one file (record count + repo/path/lastSeq min-max,
     * folded across row groups). Any column chunk without usable stats makes
     * that column's bound None. */
   def read(conf: Configuration, path: String): Stats = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf)
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+    val r = open(conf, new org.apache.hadoop.fs.Path(path))
     try {
       val blocks = r.getFooter.getBlocks
       var rows = 0L
@@ -141,14 +147,13 @@ object FileStats {
     * embedding that per entry would multiply manifest size by orders of
     * magnitude (the exact metadata-scale hazard two-level manifests
     * removed). Parquet-native blooms size themselves with the file, cost
-    * one small metadata read, and are only consulted for the handful of
-    * candidates that survive bucket + key-range + salt-residue pruning. */
+    * one small metadata read (no config parse: see [[open]]), and are only
+    * consulted for the handful of candidates that survive bucket +
+    * key-range + salt-residue pruning. */
   def mightContainKey(conf: Configuration, file: String,
                       repo: String, path: String): Boolean =
     try {
-      val p = new org.apache.hadoop.fs.Path(file)
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf)
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+      val r = open(conf, new org.apache.hadoop.fs.Path(file))
       try {
         val blocks = r.getFooter.getBlocks
         val it = blocks.iterator()

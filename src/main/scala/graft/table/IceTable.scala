@@ -112,11 +112,15 @@ final class IceTable(val dir: String, val defaultNumBuckets: Int,
   private def stagingDir = new HPath(root, "staging")
 
   /** Hadoop conf: the active Spark session's (so `spark.hadoop.*` and
-    * runtime-registered filesystems apply), else vanilla. */
-  private def hconf: Configuration =
-    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+    * runtime-registered filesystems apply), else vanilla; `file:` IO goes
+    * through [[LocalFs]] unless the session names its own local FS. */
+  private def hconf: Configuration = {
+    val c = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
       .map(_.sessionState.newHadoopConf())
       .getOrElse(new Configuration()) // spark.hadoop.* even off-thread
+    LocalFs.keys(c).foreach { case (k, v) => c.set(k, v) }
+    c
+  }
   private def fs: FileSystem = root.getFileSystem(hconf)
 
   def init(): this.type = {
@@ -976,7 +980,7 @@ final class IceTable(val dir: String, val defaultNumBuckets: Int,
           pmod(xxhash64(col("path")), lit(saltPerBucket)).cast("int"))
         .repartition(nb * saltPerBucket, col("bucket"), col("_salt"))
     val sorted = parted.sortWithinPartitions("bucket", "repo", "path")
-      .write.mode("overwrite")
+      .write.options(LocalFs.keys(df.sparkSession)).mode("overwrite")
     // Native parquet key blooms (spark.graft.keyBlooms, default on): the
     // point-lookup path tests them AFTER range/residue pruning to cut the
     // candidate set to ~1 file under non-clustered keys. ADAPTIVE sizing

@@ -52,3 +52,21 @@ class SlowGraftFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
     super.open(f, bufferSize)
   }
 }
+
+/** A user's own local FileSystem (`fs.file.impl`), counting `create` calls:
+  * proves the engine's local IO honours a session that names its own
+  * local FS instead of substituting [[graft.table.LocalFs]]. */
+object CountingLocalFileSystem {
+  val creates = new java.util.concurrent.atomic.AtomicLong
+}
+class CountingLocalFileSystem extends org.apache.hadoop.fs.LocalFileSystem {
+  override def create(f: org.apache.hadoop.fs.Path,
+      permission: org.apache.hadoop.fs.permission.FsPermission,
+      overwrite: Boolean, bufferSize: Int, replication: Short,
+      blockSize: Long, progress: org.apache.hadoop.util.Progressable)
+      : org.apache.hadoop.fs.FSDataOutputStream = {
+    CountingLocalFileSystem.creates.incrementAndGet()
+    super.create(f, permission, overwrite, bufferSize, replication,
+      blockSize, progress)
+  }
+}

@@ -243,6 +243,104 @@ class TableInvariantsSpec extends SparkSpec {
     assert(again.forall(_.skipped))
   }
 
+  test("LocalFs keeps the file contract: permissions, .crc sidecars, " +
+    "checksum failures and the global file statistics") {
+    import java.nio.file.{Files, Paths}
+    import java.nio.file.attribute.PosixFilePermissions.fromString
+    import org.apache.hadoop.fs.{ChecksumException, FileSystem, LocalFileSystem,
+      Path}
+    import graft.table.LocalFs
+    // a non-default umask: a setPermission that did nothing would leave the
+    // process umask's bits, which differ from the stock FileSystem's
+    val umask = "fs.permissions.umask-mode"
+    spark.conf.set(umask, "027")
+    try {
+      val sp = LogSpec(seed = 5L, nEvents = 2000, nRepos = 4,
+        nPathsPerRepo = 8, pDelete = 0.1)
+      val root = tmpDir("lfs")
+      val t = IceTable.create(s"$root/table", numBuckets = 4)
+      ReplayJob.replayGenerated(spark, t, sp, nEpochs = 2, nLogPartitions = 4)
+      graft.maintenance.Compaction.compact(spark, t)
+      val m = t.currentManifest().get
+      val conf = spark.sessionState.newHadoopConf()
+      LocalFs.keys(conf).foreach { case (k, v) => conf.set(k, v) }
+      val lfs = new Path(root).getFileSystem(conf)
+      assert(lfs.isInstanceOf[LocalFs])
+
+      def perms(p: Path) =
+        Files.getPosixFilePermissions(Paths.get(p.toUri.getPath))
+      val stock = new LocalFileSystem()
+      stock.initialize(new java.net.URI("file:///"), conf)
+      val refDir = new Path(s"$root/ref/bucket=0")
+      assert(stock.mkdirs(refDir))
+      val refFile = new Path(refDir, "ref.parquet")
+      stock.create(refFile).close()
+      assert(perms(refFile) == fromString("rw-r-----") &&
+        perms(refDir) == fromString("rwxr-x---"), "the umask applies")
+      val data = m.files.map(f => new Path(f.path))
+      assert(data.nonEmpty)
+      data.foreach { p =>
+        assert(perms(p) == perms(refFile), s"data file $p")
+        assert(perms(p.getParent) == perms(refDir),
+          s"bucket dir ${p.getParent}")
+        assert(Files.exists(Paths.get(
+          new Path(p.getParent, s".${p.getName}.crc").toUri.getPath)),
+          s"missing .crc sidecar of $p")
+      }
+
+      // every byte the engine reads through LocalFs reaches the global `file`
+      // StorageStatistics (the bloom reads of lookupFiles go through it only)
+      def bytesRead(): Long = FileSystem.getGlobalStorageStatistics
+        .get("file").getLong("bytesRead")
+      val key = t.read(spark).select("repo", "path").head()
+      val b0 = bytesRead()
+      assert(t.lookupFiles(spark, m, key.getString(0), key.getString(1))
+        .nonEmpty)
+      val b1 = bytesRead()
+      assert(b1 > b0, "LocalFs reads must count into the file statistics")
+      assert(t.lookup(spark, key.getString(0), key.getString(1)).count() == 1)
+      assert(bytesRead() > b1)
+
+      // one flipped byte still fails the checksum on read
+      val victim = Paths.get(data.head.toUri.getPath)
+      val bytes = Files.readAllBytes(victim)
+      bytes(bytes.length / 2) = (bytes(bytes.length / 2) ^ 0xff).toByte
+      Files.write(victim, bytes)
+      intercept[ChecksumException] {
+        val in = lfs.open(data.head)
+        try { while (in.read() >= 0) () } finally in.close()
+      }
+    } finally spark.conf.unset(umask)
+  }
+
+  test("a session's own fs.file.impl wins over LocalFs") {
+    // where a session's `spark.hadoop.fs.file.impl` lands; the cache is off
+    // because this JVM already cached the stock `file:` FileSystem
+    val hc = spark.sparkContext.hadoopConfiguration
+    val keys = Seq("fs.file.impl", "fs.file.impl.disable.cache")
+    val prev = keys.map(k => k -> Option(hc.get(k)))
+    hc.set("fs.file.impl", classOf[CountingLocalFileSystem].getName)
+    hc.set("fs.file.impl.disable.cache", "true")
+    try {
+      val sp = LogSpec(seed = 9L, nEvents = 1000, nRepos = 4,
+        nPathsPerRepo = 8, pDelete = 0.1)
+      val t = IceTable.create(tmpDir("ufs"), numBuckets = 4)
+      val before = CountingLocalFileSystem.creates.get()
+      ReplayJob.replayGenerated(spark, t, sp, nEpochs = 1, nLogPartitions = 4)
+      assert(CountingLocalFileSystem.creates.get() > before,
+        "the engine's writes must go through the session's fs.file.impl")
+      val want = graft.log.OracleFold.fold(
+        graft.log.ChangeLogGen.generateLocal(sp))
+        .map { case (k, v) => k -> v.contentSha }
+      val got = t.read(spark).select("repo", "path", "contentSha").collect()
+        .map(r => (r.getString(0), r.getString(1)) -> r.getString(2)).toMap
+      assert(got == want)
+    } finally prev.foreach {
+      case (k, Some(v)) => hc.set(k, v)
+      case (k, None) => hc.unset(k)
+    }
+  }
+
   test("lineage rows exist per epoch and lag is non-negative") {
     val state = tmpDir("lineage")
     val t = IceTable.create(tmpDir("ltab"), numBuckets = 4)
