@@ -116,7 +116,7 @@ object Compaction {
     // Verifier gate (audit-count analog) — two independent checks, neither
     // a data re-read:
     //  1. the PUBLISHED files' footer record counts (metadata-only —
-    //     writeEpochFiles fills them via FileStats' bounded+timed pool)
+    //     every write fills them via FileStats.fillAll's bounded pool)
     //     must sum to the rows the rewrite observed — catches loss between
     //     the filter and the publish;
     //  2. an end-to-end live-row recount over the published files must

@@ -51,6 +51,11 @@ object MergeEngine {
     spark.conf.getOption("spark.graft.maxBroadcastBytes")
       .map(_.toLong).getOrElse(67108864L) // 64 MB
 
+  /** Tiny-epoch gate: an epoch that declares fewer claimed events than this
+    * runs a static plan (AQE off, shuffle partitions clamped to the bucket
+    * count) and the one-pass payload dedup. */
+  private val AqeMinClaimedEvents = 1000000L
+
   /** the change-event columns the merge carries, in winner-struct order */
   private val EventCols = Seq("op", "seq", "commit", "lang", "content")
 
@@ -390,17 +395,15 @@ object MergeEngine {
     // data volume, but its cost (a re-planning round-trip and a separate job
     // per materialized exchange) is paid per STAGE. Measured on the c3
     // replay (4 epochs × ~37k events): AQE-off cut the query ~20% with no
-    // plan regression. Epochs above `spark.graft.aqeMinClaimedEvents`
-    // (default 1M) and epochs of UNKNOWN size (segment-claimed batches) keep
-    // AQE on. The same gate picks the dedup mode (see dedupWinners).
+    // plan regression. Epochs of at least [[AqeMinClaimedEvents]] and
+    // epochs of UNKNOWN size (segment-claimed batches) keep AQE on. The
+    // same gate picks the dedup mode (see dedupWinners).
     val claimedSpan: Option[Long] = claimedSet match {
       case Some(m) => Some(Intervals.normalize(m.values.flatten.toSeq)
         .map { case (lo, hi) => hi - lo }.sum)
       case None => claimedRange.map { case (lo, hi) => hi - lo }
     }
-    val aqeMinEvents = spark.conf.getOption("spark.graft.aqeMinClaimedEvents")
-      .map(_.toLong).getOrElse(1000000L)
-    val tiny = claimedSpan.exists(_ < aqeMinEvents)
+    val tiny = claimedSpan.exists(_ < AqeMinClaimedEvents)
     val parent = table.currentManifest()
     // bucket count of THIS table's committed layout, resolved ONCE from the
     // parent manifest (rebucket migrations record it per snapshot)
@@ -534,7 +537,7 @@ object MergeEngine {
   private def dedupWinners(table: IceTable, scope: Scope, fresh: DataFrame)
       : DataFrame = {
     // Two dedup strategies, each with a measured reason, selected by the
-    // tiny-epoch gate (declared claimed span < aqeMinClaimedEvents):
+    // tiny-epoch gate (declared claimed span < AqeMinClaimedEvents):
     //  - ENVELOPE (large or unknown-size epochs): phase A aggregates ONLY
     //    (key → max seq, count), so the scan is column-pruned to the
     //    envelope and payload bytes never shuffle; phase B broadcast-joins

@@ -223,18 +223,13 @@ object VectorQueries {
       // (table, bit), L×B extra element loops re-deriving projections the
       // bucketing pass had already computed). Flattened [bkt,alt]* pairs:
       // pos/2 = table, pos%2 = which probe — a plain posexplode, still an
-      // equijoin on (tbl, bucket).
-      // spark.graft.v4MultiProbe=false drops the flip probes (pos%2==1) —
-      // the single-probe operating point, kept as an A/B + recall/cost knob
-      // (default ON; the driver oracle reproduces the multi-probe set)
-      val multi = s.conf.getOption("spark.graft.v4MultiProbe")
-        .forall(_.toBoolean)
+      // equijoin on (tbl, bucket). The driver oracle reproduces this
+      // multi-probe set.
       val probes = e.filter(col("vec_id") < 5)
         .select(col("vec_id").as("query_id"), col("q").as("qq"),
           col("nrm").as("qn"),
           posexplode(graft.functions.LshBuckets.lshBucketProbes(
             col("q"), lshTables, lshBitsPerTable)))
-        .filter(if (multi) lit(true) else col("pos") % 2 === 0)
         .select(col("query_id"), col("qq"), col("qn"),
           (col("pos") / 2).cast("int").as("qtbl"), col("col").as("pbkt"))
       val cands = tabbed.join(probes,

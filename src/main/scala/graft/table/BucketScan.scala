@@ -223,7 +223,7 @@ object BucketScan {
     * decodes 2 columns, not the table. `pushedFilters` (in target column
     * names) are translated per vintage (rename-aware via colId; dropped
     * where the vintage lacks the column or widened its type) and pushed
-    * into the parquet readers for row-group / page / bloom skipping —
+    * into the parquet readers for row-group / page skipping —
     * best-effort IO pruning only, callers still evaluate the predicates. */
   def scanParts(spark: SparkSession, files: Seq[DataFileEntry],
                 buckets: Seq[Int], targetSchemaId: Int,

@@ -25,11 +25,17 @@ import org.apache.parquet.io.api.Binary
  *  - `minSeq`/`maxSeq` — bounds on `lastSeq` (incremental "changes since"
  *    reads skip files whose whole seq range predates the request).
  *
- * All footers are read through a bounded thread pool with a per-file
- * timeout: one hung object-store metadata read must not stall the job
- * forever (the pool aborts with `shutdownNow` and surfaces the failing
- * path). Missing/truncated footer stats degrade to None — a file without
- * stats is simply never skipped.
+ * These bounds are the only per-file skipping data: the files carry no key
+ * blooms, because parquet writes none for a fully dictionary-encoded
+ * column chunk, and `repo`/`path` chunks are dictionary-encoded whenever
+ * keys repeat across files (as they do in the generator and in real
+ * repositories), so a bloom stage never pruned a candidate.
+ *
+ * All footers of one write are read through one bounded driver thread pool
+ * under a shared deadline: one hung object-store metadata read must not
+ * stall the job forever (the pool aborts with `shutdownNow` and surfaces
+ * the failing path). Missing/truncated footer stats degrade to None — a
+ * file without stats is simply never skipped.
  */
 object FileStats {
 
@@ -135,57 +141,6 @@ object FileStats {
     } finally r.close()
   }
 
-  /** Bloom test for one exact (repo, path) key against a parquet file's
-    * NATIVE column bloom filters (written by the epoch writer when
-    * `spark.graft.keyBlooms` is on). Returns false only when EVERY row
-    * group carries blooms for both columns and NONE can contain both
-    * values — absent/unreadable blooms admit the file (blooms, like all
-    * stats here, are strictly an optimization).
-    *
-    * The blooms live in the FILES, not the manifest, by design: a bloom
-    * with a useful false-positive rate over a ~10^6-row file is ~1 MiB —
-    * embedding that per entry would multiply manifest size by orders of
-    * magnitude (the exact metadata-scale hazard two-level manifests
-    * removed). Parquet-native blooms size themselves with the file, cost
-    * one small metadata read (no config parse: see [[open]]), and are only
-    * consulted for the handful of candidates that survive bucket +
-    * key-range + salt-residue pruning. */
-  def mightContainKey(conf: Configuration, file: String,
-                      repo: String, path: String): Boolean =
-    try {
-      val r = open(conf, new org.apache.hadoop.fs.Path(file))
-      try {
-        val blocks = r.getFooter.getBlocks
-        val it = blocks.iterator()
-        var any = false
-        while (it.hasNext && !any) {
-          val b = it.next()
-          val bfr = r.getBloomFilterDataReader(b)
-          def admit(colName: String, value: String): Boolean = {
-            val cit = b.getColumns.iterator()
-            var res = true // no such column / no bloom -> admit
-            while (cit.hasNext) {
-              val c = cit.next()
-              if (c.getPath.toDotString == colName) {
-                val bloom = bfr.readBloomFilter(c)
-                if (bloom != null)
-                  res = bloom.findHash(
-                    bloom.hash(Binary.fromString(value)))
-              }
-            }
-            res
-          }
-          any = admit("repo", repo) && admit("path", path)
-        }
-        any // a zero-row-group file holds nothing: reject is exact
-      } finally r.close()
-    } catch {
-      case e: Exception =>
-        System.err.println(s"[graft] bloom read failed: $file ($e); " +
-          "file admitted")
-        true
-    }
-
   /** Fill `rows` + stats bounds into each entry via one pooled footer pass.
     * Bounded: at most 16 concurrent metadata reads under ONE shared
     * `timeoutSec` deadline for the whole batch, and the pool is
@@ -241,70 +196,5 @@ object FileStats {
           maxKey = st.maxKey, minSeq = st.minSeq, maxSeq = st.maxSeq))
       }
     } finally { pool.shutdownNow(); () }
-  }
-
-  /** Distributed variant of [[fillAll]]: the footer pass runs as ONE small
-    * Spark job over the entry list instead of the ≤16-thread driver pool —
-    * an epoch publishing thousands of object-store files would otherwise
-    * serialize N/16 round-trips of footer latency on the COMMIT CRITICAL
-    * PATH through the driver; as a job, the pass scales with the cluster
-    * (the same shape compaction's verifier recount uses). Semantics match
-    * [[fillAll]] exactly: ONE shared wall-clock deadline for the whole
-    * batch (executor clocks — skew is immaterial for a degrade
-    * optimization), a per-file failure/timeout DEGRADES that entry to
-    * stats-less under the default policy or throws under `failFast`, and
-    * input order is preserved. Each task reads through a cached-thread
-    * executor so one hung read cannot block the partition's remaining
-    * files past the deadline. */
-  def fillAllDistributed(spark: org.apache.spark.sql.SparkSession,
-      files: Seq[DataFileEntry], timeoutSec: Long = 120L,
-      failFast: Boolean = false): Seq[DataFileEntry] = {
-    if (files.isEmpty) return files
-    import scala.jdk.CollectionConverters._
-    val confKV: Seq[(String, String)] = spark.sessionState.newHadoopConf()
-      .iterator().asScala.map(e => (e.getKey, e.getValue)).toSeq
-    val bc = spark.sparkContext.broadcast(confKV)
-    val deadlineMs = System.currentTimeMillis() + timeoutSec * 1000L
-    val ff = failFast
-    val slices = math.max(1, math.min(files.size,
-      spark.sparkContext.defaultParallelism * 2))
-    try {
-      spark.sparkContext.parallelize(files, slices).mapPartitions { it =>
-        val conf = new Configuration(false)
-        bc.value.foreach { case (k, v) => conf.set(k, v) }
-        val exec = java.util.concurrent.Executors.newCachedThreadPool()
-        // finally: the failFast throw below must not leak the pool (its
-        // non-daemon threads would pin the executor JVM)
-        val out = try {
-          it.map { f =>
-            val remain = deadlineMs - System.currentTimeMillis()
-            val fut = exec.submit(new java.util.concurrent.Callable[Stats] {
-              def call(): Stats = read(conf, f.path)
-            })
-            try {
-              val st = fut.get(math.max(1L, remain),
-                java.util.concurrent.TimeUnit.MILLISECONDS)
-              f.copy(rows = st.rows, minKey = st.minKey, maxKey = st.maxKey,
-                minSeq = st.minSeq, maxSeq = st.maxSeq)
-            } catch {
-              case e: java.util.concurrent.TimeoutException =>
-                fut.cancel(true)
-                if (ff) throw new IllegalStateException(
-                  s"footer read timed out after ${timeoutSec}s: ${f.path}", e)
-                System.err.println(s"[graft] footer read timed out " +
-                  s"(${timeoutSec}s): ${f.path}; entry left stats-less")
-                f
-              case e: java.util.concurrent.ExecutionException =>
-                if (ff) throw new IllegalStateException(
-                  s"footer read failed: ${f.path}", e.getCause)
-                System.err.println(s"[graft] footer read failed: ${f.path} " +
-                  s"(${e.getCause}); entry left stats-less")
-                f
-            }
-          }.toVector // materialize before shutting the executor down
-        } finally exec.shutdownNow()
-        out.iterator
-      }.collect().toSeq // collect preserves slice order = input order
-    } finally bc.destroy()
   }
 }

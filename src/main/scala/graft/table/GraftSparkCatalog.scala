@@ -217,7 +217,7 @@ private[table] final class GraftSqlTable(tableName: String, t: IceTable,
       override def pruneColumns(requiredSchema: StructType): Unit =
         required = Some(requiredSchema.fieldNames.toSeq)
 
-      /** parquet skipping is BEST-EFFORT (row groups / pages / blooms):
+      /** parquet skipping is BEST-EFFORT (row groups / pages):
         * every filter is handed to the readers as an IO hint AND returned
         * here as a post-scan filter, so correctness never depends on the
         * push (the stock parquet V2 source's contract). */

@@ -432,9 +432,10 @@ final class IceTable(val dir: String, val defaultNumBuckets: Int,
   /** Candidate data files that can hold key `(repo, path)` under manifest
     * `m`: ONE bucket's files, minus files whose stats preclude the key
     * (key outside [minKey, maxKey] in unsigned byte order, or a salt
-    * residue class the key does not hash into). Stats-less files are kept. */
-  def lookupCandidateFiles(m: EpochManifest, repo: String, path: String)
-      : Seq[DataFileEntry] = {
+    * residue class the key does not hash into). Stats-less files are kept.
+    * Manifest-only: no file is opened. */
+  def lookupFiles(spark: SparkSession, m: EpochManifest, repo: String,
+      path: String): Seq[DataFileEntry] = {
     val n = bucketCountOf(Some(m))
     val b = bucketOf(repo, path, n)
     val key = repo + FileStats.KeySep + path
@@ -455,29 +456,12 @@ final class IceTable(val dir: String, val defaultNumBuckets: Int,
     }
   }
 
-  /** [[lookupCandidateFiles]] narrowed by each candidate's NATIVE parquet
-    * key blooms (when `spark.graft.keyBlooms` is on): one small metadata
-    * read per stats-admitted candidate typically proves all-but-one (often
-    * all, for an absent key) cannot hold the key — files without blooms are
-    * admitted unchanged. */
-  def lookupFiles(spark: SparkSession, m: EpochManifest, repo: String,
-      path: String): Seq[DataFileEntry] = {
-    val cands = lookupCandidateFiles(m, repo, path)
-    val bloomsOn = spark.conf.getOption("spark.graft.keyBlooms")
-      .forall(_.toBoolean)
-    if (!bloomsOn || cands.isEmpty) cands
-    else {
-      val conf = hconf
-      cands.filter(f => FileStats.mightContainKey(conf, f.path, repo, path))
-    }
-  }
-
   /** POINT LOOKUP (serving path): the user-view row(s) for one exact key,
     * reading only the files that can hold it — bucket pruning by the key
-    * hash, then manifest-stats pruning (key range + salt residue), then a
-    * per-candidate parquet BLOOM test, then parquet row-group pruning via
-    * the pushed key predicate. At 100 TB a key lookup opens ~1 file, never
-    * the table; an absent key usually proves absent with zero data reads. */
+    * hash, then manifest-stats pruning (key range + salt residue), then
+    * parquet row-group pruning via the pushed key predicate. At 100 TB a
+    * key lookup opens ~1 file, never the table; an absent key outside every
+    * candidate's key range proves absent with zero data reads. */
   def lookup(spark: SparkSession, repo: String, path: String): DataFrame =
     currentManifest() match {
       case None => read(spark).filter(lit(false))
@@ -558,8 +542,7 @@ final class IceTable(val dir: String, val defaultNumBuckets: Int,
     * Ref: gobblin-iceberg/.../IcebergMetadataWriter.java:349-383 (snapshot
     * metadata as the incremental-consumption contract). */
   def changesBetween(spark: SparkSession, fromVersion: Long,
-                     toVersion: Long,
-                     bucketAligned: Boolean = true): DataFrame = {
+                     toVersion: Long): DataFrame = {
     // DIRECTIONAL, not ordered: the diff is between two manifests, so a
     // BACKWARD pair (fromVersion > toVersion) is legal and yields exactly
     // the COMPENSATING changes that transform the newer state into the
@@ -585,8 +568,7 @@ final class IceTable(val dir: String, val defaultNumBuckets: Int,
     val oldOnly = mOld.files.filterNot(f => newPaths(f.path))
     val newOnly = mNew.files.filterNot(f => oldPaths(f.path))
     if (oldOnly.isEmpty && newOnly.isEmpty) return emptyChanges
-    val sameLayout = bucketCountOf(Some(mOld)) == bucketCountOf(Some(mNew))
-    val aligned = bucketAligned && sameLayout
+    val aligned = bucketCountOf(Some(mOld)) == bucketCountOf(Some(mNew))
     // one partition-value universe for BOTH sides so the key-grouped
     // layouts match exactly (empty partitions fill the gaps)
     val buckets = (oldOnly ++ newOnly).map(_.bucket).distinct.sorted
@@ -981,23 +963,9 @@ final class IceTable(val dir: String, val defaultNumBuckets: Int,
         .repartition(nb * saltPerBucket, col("bucket"), col("_salt"))
     val sorted = parted.sortWithinPartitions("bucket", "repo", "path")
       .write.options(LocalFs.keys(df.sparkSession)).mode("overwrite")
-    // Native parquet key blooms (spark.graft.keyBlooms, default on): the
-    // point-lookup path tests them AFTER range/residue pruning to cut the
-    // candidate set to ~1 file under non-clustered keys. ADAPTIVE sizing
-    // (PARQUET-2254) right-sizes each bloom from the chunk's observed NDV,
-    // so small files don't pay the max-bytes footprint. Blooms live in the
-    // files, never the manifest — see FileStats.mightContainKey.
-    val withBlooms =
-      if (df.sparkSession.conf.getOption("spark.graft.keyBlooms")
-            .forall(_.toBoolean))
-        sorted
-          .option("parquet.bloom.filter.enabled#repo", "true")
-          .option("parquet.bloom.filter.enabled#path", "true")
-          .option("parquet.bloom.filter.adaptive.enabled", "true")
-      else sorted
     val t0 = System.nanoTime()
-    (if (salted) withBlooms.partitionBy("bucket", "_salt")
-     else withBlooms.partitionBy("bucket"))
+    (if (salted) sorted.partitionBy("bucket", "_salt")
+     else sorted.partitionBy("bucket"))
       .parquet(staging.toString)
     val t1 = System.nanoTime()
     // publish: move every staged file under the flat single-level data
@@ -1034,17 +1002,7 @@ final class IceTable(val dir: String, val defaultNumBuckets: Int,
       }.toSeq.sortBy(e => (e.bucket, e.path))
     f.delete(staging, true)
     val t2 = System.nanoTime()
-    // footer-stats pass: small batches use the bounded driver pool; past
-    // the threshold it runs as a Spark job so a many-file epoch (e.g. 1024
-    // salted files on an object store) doesn't serialize N/16 footer
-    // round-trips through the driver on the commit critical path
-    val distMin = df.sparkSession.conf
-      .getOption("spark.graft.distributedStatsMinFiles")
-      .map(_.toInt).getOrElse(64)
-    val files =
-      if (sortedEntries.size >= distMin)
-        FileStats.fillAllDistributed(df.sparkSession, sortedEntries)
-      else FileStats.fillAll(hconf, sortedEntries)
+    val files = FileStats.fillAll(hconf, sortedEntries)
     IceTable.EpochWrite(files, (t1 - t0) / 1000000L, (t2 - t1) / 1000000L,
       (System.nanoTime() - t2) / 1000000L)
   }

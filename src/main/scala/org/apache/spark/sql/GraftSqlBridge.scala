@@ -92,7 +92,7 @@ object GraftSqlBridge {
     parquetReaderFunction(spark, dataSchema, partitionSchema, Nil)
 
   /** Variant with parquet-level filter pushdown: `filters` (in terms of
-    * `dataSchema`'s column names) drive row-group / page / bloom skipping
+    * `dataSchema`'s column names) drive row-group / page skipping
     * inside the parquet reader. Purely an IO optimization — parquet
     * skipping is best-effort, so callers must still evaluate the
     * predicates on the returned rows (Spark's V2 pushdown contract when

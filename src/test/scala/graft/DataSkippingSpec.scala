@@ -145,7 +145,7 @@ class DataSkippingSpec extends SparkSpec {
       s"bucketOf diverges from Spark xxhash64 for $k"))
 
     keys.take(25).foreach { k =>
-      val cand = t.lookupCandidateFiles(m, "r", k)
+      val cand = t.lookupFiles(spark, m, "r", k)
       val bucketFiles = m.files.count(_.bucket == t.bucketOf("r", k))
       assert(cand.nonEmpty && cand.size < bucketFiles,
         s"$k: residue pruning must drop sibling salt files " +
@@ -156,12 +156,12 @@ class DataSkippingSpec extends SparkSpec {
     assert(t.lookup(spark, "r", "missing").isEmpty)
   }
 
-  test("per-file key blooms cut range-overlapping lookup candidates to ~1; " +
-      "absent keys prove absent with zero data reads") {
+  test("range-overlapping files both stay lookup candidates; present keys " +
+      "return their row, an absent key inside both ranges returns nothing") {
     // two epochs write INTERLEAVED key sets into the same bucket: their
     // [minKey, maxKey] ranges overlap almost fully, so range pruning admits
-    // both files — only the native parquet blooms can tell them apart
-    val t = IceTable.create(tmpDir("blm"), numBuckets = 1)
+    // both files and the pushed key predicate finds the row
+    val t = IceTable.create(tmpDir("ovl"), numBuckets = 1)
     val even = (0 until 200 by 2).map(i => f"k$i%03d")
     val odd = (1 until 200 by 2).map(i => f"k$i%03d")
     val f0 = t.writeEpochFiles(rows(t, even, 5L), 0)
@@ -171,39 +171,15 @@ class DataSkippingSpec extends SparkSpec {
       numBuckets = 1))
     val m = t.currentManifest().get
 
-    // blooms live in the FILES: the manifest carries nothing bloom-shaped
-    assert(!ManifestJson.write(m).toLowerCase.contains("bloom"))
-
-    Seq("k004" -> "v", "k007" -> "v").foreach { case (k, _) =>
-      val cand = t.lookupCandidateFiles(m, "r", k)
-      assert(cand.size == 2, s"$k: range pruning cannot separate the files")
-      val admitted = t.lookupFiles(spark, m, "r", k)
-      assert(admitted.size == 1, s"$k: bloom must cut candidates to 1")
+    Seq("k004", "k007", "k100a").foreach { k =>
+      assert(t.lookupFiles(spark, m, "r", k).size == 2,
+        s"$k: range pruning cannot separate the files")
+    }
+    Seq("k004", "k007").foreach { k =>
       val row = t.lookup(spark, "r", k).collect()
       assert(row.length == 1 && row.head.getAs[String]("content") == s"v$k")
     }
-    // absent key INSIDE both ranges: blooms reject every candidate — the
-    // lookup answers "no such key" from metadata alone
-    assert(t.lookupCandidateFiles(m, "r", "k100a").size == 2)
-    assert(t.lookupFiles(spark, m, "r", "k100a").isEmpty)
     assert(t.lookup(spark, "r", "k100a").isEmpty)
-
-    // escape hatch: disabled blooms fall back to the stats-admitted set
-    spark.conf.set("spark.graft.keyBlooms", "false")
-    try assert(t.lookupFiles(spark, m, "r", "k004").size == 2)
-    finally spark.conf.unset("spark.graft.keyBlooms")
-
-    // files written with blooms OFF are admitted (never wrongly skipped)
-    spark.conf.set("spark.graft.keyBlooms", "false")
-    val fNb = try t.writeEpochFiles(rows(t, Seq("zz1", "zz2"), 7L), 2)
-      finally spark.conf.unset("spark.graft.keyBlooms")
-    t.commit(m.copy(version = 1, parentVersion = 0, epochId = 2,
-      files = m.files ++ fNb))
-    val m2 = t.currentManifest().get
-    val adm = t.lookupFiles(spark, m2, "r", "zz1")
-    assert(adm.exists(f => fNb.exists(_.path == f.path)),
-      "a bloom-less file must stay in the candidate set")
-    assert(t.lookup(spark, "r", "zz1").count() == 1)
   }
 
   test("age-based retention expires old snapshots, keeps readers unaffected") {
@@ -263,41 +239,6 @@ class DataSkippingSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("timed out") &&
       e.getMessage.contains("x.parquet"),
-      s"error must name the stuck file: ${e.getMessage}")
-  }
-
-  test("distributed footer pass: stats identical to the pooled pass, " +
-      "degrade/fail-fast semantics preserved") {
-    val t = IceTable.create(tmpDir("dstats"), numBuckets = 4)
-    // force the distributed path for this small fixture
-    spark.conf.set("spark.graft.distributedStatsMinFiles", "1")
-    try {
-      val fs = t.writeEpochFiles(
-        rows(t, (0 until 40).map(i => f"p$i%02d"), 7L), 0)
-      val bare = fs.map(_.copy(rows = -1L, minKey = None, maxKey = None,
-        minSeq = None, maxSeq = None))
-      val pooled = FileStats.fillAll(spark.sessionState.newHadoopConf(), bare)
-      val dist = FileStats.fillAllDistributed(spark, bare)
-      assert(dist == pooled, "distributed stats must be byte-identical to " +
-        "the pooled driver pass (same files, same order)")
-      assert(dist.map(_.rows).sum == 40L && dist.forall(_.minKey.isDefined))
-    } finally spark.conf.unset("spark.graft.distributedStatsMinFiles")
-    // hung object-store read inside an executor task: shared deadline
-    // degrades the entry (default) or aborts loudly (failFast)
-    spark.sparkContext.hadoopConfiguration.set("fs.slowfs.impl",
-      classOf[SlowGraftFileSystem].getName)
-    val entry = DataFileEntry("slowfs:///nowhere/x.parquet", 0, -1L, 1)
-    val t0 = System.nanoTime()
-    val degraded = FileStats.fillAllDistributed(spark, Seq(entry),
-      timeoutSec = 1L)
-    assert((System.nanoTime() - t0) / 1e9 < 30.0, "must not hang")
-    assert(degraded.head.rows == -1L && degraded.head.minKey.isEmpty)
-    val e = intercept[org.apache.spark.SparkException] {
-      FileStats.fillAllDistributed(spark, Seq(entry), timeoutSec = 1L,
-        failFast = true)
-    }
-    assert(e.getMessage.contains("x.parquet") ||
-      Option(e.getCause).exists(_.getMessage.contains("x.parquet")),
       s"error must name the stuck file: ${e.getMessage}")
   }
 

@@ -160,8 +160,8 @@ class OutOfOrderSpec extends SparkSpec {
     // at-least-once delivery can produce two rows with the SAME (key, seq)
     // but different payload (producer retry after a partial update): every
     // dedup path — broadcast argmax, shuffle fallback, and the tiny-epoch
-    // payload-carrying aggregate (claimed span below
-    // spark.graft.aqeMinClaimedEvents) — must apply one identical
+    // payload-carrying aggregate (claimed span below the engine's 1M-event
+    // tiny-epoch gate) — must apply one identical
     // deterministic tie-break (lexicographic max of (commit, op, lang,
     // content)), or the table would depend on which mode an epoch lands in.
     def ev(commit: Char, c: String) =
