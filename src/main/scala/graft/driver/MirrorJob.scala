@@ -1,7 +1,7 @@
 package graft.driver
 
 import graft.merge.{Intervals, MergeEngine}
-import graft.model.{ChangeEvent, EpochStats}
+import graft.model.{ChangeEvent, EpochManifest, EpochStats}
 import graft.table.{IceTable, SchemaRegistry}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -106,41 +106,22 @@ object MirrorJob {
     requireNoRegression(upstream, upIv, mirIv)
 
     // align the mirror's schema to the upstream's target-version schema
-    // BEFORE merging (stepwise: the registry history is linear, and
-    // evolveSchema validates each add/rename/widen step). Metadata-only;
-    // works on an empty mirror too.
-    val mSchema = mParent.map(_.schemaId)
-      .getOrElse(SchemaRegistry.baseSchemaId)
-    require(up2.schemaId >= mSchema,
+    // BEFORE merging; works on an empty mirror too.
+    alignSchema(mirror, mParent, up2.schemaId) { mSchema =>
       s"mirror schema $mSchema is ahead of upstream ${up2.schemaId}: " +
-        "not a mirror of this upstream")
-    if (up2.schemaId > mSchema)
-      ((mSchema + 1) to up2.schemaId).foreach(mirror.evolveSchema(_))
+        "not a mirror of this upstream" }
 
-    // trusted sync point: recorded epochId, retained upstream, offsets
-    // equal. Retention is probed by reading THAT version's header directly
-    // (missing ⇒ expired ⇒ untrusted) — one metadata read, not an
-    // O(versions) history listing: a second-granularity follower pays this
-    // check on every applied sync.
-    val vFrom: Long = mParent.map(_.epochId).filter { v =>
-      v >= 0 && v <= vTo && {
-        try {
-          val atV = MergeEngine.committedIntervals(
-            Some(upstream.readManifestHeader(v)))
-          normalized(atV) == normalized(mirIv)
-        } catch { case _: java.io.FileNotFoundException => false }
-      }
-    }.getOrElse(-1L)
+    // trusted sync point: the recorded epochId, at most vTo, retained
+    // upstream with equal offsets (a second-granularity follower pays this
+    // check on every applied sync, so it is one metadata read)
+    val vFrom: Long = mParent.map(_.epochId)
+      .filter(v => v <= vTo && syncPointTrusted(upstream, v, mirIv))
+      .getOrElse(-1L)
     if (vFrom == vTo)
       return MirrorOutcome(vFrom, vTo, mirror.currentVersion(),
         fullSync = false, stats = None)
 
-    // per-partition claim delta: upstream committed(vTo) \ mirror committed
-    val delta: Map[Int, Seq[(Long, Long)]] = upIv.flatMap {
-      case (p, ivs) =>
-        val d = Intervals.subtract(ivs, mirIv.getOrElse(p, Nil))
-        if (d.isEmpty) None else Some(p -> d)
-    }
+    val (delta, topOfDelta) = claimDelta(upIv, mirIv)
     if (delta.isEmpty && vFrom >= 0) {
       // metadata-only upstream movement (schema evolution, compaction,
       // retention): state-preserving by the claim invariant — just stamp
@@ -148,10 +129,6 @@ object MirrorJob {
       val v = stampSyncPoint(mirror, vTo)
       return MirrorOutcome(vFrom, vTo, v, fullSync = false, stats = None)
     }
-    // substitute seq for deletes whose tombstone purged inside the window:
-    // top of the key's partition's claim delta (see scaladoc)
-    val topOfDelta: Map[Int, Long] =
-      delta.map { case (p, ivs) => p -> ivs.map(_._2).max }
 
     val (feed0, cleanup): (DataFrame, () => Unit) =
       if (vFrom >= 0)
@@ -272,12 +249,7 @@ object MirrorJob {
       // redelivered batch after checkpoint loss) is a no-op batch.
       mParent.foreach { pm =>
         val point = pm.epochId
-        val pointTrusted = point >= 0 && {
-          try normalized(MergeEngine.committedIntervals(
-            Some(upstream.readManifestHeader(point)))) == normalized(mirIv)
-          catch { case _: java.io.FileNotFoundException => false }
-        }
-        if (!pointTrusted)
+        if (!syncPointTrusted(upstream, point, mirIv))
           throw new IllegalStateException(
             s"mirror ${mirror.dir} state does not match its recorded sync " +
               s"point (epochId=$point) against upstream ${upstream.dir}: " +
@@ -291,20 +263,10 @@ object MirrorJob {
       }
 
       // mirror schema tracks the upstream's at vTo (metadata-only steps)
-      val mSchema = mParent.map(_.schemaId)
-        .getOrElse(SchemaRegistry.baseSchemaId)
-      require(up2.schemaId >= mSchema,
-        s"mirror schema $mSchema ahead of upstream ${up2.schemaId}")
-      if (up2.schemaId > mSchema)
-        ((mSchema + 1) to up2.schemaId).foreach(mirror.evolveSchema(_))
+      alignSchema(mirror, mParent, up2.schemaId) { mSchema =>
+        s"mirror schema $mSchema ahead of upstream ${up2.schemaId}" }
 
-      val delta: Map[Int, Seq[(Long, Long)]] = upIv.flatMap {
-        case (p, ivs) =>
-          val d = Intervals.subtract(ivs, mirIv.getOrElse(p, Nil))
-          if (d.isEmpty) None else Some(p -> d)
-      }
-      val topOfDelta: Map[Int, Long] =
-        delta.map { case (p, ivs) => p -> ivs.map(_._2).max }
+      val (delta, topOfDelta) = claimDelta(upIv, mirIv)
 
       // feed rows → ChangeEvent envelope under the batch's pinned vintage
       val sch = SchemaRegistry.schemaFor(feedSchemaId)
@@ -385,6 +347,45 @@ object MirrorJob {
           "(hard snapshot rollback?): a mirror cannot be mechanically " +
           "rolled back — rebuild the replica, or roll the upstream " +
           "forward with Revert.revertTo (CDC-consistent)")
+  }
+
+  /** The mirror's recorded sync point `point` is trusted iff it is a
+    * version the upstream still retains and the upstream's committed
+    * offsets at it equal the mirror's. Retention is probed by reading THAT
+    * version's header directly (missing ⇒ expired ⇒ untrusted): one
+    * metadata read, not an O(versions) history listing. */
+  private def syncPointTrusted(upstream: IceTable, point: Long,
+      mirIv: Map[Int, Seq[(Long, Long)]]): Boolean =
+    point >= 0 && {
+      try normalized(MergeEngine.committedIntervals(
+        Some(upstream.readManifestHeader(point)))) == normalized(mirIv)
+      catch { case _: java.io.FileNotFoundException => false }
+    }
+
+  /** Step the mirror's schema up to the upstream's `upSchemaId`
+    * (metadata-only; the registry history is linear and `evolveSchema`
+    * validates each step). A mirror schema ahead of the upstream's fails
+    * with `aheadError(mirrorSchemaId)`. */
+  private def alignSchema(mirror: IceTable, mParent: Option[EpochManifest],
+      upSchemaId: Int)(aheadError: Int => String): Unit = {
+    val mSchema = mParent.map(_.schemaId)
+      .getOrElse(SchemaRegistry.baseSchemaId)
+    require(upSchemaId >= mSchema, aheadError(mSchema))
+    if (upSchemaId > mSchema)
+      ((mSchema + 1) to upSchemaId).foreach(mirror.evolveSchema(_))
+  }
+
+  /** The per-partition claim delta, upstream committed \ mirror committed,
+    * and its top seq per partition: the substitute seq for a delete whose
+    * tombstone purged inside the window (see the object docs). */
+  private def claimDelta(upIv: Map[Int, Seq[(Long, Long)]],
+      mirIv: Map[Int, Seq[(Long, Long)]])
+      : (Map[Int, Seq[(Long, Long)]], Map[Int, Long]) = {
+    val delta = upIv.flatMap { case (p, ivs) =>
+      val d = Intervals.subtract(ivs, mirIv.getOrElse(p, Nil))
+      if (d.isEmpty) None else Some(p -> d)
+    }
+    (delta, delta.map { case (p, ivs) => p -> ivs.map(_._2).max })
   }
 
   private def normalized(m: Map[Int, Seq[(Long, Long)]])

@@ -18,8 +18,9 @@ import org.apache.spark.sql.{Dataset, SparkSession}
  * parallelism.
  *
  * Skew: repo popularity follows a Zipf(s) distribution so a hot repo absorbs
- * a large share of events (FIXTURES.md §6), exercising the salted-repartition
- * path of the merge stage.
+ * a large share of events (FIXTURES.md §6). Buckets hash the whole
+ * (repo, path) key, so the distinct keys of even a hot repo spread evenly
+ * across them.
  */
 final case class LogSpec(
     seed: Long = 42L,

@@ -56,7 +56,9 @@ object Compaction {
   /** `minFilesPerBucket = 1` (default) is a full pass — every bucket
     * rewrites and all safe tombstones purge (routine CoW merges leave one
     * file per bucket, so a files-count threshold alone would never select
-    * them). Pass 2+ for scoped maintenance of salted/fragmented buckets. */
+    * them). Pass 2+ for scoped maintenance of fragmented buckets (file
+    * skipping carries a bucket's untouched files beside its rewritten
+    * one). */
   def compact(spark: SparkSession, table: IceTable,
               minFilesPerBucket: Int = 1): CompactionReport =
     // observation-safe: an ALL-PURGE rewrite is runtime-empty, and AQE's
@@ -104,7 +106,7 @@ object Compaction {
     val (packed, writeTasks) =
       IceTable.packBuckets(kept, fragBuckets.size, fragFiles)
     val write = table.writeEpochFilesTimed(packed, compactionEpochId,
-      parent.schemaId, saltPerBucket = 1, alignedByBucket = true,
+      parent.schemaId, alignedByBucket = true,
       nBuckets = table.bucketCountOf(Some(parent)))
 
     val metrics = org.apache.spark.sql.GraftSqlBridge

@@ -229,7 +229,8 @@ object MergeEngine {
   /** What an epoch did beyond its counters: dedup mode (`payload`,
     * `broadcast` or `shuffle`), AQE on/off, bucket-aligned target scan,
     * touched-bucket files skipped by stats, the write's files and time, and
-    * the task count [[IceTable.packBuckets]] chose for it (0: not packed). */
+    * the task count [[IceTable.packBuckets]] chose for it (0: no write, or
+    * an empty-target write, which is not packed). */
   private final case class EpochFacts(dedupMode: String, aqe: Boolean,
       aligned: Boolean = false, filesSkipped: Int = 0,
       write: IceTable.EpochWrite = IceTable.EpochWrite(Nil, 0L, 0L, 0L),
@@ -562,8 +563,8 @@ object MergeEngine {
   }
 
   /** Stage `dedup`, its run: one small per-bucket collect over the winners
-    * feeds the counters, bucket pruning, broadcast sizing, salting weights
-    * and file-skip key bounds at once. */
+    * feeds the counters, bucket pruning, broadcast sizing and file-skip
+    * key bounds at once. */
   private def dedupStats(spark: SparkSession, scope: Scope, in: Admitted,
       winners: DataFrame): Dedup = {
     import spark.implicits._
@@ -707,7 +708,6 @@ object MergeEngine {
     * reads them. */
   private def layout(spark: SparkSession, table: IceTable, scope: Scope,
       dd: Dedup): Layout = {
-    import spark.implicits._
     val affected = dd.buckets
     val (bucketTouched, untouchedFiles) = scope.parent.map(_.files)
       .getOrElse(Seq.empty).partition(f => affected.contains(f.bucket))
@@ -716,38 +716,18 @@ object MergeEngine {
     // style pruning, IcebergMetadataWriter.java:349-383,664-672): a file
     // whose manifest stats PROVE it holds no winner key is carried forward
     // BY REFERENCE — the merge would emit its rows unchanged, and no
-    // rewritten row shares its keys. Two proofs:
-    //  - key-range: the file's [minKey, maxKey] is disjoint from the
-    //    bucket's winner key range (unsigned-byte UTF8String order);
-    //  - salt residue: a salted file holds exactly the keys with
-    //    pmod(xxhash64(path), saltMod) = saltRes; if no winner of the
-    //    bucket lands in that class, a small epoch touching a salted hot
-    //    bucket rewrites one salt slice, not all of it.
-    // Files without stats are never skipped.
-    val saltMods = bucketTouched
-      .filter(f => f.saltMod > 1 && f.saltRes >= 0).map(_.saltMod).distinct
-    // winner residue classes per bucket, one tiny aggregate per distinct
-    // saltMod over the persisted winner envelopes (usually zero or one)
-    val winnerResidues: Map[Int, Map[Int, Set[Int]]] = saltMods.map { m =>
-      m -> dd.winners.groupBy($"bucket")
-        .agg(collect_set(pmod(xxhash64($"path"), lit(m)).cast("int")).as("rs"))
-        .collect()
-        .map(r => r.getAs[Int]("bucket") -> r.getAs[Seq[Int]]("rs").toSet)
-        .toMap
-    }.toMap
-    def fileSkippable(f: DataFileEntry): Boolean = {
-      val keyDisjoint = (f.minKey, f.maxKey, dd.keyRange.get(f.bucket)) match {
+    // rewritten row shares its keys. The proof is key-range: the file's
+    // [minKey, maxKey] is disjoint from the bucket's winner key range
+    // (unsigned-byte UTF8String order). Files without stats are never
+    // skipped.
+    def fileSkippable(f: DataFileEntry): Boolean =
+      (f.minKey, f.maxKey, dd.keyRange.get(f.bucket)) match {
         case (Some(fmin), Some(fmax), Some((wmin, wmax)))
           if wmin != null && wmax != null =>
           graft.table.FileStats.keyCompare(fmax, wmin) < 0 ||
             graft.table.FileStats.keyCompare(fmin, wmax) > 0
         case _ => false
       }
-      def residueMiss = f.saltMod > 1 && f.saltRes >= 0 &&
-        !winnerResidues(f.saltMod).getOrElse(f.bucket, Set.empty[Int])
-          .contains(f.saltRes)
-      keyDisjoint || residueMiss
-    }
     val (skippedFiles, touchedFiles) = bucketTouched.partition(fileSkippable)
 
     // Bucket-aligned merge (storage-partitioned join): the target is a DSv2
@@ -774,7 +754,7 @@ object MergeEngine {
   /** Stage `write`: lay the winners out like the target, merge them into
     * it by seq-aware LWW (copy-on-write over the affected buckets), and
     * write the merged rows. Returns the write, its packed task count (0:
-    * not packed) and the epoch's counters. */
+    * empty target, not packed) and the epoch's counters. */
   private def mergeAndWrite(spark: SparkSession, table: IceTable,
       scope: Scope, fresh: DataFrame, dd: Dedup, lay: Layout, epochId: Long)
       : (IceTable.EpochWrite, Int, EpochStats) = {
@@ -862,28 +842,15 @@ object MergeEngine {
         sum(when($"_tag" === "stale", 1L).otherwise(0L)).as("stale"))
       .drop("_tag")
 
-    // adaptive hot-bucket salting: if one bucket holds a disproportionate
-    // share of this epoch's keys, split its write across multiple tasks.
-    val bucketWeights = dd.perBucket.map(_.getAs[Long]("nKeys"))
-    val saltPerBucket =
-      if (bucketWeights.size <= 1) 1
-      else {
-        val mx = bucketWeights.max
-        val avg = bucketWeights.sum / bucketWeights.size
-        if (mx > 4 * avg) math.min(8, (mx / math.max(1L, avg)).toInt) else 1
-      }
     // merged output is already distributed by bucket (the aligned join), so
-    // the write adds NO shuffle — unless hot-bucket salting kicked in, which
-    // trades one extra exchange for write parallelism on the skewed bucket.
-    // An aligned, unsalted write packs its buckets into one task per core
-    // (unless the target's bytes need more); the empty-target and salted
-    // writes keep their own partitioning.
+    // the write adds NO shuffle: an aligned write packs its buckets into
+    // one task per core (unless the target's bytes need more); the
+    // empty-target write keeps its own partitioning.
     val (toWrite, writeTasks) =
-      if (lay.aligned && saltPerBucket == 1)
-        IceTable.packBuckets(merged, lay.buckets.size, lay.read)
+      if (lay.aligned) IceTable.packBuckets(merged, lay.buckets.size, lay.read)
       else (merged, 0)
     val write = table.writeEpochFilesTimed(toWrite, epochId, scope.schemaId,
-      saltPerBucket, alignedByBucket = true, nBuckets = scope.nBuckets)
+      alignedByBucket = true, nBuckets = scope.nBuckets)
 
     val metrics = GraftSqlBridge.awaitObservation(spark, obs, "merge-write")
     (write, writeTasks, EpochStats(

@@ -66,18 +66,13 @@ final case class EpochStats(
   * Iceberg data-file metrics analog, IcebergMetadataWriter.java:349-383):
   *  - `minKey`/`maxKey` — conservative bounds on the composed row key
   *    `repo + NUL + path` (see [[graft.table.FileStats]]),
-  *  - `minSeq`/`maxSeq` — bounds on the stored `lastSeq`,
-  *  - `saltMod`/`saltRes` — when a hot-bucket write salted the bucket across
-  *    several files, each file holds ONLY keys with
-  *    `pmod(xxhash64(path), saltMod) == saltRes`; an epoch whose winners
-  *    miss that residue class can skip the file entirely.
+  *  - `minSeq`/`maxSeq` — bounds on the stored `lastSeq`.
   * All default to absent — a file without stats is readable everywhere and
   * simply never skipped (legacy manifests keep working unchanged). */
 final case class DataFileEntry(path: String, bucket: Int, rows: Long,
     schemaId: Int, bytes: Long = -1L,
     minKey: Option[String] = None, maxKey: Option[String] = None,
-    minSeq: Option[Long] = None, maxSeq: Option[Long] = None,
-    saltMod: Int = 1, saltRes: Int = -1)
+    minSeq: Option[Long] = None, maxSeq: Option[Long] = None)
 
 /**
  * Snapshot manifest: the unit of atomic commit. A snapshot is readable iff

@@ -431,9 +431,8 @@ final class IceTable(val dir: String, val defaultNumBuckets: Int,
 
   /** Candidate data files that can hold key `(repo, path)` under manifest
     * `m`: ONE bucket's files, minus files whose stats preclude the key
-    * (key outside [minKey, maxKey] in unsigned byte order, or a salt
-    * residue class the key does not hash into). Stats-less files are kept.
-    * Manifest-only: no file is opened. */
+    * (key outside [minKey, maxKey] in unsigned byte order). Stats-less
+    * files are kept. Manifest-only: no file is opened. */
   def lookupFiles(spark: SparkSession, m: EpochManifest, repo: String,
       path: String): Seq[DataFileEntry] = {
     val n = bucketCountOf(Some(m))
@@ -442,23 +441,13 @@ final class IceTable(val dir: String, val defaultNumBuckets: Int,
     m.files.filter { f =>
       f.bucket == b &&
         f.minKey.forall(mk => FileStats.keyCompare(key, mk) >= 0) &&
-        f.maxKey.forall(mk => FileStats.keyCompare(key, mk) <= 0) &&
-        (f.saltMod <= 1 || f.saltRes < 0 || {
-          val h = {
-            val u = org.apache.spark.unsafe.types.UTF8String.fromString(path)
-            org.apache.spark.sql.catalyst.expressions.XXH64
-              .hashUnsafeBytes(u.getBaseObject, u.getBaseOffset,
-                u.numBytes(), 42L)
-          }
-          val r = (h % f.saltMod).toInt
-          (if (r < 0) r + f.saltMod else r) == f.saltRes
-        })
+        f.maxKey.forall(mk => FileStats.keyCompare(key, mk) <= 0)
     }
   }
 
   /** POINT LOOKUP (serving path): the user-view row(s) for one exact key,
     * reading only the files that can hold it — bucket pruning by the key
-    * hash, then manifest-stats pruning (key range + salt residue), then
+    * hash, then manifest-stats pruning (key range), then
     * parquet row-group pruning via the pushed key predicate. At 100 TB a
     * key lookup opens ~1 file, never the table; an absent key outside every
     * candidate's key range proves absent with zero data reads. */
@@ -921,83 +910,52 @@ final class IceTable(val dir: String, val defaultNumBuckets: Int,
     * bucket lands whole in one partition), into a STAGING dir, then publish
     * each file into `data/bucket=<b>/e<epochId>-<name>` by rename
     * (staging→output atomicity; a crash mid-publish leaves only unreferenced
-    * orphans).
-    * `saltPerBucket > 1` splits each bucket across that many writer tasks:
-    * a Zipf-hot bucket then produces several files in parallel instead of
-    * one straggler task; readers are unaffected (manifests list all files).
-    * Salted files are keyed by an explicit `_salt` staging partition column
-    * (stripped at publish — the data layout stays single-level), so each
-    * file's (saltMod, saltRes) residue class is EXACT and recorded in its
-    * manifest entry: a later epoch whose winners miss the residue skips the
-    * file without opening it (see MergeEngine file skipping).
+    * orphans). Each task writes one file per bucket it holds.
     * `alignedByBucket = true` skips the repartition when every bucket
     * already sits whole in one input partition (bucket-aligned MERGE or
-    * compaction output, possibly packed by [[IceTable.packBuckets]]); each
-    * task then writes one file per bucket it holds.
+    * compaction output, possibly packed by [[IceTable.packBuckets]]).
     * Published entries carry footer stats (rows + key/seq min-max) from one
     * pooled metadata pass — the skipping/verifier inputs. */
   def writeEpochFiles(df: DataFrame, epochId: Long,
       schemaId: Int = SchemaRegistry.baseSchemaId,
-      saltPerBucket: Int = 1,
       alignedByBucket: Boolean = false,
       nBuckets: Int = -1,
       sourceFiles: Seq[DataFileEntry] = Nil): Seq[DataFileEntry] =
-    writeEpochFilesTimed(df, epochId, schemaId, saltPerBucket,
-      alignedByBucket, nBuckets, sourceFiles).files
+    writeEpochFilesTimed(df, epochId, schemaId, alignedByBucket, nBuckets,
+      sourceFiles).files
 
   /** [[writeEpochFiles]], also timing its write job, publish and stats. */
   def writeEpochFilesTimed(df: DataFrame, epochId: Long, schemaId: Int,
-      saltPerBucket: Int, alignedByBucket: Boolean, nBuckets: Int,
+      alignedByBucket: Boolean, nBuckets: Int,
       sourceFiles: Seq[DataFileEntry] = Nil): IceTable.EpochWrite = {
     val f = fs
     val nb = if (nBuckets > 0) nBuckets else numBuckets
-    val salted = saltPerBucket > 1
     val staging = new HPath(stagingDir, s"e$epochId-${System.nanoTime()}")
     val parted =
-      if (alignedByBucket && !salted) df
-      else if (!salted) df.repartition(
+      if (alignedByBucket) df
+      else df.repartition(
         IceTable.packedTasks(df.sparkSession, nb, sourceFiles), col("bucket"))
-      else df
-        .withColumn("_salt",
-          pmod(xxhash64(col("path")), lit(saltPerBucket)).cast("int"))
-        .repartition(nb * saltPerBucket, col("bucket"), col("_salt"))
-    val sorted = parted.sortWithinPartitions("bucket", "repo", "path")
+    val writer = parted.sortWithinPartitions("bucket", "repo", "path")
       .write.options(LocalFs.keys(df.sparkSession)).mode("overwrite")
+      .partitionBy("bucket")
     val t0 = System.nanoTime()
-    (if (salted) sorted.partitionBy("bucket", "_salt")
-     else sorted.partitionBy("bucket"))
-      .parquet(staging.toString)
+    writer.parquet(staging.toString)
     val t1 = System.nanoTime()
     // publish: move every staged file under the flat single-level data
-    // layout (any _salt staging level is flattened into the file NAME —
-    // one task can stage the same part-file name under two _salt dirs of
-    // one bucket, so the name must carry the residue to stay unique)
-    def publishDir(d: HPath, bucket: Int, saltRes: Int)
-        : Iterator[DataFileEntry] = {
-      val destDir = new HPath(dataDir, s"bucket=$bucket")
-      f.mkdirs(destDir)
-      val tag = if (saltRes >= 0) s"e$epochId-s$saltRes-" else s"e$epochId-"
-      f.listStatus(d).iterator
-        .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-        .map { s =>
-          val dest = new HPath(destDir, tag + s.getPath.getName)
-          if (!f.rename(s.getPath, dest))
-            throw new IllegalStateException(s"publish failed: $dest")
-          DataFileEntry(dest.toString, bucket, -1L, schemaId, s.getLen,
-            saltMod = if (saltRes >= 0) saltPerBucket else 1,
-            saltRes = saltRes)
-        }
-    }
+    // layout, its name tagged with the epoch
     val sortedEntries = f.listStatus(staging).iterator
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("bucket="))
       .flatMap { d =>
         val bucket = d.getPath.getName.stripPrefix("bucket=").toInt
-        if (!salted) publishDir(d.getPath, bucket, -1)
-        else f.listStatus(d.getPath).iterator
-          .filter(s => s.isDirectory && s.getPath.getName.startsWith("_salt="))
-          .flatMap { sd =>
-            publishDir(sd.getPath, bucket,
-              sd.getPath.getName.stripPrefix("_salt=").toInt)
+        val destDir = new HPath(dataDir, s"bucket=$bucket")
+        f.mkdirs(destDir)
+        f.listStatus(d.getPath).iterator
+          .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
+          .map { s =>
+            val dest = new HPath(destDir, s"e$epochId-" + s.getPath.getName)
+            if (!f.rename(s.getPath, dest))
+              throw new IllegalStateException(s"publish failed: $dest")
+            DataFileEntry(dest.toString, bucket, -1L, schemaId, s.getLen)
           }
       }.toSeq.sortBy(e => (e.bucket, e.path))
     f.delete(staging, true)

@@ -44,45 +44,6 @@ class DataSkippingSpec extends SparkSpec {
     assert(fs.map(_.rows).sum == 40L)
   }
 
-  test("salted files record exact residue classes; a later epoch skips them") {
-    val t = IceTable.create(tmpDir("salt"), numBuckets = 1)
-    val keys = (0 until 100).map(i => f"p$i%02d")
-    val salted = t.writeEpochFiles(rows(t, keys, 50L), 0, saltPerBucket = 4)
-    assert(salted.map(_.saltRes).toSet == Set(0, 1, 2, 3),
-      "each residue class must land in its own file(s)")
-    assert(salted.forall(_.saltMod == 4))
-    // residue classes are EXACT: every file's rows satisfy its recorded class
-    salted.foreach { f =>
-      val bad = spark.read.parquet(f.path)
-        .filter(pmod(xxhash64(col("path")), lit(4)).cast("int") =!= f.saltRes)
-        .count()
-      assert(bad == 0, s"file ${f.path} holds rows outside residue ${f.saltRes}")
-    }
-    t.commit(EpochManifest(0, 0, 1, salted, offsets2(50L),
-      EpochStats(100, 0, 0, 100, 0, 0), -1L, completeUntilSeq = 50L,
-      numBuckets = 1))
-    val before = shaState(t)
-
-    // one-key epoch: only the key's residue file may be rewritten
-    val hitKey = "p07"
-    val res = spark.range(1)
-      .select(pmod(xxhash64(lit(hitKey)), lit(4)).cast("int")).head().getInt(0)
-    val ev = Seq(ChangeEvent("u", 51L, "r", hitKey, commit40, "scala", "NEW"))
-    val out = MergeEngine.applyEpoch(spark, t, ev.toDS(), 1,
-      nLogPartitions = 2, claimedRange = Some((50L, 51L)))
-    assert(!out.skipped && out.stats.rowsApplied == 1)
-
-    val m = t.currentManifest().get
-    val carried = salted.filter(_.saltRes != res).map(_.path).toSet
-    assert(carried.subsetOf(m.files.map(_.path).toSet),
-      "files of other residue classes must carry forward BY REFERENCE")
-    assert(salted.filter(_.saltRes == res)
-      .forall(f => !m.files.map(_.path).contains(f.path)),
-      "the hit residue's file must be rewritten")
-    assert(shaState(t) == before.updated(hitKey, OracleFold.sha256Hex("NEW")),
-      "skipping must not change the table's contents")
-  }
-
   test("key-range-disjoint files in a touched bucket carry forward") {
     val t = IceTable.create(tmpDir("krange"), numBuckets = 1)
     val aKeys = (0 until 50).map(i => f"a$i%02d")
@@ -131,7 +92,7 @@ class DataSkippingSpec extends SparkSpec {
   test("point lookup: one bucket, stats-admitted files only, exact row") {
     val t = IceTable.create(tmpDir("lkp"), numBuckets = 8)
     val keys = (0 until 200).map(i => f"p$i%03d")
-    val fs = t.writeEpochFiles(rows(t, keys, 5L), 0, saltPerBucket = 4)
+    val fs = t.writeEpochFiles(rows(t, keys, 5L), 0)
     t.commit(EpochManifest(0, 0, 1, fs, offsets2(5L),
       EpochStats(200, 0, 0, 200, 0, 0), -1L, completeUntilSeq = 5L,
       numBuckets = 8))
@@ -146,10 +107,10 @@ class DataSkippingSpec extends SparkSpec {
 
     keys.take(25).foreach { k =>
       val cand = t.lookupFiles(spark, m, "r", k)
-      val bucketFiles = m.files.count(_.bucket == t.bucketOf("r", k))
-      assert(cand.nonEmpty && cand.size < bucketFiles,
-        s"$k: residue pruning must drop sibling salt files " +
-          s"(${cand.size} of $bucketFiles)")
+      val bucketFiles = m.files.filter(_.bucket == t.bucketOf("r", k))
+      assert(cand.nonEmpty && cand.toSet.subsetOf(bucketFiles.toSet),
+        s"$k: candidates must come from the key's bucket only " +
+          s"(${cand.map(_.path)} vs ${bucketFiles.map(_.path)})")
       val row = t.lookup(spark, "r", k).collect()
       assert(row.length == 1 && row.head.getAs[String]("content") == s"v$k")
     }
@@ -243,10 +204,17 @@ class DataSkippingSpec extends SparkSpec {
   }
 
   test("legacy manifests without the new fields parse with safe defaults") {
+    // the second entry carries the retired salt fields, which parse and
+    // are ignored: it is an ordinary key-range lookup candidate
+    val t = IceTable.create(tmpDir("legacy"), numBuckets = 4)
+    val b = t.bucketOf("r", "k5")
     val legacy =
-      """{"version":3,"epochId":3,"schemaId":1,
+      s"""{"version":3,"epochId":3,"schemaId":1,
          "files":[{"path":"/d/f.parquet","bucket":2,"rows":-1,"schemaId":1,
-                   "bytes":123}],
+                   "bytes":123},
+                  {"path":"/d/s.parquet","bucket":$b,"rows":10,"schemaId":1,
+                   "bytes":456,"minKey":"r\\u0000k0","maxKey":"r\\u0000k9",
+                   "saltMod":4,"saltRes":2}],
          "offsets":[{"partitionId":0,"lowSeq":-1,"highSeq":9}],
          "stats":{"rowsExtracted":1,"rowsQuarantined":0,"dedupDrops":0,
                   "rowsApplied":1,"deletesApplied":0,"staleDrops":0},
@@ -256,6 +224,12 @@ class DataSkippingSpec extends SparkSpec {
       m.completeUntilSeq == Long.MinValue)
     val f = m.files.head
     assert(f.minKey.isEmpty && f.maxKey.isEmpty && f.minSeq.isEmpty &&
-      f.maxSeq.isEmpty && f.saltMod == 1 && f.saltRes == -1)
+      f.maxSeq.isEmpty)
+    val salted = m.files(1)
+    assert(salted.bucket == b &&
+      salted.minKey.contains("r" + FileStats.KeySep + "k0") &&
+      salted.maxKey.contains("r" + FileStats.KeySep + "k9"))
+    assert(t.lookupFiles(spark, m, "r", "k5").contains(salted),
+      "an in-range key of its bucket must keep the file a candidate")
   }
 }

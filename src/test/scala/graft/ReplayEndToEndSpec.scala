@@ -315,9 +315,10 @@ class ReplayEndToEndSpec extends SparkSpec {
     * table against the oracle fold after the epoch and after the compaction,
     * the feed against the diff of the two `readAt` views, one file per
     * bucket after the compaction. */
-  private def packedStages(label: String,
-      confs: Seq[(String, String)]): Packed = {
-    import spark.implicits._
+  /** Replace every metrics reporter with one that collects the events into
+    * the returned list; the caller clears the reporters when done. */
+  private def captureEvents()
+      : java.util.List[graft.metrics.Metrics.MetricEvent] = {
     import graft.metrics.Metrics
     val seen =
       new java.util.concurrent.CopyOnWriteArrayList[Metrics.MetricEvent]()
@@ -325,6 +326,14 @@ class ReplayEndToEndSpec extends SparkSpec {
     Metrics.addReporter(new Metrics.MetricsReporter {
       def report(e: Metrics.MetricEvent): Unit = { seen.add(e); () }
     })
+    seen
+  }
+
+  private def packedStages(label: String,
+      confs: Seq[(String, String)]): Packed = {
+    import spark.implicits._
+    import graft.metrics.Metrics
+    val seen = captureEvents()
     // the storage-partitioned-join confs let the feed's diff run aligned
     // outside applyEpoch (which scopes its own)
     val all = confs ++ Seq(
@@ -437,5 +446,46 @@ class ReplayEndToEndSpec extends SparkSpec {
       s"aligned epoch: one task per touched bucket: $p")
     assert(p.feedPartitions == 32, s"feed: one task per bucket: $p")
     assert(p.compactWriteTasks == 32, s"compaction: one task per bucket: $p")
+  }
+
+  test("a tiny epoch with one bucket holding most of its keys still writes " +
+      "one packed file per touched bucket") {
+    import spark.implicits._
+    import graft.model.ChangeEvent
+    import graft.metrics.Metrics
+    val seen = captureEvents()
+    try {
+      val t = IceTable.create(tmpDir("hotbucket"), numBuckets = 8)
+      val keys = (0 until 200).map(i => f"p$i%03d")
+      val pre = keys.zipWithIndex.map { case (k, i) =>
+        ChangeEvent("i", i.toLong, "r", k, "c" * 40, "scala", s"v$k") }
+      MergeEngine.applyEpoch(spark, t, pre.toDS(), 0, nLogPartitions = 2,
+        claimedRange = Some((-1L, 199L)))
+      // winners fall 5 / 1 / 1 / 1 / 1 over five buckets
+      val byBucket = keys.groupBy(t.bucketOf("r", _)).toSeq.sortBy(_._1)
+      assert(byBucket.size == 8 && byBucket.forall(_._2.size >= 5))
+      val picked = byBucket.head._2.take(5) ++
+        byBucket.slice(1, 5).map(_._2.head)
+      val tiny = picked.zipWithIndex.map { case (k, i) =>
+        ChangeEvent("u", 200L + i, "r", k, "c" * 40, "scala", s"new$k") }
+      val parent = t.currentManifest().get
+      val out = MergeEngine.applyEpoch(spark, t, tiny.toDS(), 1,
+        nLogPartitions = 2, claimedRange = Some((199L, 204L)))
+      val want = OracleFold.fold(pre ++ tiny)
+        .map { case (k, r) => k -> (r.contentSha, r.commit) }
+      assert(tableState(t) == want, "must match the oracle fold")
+
+      import scala.jdk.CollectionConverters._
+      val ev = seen.asScala.find(e => e.name == "EpochCommitted" &&
+        e.metadata("version") == out.manifest.version.toString)
+        .getOrElse(fail("no EpochCommitted event")).metadata
+      val touched = byBucket.take(5).map(_._1).toSet
+      val read = parent.files.filter(f => touched.contains(f.bucket))
+      val packed = IceTable.packedTasks(spark, touched.size, read)
+      assert(packed > 0 && ev("writeTasks").toInt == packed,
+        s"the aligned write must be packed into $packed tasks: $ev")
+      assert(ev("filesWritten").toInt == touched.size,
+        s"one file per touched bucket: $ev")
+    } finally Metrics.clearReporters()
   }
 }

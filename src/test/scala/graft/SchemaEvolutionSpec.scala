@@ -86,33 +86,34 @@ class SchemaEvolutionSpec extends SparkSpec {
   test("data skipping carries old-vintage files through an evolved merge") {
     import spark.implicits._
     import graft.model._
+    // two key-range-disjoint v1 files in one bucket: a winner in the a-range
+    // rewrites the a-file under v4 and carries the z-file by reference
     val t = IceTable.create(tmpDir("evoskip"), numBuckets = 1)
-    val keys = (0 until 80).map(i => f"p$i%02d")
-    val rows = keys.map(k => ("r", k, "c" * 40, "scala", s"v$k",
-        OracleFold.sha256Hex(s"v$k")))
+    def rows(keys: Seq[String]) = keys.map(k => ("r", k, "c" * 40, "scala",
+        s"v$k", OracleFold.sha256Hex(s"v$k")))
       .toDF("repo", "path", "commit", "lang", "content", "contentSha")
       .withColumn("bucket", t.bucketCol(col("repo"), col("path")))
       .withColumn("lastSeq", lit(10L))
       .withColumn("deleted", lit(false))
-    val fs = t.writeEpochFiles(rows, 0, saltPerBucket = 4)
-    t.commit(EpochManifest(0, 0, 1, fs,
+    val fa = t.writeEpochFiles(rows((0 until 40).map(i => f"a$i%02d")), 0)
+    val fz = t.writeEpochFiles(rows((0 until 40).map(i => f"z$i%02d")), 1)
+    t.commit(EpochManifest(0, 1, 1, (fa ++ fz).sortBy(_.path),
       (0 until 2).map(p => OffsetRange(p, -1L, 10L)),
       EpochStats(80, 0, 0, 80, 0, 0), -1L, completeUntilSeq = 10L,
       numBuckets = 1))
     t.evolveSchema(2); t.evolveSchema(3); t.evolveSchema(4)
 
-    val hit = "p07"
-    val res = spark.range(1)
-      .select(pmod(xxhash64(lit(hit)), lit(4)).cast("int")).head().getInt(0)
+    val hit = "a07"
     graft.merge.MergeEngine.applyEpoch(spark, t,
       Seq(ChangeEvent("u", 11L, "r", hit, "c" * 40, "scala", "NEW")).toDS(),
-      1, nLogPartitions = 2, claimedRange = Some((10L, 11L)))
+      2, nLogPartitions = 2, claimedRange = Some((10L, 11L)))
 
     val m = t.currentManifest().get
     assert(m.schemaId == 4)
-    val carried = fs.filter(_.saltRes != res).map(_.path).toSet
-    assert(carried.subsetOf(m.files.map(_.path).toSet),
-      "other residues' v1 files must carry forward by reference")
+    assert(fz.map(_.path).toSet.subsetOf(m.files.map(_.path).toSet),
+      "the z-range v1 file must carry forward by reference")
+    assert(fa.forall(f => !m.files.map(_.path).contains(f.path)),
+      "the a-range v1 file must be rewritten")
     assert(m.files.map(_.schemaId).toSet == Set(1, 4),
       "snapshot must mix carried v1 files with the rewritten v4 slice")
     val view = t.read(spark)

@@ -484,27 +484,6 @@ class TableInvariantsSpec extends SparkSpec {
     assert(t.currentManifest().get.files.forall(e => exists(e.path)))
   }
 
-  test("salted write splits a hot bucket across multiple files, data intact") {
-    import spark.implicits._
-    val t = IceTable.create(tmpDir("salt"), numBuckets = 2)
-    val rows = (0 until 1000).map(i =>
-      ("r", s"p$i", "c", "scala", s"v$i", s"sha$i"))
-      .toDF("repo", "path", "commit", "lang", "content", "contentSha")
-      .withColumn("bucket", org.apache.spark.sql.functions.lit(1))
-      .withColumn("lastSeq", org.apache.spark.sql.functions.lit(1L))
-      .withColumn("deleted", org.apache.spark.sql.functions.lit(false))
-    val plain = t.writeEpochFiles(rows, epochId = 0)
-    assert(plain.count(_.bucket == 1) == 1)
-    val salted = t.writeEpochFiles(rows, epochId = 1, saltPerBucket = 4)
-    // hash partitioning of (bucket, salt) tuples may collide some salt
-    // values into one task — splitting (>1 file) is what matters
-    assert(salted.count(_.bucket == 1) >= 2,
-      s"expected the hot bucket split across files, got $salted")
-    val back = t.readFiles(spark, salted)
-    assert(back.count() == 1000)
-    assert(back.select("path").distinct().count() == 1000)
-  }
-
   test("offset bootstrap: latest skips history, lookback backfills a window") {
     val spec2 = LogSpec(seed = 3L, nEvents = 1000, nRepos = 4,
       nPathsPerRepo = 6, pDelete = 0.0)
