@@ -56,9 +56,10 @@ object Compaction {
   /** `minFilesPerBucket = 1` (default) is a full pass — every bucket
     * rewrites and all safe tombstones purge (routine CoW merges leave one
     * file per bucket, so a files-count threshold alone would never select
-    * them). Pass 2+ for scoped maintenance of fragmented buckets (file
-    * skipping carries a bucket's untouched files beside its rewritten
-    * one). */
+    * them). Pass 2+ for scoped maintenance of fragmented buckets: the
+    * merge rewrites a touched bucket into one file, so only tables written
+    * before that rule (whose skipped or salted files sit beside a rewritten
+    * one) hold multi-file buckets. */
   def compact(spark: SparkSession, table: IceTable,
               minFilesPerBucket: Int = 1): CompactionReport =
     // observation-safe: an ALL-PURGE rewrite is runtime-empty, and AQE's

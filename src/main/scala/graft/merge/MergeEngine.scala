@@ -36,7 +36,8 @@ import org.apache.spark.storage.StorageLevel
  *    reducer.
  *  - The MERGE join runs only over buckets the epoch touches (bucket pruning
  *    via the manifest file list); untouched buckets' files carry forward by
- *    reference — rewrite amplification is bounded by bucket width.
+ *    reference, and a touched bucket is rewritten whole into one file —
+ *    rewrite amplification is bounded by bucket width.
  *  - Counters come from one small collect on the deduped output plus an
  *    `Observation` evaluated inside the write job — no extra passes.
  */
@@ -227,12 +228,12 @@ object MergeEngine {
   }
 
   /** What an epoch did beyond its counters: dedup mode (`payload`,
-    * `broadcast` or `shuffle`), AQE on/off, bucket-aligned target scan,
-    * touched-bucket files skipped by stats, the write's files and time, and
-    * the task count [[IceTable.packBuckets]] chose for it (0: no write, or
-    * an empty-target write, which is not packed). */
+    * `broadcast` or `shuffle`), AQE on/off, bucket-aligned target scan, the
+    * write's files and time, and the task count [[IceTable.packBuckets]]
+    * chose for it (0: no write, or an empty-target write, which is not
+    * packed). */
   private final case class EpochFacts(dedupMode: String, aqe: Boolean,
-      aligned: Boolean = false, filesSkipped: Int = 0,
+      aligned: Boolean = false,
       write: IceTable.EpochWrite = IceTable.EpochWrite(Nil, 0L, 0L, 0L),
       writeTasks: Int = 0)
 
@@ -258,7 +259,6 @@ object MergeEngine {
       "dedupMode" -> facts.dedupMode,
       "aqe" -> facts.aqe.toString,
       "aligned" -> facts.aligned.toString,
-      "filesSkipped" -> facts.filesSkipped.toString,
       "filesWritten" -> facts.write.files.size.toString,
       "writeTasks" -> facts.writeTasks.toString,
       "writeJobMs" -> facts.write.writeJobMs.toString,
@@ -281,9 +281,9 @@ object MergeEngine {
       committedIv: Map[Int, Seq[(Long, Long)]], quarantined: () => Long)
 
   /** The persisted winners, their per-bucket stats (`bucket`, `nKeys`, `nEv`,
-    * `keyBytes`), winner key range per bucket (if skippable), dedup mode. */
+    * `keyBytes`) and the dedup mode. */
   private final case class Dedup(winners: DataFrame, perBucket: Seq[Row],
-      keyRange: Map[Int, (String, String)], quarantined: Long, mode: String) {
+      quarantined: Long, mode: String) {
     def freshCount: Long = perBucket.map(_.getAs[Long]("nEv")).sum
     def upsertCount: Long = perBucket.map(_.getAs[Long]("nKeys")).sum
     def buckets: Set[Int] = perBucket.map(_.getAs[Int]("bucket")).toSet
@@ -294,10 +294,10 @@ object MergeEngine {
   private final case class Claims(ivs: Seq[(Long, Long)],
       claimsFor: Int => Seq[(Long, Long)], offsets: Seq[OffsetRange])
 
-  /** The merge target: parent files carried forward (`skipped` of them by
-    * stats) and the rewritten files' rows (`read`), read bucket-aligned or
-    * not. */
-  private final case class Layout(kept: Seq[DataFileEntry], skipped: Int,
+  /** The merge target: the untouched buckets' files, carried forward
+    * (`kept`), and every file of the touched buckets (`read`), whose rows
+    * are read bucket-aligned or not and rewritten whole. */
+  private final case class Layout(kept: Seq[DataFileEntry],
       read: Seq[DataFileEntry], target: DataFrame, aligned: Boolean,
       buckets: Seq[Int])
 
@@ -366,7 +366,7 @@ object MergeEngine {
             lay.kept ++ write.files, st, epochId, nLogPartitions,
             taskPolicies))
           emitCommitEvent(table, m, st, skipped = false, EpochFacts(dd.mode,
-            scope.aqe, lay.aligned, lay.skipped, write, writeTasks), clock)
+            scope.aqe, lay.aligned, write, writeTasks), clock)
           EpochOutcome(m, skipped = false, st)
         }
       } finally { winners.unpersist(); () }
@@ -563,29 +563,14 @@ object MergeEngine {
   }
 
   /** Stage `dedup`, its run: one small per-bucket collect over the winners
-    * feeds the counters, bucket pruning, broadcast sizing and file-skip
-    * key bounds at once. */
+    * feeds the counters, bucket pruning and broadcast sizing at once. */
   private def dedupStats(spark: SparkSession, scope: Scope, in: Admitted,
       winners: DataFrame): Dedup = {
     import spark.implicits._
-    // key bounds cost per-row string work, so they are aggregated only when
-    // parent files carry key stats they could skip; they use the footer
-    // stats' NUL-composed key encoding (graft.table.FileStats), so driver-
-    // side comparisons match the recorded min/max byte order.
-    val wantKeyBounds = scope.parent.exists(_.files.exists(_.minKey.isDefined))
-    val keyExpr = concat($"repo", lit(graft.table.FileStats.KeySep), $"path")
-    val baseAggs = Seq(count(lit(1)).as("nKeys"), sum($"nEvents").as("nEv"),
-      sum(octet_length($"repo") + octet_length($"path")).as("keyBytes"))
-    val aggs = if (wantKeyBounds)
-      baseAggs ++ Seq(min(keyExpr).as("minKey"), max(keyExpr).as("maxKey"))
-    else baseAggs
     val perBucket = winners.groupBy($"bucket")
-      .agg(aggs.head, aggs.tail: _*)
+      .agg(count(lit(1)).as("nKeys"), sum($"nEvents").as("nEv"),
+        sum(octet_length($"repo") + octet_length($"path")).as("keyBytes"))
       .collect().toSeq
-    val keyRange: Map[Int, (String, String)] =
-      if (!wantKeyBounds) Map.empty
-      else perBucket.map(r => r.getAs[Int]("bucket") ->
-        (r.getAs[String]("minKey"), r.getAs[String]("maxKey"))).toMap
     // estimated broadcast payload: key OCTETS (length() counts chars and
     // would undercount multi-byte UTF-8 keys up to 3-4x against a gate
     // whose whole point is actual bytes) + ~48B row overhead
@@ -595,7 +580,7 @@ object MergeEngine {
       if (scope.tiny) "payload"
       else if (winnerBytes <= maxBroadcastBytes(spark)) "broadcast"
       else "shuffle"
-    Dedup(winners, perBucket, keyRange, in.quarantined(), mode)
+    Dedup(winners, perBucket, in.quarantined(), mode)
   }
 
   /** Stage `claims`: the seq intervals this epoch claims, applied to EVERY
@@ -705,30 +690,14 @@ object MergeEngine {
   }
 
   /** Stage `layout`: which parent files the merge rewrites, and how it
-    * reads them. */
+    * reads them. Every file of a touched bucket is rewritten, so the bucket
+    * ends as one file: a bucket file's hashed keys span the key space, so
+    * no per-file key bound could prove it misses the epoch's winners. */
   private def layout(spark: SparkSession, table: IceTable, scope: Scope,
       dd: Dedup): Layout = {
     val affected = dd.buckets
-    val (bucketTouched, untouchedFiles) = scope.parent.map(_.files)
+    val (touchedFiles, untouchedFiles) = scope.parent.map(_.files)
       .getOrElse(Seq.empty).partition(f => affected.contains(f.bucket))
-
-    // FILE-LEVEL DATA SKIPPING within touched buckets (Iceberg-metrics-
-    // style pruning, IcebergMetadataWriter.java:349-383,664-672): a file
-    // whose manifest stats PROVE it holds no winner key is carried forward
-    // BY REFERENCE — the merge would emit its rows unchanged, and no
-    // rewritten row shares its keys. The proof is key-range: the file's
-    // [minKey, maxKey] is disjoint from the bucket's winner key range
-    // (unsigned-byte UTF8String order). Files without stats are never
-    // skipped.
-    def fileSkippable(f: DataFileEntry): Boolean =
-      (f.minKey, f.maxKey, dd.keyRange.get(f.bucket)) match {
-        case (Some(fmin), Some(fmax), Some((wmin, wmax)))
-          if wmin != null && wmax != null =>
-          graft.table.FileStats.keyCompare(fmax, wmin) < 0 ||
-            graft.table.FileStats.keyCompare(fmin, wmax) > 0
-        case _ => false
-      }
-    val (skippedFiles, touchedFiles) = bucketTouched.partition(fileSkippable)
 
     // Bucket-aligned merge (storage-partitioned join): the target is a DSv2
     // scan reporting KeyGroupedPartitioning(bucket) and the winners are laid
@@ -747,8 +716,7 @@ object MergeEngine {
       else
         table.readFiles(spark, touchedFiles, scope.schemaId)
           .repartition(scope.nBuckets, col("bucket"))
-    Layout(untouchedFiles ++ skippedFiles, skippedFiles.size, touchedFiles,
-      target, aligned, buckets)
+    Layout(untouchedFiles, touchedFiles, target, aligned, buckets)
   }
 
   /** Stage `write`: lay the winners out like the target, merge them into

@@ -62,11 +62,13 @@ final case class EpochStats(
   * id — cf. IcebergMetadataWriter.computeCandidateSchema,
   * gobblin-iceberg/.../writer/IcebergMetadataWriter.java:455-524).
   *
-  * The optional fields are per-file column statistics for data skipping (the
-  * Iceberg data-file metrics analog, IcebergMetadataWriter.java:349-383):
+  * The optional fields are per-file column statistics for read-side file
+  * pruning (the Iceberg data-file metrics analog,
+  * IcebergMetadataWriter.java:349-383):
   *  - `minKey`/`maxKey` — conservative bounds on the composed row key
-  *    `repo + NUL + path` (see [[graft.table.FileStats]]),
-  *  - `minSeq`/`maxSeq` — bounds on the stored `lastSeq`.
+  *    `repo + NUL + path` (see [[graft.table.FileStats]]); point lookups,
+  *  - `minSeq`/`maxSeq` — bounds on the stored `lastSeq`; incremental reads
+  *    and the change feed.
   * All default to absent — a file without stats is readable everywhere and
   * simply never skipped (legacy manifests keep working unchanged). */
 final case class DataFileEntry(path: String, bucket: Int, rows: Long,

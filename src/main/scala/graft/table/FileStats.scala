@@ -10,9 +10,13 @@ import org.apache.parquet.io.api.Binary
  * data is read). This is the engine's analog of the per-column metrics the
  * reference preserves into Iceberg data-file entries at commit time
  * (gobblin-iceberg/.../writer/IcebergMetadataWriter.java:349-383,664-672 —
- * appendFiles with metrics), which is what enables file-level data skipping
- * within a partition: the merge and read paths can drop files whose stats
- * preclude a match without opening them.
+ * appendFiles with metrics), which is what enables file-level pruning
+ * within a bucket: readers drop files whose stats preclude a match without
+ * opening them. The key bounds serve point lookups
+ * ([[IceTable.lookupFiles]]); the seq bounds serve incremental reads
+ * (`readChangesSince`) and the change feed's fenced-file pruning. The merge
+ * uses neither: it rewrites a touched bucket whole, because a bucket file's
+ * hashed keys span the key space and no key range could exclude it.
  *
  * Recorded per file:
  *  - `rows`   — footer record count (also feeds the compaction verifier),

@@ -512,8 +512,8 @@ final class IceTable(val dir: String, val defaultNumBuckets: Int,
     * Scale shape: only files whose PATH differs between the two manifests
     * are read — data files are immutable and content-addressed by path, so
     * a file listed in both snapshots cannot contain a changed row (the
-    * merge rewrites a touched bucket's non-skipped files; carried-forward
-    * files are proven untouched). The diff is therefore O(changed buckets),
+    * merge rewrites every file of a touched bucket and carries only the
+    * untouched buckets' files). The diff is therefore O(changed buckets),
     * not O(table): at 100 TB a "changes since yesterday" feed reads the
     * files recent epochs rewrote plus their direct predecessors, nothing
     * else. When both versions share a bucket layout the two sides are

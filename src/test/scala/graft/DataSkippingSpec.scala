@@ -6,9 +6,11 @@ import graft.model._
 import graft.table.{FileStats, IceTable, ManifestJson}
 import org.apache.spark.sql.functions._
 
-/** Per-file column stats in the manifest + file-level data skipping
-  * (Iceberg-metrics-style scan pruning), incremental `readChangesSince`,
-  * time-based retention, and the bounded footer-read pool. */
+/** Per-file column stats in the manifest and the reads they prune
+  * (Iceberg-metrics-style): key bounds for point lookups, seq bounds for
+  * incremental `readChangesSince`. The merge prunes no file: a touched
+  * bucket is rewritten whole, whatever its files' key ranges. Also
+  * time-based retention and the bounded footer-read pool. */
 class DataSkippingSpec extends SparkSpec {
   import spark.implicits._
 
@@ -44,7 +46,8 @@ class DataSkippingSpec extends SparkSpec {
     assert(fs.map(_.rows).sum == 40L)
   }
 
-  test("key-range-disjoint files in a touched bucket carry forward") {
+  test("a touched bucket is rewritten whole into one file, whatever its " +
+      "files' key ranges") {
     val t = IceTable.create(tmpDir("krange"), numBuckets = 1)
     val aKeys = (0 until 50).map(i => f"a$i%02d")
     val zKeys = (0 until 50).map(i => f"z$i%02d")
@@ -59,10 +62,10 @@ class DataSkippingSpec extends SparkSpec {
     MergeEngine.applyEpoch(spark, t, ev.toDS(), 2,
       nLogPartitions = 2, claimedRange = Some((10L, 11L)))
     val m = t.currentManifest().get
-    assert(fz.map(_.path).toSet.subsetOf(m.files.map(_.path).toSet),
-      "the z-range file's key bounds exclude the winner: carry by reference")
-    assert(fa.forall(f => !m.files.map(_.path).contains(f.path)),
-      "the a-range file must be rewritten")
+    assert(m.files.size == 1,
+      s"the touched bucket must end as one file: ${m.files.map(_.path)}")
+    assert((fa ++ fz).forall(f => !m.files.map(_.path).contains(f.path)),
+      "neither old file may be listed, key-range-disjoint or not")
     assert(shaState(t) == before.updated("a05", OracleFold.sha256Hex("NEW")))
   }
 

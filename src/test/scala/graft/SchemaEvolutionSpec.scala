@@ -83,11 +83,12 @@ class SchemaEvolutionSpec extends SparkSpec {
     assert(t.read(spark).filter(col("language").isNull).count() == 0)
   }
 
-  test("data skipping carries old-vintage files through an evolved merge") {
+  test("an evolved merge rewrites a touched bucket's old-vintage files into " +
+      "one file") {
     import spark.implicits._
     import graft.model._
     // two key-range-disjoint v1 files in one bucket: a winner in the a-range
-    // rewrites the a-file under v4 and carries the z-file by reference
+    // rewrites the whole bucket, both files, into one v4 file
     val t = IceTable.create(tmpDir("evoskip"), numBuckets = 1)
     def rows(keys: Seq[String]) = keys.map(k => ("r", k, "c" * 40, "scala",
         s"v$k", OracleFold.sha256Hex(s"v$k")))
@@ -110,18 +111,18 @@ class SchemaEvolutionSpec extends SparkSpec {
 
     val m = t.currentManifest().get
     assert(m.schemaId == 4)
-    assert(fz.map(_.path).toSet.subsetOf(m.files.map(_.path).toSet),
-      "the z-range v1 file must carry forward by reference")
-    assert(fa.forall(f => !m.files.map(_.path).contains(f.path)),
-      "the a-range v1 file must be rewritten")
-    assert(m.files.map(_.schemaId).toSet == Set(1, 4),
-      "snapshot must mix carried v1 files with the rewritten v4 slice")
+    assert(m.files.size == 1,
+      s"the touched bucket must end as one file: ${m.files.map(_.path)}")
+    assert((fa ++ fz).forall(f => !m.files.map(_.path).contains(f.path)),
+      "neither v1 file may be listed, key-range-disjoint or not")
+    assert(m.files.map(_.schemaId).toSet == Set(4),
+      "the rewritten bucket must be written under v4")
     val view = t.read(spark)
     assert(view.count() == 80)
     assert(view.filter(col("path") === hit).head()
       .getAs[String]("content") == "NEW")
     assert(view.filter(col("language").isNull).count() == 0,
-      "carried v1 files must still project lang -> language")
+      "the v1 rows must project lang -> language into the v4 file")
   }
 
   test("snapshot can mix files of different schema generations") {
