@@ -229,7 +229,7 @@ object MirrorJob {
       val vTo = hdr.getLong(0)
       val feedSchemaId = hdr.getInt(1)
 
-      val up2 = upstream.readManifestHeader(vTo) // offsets are header fields
+      val up2 = upstream.readManifest(vTo)
       val upIv = MergeEngine.committedIntervals(Some(up2))
       val mParent = mirror.currentManifest()
       val mirIv = MergeEngine.committedIntervals(mParent)
@@ -352,13 +352,13 @@ object MirrorJob {
   /** The mirror's recorded sync point `point` is trusted iff it is a
     * version the upstream still retains and the upstream's committed
     * offsets at it equal the mirror's. Retention is probed by reading THAT
-    * version's header directly (missing ⇒ expired ⇒ untrusted): one
+    * version's manifest directly (missing ⇒ expired ⇒ untrusted): one
     * metadata read, not an O(versions) history listing. */
   private def syncPointTrusted(upstream: IceTable, point: Long,
       mirIv: Map[Int, Seq[(Long, Long)]]): Boolean =
     point >= 0 && {
       try normalized(MergeEngine.committedIntervals(
-        Some(upstream.readManifestHeader(point)))) == normalized(mirIv)
+        Some(upstream.readManifest(point)))) == normalized(mirIv)
       catch { case _: java.io.FileNotFoundException => false }
     }
 

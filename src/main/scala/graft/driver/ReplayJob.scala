@@ -155,8 +155,7 @@ object ReplayJob {
       viewName: Option[String] = None,
       catalog: Option[graft.table.GraftCatalog] = None): Seq[EpochReport] = {
     for (c <- catalog; n <- viewName)
-      c.register(n, table.dir, table.defaultNumBuckets,
-        table.inlineFileThreshold, table.segChunkBuckets)
+      c.register(n, table.dir, table.defaultNumBuckets)
     epochRanges.map { case (epochId, lo, hi) =>
       val prev = MergeEngine.committedHighs(table.currentManifest())
       val t0 = System.nanoTime()

@@ -55,7 +55,7 @@ object Revert {
     if (v == cur.version)
       return MergeEngine.EpochOutcome(cur, skipped = true,
         graft.model.EpochStats(0, 0, 0, 0, 0, 0))
-    val vSchema = table.readManifestHeader(v).schemaId
+    val vSchema = table.readManifest(v).schemaId
     val sch = SchemaRegistry.schemaFor(vSchema)
     def pc(colId: Int) = col(sch.byColId(colId).name)
     // backward diff = the compensating changes current → v, with v's

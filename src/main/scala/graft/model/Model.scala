@@ -77,16 +77,19 @@ final case class DataFileEntry(path: String, bucket: Int, rows: Long,
     minSeq: Option[Long] = None, maxSeq: Option[Long] = None)
 
 /**
- * Snapshot manifest: the unit of atomic commit. A snapshot is readable iff
- * its manifest exists and the table's pointer file references it; data files
- * not listed in the current manifest are invisible (Iceberg's rule), which is
- * what makes a crash between data-file write and manifest commit harmless.
+ * Snapshot manifest: the unit of atomic commit, stored whole (file list
+ * included) in one `snap-<version>.json`. A snapshot is readable iff that
+ * json is committed, and the current one is the highest committed version;
+ * data files not listed in the current manifest are invisible (Iceberg's
+ * rule), which is what makes a crash between data-file write and manifest
+ * commit harmless.
  */
 final case class EpochManifest(
     version: Long,               // snapshot version (monotone)
     epochId: Long,               // ingestion epoch that produced it
     schemaId: Int,               // content schema at commit time
-    files: Seq[DataFileEntry],   // complete file list of this snapshot
+    files: Seq[DataFileEntry],   // complete file list of this snapshot (an
+                                 // epoch leaves one file per touched bucket)
     offsets: Seq[OffsetRange],   // committed (low, high] per log partition
     stats: EpochStats,
     parentVersion: Long,         // -1 for the first snapshot
@@ -109,16 +112,6 @@ final case class EpochManifest(
     // width — the partition-spec-evolution analog
     // (IcebergMetadataWriter.java:507-524, updateSpec().addField).
     numBuckets: Int = -1,
-    // TWO-LEVEL METADATA (Iceberg's snapshot -> manifest-list -> manifest
-    // files): when the file list is large, the snapshot json stores it as
-    // references to immutable CONTENT-ADDRESSED segment files (one per
-    // bucket-range chunk) instead of inline `files`. A commit then writes
-    // only the segments whose chunk CHANGED — identical chunks hash to the
-    // same path and are skipped — so per-commit metadata IO is O(touched
-    // buckets), not O(all files): the property that keeps a million-file
-    // table's commit cost flat. IceTable.readManifest resolves segments
-    // back into `files`, so the rest of the engine never sees the split.
-    fileSegs: Seq[String] = Nil,
     // Monotone high-water mark of TOMBSTONE PURGES: compaction stamps the
     // safe horizon it purged at whenever it actually removed tombstone rows
     // (Long.MinValue = no purge ever / legacy manifest). The change feed
@@ -128,15 +121,7 @@ final case class EpochManifest(
     // removed-file key diff that synthesizes those deletes; windows with no
     // purge (the overwhelming norm) prove the absence of such keys from
     // metadata alone.
-    purgedBelowSeq: Long = Long.MinValue,
-    // Header-level file-list summary, stamped by IceTable.commit at publish:
-    // lets history()/versionAsOf() answer metadata questions WITHOUT
-    // resolving segment files (on a long-history segmented table resolving
-    // every version is O(versions × files) driver IO for answers the
-    // snapshot json already carries). -1 on legacy manifests — readers
-    // derive from `files` instead.
-    fileCount: Int = -1,
-    dataBytes: Long = -1L)
+    purgedBelowSeq: Long = Long.MinValue)
 
 /** Lineage row persisted per (epoch, log-partition) — the "lineage rows in a
   * state table" of the north star; analog of Gobblin's per-WorkUnit committed

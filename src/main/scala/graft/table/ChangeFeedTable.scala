@@ -343,56 +343,26 @@ private final class ChangeFeedStream(t: IceTable, schemaId: Int,
     val capV = maxVersionsPerTrigger
       .map(mv => math.min(cur, s + math.max(1L, mv))).getOrElse(cur)
     if (maxF.isEmpty && maxB.isEmpty) return VersionOffset(capV)
-    // Per-admitted-version NET-NEW files/bytes in O(changed metadata) per
-    // step (r7; the r6 walk rebuilt the full path-set per admitted version
-    // — O(table files) driver work each step). SEGMENTED manifests — the
-    // at-scale form — diff at the content-addressed CHUNK level: an
-    // identical chunk path implies an identical file list (chunks are keyed
-    // by bucket range and addressed by content hash), so only CHANGED
-    // chunks resolve, on either side. INLINE manifests (file count under
-    // the inline threshold) carry their full — bounded-small — list in the
-    // header; mixed steps (a commit crossing the inline threshold, or a
-    // rebucket regrouping every chunk) fall back to the full diff for that
-    // one step. Net-new accounting is EXACT in every case: under one
-    // bucket layout a file's chunk index is a pure function of its bucket,
-    // so a carried file always sits in the same (shared or counterpart)
-    // chunk on both sides.
-    def filesOf(h: graft.model.EpochManifest): Seq[graft.model.DataFileEntry] =
-      if (h.fileSegs.isEmpty) h.files else h.fileSegs.flatMap(t.readSegFiles)
-    var prevH: graft.model.EpochManifest =
-      if (s < 0) null else t.readManifestHeader(s)
-    var prevPaths: Set[String] = null // lazy, fallback steps only
+    // Per-admitted-version NET-NEW files/bytes: each step diffs the
+    // version's file list against its predecessor's path set, one manifest
+    // read per step (an epoch leaves one file per touched bucket, so a list
+    // is about numBuckets long).
+    var prevPaths: Set[String] =
+      if (s < 0) Set.empty else t.readManifest(s).files.map(_.path).toSet
     var end = s
     var files = 0L
     var bytes = 0L
     var v = s
     while (v < capV) {
       v += 1
-      val h = t.readManifestHeader(v)
-      val stepNew: Seq[graft.model.DataFileEntry] =
-        if (prevH == null) filesOf(h)
-        else if (h.fileSegs.nonEmpty && prevH.fileSegs.nonEmpty) {
-          val shared = prevH.fileSegs.toSet
-          val changed = h.fileSegs.filterNot(shared)
-          if (changed.isEmpty) Nil
-          else {
-            val hSet = h.fileSegs.toSet
-            val prevChangedPaths = prevH.fileSegs.filterNot(hSet)
-              .flatMap(t.readSegFiles).map(_.path).toSet
-            changed.flatMap(t.readSegFiles)
-              .filterNot(f => prevChangedPaths(f.path))
-          }
-        } else {
-          if (prevPaths == null) prevPaths = filesOf(prevH).map(_.path).toSet
-          filesOf(h).filterNot(f => prevPaths(f.path))
-        }
+      val m = t.readManifest(v)
+      val stepNew = m.files.filterNot(f => prevPaths(f.path))
       files += stepNew.size
       bytes += stepNew.map(f => math.max(0L, f.bytes)).sum
       if (end > s && (maxF.exists(files > _) || maxB.exists(bytes > _)))
         return VersionOffset(end)
       end = v
-      prevH = h
-      prevPaths = null // re-derived from prevH if the next step needs it
+      prevPaths = m.files.map(_.path).toSet
     }
     VersionOffset(end)
   }

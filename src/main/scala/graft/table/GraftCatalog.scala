@@ -68,11 +68,9 @@ final class GraftCatalog(val dir: String) {
     * retries; idempotent — re-registering an identical entry is a no-op
     * even without winning a version. */
   def register(name: String, tableDir: String, defaultNumBuckets: Int = 32,
-               inlineFileThreshold: Int = 1024, segChunkBuckets: Int = 128,
                maxRetries: Int = 10): Entry = {
     require(name.nonEmpty && !name.contains('/'), s"bad table name: $name")
-    val e = Entry(name, tableDir, defaultNumBuckets, inlineFileThreshold,
-      segChunkBuckets)
+    val e = Entry(name, tableDir, defaultNumBuckets)
     val f = fs
     f.mkdirs(root)
     var left = maxRetries
@@ -120,8 +118,7 @@ final class GraftCatalog(val dir: String) {
     val e = entry(name).getOrElse(throw new IllegalArgumentException(
       s"no catalog entry for table '$name' in $dir " +
         s"(known: ${tables().keys.toSeq.sorted.mkString(", ")})"))
-    new IceTable(e.dir, e.defaultNumBuckets, e.inlineFileThreshold,
-      e.segChunkBuckets)
+    new IceTable(e.dir, e.defaultNumBuckets)
   }
 
   /** load + register the current snapshot's user view as a temp view in
@@ -134,9 +131,10 @@ final class GraftCatalog(val dir: String) {
 }
 
 object GraftCatalog {
-  /** one catalog row: where the table lives + handle construction params */
-  final case class Entry(name: String, dir: String, defaultNumBuckets: Int,
-      inlineFileThreshold: Int = 1024, segChunkBuckets: Int = 128)
+  /** one catalog row: where the table lives + handle construction params
+    * (older catalogs may also carry fields no handle takes any more; json
+    * extraction ignores them) */
+  final case class Entry(name: String, dir: String, defaultNumBuckets: Int)
 
   def create(dir: String): GraftCatalog = new GraftCatalog(dir)
 }

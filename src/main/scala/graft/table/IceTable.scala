@@ -48,9 +48,8 @@ import org.apache.spark.sql.functions._
  * {{{
  *   <dir>/data/bucket=<b>/e<epochId>-part-*.parquet
  *   <dir>/staging/e<epochId>-<nonce>/bucket=<b>/part-*.parquet  (transient)
- *   <dir>/meta/snap-<version>.json
- *   <dir>/meta/fseg-<contenthash>.json   (file-list segments; only for
- *                                         manifests past inlineFileThreshold)
+ *   <dir>/meta/snap-<version>.json        (the whole manifest, file list
+ *                                         included)
  * }}}
  *
  * The single-level `data/bucket=<b>/` partition layout keeps Spark's
@@ -58,15 +57,7 @@ import org.apache.spark.sql.functions._
  * (files from different epochs share one directory structure), and gives
  * partition pruning on `bucket` for free.
  */
-final class IceTable(val dir: String, val defaultNumBuckets: Int,
-                     // file lists LARGER than this split out of the snapshot
-                     // json into content-addressed segment files (two-level
-                     // metadata; see EpochManifest.fileSegs)
-                     val inlineFileThreshold: Int = 1024,
-                     // buckets per file-list segment chunk: bounds a chunk's
-                     // rewrite scope — a commit rewrites only segments whose
-                     // bucket range it touched
-                     val segChunkBuckets: Int = 128) {
+final class IceTable(val dir: String, val defaultNumBuckets: Int) {
   private val root = new HPath(dir)
 
   /** Bucket count of the CURRENT snapshot's data layout: recorded per
@@ -76,8 +67,8 @@ final class IceTable(val dir: String, val defaultNumBuckets: Int,
     * Epoch-scoped callers (MergeEngine) resolve this ONCE from the parent
     * manifest they already hold instead of re-listing here.
     *
-    * CACHED per handle: the first resolution (one header read, zero segment
-    * IO) is remembered and refreshed by every commit() / currentManifest()
+    * CACHED per handle: the first resolution (one manifest read) is
+    * remembered and refreshed by every commit() / currentManifest()
     * through this handle — without the cache the bucketCol/bucketOf DEFAULTS
     * turned a cheap expression builder into a metadata listing + manifest
     * read per call (repeated remote LISTs on object stores). A REBUCKET by a
@@ -94,7 +85,7 @@ final class IceTable(val dir: String, val defaultNumBuckets: Int,
       // and a cached default would mis-route bucketOf/bucketCol forever
       if (v < 0) defaultNumBuckets
       else {
-        val n = bucketCountOf(Some(readManifestHeader(v)))
+        val n = bucketCountOf(Some(readManifest(v)))
         cachedBucketCount = n
         n
       }
@@ -164,74 +155,10 @@ final class IceTable(val dir: String, val defaultNumBuckets: Int,
 
   private def readUtf8(p: HPath): String = FsIO.readUtf8(fs, p)
 
-  /** Parse a snapshot's json WITHOUT resolving file-list segments: header
-    * fields only (commit time, offsets, stats, schema/bucket ids, segment
-    * refs, file count/bytes). For an inline manifest this IS the full
-    * manifest; for a segmented one `files` is empty — use [[readManifest]]
-    * when the file list itself is needed. Metadata questions (history, time
-    * travel resolution, retention policy evaluation) go through THIS path:
-    * resolving every version's segments would be O(versions × files) driver
-    * IO for answers the snapshot json already carries. */
-  def readManifestHeader(version: Long): EpochManifest =
-    ManifestJson.parse(readUtf8(snapPath(version)))
-
-  /** Read a snapshot manifest, RESOLVING two-level metadata: a segmented
-    * manifest's file list is re-assembled from its content-addressed
-    * segment files (chunked by bucket range, each internally sorted, so
-    * the resolved list is globally (bucket, path)-sorted). The in-memory
-    * manifest keeps `fileSegs` populated — retention refcounts them. */
+  /** Read a snapshot manifest: the snapshot json holds the whole of it,
+    * file list included. */
   def readManifest(version: Long): EpochManifest =
-    resolveFiles(readManifestHeader(version))
-
-  private def resolveFiles(m: EpochManifest): EpochManifest =
-    if (m.fileSegs.isEmpty) m
-    else m.copy(files =
-      m.fileSegs.flatMap(p => ManifestJson.parseFiles(readUtf8(new HPath(p)))))
-
-  /** Resolve ONE content-addressed file-list segment. Used by the change
-    * feed's admission walk to diff successive manifests at the CHUNK level
-    * (identical chunk path ⇒ identical file list ⇒ no net-new files) —
-    * O(changed chunks), never O(table files). */
-  private[graft] def readSegFiles(path: String): Seq[DataFileEntry] =
-    ManifestJson.parseFiles(readUtf8(new HPath(path)))
-
-  /** Publish one content-addressed file-list segment (write-if-absent:
-    * identical content hashes to the identical path, so a chunk no commit
-    * changed costs ZERO metadata writes — the O(touched) commit property).
-    * Entries must arrive sorted (canonical bytes). */
-  private def writeFileSeg(f: FileSystem, entries: Seq[DataFileEntry]): String = {
-    val body = ManifestJson.writeFiles(entries).getBytes("UTF-8")
-    // FULL sha256 in the name: write-if-absent content addressing means a
-    // name collision between different chunks would silently serve another
-    // chunk's file list — at millions of retained segments a truncated hash
-    // has real birthday risk; 64 hex chars of path cost nothing next to that
-    val sha = java.security.MessageDigest.getInstance("SHA-256")
-      .digest(body).map(b => f"$b%02x").mkString
-    val dest = new HPath(metaDir, s"fseg-$sha.json")
-    if (!f.exists(dest)) {
-      val tmp = new HPath(metaDir, s".fseg-$sha-${System.nanoTime()}.tmp")
-      val out = f.create(tmp, false)
-      try out.write(body) finally out.close()
-      // a concurrent writer landing the same content first is a win, not a
-      // conflict — same bytes, same path
-      if (!renameNoReplace(f, tmp, dest)) {
-        f.delete(tmp, false)
-        if (!f.exists(dest))
-          throw new IllegalStateException(s"segment publish failed: $dest")
-      }
-    } else {
-      // ADOPTING an existing segment (a crashed commit's strand, or a chunk
-      // an older snapshot once referenced): refresh its mtime so the orphan
-      // sweep's grace window restarts — without the touch, an adopted
-      // segment can look hours-old and unreferenced to a sweep whose
-      // listing predates this commit's CAS, and get deleted out from under
-      // the NEW snapshot. Best-effort (not every scheme supports setTimes);
-      // commit() re-verifies referenced segments after the CAS regardless.
-      try f.setTimes(dest, System.currentTimeMillis(), -1L)
-      catch { case _: Exception => () }
-    }
-    dest.toString
-  }
+    ManifestJson.parse(readUtf8(snapPath(version)))
 
   /** Atomically commit `m` as the new current snapshot. The rename-without-
     * overwrite of the snapshot file is the CAS: a racing writer that planned
@@ -262,62 +189,22 @@ final class IceTable(val dir: String, val defaultNumBuckets: Int,
     require(m.version == cur + 1, s"version must be ${cur + 1}, got ${m.version}")
     // stamp the wall-clock commit time at publish — unconditionally, so a
     // manifest built by copy() from its parent cannot inherit the parent's
-    // time (time-based retention reads this, never fs mtimes) — plus the
-    // header-level file-list summary (count/bytes) so history() and
-    // retention never need to resolve segments for metadata questions
-    val stamped = m.copy(commitTimeMillis = System.currentTimeMillis(),
-      fileCount = m.files.size,
-      dataBytes = m.files.map(f => math.max(0L, f.bytes)).sum)
-    // TWO-LEVEL METADATA: a large file list is stored as content-addressed
-    // bucket-range segments; only segments whose chunk CHANGED since the
-    // parent get written (identical content ⇒ identical path ⇒ skipped),
-    // so commit metadata IO is O(touched buckets) at any table size.
-    // Incoming fileSegs are always ignored and re-derived from `files` —
-    // a parent.copy(...) can never smuggle stale references in.
-    val segChunks: Seq[(String, Seq[DataFileEntry])] =
-      if (stamped.files.size <= inlineFileThreshold) Nil
-      else stamped.files
-        .sortBy(e => (e.bucket, e.path))
-        .groupBy(_.bucket / segChunkBuckets).toSeq.sortBy(_._1)
-        .map { case (_, chunk) =>
-          val sorted = chunk.sortBy(e => (e.bucket, e.path))
-          writeFileSeg(f, sorted) -> sorted
-        }
-    val stored =
-      if (segChunks.isEmpty) stamped.copy(fileSegs = Nil)
-      else stamped.copy(files = Nil, fileSegs = segChunks.map(_._1))
+    // time (time-based retention reads this, never fs mtimes)
+    val stamped = m.copy(commitTimeMillis = System.currentTimeMillis())
     // test seam: lets specs deterministically interleave a concurrent
-    // winner INSIDE the race window (segments published, snapshot not yet
-    // CAS'd) — the window that strands fseg files for the orphan sweep
+    // winner between the parent check and the snapshot CAS
     onBeforeSnapshotCas()
     val tmp = new HPath(metaDir,
       f".snap-${m.version}%08d-${System.nanoTime()}%d.json.tmp")
     val out = f.create(tmp, false)
-    try out.write(ManifestJson.write(stored).getBytes("UTF-8")) finally out.close()
+    try out.write(ManifestJson.write(stamped).getBytes("UTF-8")) finally out.close()
     if (!renameNoReplace(f, tmp, snapPath(m.version))) {
       f.delete(tmp, false)
       throw new IllegalArgumentException(
         s"concurrent writer detected: snapshot ${m.version} already committed")
     }
-    cachedBucketCount = bucketCountOf(Some(stored))
-    // POST-CAS segment re-verify: a concurrent orphan sweep whose listing
-    // predates this CAS could have deleted an ADOPTED (pre-existing,
-    // stale-mtime) segment between our reuse check and the snapshot rename.
-    // The snapshot is listed now, so re-publishing the missing chunk
-    // (content-addressed: same bytes, same path) permanently heals the
-    // race; any sweep listing from here on sees the reference.
-    segChunks.foreach { case (p, chunk) =>
-      if (!f.exists(new HPath(p))) {
-        System.err.println(s"[graft] referenced segment vanished during " +
-          s"commit (concurrent orphan sweep?): $p — re-publishing")
-        writeFileSeg(f, chunk)
-      }
-    }
-    // return the RESOLVED shape (files populated + segment refs), matching
-    // what readManifest of this version yields
-    stored.copy(files =
-      if (stored.fileSegs.isEmpty) stamped.files
-      else stamped.files.sortBy(e => (e.bucket, e.path)))
+    cachedBucketCount = bucketCountOf(Some(stamped))
+    stamped
   }
 
   /** publish `src` at `dst` failing (false) when the destination exists —
@@ -363,37 +250,26 @@ final class IceTable(val dir: String, val defaultNumBuckets: Int,
 
   def history(): Seq[SnapshotInfo] =
     listVersions().map { v =>
-      // header-only: a metadata question must not resolve segment files
-      // (O(versions × files) driver IO on a long-history segmented table).
-      // LEGACY exception: a pre-stamping SEGMENTED manifest (fileCount=-1,
-      // fileSegs set) carries no summary and an empty inline `files` — for
-      // those versions only, resolve the segments rather than reporting
-      // zeros (old snapshots heal to stamped headers as retention expires
-      // them; every new commit stamps the summary).
-      val h = readManifestHeader(v)
-      val m = if (h.fileCount < 0 && h.fileSegs.nonEmpty) resolveFiles(h)
-              else h
+      val m = readManifest(v)
       SnapshotInfo(m.version, m.epochId, m.commitTimeMillis, m.schemaId,
-        bucketCountOf(Some(m)),
-        if (m.fileCount >= 0) m.fileCount else m.files.size,
-        if (m.dataBytes >= 0) m.dataBytes
-        else m.files.map(f => math.max(0L, f.bytes)).sum,
+        bucketCountOf(Some(m)), m.files.size,
+        m.files.map(f => math.max(0L, f.bytes)).sum,
         m.stats.rowsApplied, m.completeUntilSeq)
     }
 
   /** Largest retained version committed at or before `timestampMillis`
-    * (commit times are manifest-stamped and monotone). Header-only reads —
-    * no segment resolution. A LEGACY unstamped snapshot has no recorded
-    * time, and treating it as infinitely old could serve wrong-era data (it
-    * may actually postdate the request); instead it is bounded by the
-    * EARLIEST STAMPED SUCCESSOR's time (it was certainly committed before
-    * that successor) and is eligible only when that bound ≤ the request —
-    * with no stamped successor its commit time is unknowable and it is
-    * never eligible for timestamp travel (version travel via [[readAt]]
-    * still works). None when no retained snapshot qualifies. */
+    * (commit times are manifest-stamped and monotone). A LEGACY unstamped
+    * snapshot has no recorded time, and treating it as infinitely old could
+    * serve wrong-era data (it may actually postdate the request); instead
+    * it is bounded by the EARLIEST STAMPED SUCCESSOR's time (it was
+    * certainly committed before that successor) and is eligible only when
+    * that bound ≤ the request — with no stamped successor its commit time
+    * is unknowable and it is never eligible for timestamp travel (version
+    * travel via [[readAt]] still works). None when no retained snapshot
+    * qualifies. */
   def versionAsOf(timestampMillis: Long): Option[Long] = {
     val stamps = listVersions().map(v =>
-      v -> readManifestHeader(v).commitTimeMillis)
+      v -> readManifest(v).commitTimeMillis)
     val effective = stamps.zipWithIndex.map { case ((v, t), i) =>
       v -> (if (t >= 0) t
             else stamps.drop(i + 1)
@@ -609,11 +485,10 @@ final class IceTable(val dir: String, val defaultNumBuckets: Int,
     * Returns (#manifests, #dataFiles) removed. */
   def expireSnapshots(keepLast: Int = 1,
                       olderThanMillis: Long = Long.MaxValue,
-                      // orphan fseg files younger than this survive the
-                      // sweep: they may belong to an IN-FLIGHT commit that
-                      // published its segments but has not CAS'd its
-                      // snapshot yet (segments publish BEFORE the snapshot
-                      // rename by design)
+                      // grace window of the orphan sweep below (named for
+                      // its existing callers; `orphanDataGraceMillis`
+                      // overrides it): unreferenced files younger than this
+                      // survive, as they may belong to an IN-FLIGHT commit
                       orphanSegGraceMillis: Long = 3600000L,
                       // ORPHAN DATA-FILE SWEEP: data files referenced by NO
                       // listed snapshot — published by an epoch that lost
@@ -623,120 +498,31 @@ final class IceTable(val dir: String, val defaultNumBuckets: Int,
                       // that is slow unbounded growth. The sweep lists the
                       // data layout (O(files) metadata — a maintenance op,
                       // not a hot path), subtracts every listed snapshot's
-                      // resolved file list, applies the same mtime grace
-                      // window as the fseg sweep (epochs publish files
-                      // BEFORE the commit CAS by design — a slow in-flight
-                      // commit's files must survive), re-lists snapshot
-                      // versions immediately before deleting (a commit
-                      // landing mid-sweep is excluded), and also clears
-                      // staging leftovers older than the grace. Swept
-                      // files count into the second return component.
+                      // file list, applies the mtime grace window (epochs
+                      // publish files BEFORE the commit CAS by design — a
+                      // slow in-flight commit's files must survive),
+                      // re-lists snapshot versions immediately before
+                      // deleting (a commit landing mid-sweep is excluded),
+                      // and also clears staging leftovers older than the
+                      // grace. Swept files count into the second return
+                      // component.
                       sweepOrphanData: Boolean = true,
                       orphanDataGraceMillis: Long = -1L): (Int, Int) = {
     require(keepLast >= 1)
     val f = fs
-    if (!f.exists(metaDir)) return (0, 0)
-    // ONE metadata listing feeds versions AND the orphan sweep (mtimes)
-    val metaLs = f.listStatus(metaDir)
-    val versions = metaLs.iterator.map(_.getPath.getName).collect {
-      case SnapName(v) => v.toLong
-    }.toSeq.sorted
+    val versions = listVersions()
     if (versions.isEmpty) return (0, 0)
     val cutoff = versions.max - keepLast + 1
-    // headers only for policy evaluation and SEGMENT refcounting (fileSegs
-    // is a header field) — file lists are resolved further down, and only
-    // when something actually expires
-    val headers: Map[Long, EpochManifest] =
-      versions.map(v => v -> readManifestHeader(v)).toMap
+    // EVERY listed snapshot is read before anything is deleted: one that
+    // cannot be read (or a legacy segmented one, which readManifest refuses)
+    // aborts the whole pass here, so a retained snapshot's files are never
+    // taken for orphans or for expired-only files
+    val manifests: Map[Long, EpochManifest] =
+      versions.map(v => v -> readManifest(v)).toMap
     val expired = versions.filter(v =>
-      v < cutoff && headers(v).commitTimeMillis < olderThanMillis)
+      v < cutoff && manifests(v).commitTimeMillis < olderThanMillis)
     val expiredSet = expired.toSet
     val retained = versions.filterNot(expiredSet)
-    val retainedSegNames: Set[String] = retained
-      .flatMap(v => headers(v).fileSegs).map(p => new HPath(p).getName).toSet
-    // ORPHAN SWEEP (always, even when nothing expires): fseg files
-    // referenced by NO listed snapshot were stranded by a CAS-losing commit
-    // or a crash between segment publish and snapshot rename — without the
-    // sweep they accumulate forever. The grace window keeps the sweep from
-    // racing an in-flight commit's just-published segments. Segments
-    // referenced by headers read in THIS pass are excluded by construction;
-    // a commit landing after the listing is invisible to the (snapshotted)
-    // listing and thus untouched.
-    val referencedSegNames: Set[String] = versions
-      .flatMap(v => headers(v).fileSegs).map(p => new HPath(p).getName).toSet
-    val now = System.currentTimeMillis()
-    val orphanCandidates = metaLs.iterator
-      .filter(s => s.isFile && s.getPath.getName.startsWith("fseg-"))
-      .filter(s => !referencedSegNames.contains(s.getPath.getName))
-      .filter(s => now - s.getModificationTime >= orphanSegGraceMillis)
-      .toSeq
-    if (orphanCandidates.nonEmpty) {
-      // The adoption-race defence below leans on commit()'s ADOPTION TOUCH
-      // (writeFileSeg setTimes refresh restarting the grace window). On a
-      // store where setTimes is a silent no-op the touch never lands, and
-      // the ordering  sweep-relist < commit-CAS < commit-re-verify <
-      // sweep-delete  would delete a segment a LISTED snapshot references
-      // with nothing left to re-publish it. PROBE the store once per sweep:
-      // write a scratch file, set its mtime into the past, read it back —
-      // if the store ignored the call, skip orphan deletion entirely (the
-      // strands survive until the table moves to a touch-capable store or
-      // the operator cleans by hand; correctness beats reclamation).
-      val touchSupported: Boolean = {
-        val probe = new HPath(metaDir, s".touchprobe-${System.nanoTime()}")
-        try {
-          val out = f.create(probe, false)
-          try out.write(Array[Byte](0)) finally out.close()
-          val target = System.currentTimeMillis() - 2 * orphanSegGraceMillis
-          try f.setTimes(probe, target, -1L)
-          catch { case _: Exception => () }
-          // tolerance floor: a tiny/zero grace (specs) must not fail a
-          // store whose setTimes works but rounds to whole seconds
-          math.abs(f.getFileStatus(probe).getModificationTime - target) <
-            math.max(60000L, orphanSegGraceMillis / 2)
-        } catch { case _: Exception => false }
-        finally { try f.delete(probe, false) catch { case _: Exception => () } }
-      }
-      if (!touchSupported) {
-        System.err.println(s"[graft] orphan fseg sweep SKIPPED for $dir: " +
-          "store does not honor setTimes, so the adoption-touch protocol " +
-          s"cannot protect racing commits (${orphanCandidates.size} " +
-          "candidate strands left in place)")
-      } else {
-      // PRE-DELETE double-check against the adoption race: a commit that
-      // ADOPTS a stale strand (write-if-absent reuse) may have CAS'd after
-      // our header pass. Re-list for NEW snapshot versions and exclude
-      // their referenced segments; also re-read each candidate's mtime —
-      // the adopting commit touches it before its CAS, so a fresh mtime
-      // means "claimed, not orphaned". (commit() additionally re-verifies
-      // its segments post-CAS and re-publishes, so even a loss here heals.)
-      val known = versions.toSet
-      def freshSnapshotRefs(): Set[String] = listVersions().filterNot(known)
-        .flatMap(v =>
-          try readManifestHeader(v).fileSegs
-          catch { case _: java.io.FileNotFoundException => Nil })
-        .map(p => new HPath(p).getName).toSet
-      val newRefs: Set[String] = freshSnapshotRefs()
-      val now2 = System.currentTimeMillis()
-      val survivors = orphanCandidates
-        .filter(s => !newRefs.contains(s.getPath.getName))
-        .filter { s =>
-          try now2 - f.getFileStatus(s.getPath).getModificationTime >=
-            orphanSegGraceMillis
-          catch { case _: java.io.FileNotFoundException => false }
-        }
-      if (survivors.nonEmpty) {
-        // one FINAL re-list after the mtime pass, immediately before the
-        // deletes: an adopting commit that CAS'd between the first re-list
-        // and here is now visible as a new snapshot version and excluded
-        // (its touch also reset the mtime, but belt-and-braces costs one
-        // listing on a path that only runs when strands exist)
-        val lastRefs = freshSnapshotRefs()
-        survivors
-          .filterNot(s => lastRefs.contains(s.getPath.getName))
-          .foreach(s => f.delete(s.getPath, false))
-      }
-      }
-    }
     // ---- orphan DATA-FILE sweep (see the parameter doc above) ----------
     val dataGrace =
       if (orphanDataGraceMillis >= 0) orphanDataGraceMillis
@@ -745,35 +531,13 @@ final class IceTable(val dir: String, val defaultNumBuckets: Int,
       // referenced = every file of every version listed in THIS pass
       // (retained AND expired — expired jsons are still on disk here, so
       // their files are not orphans; the normal retention path below
-      // removes them in the right order). Resolution is STRICT for
-      // RETAINED versions: a retained snapshot whose segments are
-      // transiently unreadable (e.g. the adoption-race window between a
-      // concurrent sweep's delete and commit()'s post-CAS re-publish)
-      // would otherwise contribute NOTHING to `referenced`, and its old
-      // carried data files — past the mtime grace by definition — would be
-      // deleted as "orphans": transient metadata failure must never become
-      // live-table data loss, so the whole orphan-data sweep is skipped
-      // for this run instead. EXPIRED corpses stay tolerant (a segment-less
-      // legacy corpse contributes no protectable files). Paths are
-      // QUALIFIED before comparison: manifests record publish-time
-      // (possibly scheme-less) paths while listStatus returns fully
-      // qualified ones — a raw string compare would see every committed
-      // file as an orphan.
+      // removes them in the right order). Paths are QUALIFIED before
+      // comparison: manifests record publish-time (possibly scheme-less)
+      // paths while listStatus returns fully qualified ones — a raw string
+      // compare would see every committed file as an orphan.
       def qual(p: String): String = f.makeQualified(new HPath(p)).toString
-      val resolvedPerVersion: Seq[Option[Seq[String]]] = versions.map { v =>
-        try Some(resolveFiles(headers(v)).files.map(e => qual(e.path)))
-        catch { case _: java.io.FileNotFoundException =>
-          if (expiredSet(v)) Some(Nil) else None
-        }
-      }
-      if (resolvedPerVersion.contains(None)) {
-        System.err.println(s"[graft] orphan data-file sweep SKIPPED for " +
-          s"$dir: a RETAINED snapshot's segments did not resolve " +
-          "(transient metadata race or corruption) — refusing to treat " +
-          "its files as unreferenced")
-        0
-      } else {
-      val referenced: Set[String] = resolvedPerVersion.flatMap(_.get).toSet
+      val referenced: Set[String] =
+        versions.flatMap(v => manifests(v).files.map(e => qual(e.path))).toSet
       val nowD = System.currentTimeMillis()
       val candidates: Seq[HPath] =
         if (!f.exists(dataDir)) Nil
@@ -787,14 +551,13 @@ final class IceTable(val dir: String, val defaultNumBuckets: Int,
       val swept =
         if (candidates.isEmpty) 0
         else {
-          // final re-list: a commit that CAS'd after the header pass may
+          // final re-list: a commit that CAS'd after the manifest pass may
           // reference files we are about to delete (a rebase reuses the
           // epoch's already-published files) — exclude them
           val known = versions.toSet
           val lateRefs: Set[String] = listVersions().filterNot(known)
             .flatMap { v =>
-              try resolveFiles(readManifestHeader(v)).files
-                .map(e => qual(e.path))
+              try readManifest(v).files.map(e => qual(e.path))
               catch { case _: java.io.FileNotFoundException => Nil }
             }.toSet
           candidates.filterNot(p => lateRefs.contains(qual(p.toString)))
@@ -806,35 +569,17 @@ final class IceTable(val dir: String, val defaultNumBuckets: Int,
           .filter(s => nowD - s.getModificationTime >= dataGrace)
           .foreach(s => f.delete(s.getPath, true))
       swept
-      }
     }
     if (expired.isEmpty) return (0, sweptData)
-    // resolve file lists: STRICT for retained versions (a retained snapshot
-    // with missing segments is real corruption), TOLERANT for expired ones
-    // (a pre-r5 crash between segment delete and json delete left snapshots
-    // whose segments are gone; such a version contributes no deletable data
-    // files but its json must still go, or retention wedges forever)
-    val retainedFiles: Set[String] = retained
-      .flatMap(v => resolveFiles(headers(v)).files.map(_.path)).toSet
-    val expiredFiles: Set[String] = expired.flatMap { v =>
-      try resolveFiles(headers(v)).files.map(_.path)
-      catch { case _: java.io.FileNotFoundException => Nil }
-    }.toSet
+    val retainedFiles: Set[String] =
+      retained.flatMap(v => manifests(v).files.map(_.path)).toSet
+    val expiredFiles: Set[String] =
+      expired.flatMap(v => manifests(v).files.map(_.path)).toSet
     val removable = expiredFiles -- retainedFiles
     // ORDERING (crash safety): expired snapshot JSONS go FIRST — a crash
-    // later in this method only leaks unreferenced segments/data files (the
-    // orphan sweep collects segments next run; unlisted data files are
-    // invisible to readers), whereas deleting segments first could leave
-    // LISTED snapshots whose segments are gone, wedging every later
-    // full-manifest pass.
+    // later in this method only leaks unreferenced data files (invisible to
+    // readers; the orphan sweep collects them next run)
     expired.foreach(v => f.delete(snapPath(v), false))
-    // segments are refcounted like data files: content-addressed segments
-    // are commonly SHARED across snapshots (that is the point), so only
-    // segments referenced by NO retained snapshot go. No grace here — an
-    // expired-referenced segment was committed, never in-flight.
-    expired.flatMap(v => headers(v).fileSegs).toSet
-      .filterNot(p => retainedSegNames.contains(new HPath(p).getName))
-      .foreach(p => f.delete(new HPath(p), false))
     removable.foreach(p => f.delete(new HPath(p), false))
     graft.metrics.Metrics.emit("graft.maintenance", "SnapshotsExpired", Map(
       "table" -> dir,
@@ -1107,8 +852,6 @@ object IceTable {
     (if (k < bucketPartitions) df.coalesce(k) else df, k)
   }
 
-  def create(dir: String, numBuckets: Int = 32,
-             inlineFileThreshold: Int = 1024,
-             segChunkBuckets: Int = 128): IceTable =
-    new IceTable(dir, numBuckets, inlineFileThreshold, segChunkBuckets).init()
+  def create(dir: String, numBuckets: Int = 32): IceTable =
+    new IceTable(dir, numBuckets).init()
 }

@@ -2,7 +2,7 @@ package graft.table
 
 import graft.model._
 import org.json4s._
-import org.json4s.jackson.Serialization
+import org.json4s.jackson.{JsonMethods, Serialization}
 
 /** Manifest (de)serialization via json4s (ships with Spark). */
 object ManifestJson {
@@ -10,13 +10,18 @@ object ManifestJson {
 
   def write(m: EpochManifest): String = Serialization.writePretty(m)
 
-  def parse(s: String): EpochManifest = Serialization.read[EpochManifest](s)
-
-  /** file-list SEGMENT bodies (two-level metadata). Canonical: callers pass
-    * entries pre-sorted, so identical chunks serialize byte-identically —
-    * the content-addressing contract. */
-  def writeFiles(fs: Seq[DataFileEntry]): String = Serialization.writePretty(fs)
-
-  def parseFiles(s: String): Seq[DataFileEntry] =
-    Serialization.read[Seq[DataFileEntry]](s)
+  /** Parse a snapshot json. A LEGACY segmented snapshot (file list held in
+    * `fileSegs` segment files, not inline) is refused: extraction would drop
+    * the unknown field and read it as a table with no files. */
+  def parse(s: String): EpochManifest = {
+    val j = JsonMethods.parse(s)
+    j \ "fileSegs" match {
+      case JArray(segs) if segs.nonEmpty =>
+        throw new IllegalStateException(
+          s"snapshot version ${(j \ "version").extractOpt[Long].getOrElse(-1L)}" +
+            s" is a legacy segmented manifest (${segs.size} fileSegs): its " +
+            "file list lives in segment files this engine no longer reads")
+      case _ => j.extract[EpochManifest]
+    }
+  }
 }

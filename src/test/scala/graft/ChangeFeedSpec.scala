@@ -268,21 +268,15 @@ class ChangeFeedSpec extends SparkSpec {
     }
   }
 
-  test("admission files-cap stays exact on SEGMENTED manifests " +
-      "(chunk-level net-new diff)") {
-    // the r7 admission walk diffs successive manifests at the
-    // content-addressed CHUNK level when both are segmented (O(changed
-    // chunks), not O(table files)); admission semantics must be identical
-    // to the inline path: bounded batches, no duplicates, no loss
+  test("admission files-cap delivers every backlog commit exactly once") {
+    // the admission walk diffs each version's file list against its
+    // predecessor's: bounded batches, no duplicates, no loss
     val catDir = tmpDir("cfeed9cat")
     val ckpt = tmpDir("cfeed9ckpt")
-    val t = IceTable.create(tmpDir("cfeed9tab"), numBuckets = 2,
-      inlineFileThreshold = 1)
+    val t = IceTable.create(tmpDir("cfeed9tab"), numBuckets = 2)
     def commitN(e: Long): Unit =
       apply(t, e, e, e + 1, ev("i", e + 1, s"r$e", s"p$e", s"C$e"))
     (0L until 5L).foreach(commitN)
-    assert(t.currentManifest().get.fileSegs.nonEmpty,
-      "fixture must produce segmented manifests")
     GraftCatalog.create(catDir).register("commits", t.dir)
     withCatalog("cf9", catDir) {
       val batches =
@@ -302,7 +296,7 @@ class ChangeFeedSpec extends SparkSpec {
       assert(got.size >= 2, s"a files-capped backlog must split: $got")
       assert(got.flatten.toSet ==
         (0L until 5L).map(e => (s"p$e", e + 1)).toSet,
-        s"segmented admission must deliver exactly every commit: $got")
+        s"admission must deliver exactly every commit: $got")
     }
   }
 

@@ -11,23 +11,15 @@ class GraftTestFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
   override def getUri: URI = URI.create("graftfs:///")
 }
 
-/** IO-counting FS (`countfs://`), backed by local disk: tallies opens of
-  * manifest SEGMENT files and listings of the table's `meta/` dir — proves
-  * the metadata-light paths (history/versionAsOf header reads, the
-  * numBuckets cache) really do zero segment IO / zero repeat listings. */
+/** IO-counting FS (`countfs://`), backed by local disk: tallies listings
+  * of the table's `meta/` dir — proves the numBuckets cache really does
+  * zero repeat listings. */
 object CountingGraftFileSystem {
-  val segOpens = new java.util.concurrent.atomic.AtomicLong
   val metaLists = new java.util.concurrent.atomic.AtomicLong
 }
 class CountingGraftFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
   override def getScheme: String = "countfs"
   override def getUri: URI = URI.create("countfs:///")
-  override def open(f: org.apache.hadoop.fs.Path, bufferSize: Int)
-      : org.apache.hadoop.fs.FSDataInputStream = {
-    if (f.getName.startsWith("fseg-"))
-      CountingGraftFileSystem.segOpens.incrementAndGet()
-    super.open(f, bufferSize)
-  }
   override def listStatus(f: org.apache.hadoop.fs.Path)
       : Array[org.apache.hadoop.fs.FileStatus] = {
     if (f.getName == "meta") CountingGraftFileSystem.metaLists.incrementAndGet()

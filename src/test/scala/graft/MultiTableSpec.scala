@@ -137,4 +137,33 @@ class MultiTableSpec extends SparkSpec {
     assert(cat.unregister("t0") && !cat.tables().contains("t0"))
     assert(!cat.unregister("t0"), "double unregister reports absence")
   }
+
+  test("catalog: entries carrying retired handle params still load") {
+    import graft.model.ChangeEvent
+    import graft.table.GraftCatalog
+    val catDir = tmpDir("catOld")
+    val dir = tmpDir("catOldT")
+    val t = IceTable.create(dir, numBuckets = 4)
+    val events = (0 until 20).map(i => ChangeEvent("i", i.toLong,
+      s"org${i % 3}", s"p$i", f"c$i%040d", "scala", s"v$i")).toDS()
+    MergeEngine.applyEpoch(spark, t, events, 0, nLogPartitions = 4)
+    // a catalog written when entries also recorded the two-level manifest
+    // params (inlineFileThreshold, segChunkBuckets)
+    java.nio.file.Files.write(java.nio.file.Paths.get(catDir, "cat-00000000.json"),
+      s"""[ { "name" : "commits", "dir" : "$dir", "defaultNumBuckets" : 4,
+         |  "inlineFileThreshold" : 1024, "segChunkBuckets" : 128 } ]"""
+        .stripMargin.getBytes("UTF-8"))
+    val cat = GraftCatalog.create(catDir)
+    assert(cat.entry("commits").contains(GraftCatalog.Entry("commits", dir, 4)))
+    val t1 = cat.load("commits")
+    assert(t1.dir == dir && t1.numBuckets == 4)
+    assert(t1.read(spark).count() == 20L)
+    val s2 = spark.newSession()
+    val t2 = cat.loadView(s2, "commits")
+    assert(t2.dir == dir && t2.numBuckets == 4)
+    assert(s2.sql("SELECT count(*) FROM commits").head().getLong(0) == 20L)
+    // re-registering the same table is still a no-op
+    cat.register("commits", dir, defaultNumBuckets = 4)
+    assert(cat.currentVersion() == 0L)
+  }
 }

@@ -446,42 +446,103 @@ class TableInvariantsSpec extends SparkSpec {
       orphanDataGraceMillis = 0L) == ((0, 0)))
   }
 
-  test("orphan data-file sweep aborts when a RETAINED snapshot's segments " +
-      "do not resolve (transient metadata failure must not become loss)") {
-    // segmented manifests: a tiny inline threshold forces fseg files
-    val t = IceTable.create(tmpDir("orphstrict"), numBuckets = 2,
-      inlineFileThreshold = 1)
+  test("a legacy segmented snapshot fails loudly; expiry deletes nothing") {
+    val dir = tmpDir("legacyseg")
+    val t = IceTable.create(dir, numBuckets = 2)
     ReplayJob.replayGenerated(spark, t,
       LogSpec(nEvents = 500, nRepos = 4, nPathsPerRepo = 8), nEpochs = 2,
       nLogPartitions = 2)
-    val stranded = t.writeEpochFiles(t.readRaw(spark), epochId = 999L)
-    assert(stranded.nonEmpty)
-    val conf = spark.sessionState.newHadoopConf()
-    def hp(p: String) = new org.apache.hadoop.fs.Path(p)
-    def exists(p: String): Boolean = hp(p).getFileSystem(conf).exists(hp(p))
-    // simulate the transient window: hide a RETAINED snapshot's segment
-    val m = t.currentManifest().get
-    assert(m.fileSegs.nonEmpty, "fixture must produce a segmented manifest")
-    val seg = hp(m.fileSegs.head)
-    val hidden = new org.apache.hadoop.fs.Path(seg.getParent,
-      seg.getName + ".hidden")
-    val fsys = seg.getFileSystem(conf)
-    assert(fsys.rename(seg, hidden))
-    try {
-      // sweep must SKIP (not treat the unresolvable snapshot's files as
-      // unreferenced): the stranded orphans survive, and so does every
-      // committed file
-      val (_, swept) = t.expireSnapshots(keepLast = 100,
-        orphanDataGraceMillis = 0L)
-      assert(swept == 0, "sweep must abort when a retained snapshot's " +
-        "segments do not resolve")
-      assert(stranded.forall(e => exists(e.path)))
-    } finally { assert(fsys.rename(hidden, seg)) }
-    // once the segment is back, the sweep reclaims the true orphans only
-    val (_, swept2) = t.expireSnapshots(keepLast = 100,
-      orphanDataGraceMillis = 0L)
-    assert(swept2 >= stranded.size)
-    assert(t.currentManifest().get.files.forall(e => exists(e.path)))
+    // a stranded data file the orphan sweep would reclaim at grace 0
+    assert(t.writeEpochFiles(t.readRaw(spark), epochId = 999L).nonEmpty)
+    import java.nio.file.{Files, Paths}
+    import graft.table.ManifestJson
+    def snap(v: Long) = Paths.get(f"$dir/meta/snap-$v%08d.json")
+    def json(v: Long) = new String(Files.readAllBytes(snap(v)), "UTF-8")
+    // an older inline snapshot still carries the retired header fields:
+    // an empty fileSegs list and the file-list summary — it reads as before
+    val m0 = t.readManifest(0L)
+    Files.write(snap(0L), ("""{ "fileSegs" : [ ], "fileCount" : 7, """ +
+      """"dataBytes" : 9, """ + json(0L).trim.stripPrefix("{"))
+      .getBytes("UTF-8"))
+    assert(t.readManifest(0L) == m0)
+    // the CURRENT snapshot in its segmented form: no inline files, the
+    // list held in a segment file — read as inline it would be an empty
+    // table
+    val v = t.currentVersion()
+    val seg = s"file:$dir/meta/fseg-${"0" * 64}.json"
+    Files.write(snap(v), (s"""{ "fileSegs" : [ "$seg" ], """ +
+      ManifestJson.write(t.readManifest(v).copy(files = Nil)).trim
+        .stripPrefix("{")).getBytes("UTF-8"))
+    def onDisk(): Set[(String, Long)] = {
+      import scala.jdk.CollectionConverters._
+      val w = Files.walk(Paths.get(dir))
+      try w.iterator().asScala.filter(Files.isRegularFile(_))
+        .map(p => p.toString -> Files.size(p)).toSet
+      finally w.close()
+    }
+    val before = onDisk()
+    val e = intercept[IllegalStateException](t.readManifest(v))
+    assert(e.getMessage.contains(s"snapshot version $v "), e.getMessage)
+    intercept[IllegalStateException](t.read(spark))
+    // v0 would expire and the stranded file would be swept: both must
+    // survive, because the retained legacy snapshot cannot be read
+    intercept[IllegalStateException](
+      t.expireSnapshots(keepLast = 1, orphanDataGraceMillis = 0L))
+    assert(onDisk() == before, "a refused snapshot must delete nothing")
+  }
+
+  test("numBuckets is cached per handle: no repeat meta listings (countfs)") {
+    spark.sparkContext.hadoopConfiguration.set("fs.countfs.impl",
+      classOf[CountingGraftFileSystem].getName)
+    val dir = s"countfs:${tmpDir("nbcount")}/table"
+    val t = IceTable.create(dir, numBuckets = 8)
+    ReplayJob.replayGenerated(spark, t, LogSpec(seed = 13L, nEvents = 2000,
+      nRepos = 6, nPathsPerRepo = 15, pDelete = 0.1), nEpochs = 2,
+      nLogPartitions = 4)
+    val h = t.history().last
+    assert(h.files == t.currentManifest().get.files.size && h.bytes > 0L)
+    // warmed by the commits above — repeated calls do ZERO metadata IO; a
+    // cold handle pays exactly one listing + manifest read
+    CountingGraftFileSystem.metaLists.set(0L)
+    (1 to 3).foreach(_ => assert(t.numBuckets == 8))
+    assert(CountingGraftFileSystem.metaLists.get() == 0L,
+      "cached numBuckets must not re-list meta/ per call")
+    val cold = new IceTable(dir, defaultNumBuckets = 4)
+    assert(cold.numBuckets == 8) // resolved from the manifest, not the default
+    CountingGraftFileSystem.metaLists.set(0L)
+    (1 to 3).foreach(_ => assert(cold.numBuckets == 8))
+    assert(CountingGraftFileSystem.metaLists.get() == 0L)
+  }
+
+  test("versionAsOf never serves a legacy unstamped snapshot out of era") {
+    import java.nio.file.{Files, Paths}
+    val spec = LogSpec(seed = 13L, nEvents = 2000, nRepos = 6,
+      nPathsPerRepo = 15, pDelete = 0.1)
+    val dir = tmpDir("msegtt")
+    val t = IceTable.create(dir, numBuckets = 4)
+    ReplayJob.replayGenerated(spark, t, spec.copy(nEvents = 400), nEpochs = 2,
+      nLogPartitions = 2)
+    val v1Stamp = t.readManifest(1L).commitTimeMillis
+    assert(v1Stamp > 0)
+    // forge v0 into a LEGACY manifest (no commit stamp)
+    def unstamp(v: Long): Unit = {
+      val p = Paths.get(f"$dir/meta/snap-$v%08d.json")
+      val m = graft.table.ManifestJson.parse(
+        new String(Files.readAllBytes(p), "UTF-8"))
+      Files.write(p, graft.table.ManifestJson
+        .write(m.copy(commitTimeMillis = -1L)).getBytes("UTF-8"))
+    }
+    unstamp(0L)
+    // v0's commit time is bounded by its stamped successor: eligible only
+    // from v1Stamp onward — the old "infinitely old" rule would have served
+    // v0 for ANY timestamp, including ones predating the whole table
+    assert(t.versionAsOf(v1Stamp - 1).isEmpty,
+      "a legacy snapshot must not be served before its successor's stamp")
+    assert(t.versionAsOf(v1Stamp).contains(1L))
+    // fully-legacy table: timestamp travel refuses (version travel still ok)
+    unstamp(1L)
+    assert(t.versionAsOf(System.currentTimeMillis()).isEmpty)
+    assert(t.readAt(spark, 1L).count() > 0)
   }
 
   test("offset bootstrap: latest skips history, lookback backfills a window") {
