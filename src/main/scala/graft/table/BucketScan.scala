@@ -123,7 +123,7 @@ object BucketScan {
   }
 
   /** the parquet file schema a given vintage was written with */
-  private def fileReadSchema(vintage: SchemaDef): StructType =
+  private[table] def fileReadSchema(vintage: SchemaDef): StructType =
     StructType(vintage.columns.map(c =>
       StructField(c.name, sparkType(c.dataType), nullable = true)) ++ Seq(
       StructField("lastSeq", LongType, nullable = true),

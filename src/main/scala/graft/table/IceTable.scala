@@ -322,20 +322,48 @@ final class IceTable(val dir: String, val defaultNumBuckets: Int) {
   }
 
   /** POINT LOOKUP (serving path): the user-view row(s) for one exact key,
-    * reading only the files that can hold it — bucket pruning by the key
-    * hash, then manifest-stats pruning (key range), then
-    * parquet row-group pruning via the pushed key predicate. At 100 TB a
-    * key lookup opens ~1 file, never the table; an absent key outside every
-    * candidate's key range proves absent with zero data reads. */
-  def lookup(spark: SparkSession, repo: String, path: String): DataFrame =
-    currentManifest() match {
-      case None => read(spark).filter(lit(false))
-      case Some(m) =>
-        readFiles(spark, lookupFiles(spark, m, repo, path), m.schemaId)
-          .filter(col("repo") === repo && col("path") === path)
-          .filter(!coalesce(col("deleted"), lit(false)))
-          .drop("bucket", "lastSeq", "deleted")
+    * with the schema and rows [[read]] filtered to the key would give. It
+    * runs NO Spark job: the candidate files are read on the calling thread
+    * when `lookup` is called (the snapshot is fixed then, not at the
+    * caller's action), through the bucket scan's own reader (Spark's
+    * parquet reader plus the per-vintage column-id evolution), and the
+    * answer is a local relation. Pruning, in order: the key's bucket (key
+    * hash), the manifest's per-file key range, then parquet row groups and
+    * dictionaries via the pushed key predicate. At 100 TB a key lookup
+    * opens ~1 file, never the table; an absent key outside every
+    * candidate's key range opens none. */
+  def lookup(spark: SparkSession, repo: String, path: String): DataFrame = {
+    val m = currentManifest()
+    val schema = BucketScan.canonicalSchema(
+      m.fold(SchemaRegistry.baseSchemaId)(_.schemaId))
+    val rows = m.toSeq.flatMap(lookupRows(spark, _, schema, repo, path))
+    org.apache.spark.sql.GraftSqlBridge.localDataFrame(spark, schema, rows)
+      .filter(!coalesce(col("deleted"), lit(false)))
+      .drop("bucket", "lastSeq", "deleted")
+  }
+
+  /** The canonical-layout rows (`schema`, tombstones included) of key
+    * `(repo, path)` in its candidate files, copied out of the reader. */
+  private def lookupRows(spark: SparkSession, m: EpochManifest,
+      schema: org.apache.spark.sql.types.StructType, repo: String,
+      path: String): Seq[org.apache.spark.sql.catalyst.InternalRow] = {
+    val files = lookupFiles(spark, m, repo, path)
+    if (files.isEmpty) return Nil
+    import org.apache.spark.sql.sources.EqualTo
+    import org.apache.spark.unsafe.types.UTF8String
+    val (parts, factory) = BucketScan.scanParts(spark, files,
+      files.map(_.bucket), m.schemaId,
+      pushedFilters = Seq(EqualTo("repo", repo), EqualTo("path", path)))
+    val (ri, pi) = (schema.fieldIndex("repo"), schema.fieldIndex("path"))
+    val (r8, p8) = (UTF8String.fromString(repo), UTF8String.fromString(path))
+    parts.toSeq.flatMap { p =>
+      val reader = factory.createReader(p)
+      try Iterator.continually(reader).takeWhile(_.next()).map(_.get())
+        .filter(r => r8 == r.getUTF8String(ri) && p8 == r.getUTF8String(pi))
+        .map(_.copy()).toVector
+      finally reader.close()
     }
+  }
 
   /** Files of `files` that can hold a row with lastSeq > `sinceSeq`
     * (manifest-stats pruning; files without stats are kept — skipping is
@@ -597,9 +625,13 @@ final class IceTable(val dir: String, val defaultNumBuckets: Int) {
     else {
       // group files by written schema, evolve each group, union by name;
       // basePath = the single data root, so the bucket=<b> partition column
-      // infers consistently for any file subset
+      // infers consistently for any file subset. Each group declares the
+      // schema its vintage was written with (the one inference would read
+      // from a footer), so building the DataFrame runs no inference job.
       files.groupBy(_.schemaId).toSeq.sortBy(_._1).map { case (sid, fl) =>
         val df = spark.read
+          .schema(BucketScan.fileReadSchema(SchemaRegistry.schemaFor(sid))
+            .add("bucket", org.apache.spark.sql.types.IntegerType))
           .option("basePath", dataDir.toString)
           .parquet(fl.map(_.path): _*)
         SchemaRegistry.evolve(df, sid, targetSchemaId)

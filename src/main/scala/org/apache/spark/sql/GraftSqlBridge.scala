@@ -16,7 +16,9 @@ import org.apache.spark.sql.types.StructType
   *     distribution report it to Catalyst so downstream joins skip the
   *     Exchange entirely (the key-grouped winner layout of the merge)
   *   - DSv2 plumbing for the bucket scan: Spark's own parquet row reader,
-  *     PartitionedFile construction, and DataFrame-over-Table wiring */
+  *     PartitionedFile construction, and DataFrame-over-Table wiring
+  *   - a DataFrame over driver-held rows (`LocalRelation`), for the point
+  *     lookup's job-free answer */
 object GraftSqlBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
@@ -33,6 +35,18 @@ object GraftSqlBridge {
     val attrs = DataTypeUtils.toAttributes(schema)
     classic.Dataset.ofRows(cs,
       execution.LogicalRDD(attrs, rdd, partitioning(attrs))(cs))
+  }
+
+  /** DataFrame over rows already held on the driver (`LocalRelation`, the
+    * plan `Seq.toDF` builds): filters and projections over it fold into a
+    * new local relation, so `collect()` runs no Spark job. `rows` must be
+    * in `schema`'s layout and owned by the caller (copies, not a reader's
+    * reused buffer). */
+  def localDataFrame(spark: SparkSession, schema: StructType,
+      rows: Seq[InternalRow]): DataFrame = {
+    val cs = spark.asInstanceOf[classic.SparkSession]
+    classic.Dataset.ofRows(cs, catalyst.plans.logical.LocalRelation(
+      DataTypeUtils.toAttributes(schema), rows))
   }
 
   /** Non-blocking Observation read: Some(metrics) if an action already

@@ -1,9 +1,12 @@
 package graft
 
+import graft.driver.ReplayJob
 import graft.log.OracleFold
 import graft.merge.MergeEngine
 import graft.model._
 import graft.table.{FileStats, IceTable, ManifestJson}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge}
 import org.apache.spark.sql.functions._
 
 /** Per-file column stats in the manifest and the reads they prune
@@ -31,6 +34,60 @@ class DataSkippingSpec extends SparkSpec {
   private def shaState(t: IceTable): Map[String, String] =
     t.read(spark).select("path", "contentSha").collect()
       .map(r => r.getString(0) -> r.getString(1)).toMap
+
+  /** `body`'s result and the Spark jobs started while it ran (the bus is
+    * drained on both sides, so every job start has been delivered). */
+  private def jobsDuring[T](body: => T): (T, Int) = {
+    val started = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        started.incrementAndGet()
+    }
+    assert(GraftSqlBridge.drainListenerBus(spark, 10000L))
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val result = body
+      assert(GraftSqlBridge.drainListenerBus(spark, 10000L))
+      (result, started.get)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  /** 40 keys of repo "r" written under schema 1, then evolved to 4 (rename
+    * lang -> language, widen sizeBytes int -> long); k00 is updated and k01
+    * deleted afterwards, so their buckets are rewritten as v4 files (k01's
+    * holding its tombstone) while the other buckets keep their v1 files. */
+  private def mixedVintage(name: String): IceTable = {
+    val t = IceTable.create(tmpDir(name), numBuckets = 4)
+    val base = (0 until 40).map(i =>
+      ChangeEvent("i", i.toLong, "r", f"k$i%02d", commit40, "scala", s"v$i"))
+    ReplayJob.run(spark, t, _ => base.toDS(), Seq((0L, -1L, 39L)),
+      nLogPartitions = 2)
+    t.evolveSchema(2); t.evolveSchema(3); t.evolveSchema(4)
+    val upd = Seq(
+      ChangeEvent("u", 100L, "r", "k00", commit40, "java", "v0new"),
+      ChangeEvent("d", 101L, "r", "k01", commit40, "scala", ""))
+    ReplayJob.run(spark, t, _ => upd.toDS(), Seq((1L, 39L, 101L)),
+      nLogPartitions = 2)
+    val m = t.currentManifest().get
+    assert(m.schemaId == 4 && m.files.map(_.schemaId).toSet == Set(1, 4),
+      s"fixture must mix v1 and v4 files: ${m.files}")
+    t
+  }
+
+  /** `lookup` runs no Spark job and answers exactly as `read` filtered to
+    * the key does: same schema, same rows. */
+  private def assertLookupAsRead(t: IceTable, repo: String,
+      path: String): Array[org.apache.spark.sql.Row] = {
+    val (df, buildJobs) = jobsDuring(t.lookup(spark, repo, path))
+    val (got, collectJobs) = jobsDuring(df.collect())
+    assert(buildJobs + collectJobs == 0,
+      s"($repo, $path): lookup ran $buildJobs + $collectJobs Spark jobs")
+    val want: DataFrame =
+      t.read(spark).filter(col("repo") === repo && col("path") === path)
+    assert(df.schema == want.schema, s"($repo, $path): schema")
+    assert(got.toSeq == want.collect().toSeq, s"($repo, $path): rows")
+    got
+  }
 
   test("manifest entries carry footer stats (rows, key and seq bounds)") {
     val t = IceTable.create(tmpDir("stats"), numBuckets = 4)
@@ -144,6 +201,77 @@ class DataSkippingSpec extends SparkSpec {
       assert(row.length == 1 && row.head.getAs[String]("content") == s"v$k")
     }
     assert(t.lookup(spark, "r", "k100a").isEmpty)
+  }
+
+  test("point lookup runs no Spark job and equals read().filter on a " +
+      "mixed-vintage table: present, tombstoned, absent keys; legacy " +
+      "entries; empty table") {
+    val empty = IceTable.create(tmpDir("lkpempty"), numBuckets = 4)
+    assert(assertLookupAsRead(empty, "r", "k00").isEmpty)
+
+    val t = mixedVintage("lkpjobs")
+    val m = t.currentManifest().get
+    def vintageOf(path: String): Int =
+      t.lookupFiles(spark, m, "r", path).map(_.schemaId).distinct match {
+        case Seq(sid) => sid
+        case other => fail(s"$path: candidate vintages $other")
+      }
+    // a key still in a v1 file must come back evolved (language, sizeBytes)
+    val v1Key = (2 until 40).map(i => f"k$i%02d").find(vintageOf(_) == 1).get
+    assert(t.readRaw(spark).filter(col("path") === "k01" && col("deleted"))
+      .count() == 1, "k01 must be a stored tombstone")
+    val inRange = (0 until 40).map(i => f"k$i%02da")
+      .find(k => t.lookupFiles(spark, m, "r", k).nonEmpty).get
+    val noCandidate = "zz"
+    assert(t.lookupFiles(spark, m, "r", noCandidate).isEmpty)
+
+    def checkAll(tbl: IceTable): Unit = {
+      val old = assertLookupAsRead(tbl, "r", v1Key)
+      assert(old.length == 1 && old.head.getAs[String]("language") == "scala"
+        && old.head.isNullAt(old.head.fieldIndex("sizeBytes")))
+      val upd = assertLookupAsRead(tbl, "r", "k00")
+      assert(upd.length == 1 && upd.head.getAs[String]("content") == "v0new"
+        && upd.head.getAs[String]("language") == "java")
+      assert(assertLookupAsRead(tbl, "r", "k01").isEmpty)
+      assert(assertLookupAsRead(tbl, "r", inRange).isEmpty)
+      assert(assertLookupAsRead(tbl, "r", noCandidate).isEmpty)
+      (0 until 40).foreach(i => assertLookupAsRead(tbl, "r", f"k$i%02d"))
+    }
+    checkAll(t)
+
+    // legacy entries record bytes = -1: the reader resolves the length
+    t.commit(m.copy(version = m.version + 1,
+      files = m.files.map(_.copy(bytes = -1L)), parentVersion = m.version))
+    assert(t.currentManifest().get.files.forall(_.bytes == -1L))
+    checkAll(t)
+  }
+
+  test("readFiles declares each vintage's schema: inference's schema and " +
+      "rows, no Spark job") {
+    val t = mixedVintage("rfschema")
+    val m = t.currentManifest().get
+    def sortedRows(df: DataFrame): Seq[String] =
+      df.collect().map(_.toString).sorted.toSeq
+    // per vintage: what schema inference reads from the footers, and that
+    // group evolved to the table schema (the union readFiles builds)
+    val inferredGroups = m.files.groupBy(_.schemaId).toSeq.sortBy(_._1).map {
+      case (sid, fl) =>
+        val basePath = new org.apache.hadoop.fs.Path(fl.head.path)
+          .getParent.getParent.toString
+        val inferred = spark.read.option("basePath", basePath)
+          .parquet(fl.map(_.path): _*)
+        val (declared, jobs) = jobsDuring(t.readFiles(spark, fl, sid))
+        assert(jobs == 0, s"v$sid: building readFiles ran $jobs Spark jobs")
+        assert(declared.schema == inferred.schema, s"v$sid: schema")
+        assert(sortedRows(declared) == sortedRows(inferred), s"v$sid: rows")
+        graft.table.SchemaRegistry.evolve(inferred, sid, m.schemaId)
+    }
+    val viaInference = inferredGroups.reduce(_.unionByName(_))
+    val (whole, jobs) = jobsDuring(t.readFiles(spark, m.files, m.schemaId))
+    assert(jobs == 0, s"building the mixed readFiles ran $jobs Spark jobs")
+    assert(whole.schema == viaInference.schema)
+    assert(sortedRows(whole) == sortedRows(viaInference))
+    assert(whole.filter(!coalesce(col("deleted"), lit(false))).count() == 39)
   }
 
   test("age-based retention expires old snapshots, keeps readers unaffected") {
