@@ -147,22 +147,19 @@ object IngestMain {
               s"counts=${n.mkString(",")}")
         }
       case "mirror" =>
-        // replicate a published table into a downstream replica via the
-        // change feed (dataset-replication analog; MirrorJob scaladoc).
+        // replicate a published table into a downstream replica by copying
+        // its data files (Iceberg-copy analog; MirrorJob scaladoc).
         // Usage: mirror <upstreamDir> <mirrorDir> [toVersion|current]
-        //   [nLogParts] [keyFilterSql]   e.g. "repo = 'r0'" for a
-        //   selective replica (predicate over repo/path only)
+        //   [nLogParts]
         val Array(_, upDir, mirDir) = args.take(3)
         val up = IceTable.create(upDir)
         val nlp = args.lift(4).map(_.toInt).getOrElse(32)
         val to = args.lift(3).filterNot(_ == "current").map(_.toLong)
         val mir = IceTable.create(mirDir, numBuckets = up.numBuckets)
         val o = MirrorJob.sync(spark, up, mir, nLogPartitions = nlp,
-          toVersion = to,
-          keyFilter = args.lift(5).map(org.apache.spark.sql.functions.expr))
+          toVersion = to)
         println(s"mode=mirror from=${o.fromVersion} to=${o.toVersion} " +
           s"mirror_version=${o.mirrorVersion} full_sync=${o.fullSync} " +
-          s"stats=${o.stats.getOrElse("none")} " +
           s"rows=${mir.read(spark).count()}")
       case "mirror-follow" =>
         // continuous replication: poll-and-sync until the upstream goes
@@ -180,9 +177,10 @@ object IngestMain {
           s"to=${outs.lastOption.map(_.toVersion).getOrElse(-1L)} " +
           s"rows=${mir.read(spark).count()}")
       case "mirror-stream" =>
-        // Structured-Streaming replication (MirrorJob.followStream): tail
-        // the upstream's .changes feed to the mirror with checkpoints and
-        // admission control; AvailableNow = drain-to-now then exit.
+        // Structured-Streaming replication (MirrorJob.followStream): each
+        // batch of the upstream's .changes feed syncs the mirror to the
+        // batch's end version, with checkpoints and admission control;
+        // AvailableNow = drain-to-now then exit.
         // Usage: mirror-stream <upstreamDir> <mirrorDir> <checkpointDir>
         //   [nLogParts] [maxVersionsPerTrigger]
         val Array(_, upDir, mirDir, ckpt) = args.take(4)

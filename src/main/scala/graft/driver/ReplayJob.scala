@@ -110,8 +110,11 @@ object ReplayJob {
         }
       }
     if (claims.isEmpty) return false
-    val merged = graft.merge.Intervals.mergeClaims(committed, nLogPartitions,
-      p => claims.filter(_.partitionId == p).map(r => (r.lowSeq, r.highSeq)))
+    // per-partition resets: fold each into its partition's committed set
+    val merged = graft.merge.Intervals.mergeClaims(
+      committed ++ claims.groupBy(_.partitionId).map { case (p, rs) =>
+        p -> (committed.getOrElse(p, Nil) ++ rs.map(r => (r.lowSeq, r.highSeq)))
+      }, nLogPartitions, Nil)
     table.commit(cur.copy(version = cur.version + 1, epochId = -3L,
       offsets = merged, parentVersion = cur.version,
       completeUntilSeq = math.max(cur.completeUntilSeq,

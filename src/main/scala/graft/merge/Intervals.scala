@@ -41,11 +41,11 @@ object Intervals {
     out.toList
   }
 
-  /** a \ b (normalized): the seqs of `a` not covered by `b` — the claim
-    * DELTA between two committed offset states (e.g. a mirror claiming
-    * exactly what its upstream committed between two snapshots). Interval
-    * sets here are small (normalized per partition), so the quadratic
-    * carve is simpler than a merge walk and never the bottleneck. */
+  /** a \ b (normalized): the seqs of `a` not covered by `b` — e.g. the
+    * mirror's committed seqs its upstream no longer covers (a hard
+    * upstream rollback). Interval sets here are small (normalized per
+    * partition), so the quadratic carve is simpler than a merge walk and
+    * never the bottleneck. */
   def subtract(a: Seq[(Long, Long)], b: Seq[(Long, Long)]): Seq[(Long, Long)] = {
     val bs = normalize(b)
     normalize(a).flatMap { case (alo, ahi) =>
@@ -61,17 +61,18 @@ object Intervals {
     }
   }
 
-  /** Merge per-partition claims into the committed interval sets, keeping
-    * one normalized interval list per partition 0..nLogPartitions-1 and
-    * carrying forward (never dropping) committed intervals of partitions
-    * OUTSIDE that range — a foreign fence must survive a reconfigured-down
-    * job. Shared by the epoch commit and out-of-range reset paths. */
+  /** Merge claims `ivs`, made on EVERY partition 0..nLogPartitions-1, into
+    * the committed interval sets, keeping one normalized interval list per
+    * partition and carrying forward (never dropping) committed intervals of
+    * partitions OUTSIDE that range — a foreign fence must survive a
+    * reconfigured-down job. Shared by the epoch commit and out-of-range
+    * reset paths. */
   def mergeClaims(committed: Map[Int, Seq[(Long, Long)]],
                   nLogPartitions: Int,
-                  claimsFor: Int => Seq[(Long, Long)])
+                  ivs: Seq[(Long, Long)])
       : Seq[graft.model.OffsetRange] =
     (0 until nLogPartitions).flatMap { p =>
-      normalize(committed.getOrElse(p, Nil) ++ claimsFor(p))
+      normalize(committed.getOrElse(p, Nil) ++ ivs)
         .map { case (lo, hi) => graft.model.OffsetRange(p, lo, hi) }
     } ++ committed.keySet.filter(_ >= nLogPartitions).toSeq.sorted
       .flatMap(p => committed(p).map { case (lo, hi) =>

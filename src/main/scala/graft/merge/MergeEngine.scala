@@ -140,13 +140,9 @@ object MergeEngine {
       manifest: EpochManifest,
       parent0: Option[EpochManifest],
       affectedBuckets: Set[Int],
-      claimsFor: Int => Seq[(Long, Long)],
+      claimedIvs: Seq[(Long, Long)],
       nLogPartitions: Int,
       maxRetries: Int = 3): EpochManifest = {
-    // union over partitions: the disjointness check below is against the
-    // interleaver's GLOBAL claim footprint (seqs are globally unique)
-    lazy val claimedIvs: Seq[(Long, Long)] = Intervals.normalize(
-      (0 until nLogPartitions).flatMap(claimsFor))
     var m = manifest
     var par = parent0
     var left = maxRetries
@@ -196,7 +192,7 @@ object MergeEngine {
               }
             }
           val offsets2 = Intervals.mergeClaims(newIvWidened, nLogPartitions,
-            claimsFor)
+            claimedIvs)
           m = m.copy(
             version = np.version + 1,
             parentVersion = np.version,
@@ -216,7 +212,7 @@ object MergeEngine {
             // that reverted it would hide the purge from a change-feed
             // window spanning this commit (the feed's removed-file delete
             // synthesis is gated on the mark moving) — silent delete loss
-            // on mirrors
+            // for feed consumers
             purgedBelowSeq = math.max(m.purgedBelowSeq, np.purgedBelowSeq))
           par = Some(np)
           System.err.println(s"[graft] commit conflict: rebased epoch " +
@@ -289,10 +285,10 @@ object MergeEngine {
     def buckets: Set[Int] = perBucket.map(_.getAs[Int]("bucket")).toSet
   }
 
-  /** The seq intervals the epoch claims per log partition, and the merged
-    * offsets its commit records. */
+  /** The seq intervals the epoch claims on every log partition, and the
+    * merged offsets its commit records. */
   private final case class Claims(ivs: Seq[(Long, Long)],
-      claimsFor: Int => Seq[(Long, Long)], offsets: Seq[OffsetRange])
+      offsets: Seq[OffsetRange])
 
   /** The merge target: the untouched buckets' files, carried forward
     * (`kept`), and every file of the touched buckets (`read`), whose rows
@@ -319,13 +315,6 @@ object MergeEngine {
         Seq(TaskPolicies.RowCountReconciliation()),
       rowPolicies: Seq[RowPolicies.Policy] = RowPolicies.defaults,
       claimedRange: Option[(Long, Long)] = None,
-      // PER-PARTITION claim sets (takes precedence over claimedRange): for
-      // callers that know exactly which seq intervals each log partition
-      // completely observed — e.g. a MIRROR claiming the upstream's
-      // committed-interval delta. A union claim would be WRONG there: it
-      // claims a lagging partition's unobserved range, fencing those events
-      // when the upstream later commits them — silent loss on the mirror.
-      claimedSet: Option[Map[Int, Seq[(Long, Long)]]] = None,
       // ONLY for quarantine reprocess (QuarantineReprocess.run): admit rows
       // whose seqs sit inside committed intervals. Quarantine is terminal —
       // a quarantined row's seq was claimed but its effect provably never
@@ -335,7 +324,7 @@ object MergeEngine {
       admitClaimed: Boolean = false): EpochOutcome = {
     val clock = new StageClock
     val (scope, restoreConfs) = clock("scope")(scopeConfs(spark, table,
-      rawEvents.sparkSession, claimedRange, claimedSet))
+      rawEvents.sparkSession, claimedRange))
     try {
       val in = clock("admit")(admit(spark, scope, rawEvents, epochId,
         nLogPartitions, quarantineDir, pipeline, rowPolicies, admitClaimed))
@@ -343,7 +332,7 @@ object MergeEngine {
       try {
         val dd = clock("dedup")(dedupStats(spark, scope, in, winners))
         val claims = clock("claims")(resolveClaims(spark, in,
-          nLogPartitions, claimedRange, claimedSet))
+          nLogPartitions, claimedRange))
         if (dd.freshCount == 0) {
           // everything was fenced or quarantined: only new claims commit
           val st = EpochStats(dd.quarantined, dd.quarantined, 0, 0, 0, 0)
@@ -377,8 +366,7 @@ object MergeEngine {
     * the epoch's plan confs on every session its plans run in. Returns the
     * scope and the undo of those confs. */
   private def scopeConfs(spark: SparkSession, table: IceTable,
-      batchSession: SparkSession, claimedRange: Option[(Long, Long)],
-      claimedSet: Option[Map[Int, Seq[(Long, Long)]]])
+      batchSession: SparkSession, claimedRange: Option[(Long, Long)])
       : (Scope, () => Unit) = {
     // The merge join is co-partitioned on `bucket` ALONE (a function of the
     // join key). Spark's default co-partition check demands ALL join keys,
@@ -399,12 +387,8 @@ object MergeEngine {
     // plan regression. Epochs of at least [[AqeMinClaimedEvents]] and
     // epochs of UNKNOWN size (segment-claimed batches) keep AQE on. The
     // same gate picks the dedup mode (see dedupWinners).
-    val claimedSpan: Option[Long] = claimedSet match {
-      case Some(m) => Some(Intervals.normalize(m.values.flatten.toSeq)
-        .map { case (lo, hi) => hi - lo }.sum)
-      case None => claimedRange.map { case (lo, hi) => hi - lo }
-    }
-    val tiny = claimedSpan.exists(_ < AqeMinClaimedEvents)
+    val tiny = claimedRange.exists { case (lo, hi) =>
+      hi - lo < AqeMinClaimedEvents }
     val parent = table.currentManifest()
     // bucket count of THIS table's committed layout, resolved ONCE from the
     // parent manifest (rebucket migrations record it per snapshot)
@@ -589,8 +573,7 @@ object MergeEngine {
     * KafkaSource.java:404-411) so the purge horizon can advance and the
     * manifest stays at one merged interval per partition. */
   private def resolveClaims(spark: SparkSession, in: Admitted,
-      nLogPartitions: Int, claimedRange: Option[(Long, Long)],
-      claimedSet: Option[Map[Int, Seq[(Long, Long)]]]): Claims = {
+      nLogPartitions: Int, claimedRange: Option[(Long, Long)]): Claims = {
     import spark.implicits._
     //  - Declared (batch replay knows its slice): one interval (lo, hi].
     //  - Segment (unknown batch provenance, e.g. a file-stream micro-batch):
@@ -605,14 +588,9 @@ object MergeEngine {
     //    ordered top-k bounded by `spark.graft.maxClaimRuns` (default 65536
     //    runs): a gap-dense batch claims only the lowest `cap` runs; the
     //    rest are re-observed later (fence + LWW make re-pulls idempotent).
-    val ivs: Seq[(Long, Long)] = (claimedSet, claimedRange) match {
-      case (Some(m), _) =>
-        require(m.keySet.subsetOf((0 until nLogPartitions).toSet),
-          s"claimedSet partitions ${m.keySet.toSeq.sorted.mkString(",")} " +
-            s"outside universe 0..${nLogPartitions - 1}")
-        Intervals.normalize(m.values.flatten.toSeq)
-      case (None, Some((lo, hi))) => Seq((lo, hi))
-      case (None, None) =>
+    val ivs: Seq[(Long, Long)] = claimedRange match {
+      case Some((lo, hi)) => Seq((lo, hi))
+      case None =>
         val cap = spark.conf.getOption("spark.graft.maxClaimRuns")
           .map(_.toInt).getOrElse(65536)
         val boundaries = in.withPart.filter($"seq".isNotNull && $"seq" >= 0)
@@ -652,12 +630,7 @@ object MergeEngine {
           case Array((vs, 1), (ve, 0)) => (vs - 1, ve - 1)
         }.toSeq
     }
-    val claimsFor: Int => Seq[(Long, Long)] = claimedSet match {
-      case Some(m) => p => m.getOrElse(p, Nil)
-      case None => _ => ivs
-    }
-    Claims(ivs, claimsFor,
-      Intervals.mergeClaims(in.committedIv, nLogPartitions, claimsFor))
+    Claims(ivs, Intervals.mergeClaims(in.committedIv, nLogPartitions, ivs))
   }
 
   /** Stage `commit` of an epoch that applies no row: its claims commit only
@@ -684,8 +657,8 @@ object MergeEngine {
           completeUntilSeq = complete0, numBuckets = scope.nBuckets))
         .getOrElse(EpochManifest(0L, epochId, SchemaRegistry.baseSchemaId,
           Nil, mo, st, -1L, complete0, numBuckets = scope.nBuckets))
-      Some(commitWithRebase(table, m, scope.parent, Set.empty,
-        claims.claimsFor, nLogPartitions))
+      Some(commitWithRebase(table, m, scope.parent, Set.empty, claims.ivs,
+        nLogPartitions))
     }
   }
 
@@ -858,8 +831,8 @@ object MergeEngine {
       purgedBelowSeq =
         scope.parent.map(_.purgedBelowSeq).getOrElse(Long.MinValue))
     TaskPolicies.enforce(taskPolicies, stats)
-    commitWithRebase(table, manifest, scope.parent, dd.buckets,
-      claims.claimsFor, nLogPartitions)
+    commitWithRebase(table, manifest, scope.parent, dd.buckets, claims.ivs,
+      nLogPartitions)
   }
 
   /** Append per-partition lineage rows for a committed epoch. */

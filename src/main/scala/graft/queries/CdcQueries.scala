@@ -301,11 +301,11 @@ object CdcQueries {
       // TABLE MIRRORING (graft.driver.MirrorJob): replay the log's first
       // half into an UPSTREAM table, bootstrap a mirror replica from it,
       // replay the rest upstream (updates AND deletes), then sync again —
-      // the second sync is INCREMENTAL (it reads only files the upstream
-      // rewrote and claims only the per-partition offset delta). The
-      // emitted MIRROR user view must equal the full-log LWW fold
-      // byte-for-byte (same DuckDB oracle as the direct replay c3):
-      // replay ∘ sync ≡ fold is exactly the replica-correctness contract.
+      // the second sync copies only the files the mirror does not hold
+      // yet and commits the upstream's offsets with them. The emitted
+      // MIRROR user view must equal the full-log LWW fold byte-for-byte
+      // (same DuckDB oracle as the direct replay c3): replay ∘ sync ≡ fold
+      // is exactly the replica-correctness contract.
       import s.implicits._
       val tmp = s"${System.getProperty("java.io.tmpdir")}/graft-engine-q-" +
         s"${ProcessHandle.current().pid()}-" +

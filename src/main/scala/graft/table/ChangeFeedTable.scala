@@ -39,9 +39,10 @@ import org.apache.spark.unsafe.types.UTF8String
  *    gobblin-modules/gobblin-kafka-common/.../KafkaSchemaChangeInjector
  *    .java:84-117, as a detectable signal rather than an injected record).
  * This envelope is exactly what `MergeEngine.applyEpoch` ingests, so a
- * downstream graft table can MIRROR the upstream by feeding the stream
+ * downstream graft table can replay the upstream by feeding the stream
  * straight back through the engine (idempotent by the same LWW/fence
- * semantics; see MirrorJob.followStream).
+ * semantics). MirrorJob.followStream reads only `_commit_version` and
+ * copies files instead.
  *
  * Incremental mechanics (scale shape — never O(table) per batch):
  *  - stream offsets are SNAPSHOT VERSIONS; a micro-batch (v1 → v2] reads

@@ -48,6 +48,7 @@ import org.apache.spark.sql.functions._
  * {{{
  *   <dir>/data/bucket=<b>/e<epochId>-part-*.parquet
  *   <dir>/staging/e<epochId>-<nonce>/bucket=<b>/part-*.parquet  (transient)
+ *   <dir>/staging/copy-<nonce>/bucket=<b>/<name>  (transient: mirror copies)
  *   <dir>/meta/snap-<version>.json        (the whole manifest, file list
  *                                         included)
  * }}}
@@ -408,10 +409,8 @@ final class IceTable(val dir: String, val defaultNumBuckets: Int) {
     *                 unrecoverable from either manifest). Direct consumers
     *                 must treat a NULL-seq delete as "deleted at some seq
     *                 inside (fromVersion, toVersion]'s committed delta" and
-    *                 substitute an upper bound themselves — MirrorJob
-    *                 coalesces with the top of the key's partition's claim
-    *                 delta, which is the safe choice (≥ the lost seq, outside
-    *                 the consumer's committed set).
+    *                 substitute an upper bound themselves (MirrorJob copies
+    *                 files and never reads the feed).
     *
     * Scale shape: only files whose PATH differs between the two manifests
     * are read — data files are immutable and content-addressed by path, so
@@ -742,6 +741,36 @@ final class IceTable(val dir: String, val defaultNumBuckets: Int) {
       (System.nanoTime() - t2) / 1000000L)
   }
 
+  /** Publish byte copies of `source`'s data `files` into this table's
+    * layout under their own bucket and name, on the calling thread: each
+    * file is copied into one fresh staging dir, then renamed into
+    * `data/bucket=<b>/<name>`, replacing a same-named file that a crashed
+    * earlier copy left there (never adopting it, so every published file
+    * carries a fresh mtime for the orphan sweep's grace). Returns the
+    * entries at their new paths with their footer stats kept; the caller
+    * commits them. */
+  def copyFilesFrom(source: IceTable,
+      files: Seq[DataFileEntry]): Seq[DataFileEntry] = {
+    if (files.isEmpty) return Nil
+    val (f, src, conf) = (fs, source.fs, hconf)
+    val staging = new HPath(stagingDir, s"copy-${System.nanoTime()}")
+    val copied = files.map { e =>
+      // one write task's files share a name across buckets
+      val rel = s"bucket=${e.bucket}/${new HPath(e.path).getName}"
+      val staged = new HPath(staging, rel)
+      org.apache.hadoop.fs.FileUtil.copy(src, new HPath(e.path), f, staged,
+        false, conf)
+      val dest = new HPath(dataDir, rel)
+      f.mkdirs(dest.getParent)
+      if (f.exists(dest)) f.delete(dest, false)
+      if (!f.rename(staged, dest))
+        throw new IllegalStateException(s"publish failed: $dest")
+      e.copy(path = dest.toString)
+    }
+    f.delete(staging, true)
+    copied
+  }
+
   /** All PUBLISHED data files of the given epoch (committed or orphaned). */
   def listEpochFiles(epochId: Long,
       schemaId: Int = SchemaRegistry.baseSchemaId): Seq[DataFileEntry] = {
@@ -791,9 +820,9 @@ final class IceTable(val dir: String, val defaultNumBuckets: Int) {
     *  - change-feed consumers whose start version predates the rollback
     *    cannot interpret the window (rows mostly fenced, vanished keys
     *    never emit deletes): restart feed consumers from scratch;
-    *  - a MIRROR cannot be mechanically rolled back (every re-emitted row
-    *    loses the fence/LWW against the mirror's newer state) — MirrorJob
-    *    detects the offset regression and FAILS LOUDLY; rebuild replicas.
+    *  - a MIRROR cannot be mechanically rolled back (its own feed
+    *    consumers would see state move backwards) — MirrorJob detects the
+    *    offset regression and FAILS LOUDLY; rebuild replicas.
     * For a rollback downstream consumers can follow, use
     * [[graft.maintenance.Revert.revertTo]]: a COMPENSATING EPOCH (normal
     * commit, fresh seqs) that restores v's user-visible state while

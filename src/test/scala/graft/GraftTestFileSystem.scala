@@ -62,3 +62,58 @@ class CountingLocalFileSystem extends org.apache.hadoop.fs.LocalFileSystem {
       blockSize, progress)
   }
 }
+
+/** Crash-point FS (`faultfs://`), backed by local disk: after
+  * `FaultFileSystem.arm(k)` the k-th mutating call (create, rename,
+  * delete, mkdirs) throws, leaving the store exactly as a process that
+  * died at that step would. Calls nested inside another mutating call
+  * (a create making its parent dirs) count once, as part of it. */
+object FaultFileSystem {
+  private val failAt = new java.util.concurrent.atomic.AtomicLong(0L)
+  private val calls = new java.util.concurrent.atomic.AtomicLong(0L)
+  private val inCall = ThreadLocal.withInitial[java.lang.Boolean](() => false)
+  val Injected = "injected fault"
+
+  /** fail the `k`-th mutating call from now on (k >= 1) */
+  def arm(k: Int): Unit = { calls.set(0L); failAt.set(k.toLong) }
+  def disarm(): Unit = failAt.set(0L)
+
+  private[graft] def mutating[T](what: String,
+      p: org.apache.hadoop.fs.Path)(body: => T): T =
+    if (inCall.get) body
+    else {
+      inCall.set(true)
+      try {
+        val n = calls.incrementAndGet()
+        if (failAt.get > 0 && n == failAt.get)
+          throw new java.io.IOException(s"$Injected: $what $p (call $n)")
+        body
+      } finally inCall.set(false)
+    }
+}
+class FaultFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
+  import org.apache.hadoop.fs.{FSDataOutputStream, Path}
+  import org.apache.hadoop.fs.permission.FsPermission
+  import org.apache.hadoop.util.Progressable
+  import FaultFileSystem.mutating
+  override def getScheme: String = "faultfs"
+  override def getUri: URI = URI.create("faultfs:///")
+  override def create(f: Path, overwrite: Boolean, bufferSize: Int,
+      replication: Short, blockSize: Long,
+      progress: Progressable): FSDataOutputStream =
+    mutating("create", f)(super.create(f, overwrite, bufferSize,
+      replication, blockSize, progress))
+  override def create(f: Path, permission: FsPermission, overwrite: Boolean,
+      bufferSize: Int, replication: Short, blockSize: Long,
+      progress: Progressable): FSDataOutputStream =
+    mutating("create", f)(super.create(f, permission, overwrite, bufferSize,
+      replication, blockSize, progress))
+  override def rename(src: Path, dst: Path): Boolean =
+    mutating("rename", src)(super.rename(src, dst))
+  override def delete(p: Path, recursive: Boolean): Boolean =
+    mutating("delete", p)(super.delete(p, recursive))
+  override def mkdirs(f: Path): Boolean =
+    mutating("mkdirs", f)(super.mkdirs(f))
+  override def mkdirs(f: Path, permission: FsPermission): Boolean =
+    mutating("mkdirs", f)(super.mkdirs(f, permission))
+}

@@ -107,6 +107,45 @@ class MetricsSpec extends SparkSpec {
     } finally Metrics.clearReporters()
   }
 
+  test("a mirror sync emits one MirrorSynced event: copied plus reused " +
+      "files equal the upstream's file count, and no EpochCommitted") {
+    val mDir = tmpDir("mrep3")
+    Metrics.clearReporters()
+    Metrics.addReporter(new Metrics.JsonLinesFileReporter(mDir,
+      spark.sessionState.newHadoopConf()))
+    try {
+      val up = IceTable.create(tmpDir("mup"), numBuckets = 4)
+      val mir = IceTable.create(tmpDir("mmir"), numBuckets = 4)
+      MergeEngine.applyEpoch(spark, up,
+        (0 until 20).map(i => ev("i", i.toLong, s"p$i", s"v$i")).toDS(), 0,
+        nLogPartitions = 2, claimedRange = Some((-1L, 19L)))
+      graft.driver.MirrorJob.sync(spark, up, mir, nLogPartitions = 2)
+      MergeEngine.applyEpoch(spark, up, Seq(ev("u", 20L, "p3", "w")).toDS(),
+        1, nLogPartitions = 2, claimedRange = Some((19L, 20L)))
+      graft.driver.MirrorJob.sync(spark, up, mir, nLogPartitions = 2)
+      Metrics.clearReporters() // flush-on-close for the local scheme
+      val events = readEvents(mDir)
+      val syncs = events.filter(_._2 == "MirrorSynced").map(_._3)
+      assert(syncs.size == 2 && events.filter(_._2 == "MirrorSynced")
+        .forall(_._1 == "graft.driver"), s"one event per sync: $events")
+      syncs.foreach { e =>
+        val upFiles = up.readManifest(e("toVersion").toLong).files.size
+        assert(e("filesCopied").toInt + e("filesReused").toInt == upFiles, e)
+        assert(e("table") == mir.dir && e("upstream") == up.dir)
+        assert(e("mirrorVersion").toLong >= 0 && e("copyMs").toLong >= 0 &&
+          e("commitMs").toLong >= 0, e)
+      }
+      val Seq(boot, inc) = syncs
+      assert(boot("fromVersion") == "-1" && boot("filesReused") == "0" &&
+        boot("bytesCopied").toLong > 0, boot)
+      assert(inc("fromVersion") == boot("toVersion") &&
+        inc("filesCopied") == "1", inc)
+      assert(!events.exists(e =>
+        e._2 == "EpochCommitted" && e._3("table") == mir.dir),
+        "the mirror commits no engine epoch")
+    } finally Metrics.clearReporters()
+  }
+
   test("a throwing reporter never fails the pipeline; later reporters " +
       "still receive the event") {
     val mDir = tmpDir("mrep2")
