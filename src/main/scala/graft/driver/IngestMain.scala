@@ -19,6 +19,7 @@ import org.apache.spark.sql.SparkSession
  *   IngestMain replay <tableDir> <nEvents> <nEpochs> [master]
  *   IngestMain stream <tableDir> <logDir> <nEvents> [master]
  *   IngestMain job <specJson>          (declarative .pull-file analog)
+ *   IngestMain maintain <tableDir> [keepLast] [maxAgeHours]
  *   IngestMain changes <tableDir> <fromVersion> <toVersion|current> [outDir]
  *   IngestMain mirror <upstreamDir> <mirrorDir> [toVersion|current] [nLogParts]
  *   IngestMain mirror-follow <upstreamDir> <mirrorDir> [pollMs] [maxIdlePolls] [nLogParts]
@@ -83,20 +84,16 @@ object IngestMain {
         // maxAgeHours is given — the reference's policy-driven retention).
         val tableDir = args(1)
         val keepLast = args.lift(2).map(_.toInt).getOrElse(3)
-        // files-per-bucket threshold: 1 = full pass (default), 2+ = scoped
-        // maintenance of fragmented buckets only
-        val minFiles = args.lift(3).map(_.toInt).getOrElse(1)
-        val olderThan = args.lift(4).map(_.toDouble)
+        val olderThan = args.lift(3).map(_.toDouble)
           .map(h => System.currentTimeMillis() - (h * 3600 * 1000).toLong)
           .getOrElse(Long.MaxValue)
         val t = IceTable.create(tableDir)
-        val rep = graft.maintenance.Compaction.compact(spark, t, minFiles)
+        val rep = graft.maintenance.Compaction.compact(spark, t)
         val (ms, fs) = t.expireSnapshots(keepLast, olderThan)
         println(f"mode=maintain version=${rep.version}%d " +
           f"purged_tombstones=${rep.purgedTombstones}%d " +
           f"live_rows=${rep.liveRows}%d files=${rep.files}%d " +
           f"compacted_buckets=${rep.compactedBuckets}%d " +
-          f"carried_files=${rep.carriedFiles}%d " +
           f"expired_manifests=$ms%d deleted_files=$fs%d")
       case "reprocess" =>
         // re-ingest quarantined rows under the CURRENT policies (the
@@ -274,8 +271,6 @@ object IngestMain {
           val out = graft.merge.MergeEngine.applyEpoch(spark, t,
             slice(lo, hi), epochId, claimedRange = Some((lo, hi)))
           val secs = (System.nanoTime() - t0) / 1e9
-          // fenced (skipped) epochs finish in scan-only time — feeding them
-          // into the EWMA would inflate the rate and oversize real epochs
           // fenced (skipped) epochs finish in scan-only time: feeding them
           // into EITHER signal would inflate the EWMA (oversizing epochs)
           // or inject bogus fast/clean health rows that mask a real

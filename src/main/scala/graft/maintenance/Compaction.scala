@@ -12,20 +12,16 @@ import org.apache.spark.sql.functions._
  * CompactionSuite, gobblin-compaction/.../MRCompactor.java;
  * CompactionSource.java:99,427 — per-dataset subsets, never the world;
  * audit-count verifier CompactionAuditCountVerifier.java). Spark-native
- * version, BUCKET-SCOPED:
+ * version, one full pass:
  *
- *  - compact only buckets whose manifest file count reaches
- *    `minFilesPerBucket` (the fragmentation signal available from metadata
- *    alone); all other buckets' files carry forward BY REFERENCE — at 100 TB
- *    you compact the fragmented slice, never rewrite the table,
- *  - rewrite each selected bucket into one file (small-file control — the
- *    bi-level packer's goal, SURVEY.md §2.8),
+ *  - rewrite every bucket into one file (small-file control — the
+ *    bi-level packer's goal, SURVEY.md §2.8). The merge already leaves one
+ *    file per touched bucket, so a file-count selection would never pick a
+ *    bucket on the engine's layout; the pass's remaining work is the purge,
  *  - purge delete tombstones whose lastSeq lies at or below the SAFE
  *    horizon. Safe = the table's contiguous committed prefix: no future
  *    event can carry a smaller seq than the first committed gap, so a
- *    tombstone below it can never be out-raced by a late stale update.
- *    (Tombstones in carried-forward buckets purge when those buckets are
- *    eventually selected; a full pass is `minFilesPerBucket = 1`.)
+ *    tombstone below it can never be out-raced by a late stale update,
  *  - verifier gate in ONE pass: row counters ride the rewrite job as an
  *    `Observation`, and the written files are checked against them via
  *    parquet FOOTER record counts (metadata-only IO, no second data scan —
@@ -48,20 +44,13 @@ object Compaction {
   final case class CompactionReport(
       version: Long,
       purgedTombstones: Long,
-      liveRows: Long,          // live rows in the REWRITTEN buckets
+      liveRows: Long,          // live rows in the table
       files: Int,              // total files in the new snapshot
-      compactedBuckets: Int,
-      carriedFiles: Int)       // files carried forward by reference
+      compactedBuckets: Int)
 
-  /** `minFilesPerBucket = 1` (default) is a full pass — every bucket
-    * rewrites and all safe tombstones purge (routine CoW merges leave one
-    * file per bucket, so a files-count threshold alone would never select
-    * them). Pass 2+ for scoped maintenance of fragmented buckets: the
-    * merge rewrites a touched bucket into one file, so only tables written
-    * before that rule (whose skipped or salted files sit beside a rewritten
-    * one) hold multi-file buckets. */
-  def compact(spark: SparkSession, table: IceTable,
-              minFilesPerBucket: Int = 1): CompactionReport =
+  /** Rewrite every bucket and purge every safe tombstone. An empty table
+    * returns without a commit. */
+  def compact(spark: SparkSession, table: IceTable): CompactionReport =
     // observation-safe: an ALL-PURGE rewrite is runtime-empty, and AQE's
     // empty-relation propagation would prune the verifier's CollectMetrics
     // node — obs.get below would hang forever (graft.table.AqeSafety)
@@ -69,17 +58,9 @@ object Compaction {
     val parent = table.currentManifest().getOrElse(
       throw new IllegalStateException("nothing to compact"))
     val horizon = safeHorizon(parent)
-
-    // fragmentation from the manifest alone — no data IO to plan
-    val byBucket = parent.files.groupBy(_.bucket)
-    val fragBuckets = byBucket.collect {
-      case (b, fs) if fs.size >= minFilesPerBucket => b
-    }.toSet
-    val (fragFiles, carried) =
-      parent.files.partition(f => fragBuckets.contains(f.bucket))
-    if (fragFiles.isEmpty)
-      return CompactionReport(parent.version, 0, 0, parent.files.size, 0,
-        carried.size)
+    if (parent.files.isEmpty)
+      return CompactionReport(parent.version, 0, 0, 0, 0)
+    val buckets = parent.files.map(_.bucket).distinct.size
 
     // read IN PLACE per bucket (DSv2 bucket scan): the rewrite is then
     // filter → write with ZERO shuffle — every bucket is read and written
@@ -87,7 +68,7 @@ object Compaction {
     // skips the repartition). The buckets are packed into one task per core
     // unless their bytes need more (IceTable.packBuckets). At 100 TB
     // compaction moves no rows across the network.
-    val raw = table.readFilesBucketAligned(spark, fragFiles, parent.schemaId)
+    val raw = table.readFilesBucketAligned(spark, parent.files, parent.schemaId)
     val obs = Observation(s"compact-${parent.version}")
     // null-safe: a null `deleted` must count as live AND survive the rewrite
     // (an un-coalesced filter(!NULL) would drop it while the live counter
@@ -105,7 +86,7 @@ object Compaction {
     // unique data dir per compaction, disjoint from ingest epoch ids
     val compactionEpochId = 1000000000L + parent.version
     val (packed, writeTasks) =
-      IceTable.packBuckets(kept, fragBuckets.size, fragFiles)
+      IceTable.packBuckets(kept, buckets, parent.files)
     val write = table.writeEpochFilesTimed(packed, compactionEpochId,
       parent.schemaId, alignedByBucket = true,
       nBuckets = table.bucketCountOf(Some(parent)))
@@ -150,7 +131,7 @@ object Compaction {
     val manifest = parent.copy(
       version = parent.version + 1,
       epochId = compactionEpochId,
-      files = (carried ++ counted).sortBy(f => (f.bucket, f.path)),
+      files = counted.sortBy(f => (f.bucket, f.path)),
       stats = EpochStats(0, 0, 0, 0, 0, 0),
       parentVersion = parent.version,
       // stamp the purge mark iff tombstone rows actually vanished: the
@@ -167,13 +148,12 @@ object Compaction {
       "purgedTombstones" -> purged.toString,
       "liveRows" -> liveBefore.toString,
       "files" -> committed.files.size.toString,
-      "compactedBuckets" -> fragBuckets.size.toString,
-      "carriedFiles" -> carried.size.toString,
+      "compactedBuckets" -> buckets.toString,
       "writeTasks" -> writeTasks.toString,
       "writeJobMs" -> write.writeJobMs.toString,
       "publishMs" -> write.publishMs.toString,
       "footerStatsMs" -> write.footerStatsMs.toString))
     CompactionReport(committed.version, purged, liveBefore,
-      committed.files.size, fragBuckets.size, carried.size)
+      committed.files.size, buckets)
     }
 }

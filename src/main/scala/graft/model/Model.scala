@@ -62,18 +62,15 @@ final case class EpochStats(
   * id — cf. IcebergMetadataWriter.computeCandidateSchema,
   * gobblin-iceberg/.../writer/IcebergMetadataWriter.java:455-524).
   *
-  * The optional fields are per-file column statistics for read-side file
-  * pruning (the Iceberg data-file metrics analog,
-  * IcebergMetadataWriter.java:349-383):
-  *  - `minKey`/`maxKey` — conservative bounds on the composed row key
-  *    `repo + NUL + path` (see [[graft.table.FileStats]]); point lookups,
-  *  - `minSeq`/`maxSeq` — bounds on the stored `lastSeq`; incremental reads
-  *    and the change feed.
-  * All default to absent — a file without stats is readable everywhere and
-  * simply never skipped (legacy manifests keep working unchanged). */
+  * `minSeq`/`maxSeq` bound the stored `lastSeq` (footer statistics, see
+  * [[graft.table.FileStats]]): incremental reads and the change feed skip
+  * files by them. Both default to absent — a file without them is readable
+  * everywhere and simply never skipped. The entry records no key bounds: a
+  * key's bucket holds one file whose hashed keys span the key space, so a
+  * key range could exclude it for almost no key. A legacy entry's key
+  * bounds and retired salt fields parse and are ignored. */
 final case class DataFileEntry(path: String, bucket: Int, rows: Long,
     schemaId: Int, bytes: Long = -1L,
-    minKey: Option[String] = None, maxKey: Option[String] = None,
     minSeq: Option[Long] = None, maxSeq: Option[Long] = None)
 
 /**

@@ -3,37 +3,29 @@ package graft.table
 import graft.model.DataFileEntry
 import org.apache.hadoop.conf.Configuration
 import org.apache.parquet.column.statistics.Statistics
-import org.apache.parquet.io.api.Binary
 
 /**
- * Per-file column statistics from parquet FOOTERS (metadata-only IO — no row
+ * Per-file footer statistics from parquet FOOTERS (metadata-only IO — no row
  * data is read). This is the engine's analog of the per-column metrics the
  * reference preserves into Iceberg data-file entries at commit time
  * (gobblin-iceberg/.../writer/IcebergMetadataWriter.java:349-383,664-672 —
- * appendFiles with metrics), which is what enables file-level pruning
- * within a bucket: readers drop files whose stats preclude a match without
- * opening them. The key bounds serve point lookups
- * ([[IceTable.lookupFiles]]); the seq bounds serve incremental reads
- * (`readChangesSince`) and the change feed's fenced-file pruning. The merge
- * uses neither: it rewrites a touched bucket whole, because a bucket file's
- * hashed keys span the key space and no key range could exclude it.
+ * appendFiles with metrics).
  *
  * Recorded per file:
- *  - `rows`   — footer record count (also feeds the compaction verifier),
- *  - `minKey`/`maxKey` — conservative bounds on the composed row key
- *    `repo \0 path` (NUL-composed so byte order equals (repo, path) struct
- *    order: NUL sorts below every other byte). Built from the per-COLUMN
- *    footer min/max as (min repo, min path) / (max repo, max path) — a
- *    superset of the true composed-key range, which is exactly what a
- *    conservative skip test needs,
+ *  - `rows`   — footer record count (the compaction and rebucket
+ *    verifiers' evidence),
  *  - `minSeq`/`maxSeq` — bounds on `lastSeq` (incremental "changes since"
- *    reads skip files whose whole seq range predates the request).
+ *    reads and the change feed's fenced-file pruning skip files whose whole
+ *    seq range predates the request).
  *
- * These bounds are the only per-file skipping data: the files carry no key
- * blooms, because parquet writes none for a fully dictionary-encoded
- * column chunk, and `repo`/`path` chunks are dictionary-encoded whenever
- * keys repeat across files (as they do in the generator and in real
- * repositories), so a bloom stage never pruned a candidate.
+ * No key bounds are recorded. Min/max pruning pays only when files are
+ * clustered on the predicate column, and the engine hashes keys into
+ * buckets of one file each, so a bucket file's key range spans nearly the
+ * whole key space: a point lookup reads its key's bucket's file, and the
+ * pushed key predicate prunes row groups and dictionaries inside it. The
+ * files carry no key blooms either: parquet writes none for a fully
+ * dictionary-encoded column chunk, and `repo`/`path` chunks are
+ * dictionary-encoded whenever keys repeat across files.
  *
  * All footers of one write are read through one bounded driver thread pool
  * under a shared deadline: one hung object-store metadata read must not
@@ -43,37 +35,8 @@ import org.apache.parquet.io.api.Binary
  */
 object FileStats {
 
-  final case class Stats(
-      rows: Long,
-      minKey: Option[String], maxKey: Option[String],
-      minSeq: Option[Long], maxSeq: Option[Long])
+  final case class Stats(rows: Long, minSeq: Option[Long], maxSeq: Option[Long])
 
-  /** key composition: NUL-separated, so unsigned byte order of the composed
-    * string equals lexicographic (repo, path) order */
-  val KeySep = "\u0000"
-
-  /** unsigned lexicographic UTF-8 byte comparison — the same order Spark's
-    * executors and modern parquet UTF8 stats use (driver-side comparisons
-    * must match the executor-side min/max or a skip could be wrong for
-    * non-ASCII keys, where UTF-16 `String.compareTo` diverges). Delegates
-    * to UTF8String itself so the order can never drift from Spark's. */
-  def keyCompare(a: String, b: String): Int =
-    org.apache.spark.unsafe.types.UTF8String.fromString(a)
-      .compareTo(org.apache.spark.unsafe.types.UTF8String.fromString(b))
-
-  private def utf8Min(s: Statistics[_]): Option[String] = s match {
-    case _ if s.isEmpty || !s.hasNonNullValue => None
-    case bs: Statistics[_] => bs.genericGetMin match {
-      case b: Binary => Some(b.toStringUsingUTF8)
-      case _ => None
-    }
-  }
-  private def utf8Max(s: Statistics[_]): Option[String] =
-    if (s.isEmpty || !s.hasNonNullValue) None
-    else s.genericGetMax match {
-      case b: Binary => Some(b.toStringUsingUTF8)
-      case _ => None
-    }
   private def longMin(s: Statistics[_]): Option[Long] =
     if (s.isEmpty || !s.hasNonNullValue) None
     else s.genericGetMin match { case l: java.lang.Long => Some(l); case _ => None }
@@ -89,18 +52,17 @@ object FileStats {
       org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf),
       org.apache.parquet.HadoopReadOptions.builder(conf).build())
 
-  /** footer stats of one file (record count + repo/path/lastSeq min-max,
-    * folded across row groups). Any column chunk without usable stats makes
-    * that column's bound None. */
+  /** footer stats of one file (record count + lastSeq min-max, folded
+    * across row groups). Any chunk without usable stats makes the bounds
+    * None. */
   def read(conf: Configuration, path: String): Stats = {
     val r = open(conf, new org.apache.hadoop.fs.Path(path))
     try {
       val blocks = r.getFooter.getBlocks
       var rows = 0L
-      // per-column folds; a single chunk without stats poisons the column
-      var repoMin, repoMax, pathMin, pathMax: Option[String] = None
+      // a single chunk without stats poisons the bounds
       var seqMin, seqMax: Option[Long] = None
-      var repoOk, pathOk, seqOk = true
+      var seqOk = true
       val it = blocks.iterator()
       while (it.hasNext) {
         val b = it.next()
@@ -108,40 +70,18 @@ object FileStats {
         val cit = b.getColumns.iterator()
         while (cit.hasNext) {
           val c = cit.next()
-          val st = c.getStatistics
-          c.getPath.toDotString match {
-            case "repo" =>
-              (utf8Min(st), utf8Max(st)) match {
-                case (Some(lo), Some(hi)) if repoOk =>
-                  repoMin = Some(repoMin.fold(lo)(m =>
-                    if (keyCompare(lo, m) < 0) lo else m))
-                  repoMax = Some(repoMax.fold(hi)(m =>
-                    if (keyCompare(hi, m) > 0) hi else m))
-                case _ => repoOk = false; repoMin = None; repoMax = None
-              }
-            case "path" =>
-              (utf8Min(st), utf8Max(st)) match {
-                case (Some(lo), Some(hi)) if pathOk =>
-                  pathMin = Some(pathMin.fold(lo)(m =>
-                    if (keyCompare(lo, m) < 0) lo else m))
-                  pathMax = Some(pathMax.fold(hi)(m =>
-                    if (keyCompare(hi, m) > 0) hi else m))
-                case _ => pathOk = false; pathMin = None; pathMax = None
-              }
-            case "lastSeq" =>
-              (longMin(st), longMax(st)) match {
-                case (Some(lo), Some(hi)) if seqOk =>
-                  seqMin = Some(seqMin.fold(lo)(math.min(_, lo)))
-                  seqMax = Some(seqMax.fold(hi)(math.max(_, hi)))
-                case _ => seqOk = false; seqMin = None; seqMax = None
-              }
-            case _ => ()
+          if (c.getPath.toDotString == "lastSeq") {
+            val st = c.getStatistics
+            (longMin(st), longMax(st)) match {
+              case (Some(lo), Some(hi)) if seqOk =>
+                seqMin = Some(seqMin.fold(lo)(math.min(_, lo)))
+                seqMax = Some(seqMax.fold(hi)(math.max(_, hi)))
+              case _ => seqOk = false; seqMin = None; seqMax = None
+            }
           }
         }
       }
-      val minKey = for (r0 <- repoMin; p0 <- pathMin) yield r0 + KeySep + p0
-      val maxKey = for (r0 <- repoMax; p0 <- pathMax) yield r0 + KeySep + p0
-      Stats(rows, minKey, maxKey, seqMin, seqMax)
+      Stats(rows, seqMin, seqMax)
     } finally r.close()
   }
 
@@ -196,8 +136,8 @@ object FileStats {
                 s"(${e.getCause}); entry left stats-less")
               None
           }
-        s.fold(f)(st => f.copy(rows = st.rows, minKey = st.minKey,
-          maxKey = st.maxKey, minSeq = st.minSeq, maxSeq = st.maxSeq))
+        s.fold(f)(st =>
+          f.copy(rows = st.rows, minSeq = st.minSeq, maxSeq = st.maxSeq))
       }
     } finally { pool.shutdownNow(); () }
   }

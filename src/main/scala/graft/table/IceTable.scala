@@ -307,19 +307,12 @@ final class IceTable(val dir: String, val defaultNumBuckets: Int) {
   }
 
   /** Candidate data files that can hold key `(repo, path)` under manifest
-    * `m`: ONE bucket's files, minus files whose stats preclude the key
-    * (key outside [minKey, maxKey] in unsigned byte order). Stats-less
-    * files are kept. Manifest-only: no file is opened. */
+    * `m`: the files of the key's bucket (key hash). Manifest-only: no file
+    * is opened. `spark` is unused. */
   def lookupFiles(spark: SparkSession, m: EpochManifest, repo: String,
       path: String): Seq[DataFileEntry] = {
-    val n = bucketCountOf(Some(m))
-    val b = bucketOf(repo, path, n)
-    val key = repo + FileStats.KeySep + path
-    m.files.filter { f =>
-      f.bucket == b &&
-        f.minKey.forall(mk => FileStats.keyCompare(key, mk) >= 0) &&
-        f.maxKey.forall(mk => FileStats.keyCompare(key, mk) <= 0)
-    }
+    val b = bucketOf(repo, path, bucketCountOf(Some(m)))
+    m.files.filter(_.bucket == b)
   }
 
   /** POINT LOOKUP (serving path): the user-view row(s) for one exact key,
@@ -329,10 +322,9 @@ final class IceTable(val dir: String, val defaultNumBuckets: Int) {
     * caller's action), through the bucket scan's own reader (Spark's
     * parquet reader plus the per-vintage column-id evolution), and the
     * answer is a local relation. Pruning, in order: the key's bucket (key
-    * hash), the manifest's per-file key range, then parquet row groups and
-    * dictionaries via the pushed key predicate. At 100 TB a key lookup
-    * opens ~1 file, never the table; an absent key outside every
-    * candidate's key range opens none. */
+    * hash), then parquet row groups and dictionaries via the pushed key
+    * predicate. At 100 TB a key lookup opens its bucket's one file, never
+    * the table. */
   def lookup(spark: SparkSession, repo: String, path: String): DataFrame = {
     val m = currentManifest()
     val schema = BucketScan.canonicalSchema(

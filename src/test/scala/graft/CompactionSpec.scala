@@ -37,7 +37,7 @@ class CompactionSpec extends SparkSpec {
     assert(shaState(t) == before)
   }
 
-  test("bucket-scoped compaction rewrites only fragmented buckets") {
+  test("compaction collapses a hand-fragmented table to one file per bucket") {
     import spark.implicits._
     import graft.model.{EpochManifest, EpochStats, OffsetRange}
     val t = IceTable.create(tmpDir("scoped"), numBuckets = 32)
@@ -48,33 +48,27 @@ class CompactionSpec extends SparkSpec {
       .withColumn("bucket", t.bucketCol(col("repo"), col("path")))
       .withColumn("lastSeq", lit(seqBase))
       .withColumn("deleted", lit(false))
-    // two file generations: most buckets end with one file; buckets hit by
-    // BOTH generations are fragmented (≥2 files) and must be the ONLY ones
-    // compaction rewrites — everything else carries forward by reference.
+    // two file generations: buckets hit by BOTH generations hold two files
     val f0 = t.writeEpochFiles(rows(0 until 60, 1L), 0)
     val f1 = t.writeEpochFiles(rows(60 until 66, 2L), 1)
     val all = (f0 ++ f1).sortBy(f => (f.bucket, f.path))
-    val frag = all.groupBy(_.bucket).collect {
-      case (b, fs) if fs.size >= 2 => b }.toSet
-    assert(frag.nonEmpty && frag.size < all.map(_.bucket).distinct.size,
-      s"fixture must fragment SOME but not all buckets: $frag")
+    val buckets = all.map(_.bucket).toSet
+    assert(all.groupBy(_.bucket).exists(_._2.size >= 2),
+      "fixture must fragment some bucket")
     t.commit(EpochManifest(0, 1, 1, all,
       (0 until 32).map(p => OffsetRange(p, -1L, 2L)),
       EpochStats(66, 0, 0, 66, 0, 0), -1L))
     val before = shaState(t)
 
-    val report = Compaction.compact(spark, t, minFilesPerBucket = 2)
-    assert(report.compactedBuckets == frag.size,
-      s"exactly the fragmented buckets compact: $report")
+    val report = Compaction.compact(spark, t)
+    assert(report.compactedBuckets == buckets.size, s"every bucket: $report")
     val m2 = t.currentManifest().get
-    val carriedPaths = all.filterNot(f => frag.contains(f.bucket))
-      .map(_.path).toSet
-    assert(carriedPaths.subsetOf(m2.files.map(_.path).toSet),
-      "non-fragmented buckets' files must carry forward by reference")
-    frag.foreach(b => assert(m2.files.count(_.bucket == b) == 1,
-      s"fragmented bucket $b must collapse to one file"))
+    assert(m2.files.map(_.bucket).sorted == buckets.toSeq.sorted,
+      s"one file per bucket: ${m2.files}")
+    assert(m2.files.map(_.path).toSet.intersect(all.map(_.path).toSet).isEmpty,
+      "every bucket is rewritten")
     // rewritten entries carry footer-verified per-file row counts
-    assert(m2.files.filter(f => frag.contains(f.bucket)).forall(_.rows > 0))
+    assert(m2.files.forall(_.rows > 0) && m2.files.map(_.rows).sum == 66L)
     assert(shaState(t) == before, "user table must be unchanged")
   }
 

@@ -5,15 +5,16 @@ import graft.log.OracleFold
 import graft.merge.MergeEngine
 import graft.model._
 import graft.table.{FileStats, IceTable, ManifestJson}
+import java.nio.file.{Files, Paths}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, GraftSqlBridge}
 import org.apache.spark.sql.functions._
 
-/** Per-file column stats in the manifest and the reads they prune
-  * (Iceberg-metrics-style): key bounds for point lookups, seq bounds for
-  * incremental `readChangesSince`. The merge prunes no file: a touched
-  * bucket is rewritten whole, whatever its files' key ranges. Also
-  * time-based retention and the bounded footer-read pool. */
+/** Per-file footer stats in the manifest and the reads they prune
+  * (Iceberg-metrics-style): seq bounds for incremental `readChangesSince`.
+  * A point lookup reads its key's bucket's files; the merge prunes no file:
+  * a touched bucket is rewritten whole. Also time-based retention and the
+  * bounded footer-read pool. */
 class DataSkippingSpec extends SparkSpec {
   import spark.implicits._
 
@@ -89,18 +90,28 @@ class DataSkippingSpec extends SparkSpec {
     got
   }
 
-  test("manifest entries carry footer stats (rows, key and seq bounds)") {
-    val t = IceTable.create(tmpDir("stats"), numBuckets = 4)
+  /** The committed snapshot json of version `v`. */
+  private def snapJson(dir: String, v: Long): String =
+    new String(Files.readAllBytes(Paths.get(f"$dir/meta/snap-$v%08d.json")),
+      "UTF-8")
+
+  test("manifest entries carry footer stats (rows and seq bounds, no key " +
+      "bounds)") {
+    val dir = tmpDir("stats")
+    val t = IceTable.create(dir, numBuckets = 4)
     val fs = t.writeEpochFiles(rows(t, (0 until 40).map(i => f"p$i%02d"), 7L), 0)
     assert(fs.nonEmpty)
     fs.foreach { f =>
       assert(f.rows > 0, s"rows must be footer-filled: $f")
       assert(f.minSeq.contains(7L) && f.maxSeq.contains(7L))
-      assert(f.minKey.isDefined && f.maxKey.isDefined)
-      assert(FileStats.keyCompare(f.minKey.get, f.maxKey.get) <= 0)
-      assert(f.minKey.get.startsWith("r" + FileStats.KeySep))
     }
     assert(fs.map(_.rows).sum == 40L)
+    t.commit(EpochManifest(0, 0, 1, fs, offsets2(7L),
+      EpochStats(40, 0, 0, 40, 0, 0), -1L, completeUntilSeq = 7L,
+      numBuckets = 4))
+    val json = snapJson(dir, 0L)
+    assert(json.contains("\"maxSeq\"") && !json.contains("minKey") &&
+      !json.contains("maxKey"), s"snapshot must hold no key bounds: $json")
   }
 
   test("a touched bucket is rewritten whole into one file, whatever its " +
@@ -149,7 +160,7 @@ class DataSkippingSpec extends SparkSpec {
       r.getAs[String]("content") == "NEW")
   }
 
-  test("point lookup: one bucket, stats-admitted files only, exact row") {
+  test("point lookup: the key's bucket's files, exact row") {
     val t = IceTable.create(tmpDir("lkp"), numBuckets = 8)
     val keys = (0 until 200).map(i => f"p$i%03d")
     val fs = t.writeEpochFiles(rows(t, keys, 5L), 0)
@@ -168,8 +179,8 @@ class DataSkippingSpec extends SparkSpec {
     keys.take(25).foreach { k =>
       val cand = t.lookupFiles(spark, m, "r", k)
       val bucketFiles = m.files.filter(_.bucket == t.bucketOf("r", k))
-      assert(cand.nonEmpty && cand.toSet.subsetOf(bucketFiles.toSet),
-        s"$k: candidates must come from the key's bucket only " +
+      assert(cand.nonEmpty && cand == bucketFiles,
+        s"$k: candidates must be the key's bucket's files " +
           s"(${cand.map(_.path)} vs ${bucketFiles.map(_.path)})")
       val row = t.lookup(spark, "r", k).collect()
       assert(row.length == 1 && row.head.getAs[String]("content") == s"v$k")
@@ -177,11 +188,10 @@ class DataSkippingSpec extends SparkSpec {
     assert(t.lookup(spark, "r", "missing").isEmpty)
   }
 
-  test("range-overlapping files both stay lookup candidates; present keys " +
-      "return their row, an absent key inside both ranges returns nothing") {
-    // two epochs write INTERLEAVED key sets into the same bucket: their
-    // [minKey, maxKey] ranges overlap almost fully, so range pruning admits
-    // both files and the pushed key predicate finds the row
+  test("every file of the key's bucket is a lookup candidate; lookups stay " +
+      "exact") {
+    // two epochs write INTERLEAVED key sets into the same bucket: a lookup
+    // reads both files and the pushed key predicate finds the row
     val t = IceTable.create(tmpDir("ovl"), numBuckets = 1)
     val even = (0 until 200 by 2).map(i => f"k$i%03d")
     val odd = (1 until 200 by 2).map(i => f"k$i%03d")
@@ -192,15 +202,15 @@ class DataSkippingSpec extends SparkSpec {
       numBuckets = 1))
     val m = t.currentManifest().get
 
-    Seq("k004", "k007", "k100a").foreach { k =>
-      assert(t.lookupFiles(spark, m, "r", k).size == 2,
-        s"$k: range pruning cannot separate the files")
+    Seq("k004", "k007", "k100a", "zz").foreach { k =>
+      assert(t.lookupFiles(spark, m, "r", k) == m.files,
+        s"$k: every file of the bucket must be a candidate")
     }
     Seq("k004", "k007").foreach { k =>
       val row = t.lookup(spark, "r", k).collect()
       assert(row.length == 1 && row.head.getAs[String]("content") == s"v$k")
     }
-    assert(t.lookup(spark, "r", "k100a").isEmpty)
+    Seq("k100a", "zz").foreach(k => assert(t.lookup(spark, "r", k).isEmpty))
   }
 
   test("point lookup runs no Spark job and equals read().filter on a " +
@@ -220,10 +230,9 @@ class DataSkippingSpec extends SparkSpec {
     val v1Key = (2 until 40).map(i => f"k$i%02d").find(vintageOf(_) == 1).get
     assert(t.readRaw(spark).filter(col("path") === "k01" && col("deleted"))
       .count() == 1, "k01 must be a stored tombstone")
-    val inRange = (0 until 40).map(i => f"k$i%02da")
-      .find(k => t.lookupFiles(spark, m, "r", k).nonEmpty).get
-    val noCandidate = "zz"
-    assert(t.lookupFiles(spark, m, "r", noCandidate).isEmpty)
+    // absent keys: one between stored keys, one above all of them; each
+    // reads its bucket's files and finds nothing
+    val absent = Seq("k00a", "zz")
 
     def checkAll(tbl: IceTable): Unit = {
       val old = assertLookupAsRead(tbl, "r", v1Key)
@@ -233,8 +242,7 @@ class DataSkippingSpec extends SparkSpec {
       assert(upd.length == 1 && upd.head.getAs[String]("content") == "v0new"
         && upd.head.getAs[String]("language") == "java")
       assert(assertLookupAsRead(tbl, "r", "k01").isEmpty)
-      assert(assertLookupAsRead(tbl, "r", inRange).isEmpty)
-      assert(assertLookupAsRead(tbl, "r", noCandidate).isEmpty)
+      absent.foreach(k => assert(assertLookupAsRead(tbl, "r", k).isEmpty))
       (0 until 40).foreach(i => assertLookupAsRead(tbl, "r", f"k$i%02d"))
     }
     checkAll(t)
@@ -323,7 +331,7 @@ class DataSkippingSpec extends SparkSpec {
     val t0 = System.nanoTime()
     val degraded = FileStats.fillAll(conf, Seq(entry), timeoutSec = 1L)
     assert((System.nanoTime() - t0) / 1e9 < 30.0, "must not hang")
-    assert(degraded.head.rows == -1L && degraded.head.minKey.isEmpty,
+    assert(degraded.head.rows == -1L && degraded.head.minSeq.isEmpty,
       "hung footer must leave the entry stats-less, not fail the write")
     // verifier path (failFast): abort loudly, naming the stuck file
     val e = intercept[IllegalStateException] {
@@ -335,8 +343,9 @@ class DataSkippingSpec extends SparkSpec {
   }
 
   test("legacy manifests without the new fields parse with safe defaults") {
-    // the second entry carries the retired salt fields, which parse and
-    // are ignored: it is an ordinary key-range lookup candidate
+    // the second entry carries the retired key-bound and salt fields,
+    // which parse and are ignored: it is a candidate for every key of its
+    // bucket, inside the old key range or not
     val t = IceTable.create(tmpDir("legacy"), numBuckets = 4)
     val b = t.bucketOf("r", "k5")
     val legacy =
@@ -354,13 +363,44 @@ class DataSkippingSpec extends SparkSpec {
     assert(m.numBuckets == -1 && m.commitTimeMillis == -1L &&
       m.completeUntilSeq == Long.MinValue)
     val f = m.files.head
-    assert(f.minKey.isEmpty && f.maxKey.isEmpty && f.minSeq.isEmpty &&
-      f.maxSeq.isEmpty)
-    val salted = m.files(1)
-    assert(salted.bucket == b &&
-      salted.minKey.contains("r" + FileStats.KeySep + "k0") &&
-      salted.maxKey.contains("r" + FileStats.KeySep + "k9"))
-    assert(t.lookupFiles(spark, m, "r", "k5").contains(salted),
-      "an in-range key of its bucket must keep the file a candidate")
+    assert(f.minSeq.isEmpty && f.maxSeq.isEmpty)
+    val legacyBounded = m.files(1)
+    assert(legacyBounded.bucket == b && legacyBounded.rows == 10L)
+    val outside = Iterator.from(0).map(i => s"z$i")
+      .find(k => t.bucketOf("r", k) == b).get
+    Seq("k5", outside).foreach(k =>
+      assert(t.lookupFiles(spark, m, "r", k).contains(legacyBounded),
+        s"$k: the file must be a candidate for its bucket"))
+  }
+
+  test("lookups ignore key bounds a legacy manifest carries: each equals " +
+      "read().filter") {
+    // republish a real table's manifest with every file entry's key bounds
+    // set to a range that holds no stored key (a json edit, so the entries
+    // carry the bounds whatever the writer records): a lookup that pruned
+    // by them would answer nothing for every present key
+    val t = mixedVintage("lkplegacy")
+    val v = t.currentVersion()
+    import org.json4s._
+    val edited = org.json4s.jackson.JsonMethods.parse(snapJson(t.dir, v))
+      .transformField {
+        case ("version", _) => ("version", JInt(v + 1))
+        case ("parentVersion", _) => ("parentVersion", JInt(v))
+        case ("files", JArray(fs)) => ("files", JArray(fs.map {
+          case JObject(kv) => JObject(kv.filterNot { case (k, _) =>
+            k == "minKey" || k == "maxKey" } ++ List(
+            "minKey" -> JString("s\u0000a"), "maxKey" -> JString("s\u0000b")))
+          case other => other
+        }))
+      }
+    Files.write(Paths.get(f"${t.dir}/meta/snap-${v + 1}%08d.json"),
+      org.json4s.jackson.JsonMethods.compact(edited).getBytes("UTF-8"))
+    assert(t.currentVersion() == v + 1)
+    assert(snapJson(t.dir, v + 1).contains("minKey"))
+    val present = (0 until 40).map(i => f"k$i%02d")
+    assert(present.map(k => assertLookupAsRead(t, "r", k).length).sum == 39,
+      "every live key must answer its row (k01 is a tombstone)")
+    Seq("k00a", "zz").foreach(k =>
+      assert(assertLookupAsRead(t, "r", k).isEmpty))
   }
 }
