@@ -2,7 +2,7 @@ package graft.maintenance
 
 import graft.merge.Intervals
 import graft.model.{EpochManifest, EpochStats}
-import graft.table.IceTable
+import graft.table.{IceTable, SessionScope}
 import org.apache.spark.sql.{Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -87,9 +87,11 @@ object Compaction {
     val compactionEpochId = 1000000000L + parent.version
     val (packed, writeTasks) =
       IceTable.packBuckets(kept, buckets, parent.files)
-    val write = table.writeEpochFilesTimed(packed, compactionEpochId,
-      parent.schemaId, alignedByBucket = true,
-      nBuckets = table.bucketCountOf(Some(parent)))
+    def named[T](step: String)(f: => T): T = SessionScope.withJobDescription(
+      spark, s"graft compact v${parent.version} $step")(f)
+    val write = named("rewrite")(table.writeEpochFilesTimed(packed,
+      compactionEpochId, parent.schemaId, alignedByBucket = true,
+      nBuckets = table.bucketCountOf(Some(parent))))
 
     val metrics = org.apache.spark.sql.GraftSqlBridge
       .awaitObservation(spark, obs, "compaction-verifier")
@@ -121,9 +123,8 @@ object Compaction {
     require(writtenRows == keptRows,
       s"compaction verifier failed: rewrite observed $keptRows kept rows " +
         s"but published files hold $writtenRows; aborting (no commit)")
-    val liveAfter = table.readFiles(spark, counted, parent.schemaId)
-      .filter(!coalesce(col("deleted"), lit(false)))
-      .count()
+    val liveAfter = named("recount")(table.readFiles(spark, counted,
+      parent.schemaId).filter(!coalesce(col("deleted"), lit(false))).count())
     require(liveAfter == liveBefore,
       s"compaction verifier failed: live rows $liveBefore -> $liveAfter; " +
         "aborting (no commit)")

@@ -2,7 +2,8 @@ package graft.merge
 
 import graft.model._
 import graft.pipeline.{RowPolicies, TaskPolicies}
-import graft.table.{IceTable, LocalFs, SchemaRegistry}
+import graft.table.{AqeSafety, IceTable, LocalFs, SchemaRegistry,
+  SessionScope}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, GraftSqlBridge,
   Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -76,11 +77,15 @@ object MergeEngine {
   val Stages: Seq[String] =
     Seq("scope", "admit", "dedup", "claims", "layout", "write", "commit")
 
-  private final class StageClock {
+  /** Times each stage, and names every Spark job a stage starts
+    * `graft epoch <epochId> <stage>` (its `spark.job.description`). */
+  private final class StageClock(spark: SparkSession, epochId: Long) {
     private val nanos = scala.collection.mutable.Map(Stages.map(_ -> 0L): _*)
     def apply[T](stage: String)(f: => T): T = {
       val t0 = System.nanoTime()
-      try f finally nanos(stage) += System.nanoTime() - t0
+      try SessionScope.withJobDescription(spark,
+        s"graft epoch $epochId $stage")(f)
+      finally nanos(stage) += System.nanoTime() - t0
     }
     def millis: Seq[(String, Long)] = Stages.map(s => s -> nanos(s) / 1000000L)
   }
@@ -322,7 +327,7 @@ object MergeEngine {
       // LWW merge is STRICT (`u.seq > c.lastSeq`), so even a repeated
       // reprocess of the same survivor is a stale-drop, not a re-apply.
       admitClaimed: Boolean = false): EpochOutcome = {
-    val clock = new StageClock
+    val clock = new StageClock(spark, epochId)
     val (scope, restoreConfs) = clock("scope")(scopeConfs(spark, table,
       rawEvents.sparkSession, claimedRange))
     try {
@@ -368,18 +373,13 @@ object MergeEngine {
   private def scopeConfs(spark: SparkSession, table: IceTable,
       batchSession: SparkSession, claimedRange: Option[(Long, Long)])
       : (Scope, () => Unit) = {
-    // The merge join is co-partitioned on `bucket` ALONE (a function of the
-    // join key). Spark's default co-partition check demands ALL join keys,
-    // which would stack a second (repo,path)-keyed exchange on each side;
-    // relaxing it is safe — a subset of the join keys still co-locates
-    // equal keys. The two v2.bucketing confs make Catalyst honor the
-    // bucket-aligned scan's KeyGroupedPartitioning against the winner side
-    // laid out the same way (without `shuffle.enabled` EnsureRequirements
-    // re-shuffles BOTH sides). The excludedRules entry (merged PER SESSION
-    // with its own exclusions) keeps AQE's empty-relation propagation from
-    // pruning CollectMetrics out of a FULLY-FENCED epoch's empty plans, or
-    // its observations would never fire (see graft.table.AqeSafety).
-    val AqeKey = "spark.sql.adaptive.optimizer.excludedRules"
+    // The merge join is co-partitioned on `bucket` ALONE: it plans under
+    // the engine's storage-partitioned-join confs
+    // (`SessionScope.CoPartitionConfs`), so neither side needs an exchange.
+    // The excludedRules entry (merged PER SESSION with its own exclusions)
+    // keeps AQE's empty-relation propagation from pruning CollectMetrics out
+    // of a FULLY-FENCED epoch's empty plans, or its observations would never
+    // fire (see graft.table.AqeSafety).
     // TINY-EPOCH GATE: AQE's value (skew splitting, coalescing) grows with
     // data volume, but its cost (a re-planning round-trip and a separate job
     // per materialized exchange) is paid per STAGE. Measured on the c3
@@ -405,10 +405,7 @@ object MergeEngine {
         Seq("spark.sql.shuffle.partitions" ->
           math.max(1, math.min(nBuckets, cur)).toString)
       }
-    val scopedConfs = Seq(
-      "spark.sql.requireAllClusterKeysForCoPartition" -> "false",
-      "spark.sql.sources.v2.bucketing.enabled" -> "true",
-      "spark.sql.sources.v2.bucketing.shuffle.enabled" -> "true") ++
+    val scopedConfs = SessionScope.CoPartitionConfs ++
       (if (tiny) Seq("spark.sql.adaptive.enabled" -> "false") else Nil) ++
       tinyParts
     // Inside foreachBatch the batch Dataset is bound to the STREAM'S CLONED
@@ -417,16 +414,8 @@ object MergeEngine {
     // BOTH sessions (they share one SparkContext).
     val confSessions =
       if (batchSession eq spark) Seq(spark) else Seq(spark, batchSession)
-    val prevConfs = confSessions.flatMap(s =>
-      (scopedConfs.map(_._1) :+ AqeKey).map(k => (s, k, s.conf.getOption(k))))
-    confSessions.foreach { s =>
-      scopedConfs.foreach { case (k, v) => s.conf.set(k, v) }
-      s.conf.set(AqeKey, graft.table.AqeSafety.mergedExcludedRules(s))
-    }
-    val restore = () => prevConfs.foreach {
-      case (s, k, Some(v)) => s.conf.set(k, v)
-      case (s, k, None) => s.conf.unset(k)
-    }
+    val restore = SessionScope.setConfs(confSessions)(s =>
+      scopedConfs :+ AqeSafety.excludedRulesConf(s))
     (Scope(parent, nBuckets, tiny,
       spark.conf.get("spark.sql.adaptive.enabled").toBoolean), restore)
   }

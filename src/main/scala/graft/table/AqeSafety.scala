@@ -23,22 +23,19 @@ object AqeSafety {
 
   private val Key = "spark.sql.adaptive.optimizer.excludedRules"
 
-  /** current exclusions merged with [[EmptyRelationRule]] (preserves any
-    * user-configured exclusions) */
-  def mergedExcludedRules(spark: SparkSession): String =
-    (spark.conf.getOption(Key).toSeq.flatMap(_.split(","))
+  /** the exclusion-list conf entry for `spark`: its current exclusions
+    * merged with [[EmptyRelationRule]] (preserves any user-configured
+    * exclusions) */
+  def excludedRulesConf(spark: SparkSession): (String, String) =
+    Key -> (spark.conf.getOption(Key).toSeq.flatMap(_.split(","))
       .map(_.trim).filter(_.nonEmpty) :+ EmptyRelationRule)
       .distinct.mkString(",")
 
   /** run `f` with empty-relation propagation excluded; restores the
     * previous exclusion list on exit */
   def withObservationsSafe[T](spark: SparkSession)(f: => T): T = {
-    val prev = spark.conf.getOption(Key)
-    spark.conf.set(Key, mergedExcludedRules(spark))
-    try f
-    finally prev match {
-      case Some(v) => spark.conf.set(Key, v)
-      case None => spark.conf.unset(Key)
-    }
+    val restore =
+      SessionScope.setConfs(Seq(spark))(s => Seq(excludedRulesConf(s)))
+    try f finally restore()
   }
 }

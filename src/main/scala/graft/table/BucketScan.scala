@@ -41,9 +41,10 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
  *    mode), so predicate/dictionary/vectorized handling match the stock
  *    parquet source.
  *
- * Requires `spark.sql.sources.v2.bucketing.enabled=true` at planning time
- * (MergeEngine sets it for the epoch scope) for Catalyst to expose the
- * reported partitioning.
+ * Catalyst exposes the reported partitioning, and joins it without an
+ * exchange, under [[SessionScope.CoPartitionConfs]] at planning time: the
+ * merge and the version diff (`IceTable.changesBetween`) scope them around
+ * their own planning.
  */
 object BucketScan {
 

@@ -3,7 +3,8 @@ package graft.table
 import graft.model._
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path => HPath}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.catalyst.plans.physical.UnknownPartitioning
 import org.apache.spark.sql.functions._
 
 /**
@@ -330,7 +331,7 @@ final class IceTable(val dir: String, val defaultNumBuckets: Int) {
     val schema = BucketScan.canonicalSchema(
       m.fold(SchemaRegistry.baseSchemaId)(_.schemaId))
     val rows = m.toSeq.flatMap(lookupRows(spark, _, schema, repo, path))
-    org.apache.spark.sql.GraftSqlBridge.localDataFrame(spark, schema, rows)
+    GraftSqlBridge.localDataFrame(spark, schema, rows)
       .filter(!coalesce(col("deleted"), lit(false)))
       .drop("bucket", "lastSeq", "deleted")
   }
@@ -412,14 +413,19 @@ final class IceTable(val dir: String, val defaultNumBuckets: Int) {
     * not O(table): at 100 TB a "changes since yesterday" feed reads the
     * files recent epochs rewrote plus their direct predecessors, nothing
     * else. When both versions share a bucket layout the two sides are
-    * bucket-aligned DSv2 scans joined on (bucket, repo, path) — under the
-    * storage-partitioned-join confs (MergeEngine's scoped set:
-    * `spark.sql.sources.v2.bucketing.{enabled,shuffle.enabled}`,
-    * `requireAllClusterKeysForCoPartition=false`) the full-outer diff runs
-    * with ZERO exchanges; without them Catalyst falls back to a hash
-    * shuffle of just the changed-bucket rows. The aligned diff's bucket
-    * partitions are packed into one task per core
-    * ([[IceTable.packBuckets]]) unless the changed files' bytes need more.
+    * bucket-aligned DSv2 scans joined on (bucket, repo, path), and the diff
+    * scopes its own confs: it is planned HERE, under
+    * [[SessionScope.CoPartitionConfs]], whatever the caller's session sets,
+    * and the caller's confs are put back before it returns. The full-outer
+    * diff thus runs as ONE job with ZERO exchanges (at Spark's default
+    * `requireAllClusterKeysForCoPartition=true` it would hash-shuffle both
+    * sides' row images). The returned frame is a `LogicalRDD` over that
+    * planned RDD: its snapshot was fixed at the call anyway (both manifests
+    * are read eagerly), but a consumer's filters no longer push into the
+    * diff's scans. The aligned diff's bucket partitions are packed into one
+    * task per core ([[IceTable.packBuckets]]) unless the changed files'
+    * bytes need more. Versions with different bucket counts (across a
+    * rebucket) diff lazily on (repo, path) with a hash shuffle.
     * Tombstones purged below the safe horizon diff as (old tombstone,
     * absent) — not a user-visible change, correctly emitted as nothing.
     *
@@ -486,9 +492,14 @@ final class IceTable(val dir: String, val defaultNumBuckets: Int) {
         col("_o_img")).otherwise(col("_n_img")))
       .select(col("change_type") +: col("repo") +: col("path") +:
         nonKey.map(n => col(s"_img.$n").as(n)) :+ col("_n_seq").as("seq"): _*)
-    if (aligned) IceTable.packBuckets(changes, buckets.size,
-      oldOnly ++ newOnly)._1
-    else changes
+    if (!aligned) return changes
+    SessionScope.coPartitioned(spark) {
+      val packed = IceTable.packBuckets(changes, buckets.size,
+        oldOnly ++ newOnly)._1
+      val rdd = packed.queryExecution.toRdd
+      GraftSqlBridge.dataFrameWithPartitioning(spark, rdd, packed.schema,
+        _ => UnknownPartitioning(rdd.getNumPartitions))
+    }
   }
 
   /** Retention (SURVEY.md §2.9 cleaner analog; the reference's policy-driven
@@ -642,11 +653,9 @@ final class IceTable(val dir: String, val defaultNumBuckets: Int) {
     * size stays flat in bucket count (one BatchScan node; file lists ride
     * the serialized input partitions).
     *
-    * Requires at planning time (MergeEngine scopes them per epoch):
-    * `spark.sql.sources.v2.bucketing.enabled` and
-    * `spark.sql.sources.v2.bucketing.shuffle.enabled` true (the latter lets
-    * Catalyst accept co-partitioning against the laid-out side), plus
-    * `spark.sql.requireAllClusterKeysForCoPartition=false`. */
+    * A join over it plans without an exchange only under
+    * [[SessionScope.CoPartitionConfs]] at planning time; the merge and the
+    * version diff scope them around their own planning. */
   def readFilesBucketAligned(spark: SparkSession, files: Seq[DataFileEntry],
       targetSchemaId: Int = SchemaRegistry.baseSchemaId,
       buckets: Option[Seq[Int]] = None): DataFrame = {
@@ -682,8 +691,8 @@ final class IceTable(val dir: String, val defaultNumBuckets: Int) {
     * `alignedByBucket = true` skips the repartition when every bucket
     * already sits whole in one input partition (bucket-aligned MERGE or
     * compaction output, possibly packed by [[IceTable.packBuckets]]).
-    * Published entries carry footer stats (rows + key/seq min-max) from one
-    * pooled metadata pass — the skipping/verifier inputs. */
+    * Published entries carry footer stats (rows + lastSeq min-max) from one
+    * pooled metadata pass — the feed-pruning/verifier inputs. */
   def writeEpochFiles(df: DataFrame, epochId: Long,
       schemaId: Int = SchemaRegistry.baseSchemaId,
       alignedByBucket: Boolean = false,

@@ -14,7 +14,8 @@ import org.apache.spark.sql.types.StructType
   *     partitioning (`LogicalRDD`, the same internal Dataset.checkpoint
   *     uses) — lets a side whose physical layout already satisfies a
   *     distribution report it to Catalyst so downstream joins skip the
-  *     Exchange entirely (the key-grouped winner layout of the merge)
+  *     Exchange entirely (the key-grouped winner layout of the merge), or
+  *     that keeps a plan forced under scoped confs (the version diff)
   *   - DSv2 plumbing for the bucket scan: Spark's own parquet row reader,
   *     PartitionedFile construction, and DataFrame-over-Table wiring
   *   - a DataFrame over driver-held rows (`LocalRelation`), for the point

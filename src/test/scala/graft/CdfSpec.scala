@@ -3,13 +3,16 @@ package graft
 import graft.maintenance.Compaction
 import graft.merge.MergeEngine
 import graft.model.ChangeEvent
-import graft.table.IceTable
+import graft.table.{IceTable, SessionScope}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.sql.GraftSqlBridge
 
 /**
  * Change-data-feed between snapshot versions (IceTable.changesBetween):
  * insert/update/delete emission with correct images, invariance under
  * state-preserving rewrites (compaction, tombstone purge), file-diff
- * pruning, and the zero-exchange storage-partitioned diff plan.
+ * pruning, and the one-job, shuffle-free storage-partitioned diff at the
+ * caller's own confs.
  */
 class CdfSpec extends SparkSpec {
   import spark.implicits._
@@ -96,11 +99,13 @@ class CdfSpec extends SparkSpec {
       .intersect(mB.files.map(_.path).toSet)
     assert(common.nonEmpty, "untouched buckets must carry files forward")
     val df = t.changesBetween(spark, vA, vB)
-    // no common (carried-forward) file appears in the scan plan
-    val plan = df.queryExecution.analyzed.toString +
-      df.queryExecution.executedPlan.toString
-    common.foreach(p => assert(!plan.contains(p),
-      s"carried-forward file must not be scanned: $p"))
+    // no common (carried-forward) file is read: with every one of them gone
+    // from disk, reading one would fail the collect
+    common.foreach { p =>
+      val hp = new org.apache.hadoop.fs.Path(p)
+      assert(hp.getFileSystem(spark.sessionState.newHadoopConf())
+        .delete(hp, false), s"could not delete carried-forward file $p")
+    }
     val ch = df.collect().map(r =>
       (r.getAs[String]("change_type"), r.getAs[String]("path"))).toSet
     assert(ch == Set(("update", "p1")))
@@ -115,26 +120,34 @@ class CdfSpec extends SparkSpec {
     apply(t, 1, 32, 34,
       ev("u", 33, "r1", "p1", "V1b"), ev("d", 34, "r2", "p2", ""))
     val vB = t.currentVersion()
-    val confs = Seq(
-      "spark.sql.requireAllClusterKeysForCoPartition" -> "false",
-      "spark.sql.sources.v2.bucketing.enabled" -> "true",
-      "spark.sql.sources.v2.bucketing.shuffle.enabled" -> "true")
-    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
-      val df = t.changesBetween(spark, vA, vB)
-      val ch = df.collect().map(r =>
-        (r.getAs[String]("change_type"), r.getAs[String]("path"))).toSet
-      assert(ch == Set(("update", "p1"), ("delete", "p2")))
-      val plan = df.queryExecution.executedPlan.toString
-      assert(!plan.contains("Exchange"),
-        s"aligned version diff must need no exchange:\n$plan")
-      assert(plan.contains("graft-bucket-scan") ||
-        plan.contains("graft_bucket_aligned"),
-        s"both sides must be DSv2 bucket scans:\n$plan")
-    } finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
+    // the shared session's own confs: the diff must scope the SPJ confs
+    // itself, and leave every one of them as it found it
+    val keys = SessionScope.CoPartitionConfs.map(_._1)
+    val before = keys.map(k => k -> spark.conf.getOption(k))
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val shuffled = new java.util.concurrent.atomic.AtomicLong()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach(m =>
+          shuffled.addAndGet(m.shuffleWriteMetrics.bytesWritten))
     }
+    assert(GraftSqlBridge.drainListenerBus(spark, 10000L))
+    spark.sparkContext.addSparkListener(listener)
+    val ch = try {
+      val df = t.changesBetween(spark, vA, vB)
+      assert(keys.map(k => k -> spark.conf.getOption(k)) == before,
+        "changesBetween must restore the caller's confs")
+      val rows = df.collect().map(r =>
+        (r.getAs[String]("change_type"), r.getAs[String]("path"))).toSet
+      assert(GraftSqlBridge.drainListenerBus(spark, 10000L))
+      rows
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(ch == Set(("update", "p1"), ("delete", "p2")))
+    assert(jobs.get == 1 && shuffled.get == 0L,
+      s"aligned version diff: one job, no shuffle (jobs=${jobs.get} " +
+        s"shuffleWriteBytes=${shuffled.get})")
   }
 }

@@ -1,14 +1,18 @@
 package graft
 
+import graft.maintenance.Compaction
 import graft.merge.MergeEngine
 import graft.metrics.Metrics
 import graft.model.ChangeEvent
-import graft.table.IceTable
+import graft.table.{IceTable, SessionScope}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.GraftSqlBridge
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 
 /** Pluggable tracking-event emission (gobblin-metrics analog): post-commit
-  * events, reporter failure isolation, counter parity with EpochStats. */
+  * events, reporter failure isolation, counter parity with EpochStats, and
+  * the engine's named Spark jobs. */
 class MetricsSpec extends SparkSpec {
   import spark.implicits._
   private implicit val formats: Formats = DefaultFormats
@@ -144,6 +148,54 @@ class MetricsSpec extends SparkSpec {
         e._2 == "EpochCommitted" && e._3("table") == mir.dir),
         "the mirror commits no engine epoch")
     } finally Metrics.clearReporters()
+  }
+
+  test("every Spark job an epoch or a compaction starts is named after " +
+      "its stage; the caller's job description comes back") {
+    val t = IceTable.create(tmpDir("mdesc"), numBuckets = 4)
+    MergeEngine.applyEpoch(spark, t,
+      (0 until 40).map(i => ev("i", i.toLong, s"p$i", s"v$i")).toDS(), 0,
+      nLogPartitions = 2, claimedRange = Some((-1L, 39L)))
+    val in1 = (0 until 8).map(i => ev("u", 40L + i, s"p$i", s"w$i")).toDS()
+    val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        descs.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty(SessionScope.JobDescriptionKey)))
+          .getOrElse("")); ()
+      }
+    }
+    def described(body: => Unit): Seq[String] = {
+      import scala.jdk.CollectionConverters._
+      assert(GraftSqlBridge.drainListenerBus(spark, 10000L))
+      descs.clear()
+      body
+      assert(GraftSqlBridge.drainListenerBus(spark, 10000L))
+      descs.asScala.toSeq
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    sc.setJobDescription("caller")
+    try {
+      val epoch = described {
+        MergeEngine.applyEpoch(spark, t, in1, 1, nLogPartitions = 2,
+          claimedRange = Some((39L, 47L))); ()
+      }
+      assert(sc.getLocalProperty(SessionScope.JobDescriptionKey) == "caller")
+      val stages = MergeEngine.Stages.toSet
+      assert(epoch.nonEmpty && epoch.forall(d =>
+        d.startsWith("graft epoch 1 ") &&
+          stages(d.stripPrefix("graft epoch 1 "))), s"$epoch")
+      assert(epoch.contains("graft epoch 1 write"), s"$epoch")
+      val version = t.currentVersion()
+      val compact = described { Compaction.compact(spark, t); () }
+      assert(sc.getLocalProperty(SessionScope.JobDescriptionKey) == "caller")
+      assert(compact.toSet == Set(s"graft compact v$version rewrite",
+        s"graft compact v$version recount"), s"$compact")
+    } finally {
+      sc.setJobDescription(null)
+      sc.removeSparkListener(listener)
+    }
   }
 
   test("a throwing reporter never fails the pipeline; later reporters " +

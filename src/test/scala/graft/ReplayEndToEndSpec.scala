@@ -308,13 +308,6 @@ class ReplayEndToEndSpec extends SparkSpec {
       epochWriteTasks: Int, epochFilesWritten: Int, feedPartitions: Int,
       compactWriteTasks: Int)
 
-  /** Run the three packed stages on a 32-bucket table: a 3600-event
-    * preload onto the empty target (not packed), a 400-event aligned epoch,
-    * `changesBetween` over that epoch, and a full compaction, with `confs`
-    * set from the aligned epoch on. Every answer is checked on the way: the
-    * table against the oracle fold after the epoch and after the compaction,
-    * the feed against the diff of the two `readAt` views, one file per
-    * bucket after the compaction. */
   /** Replace every metrics reporter with one that collects the events into
     * the returned list; the caller clears the reporters when done. */
   private def captureEvents()
@@ -329,18 +322,19 @@ class ReplayEndToEndSpec extends SparkSpec {
     seen
   }
 
+  /** Run the three packed stages on a 32-bucket table: a 3600-event
+    * preload onto the empty target (not packed), a 400-event aligned epoch,
+    * `changesBetween` over that epoch, and a full compaction, with `confs`
+    * set from the aligned epoch on. Every answer is checked on the way: the
+    * table against the oracle fold after the epoch and after the compaction,
+    * the feed against the diff of the two `readAt` views, one file per
+    * bucket after the compaction. */
   private def packedStages(label: String,
       confs: Seq[(String, String)]): Packed = {
     import spark.implicits._
     import graft.metrics.Metrics
     val seen = captureEvents()
-    // the storage-partitioned-join confs let the feed's diff run aligned
-    // outside applyEpoch (which scopes its own)
-    val all = confs ++ Seq(
-      "spark.sql.requireAllClusterKeysForCoPartition" -> "false",
-      "spark.sql.sources.v2.bucketing.enabled" -> "true",
-      "spark.sql.sources.v2.bucketing.shuffle.enabled" -> "true")
-    val prev = all.map { case (k, _) => k -> spark.conf.getOption(k) }
+    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
     try {
       val t = IceTable.create(tmpDir(label), numBuckets = 32)
       val sp = spec.copy(seed = 53L, nEvents = 4000)
@@ -348,7 +342,7 @@ class ReplayEndToEndSpec extends SparkSpec {
       val (pre, tiny) = (evs.take(3600), evs.slice(3600, 4000))
       MergeEngine.applyEpoch(spark, t, pre.toDS(), 0, nLogPartitions = 4,
         claimedRange = Some((-1L, 3599L)))
-      all.foreach { case (k, v) => spark.conf.set(k, v) }
+      confs.foreach { case (k, v) => spark.conf.set(k, v) }
       val out = MergeEngine.applyEpoch(spark, t, tiny.toDS(), 1,
         nLogPartitions = 4, claimedRange = Some((3599L, 3999L)))
       val v = out.manifest.version
