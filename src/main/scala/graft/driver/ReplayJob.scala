@@ -212,18 +212,7 @@ object ReplayJob {
       nLogPartitions: Int = 32,
       stateDir: Option[String] = None,
       viewName: Option[String] = None): Seq[EpochReport] = {
-    // Clamp every epoch's hi to the real top seq and drop empty slices: when
-    // nEpochs*per over-covers the span (per rounds up to 1 with more epochs
-    // than events), an unclamped middle epoch would claim — and permanently
-    // fence — seqs that were never observed (and the generator slice would
-    // even fabricate events past nEvents).
-    val per = math.max(1L, spec.nEvents / nEpochs)
-    val top = spec.nEvents - 1
-    val ranges = (0 until nEpochs).map { e =>
-      val lo = math.min(e * per - 1, top) // (lo, hi] with seq starting at 0
-      val hi = if (e == nEpochs - 1) top else math.min((e + 1) * per - 1, top)
-      (e.toLong, lo, hi)
-    }.filter { case (_, lo, hi) => lo < hi }
+    val ranges = epochRanges(0L, spec.nEvents - 1, nEpochs)
     val byId = ranges.map(r => r._1 -> r).toMap
     import spark.implicits._
     // Expression-built slices (bit-identical to eventAt — GeneratorParity
@@ -240,6 +229,23 @@ object ReplayJob {
     run(spark, table, slice, ranges, nLogPartitions, stateDir, viewName)
   }
 
+  /** `nEpochs` equal `(lo, hi]` epoch slices `(epochId, lo, hi)` of the
+    * seqs `[first, last]`. Every hi is clamped to `last` and empty slices
+    * are dropped: when nEpochs*per over-covers the span (per rounds up to 1
+    * with more epochs than events), an unclamped middle epoch would claim —
+    * and permanently fence — seqs that were never observed (and the
+    * generator slice would even fabricate events past the log's end). */
+  private def epochRanges(first: Long, last: Long,
+      nEpochs: Int): Seq[(Long, Long, Long)] = {
+    val per = math.max(1L, (last - first + 1) / nEpochs)
+    (0 until nEpochs).map { e =>
+      val lo = math.min(first + e * per - 1, last)
+      val hi = if (e == nEpochs - 1) last
+               else math.min(first + (e + 1) * per - 1, last)
+      (e.toLong, lo, hi)
+    }.filter { case (_, lo, hi) => lo < hi }
+  }
+
   /** Replay from a materialized parquet change log (the "binlog" on disk).
     * Slices prune on `seq` (range-partitioned files → row-group pruning). */
   def replayParquetLog(
@@ -253,17 +259,7 @@ object ReplayJob {
     val bounds = spark.read.parquet(logDir)
       .agg(min($"seq").as("lo"), max($"seq").as("hi")).head()
     if (bounds.isNullAt(0)) return Seq.empty // empty log: nothing to replay
-    val (loAll, hiAll) = (bounds.getLong(0), bounds.getLong(1))
-    val n = hiAll - loAll + 1
-    val per = math.max(1L, n / nEpochs)
-    // clamp to hiAll + drop empty slices (see replayGenerated): an epoch must
-    // never claim a seq range beyond what the log actually contains.
-    val ranges = (0 until nEpochs).map { e =>
-      val lo = math.min(loAll + e * per - 1, hiAll)
-      val hi = if (e == nEpochs - 1) hiAll
-               else math.min(loAll + (e + 1) * per - 1, hiAll)
-      (e.toLong, lo, hi)
-    }.filter { case (_, lo, hi) => lo < hi }
+    val ranges = epochRanges(bounds.getLong(0), bounds.getLong(1), nEpochs)
     val byId = ranges.map(r => r._1 -> r).toMap
     def slice(epochId: Long): Dataset[ChangeEvent] = {
       val (_, lo, hi) = byId(epochId)

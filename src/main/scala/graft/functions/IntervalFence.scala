@@ -11,9 +11,9 @@ import org.apache.spark.sql.types.{BooleanType, DataType, IntegerType, LongType}
  * native codegen expression: `intervalInside(logPart, seq)` is true iff
  * `seq` lies inside one of the partition's committed `(lo, hi]` intervals.
  *
- * MergeEngine's replay fence compiles small interval sets into a plain
- * Column tree; past the plan-size threshold it switches to a binary search
- * over this flattened index. The r3 version did that search inside a scalar
+ * MergeEngine's replay fence (`admit`) always filters through this
+ * expression, whatever the interval count: a binary search over the
+ * flattened index. The r3 version did that search inside a scalar
  * `udf(...)` — right algorithm, but a boxed per-row call that broke
  * whole-stage codegen on the hot filter for exactly the histories that are
  * gap-dense. This expression keeps the search (O(log n) per row, constant

@@ -9,6 +9,7 @@ import org.apache.spark.sql.connector.expressions.{Expressions, Transform}
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.read.partitioning.{KeyGroupedPartitioning => ConnectorKeyGroupedPartitioning, Partitioning => ConnectorPartitioning}
 import org.apache.spark.sql.execution.datasources.PartitionedFile
+import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
@@ -40,6 +41,11 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
  *    (`ParquetFileFormat.buildReaderWithPartitionValues`, row-returning
  *    mode), so predicate/dictionary/vectorized handling match the stock
  *    parquet source.
+ *  - It is the engine's ONE reader of manifest files: `IceTable.readFiles`
+ *    (packed), the merge target, the version diff, the point lookup, the
+ *    change feed and the SQL catalog all scan through it, so the column-id
+ *    rule is written once. Its [[Builder]] takes column pruning and
+ *    filter pushdown.
  *
  * Catalyst exposes the reported partitioning, and joins it without an
  * exchange, under [[SessionScope.CoPartitionConfs]] at planning time: the
@@ -58,16 +64,25 @@ object BucketScan {
       new GenericInternalRow(Array[Any](bucket))
   }
 
+  /** the physical columns, in canonical order: `bucket` is the partition
+    * value the reader appends (never decoded, so never pruned), `lastSeq`
+    * and `deleted` are stored in every file */
+  private val physical: Seq[StructField] = Seq(
+    StructField("bucket", IntegerType, nullable = false),
+    StructField("lastSeq", LongType, nullable = true),
+    StructField("deleted", BooleanType, nullable = true))
+
   /** per-row evolution: reader output layout is
-    * [vintage logical cols..., lastSeq, deleted, bucket]; project to the
-    * canonical [target cols..., bucket, lastSeq, deleted] with column-id
-    * matched rename / widen cast / null-fill (bound expressions — built on
-    * the driver, codegen'd on the executor via UnsafeProjection). */
-  private def evolveExprs(vintage: SchemaDef, target: SchemaDef): Seq[Expression] = {
+    * [vintage logical cols..., stored physical cols..., bucket]; project to
+    * the scan layout [target cols..., `phys`] with column-id matched
+    * rename / widen cast / null-fill (bound expressions — built on the
+    * driver, codegen'd on the executor via UnsafeProjection). */
+  private def evolveExprs(vintage: SchemaDef, target: SchemaDef,
+      phys: Seq[StructField]): Seq[Expression] = {
     val inTypes: Seq[(String, DataType)] =
-      vintage.columns.map(c => c.name -> sparkType(c.dataType)) ++
-        Seq("lastSeq" -> LongType, "deleted" -> BooleanType,
-          "bucket" -> IntegerType)
+      (vintage.columns.map(c => c.name -> sparkType(c.dataType)) ++
+        stored(phys).map(f => f.name -> f.dataType)) :+
+        ("bucket" -> IntegerType)
     val ord: Map[String, Int] = inTypes.map(_._1).zipWithIndex.toMap
     def ref(name: String): Expression =
       BoundReference(ord(name), inTypes(ord(name))._2, nullable = true)
@@ -78,29 +93,32 @@ object BucketScan {
         case Some(oc) => Cast(ref(oc.name), sparkType(tc.dataType), None)
         case None => Literal(null, sparkType(tc.dataType))
       }
-    } ++ Seq(ref("bucket"), ref("lastSeq"), ref("deleted"))
+    } ++ phys.map(f => ref(f.name))
   }
+
+  private def stored(phys: Seq[StructField]): Seq[StructField] =
+    phys.filterNot(_.name == "bucket")
 
   private def sparkType(t: String): DataType = SchemaRegistry.sparkType(t)
 
   /** Rewrite pushdown filters from TARGET column names to one vintage's
     * WRITTEN names (colId-matched). A leaf referencing a column the vintage
-    * lacks (added later) or stores at a different type (widened since)
-    * cannot be pushed for that vintage and is DROPPED — always safe under
+    * lacks (added later) or stores at a different type (widened since),
+    * or naming `bucket` (a partition value, not stored), cannot be pushed
+    * for that vintage and is DROPPED — always safe under
     * And (weakens to a superset) and handled both-or-none under Or; Not is
     * never pushed (dropping inside a negation would strengthen it). The
     * scan contract stays: pushed filters are IO hints, the engine/Spark
     * re-evaluates them on returned rows. */
-  private[table] def translateFilters(
-      fs: Seq[org.apache.spark.sql.sources.Filter], target: SchemaDef,
-      vintage: SchemaDef): Seq[org.apache.spark.sql.sources.Filter] = {
+  private[table] def translateFilters(fs: Seq[Filter], target: SchemaDef,
+      vintage: SchemaDef): Seq[Filter] = {
     import org.apache.spark.sql.sources._
     val old = vintage.byColId
     val mapped: Map[String, String] = target.columns.flatMap { tc =>
       old.get(tc.colId).collect {
         case oc if oc.dataType == tc.dataType => tc.name -> oc.name
       }
-    }.toMap
+    }.toMap ++ stored(physical).map(f => f.name -> f.name)
     def tr(f: Filter): Option[Filter] = f match {
       case And(l, r) => (tr(l), tr(r)) match {
         case (Some(a), Some(b)) => Some(And(a, b))
@@ -123,22 +141,15 @@ object BucketScan {
     fs.flatMap(tr)
   }
 
-  /** the parquet file schema a given vintage was written with */
-  private[table] def fileReadSchema(vintage: SchemaDef): StructType =
-    StructType(vintage.columns.map(c =>
-      StructField(c.name, sparkType(c.dataType), nullable = true)) ++ Seq(
-      StructField("lastSeq", LongType, nullable = true),
-      StructField("deleted", BooleanType, nullable = true)))
+  /** `target` cols then the physical cols `phys`: a scan's output, or
+    * (with the stored `phys` only) the file columns it reads */
+  private def layout(target: SchemaDef, phys: Seq[StructField]): StructType =
+    StructType(target.columns.map(c =>
+      StructField(c.name, sparkType(c.dataType), nullable = true)) ++ phys)
 
-  /** canonical scan output: target cols then physical cols */
-  def canonicalSchema(targetSchemaId: Int): StructType = {
-    val t = SchemaRegistry.schemaFor(targetSchemaId)
-    StructType(t.columns.map(c =>
-      StructField(c.name, sparkType(c.dataType), nullable = true)) ++ Seq(
-      StructField("bucket", IntegerType, nullable = false),
-      StructField("lastSeq", LongType, nullable = true),
-      StructField("deleted", BooleanType, nullable = true)))
-  }
+  /** canonical (unpruned) scan output: target cols then physical cols */
+  def canonicalSchema(targetSchemaId: Int): StructType =
+    layout(SchemaRegistry.schemaFor(targetSchemaId), physical)
 
   private final class BucketReaderFactory(
       readers: Map[Int, PartitionedFile => Iterator[InternalRow]],
@@ -166,38 +177,75 @@ object BucketScan {
     }
   }
 
-  private final class GraftBucketScan(
-      scanSchema: StructType,
-      parts: Array[InputPartition],
+  /** A planned scan: its output schema, input partitions and readers. */
+  final case class ScanParts(schema: StructType, parts: Array[InputPartition],
       factory: PartitionReaderFactory)
+
+  private final class GraftBucketScan(sp: ScanParts, pushed: Seq[Filter])
       extends Scan with Batch with SupportsReportPartitioning {
-    override def readSchema(): StructType = scanSchema
+    override def readSchema(): StructType = sp.schema
     override def toBatch: Batch = this
-    override def planInputPartitions(): Array[InputPartition] = parts
-    override def createReaderFactory(): PartitionReaderFactory = factory
+    override def planInputPartitions(): Array[InputPartition] = sp.parts
+    override def createReaderFactory(): PartitionReaderFactory = sp.factory
     override def outputPartitioning(): ConnectorPartitioning =
       new ConnectorKeyGroupedPartitioning(
-        Array(Expressions.identity("bucket")), parts.length)
-    override def description(): String =
-      s"graft-bucket-scan[${parts.length} buckets]"
+        Array(Expressions.identity("bucket")), sp.parts.length)
+    override def description(): String = {
+      val nFiles = sp.parts.collect {
+        case p: BucketInputPartition => p.files.size
+      }.sum
+      s"graft-bucket-scan[${sp.parts.length} buckets, $nFiles files, " +
+        s"cols=${sp.schema.fieldNames.mkString(",")}" +
+        (if (pushed.nonEmpty) s", pushed=${pushed.mkString(",")}" else "") +
+        "]"
+    }
   }
 
-  private final class GraftBucketTable(
-      scanSchema: StructType,
-      parts: Array[InputPartition],
-      factory: PartitionReaderFactory)
+  /** The one scan builder over manifest files: column pruning and filter
+    * pushdown, then [[scanParts]] at `build`. Parquet skipping is
+    * BEST-EFFORT (row groups / pages): every filter is handed to the
+    * readers as an IO hint AND returned to Spark as a post-scan filter, so
+    * correctness never depends on the push (the stock parquet V2 source's
+    * contract). One input partition per bucket in `buckets` (buckets
+    * without files get an empty partition). The SQL catalog wraps the same
+    * builder (GraftSqlTable). */
+  final class Builder(spark: SparkSession,
+      files: Seq[DataFileEntry], buckets: Seq[Int], targetSchemaId: Int)
+      extends ScanBuilder with SupportsPushDownRequiredColumns
+      with SupportsPushDownFilters {
+    private var required: Option[Seq[String]] = None
+    private var pushed: Array[Filter] = Array.empty
+
+    override def pruneColumns(requiredSchema: StructType): Unit =
+      required = Some(requiredSchema.fieldNames.toSeq)
+    override def pushFilters(filters: Array[Filter]): Array[Filter] = {
+      pushed = filters
+      filters
+    }
+    override def pushedFilters(): Array[Filter] = pushed
+    override def build(): Scan = new GraftBucketScan(scanParts(spark, files,
+      buckets, targetSchemaId, required, pushed.toSeq), pushed.toSeq)
+  }
+
+  /** the buckets `files` occupy, ascending; bucket 0 alone when there are
+    * none (an empty scan still plans one, empty, partition) */
+  def occupiedBuckets(files: Seq[DataFileEntry]): Seq[Int] =
+    files.map(_.bucket).distinct.sorted match {
+      case Seq() => Seq(0)
+      case bs => bs
+    }
+
+  private final class GraftBucketTable(spark: SparkSession,
+      files: Seq[DataFileEntry], buckets: Seq[Int], targetSchemaId: Int)
       extends Table with SupportsRead {
     override def name(): String = "graft_bucket_aligned"
-    override def schema(): StructType = scanSchema
+    override def schema(): StructType = canonicalSchema(targetSchemaId)
     override def partitioning(): Array[Transform] =
       Array(Expressions.identity("bucket"))
     override def capabilities(): java.util.Set[TableCapability] =
       java.util.EnumSet.of(TableCapability.BATCH_READ)
     override def newScanBuilder(opts: CaseInsensitiveStringMap): ScanBuilder =
-      new ScanBuilder {
-        override def build(): Scan =
-          new GraftBucketScan(scanSchema, parts, factory)
-      }
+      new Builder(spark, files, buckets, targetSchemaId)
   }
 
   /**
@@ -206,58 +254,53 @@ object BucketScan {
    * the partition-value universe matches the other join side exactly).
    */
   def read(spark: SparkSession, files: Seq[DataFileEntry],
-           buckets: Seq[Int], targetSchemaId: Int): DataFrame = {
-    val (parts, factory) = scanParts(spark, files, buckets, targetSchemaId)
+           buckets: Seq[Int], targetSchemaId: Int): DataFrame =
     GraftSqlBridge.dataFrameFromV2Table(spark,
-      new GraftBucketTable(canonicalSchema(targetSchemaId), parts, factory))
-  }
+      new GraftBucketTable(spark, files, buckets, targetSchemaId))
 
-  /** The (input partitions, reader factory) pair behind [[read]] — also the
-    * building block for the SQL catalog's table scans (GraftSparkCatalog),
-    * which wrap the same canonical-row readers in a user-view projection.
-    * Rows come out in the canonical layout
+  /** The planned scan behind [[Builder]] — also read directly by the point
+    * lookup and the change feed. Rows come out in the layout
     * `[target cols..., bucket, lastSeq, deleted]`.
     *
-    * `requiredCols` prunes the TARGET column set (canonical layout becomes
-    * `[required cols..., bucket, lastSeq, deleted]`) AND the per-vintage
-    * parquet read schemas (matched by colId) — a 2-column SQL projection
-    * decodes 2 columns, not the table. `pushedFilters` (in target column
-    * names) are translated per vintage (rename-aware via colId; dropped
-    * where the vintage lacks the column or widened its type) and pushed
-    * into the parquet readers for row-group / page skipping —
-    * best-effort IO pruning only, callers still evaluate the predicates. */
+    * `requiredCols` prunes that layout to the named columns (order kept;
+    * `bucket` always stays) AND the per-vintage parquet read schemas
+    * (matched by colId) — a 2-column projection decodes 2 columns, not the
+    * table. `pushedFilters` (in target column names) are translated per
+    * vintage (rename-aware via colId; dropped where the vintage lacks the
+    * column or widened its type) and pushed into the parquet readers for
+    * row-group / page skipping — best-effort IO pruning only, callers
+    * still evaluate the predicates. */
   def scanParts(spark: SparkSession, files: Seq[DataFileEntry],
                 buckets: Seq[Int], targetSchemaId: Int,
                 requiredCols: Option[Seq[String]] = None,
-                pushedFilters: Seq[org.apache.spark.sql.sources.Filter] = Nil)
-      : (Array[InputPartition], PartitionReaderFactory) = {
+                pushedFilters: Seq[Filter] = Nil): ScanParts = {
     require(buckets.nonEmpty, "bucket-aligned scan needs at least one bucket")
     val sortedBuckets = buckets.distinct.sorted
     val byBucket = files.groupBy(_.bucket)
     require(byBucket.keySet.subsetOf(sortedBuckets.toSet),
       s"files outside the declared bucket set: " +
         s"${byBucket.keySet -- sortedBuckets.toSet}")
+    val keep: String => Boolean =
+      requiredCols.fold((_: String) => true)(_.toSet)
     val fullTarget = SchemaRegistry.schemaFor(targetSchemaId)
-    val target = requiredCols match {
-      case Some(names) =>
-        val keep = names.toSet
-        SchemaDef(fullTarget.id, fullTarget.columns.filter(c => keep(c.name)))
-      case None => fullTarget
-    }
+    val target =
+      SchemaDef(fullTarget.id, fullTarget.columns.filter(c => keep(c.name)))
+    val phys = physical.filter(f => f.name == "bucket" || keep(f.name))
     val neededIds = target.columns.map(_.colId).toSet
-    def pruneVintage(v: SchemaDef): SchemaDef =
-      if (requiredCols.isEmpty) v
-      else SchemaDef(v.id, v.columns.filter(c => neededIds(c.colId)))
+    def pruned(sid: Int): SchemaDef = {
+      val v = SchemaRegistry.schemaFor(sid)
+      SchemaDef(v.id, v.columns.filter(c => neededIds(c.colId)))
+    }
     val vintages = files.map(_.schemaId).distinct
     val readers = vintages.map { sid =>
-      val vintage = SchemaRegistry.schemaFor(sid)
       sid -> GraftSqlBridge.parquetReaderFunction(spark,
-        fileReadSchema(pruneVintage(vintage)),
-        StructType(Seq(StructField("bucket", IntegerType, nullable = false))),
-        translateFilters(pushedFilters, target, vintage))
+        layout(pruned(sid), stored(phys)),
+        StructType(physical.take(1)),
+        translateFilters(pushedFilters, fullTarget,
+          SchemaRegistry.schemaFor(sid)))
     }.toMap
     val projections = vintages.map { sid =>
-      sid -> evolveExprs(pruneVintage(SchemaRegistry.schemaFor(sid)), target)
+      sid -> evolveExprs(pruned(sid), target, phys)
     }.toMap
     // resolve unknown lengths (legacy manifests record bytes = -1) — a
     // PartitionedFile's length bounds the read, so 0 would read nothing
@@ -274,6 +317,7 @@ object BucketScan {
         .map(f => FileSpec(f.path, len(f), f.schemaId)))
         : InputPartition
     }.toArray
-    (parts, new BucketReaderFactory(readers, projections))
+    ScanParts(layout(target, phys), parts,
+      new BucketReaderFactory(readers, projections))
   }
 }

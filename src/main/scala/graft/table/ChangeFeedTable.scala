@@ -18,10 +18,10 @@ import org.apache.spark.unsafe.types.UTF8String
  * The table's commit log AS A TABLE: `<catalog>.<table>.changes` — the
  * streaming half of the engine's CDC-distribution role (the reference
  * publishes change streams for downstream consumers; here a downstream
- * Spark job simply does
- * `spark.readStream.table("graft.commits.changes")` and tails every
- * committed snapshot). Batch reads of the same identifier return the feed
- * from the table origin to the current snapshot.
+ * Spark job simply runs `readStream.table("graft.commits.changes")` on its
+ * session and tails every committed snapshot). Batch reads of the same
+ * identifier return the feed from the table origin to the current
+ * snapshot.
  *
  * Feed rows are CHANGE-EVENT SHAPED — `op` ('u' upsert / 'd' delete),
  * `seq`, then the user columns (the applied image; tombstones carry the
@@ -235,10 +235,12 @@ private object ChangeFeedScan {
           Seq(sch.byColId(1).name, sch.byColId(2).name)
         }
         val buckets = (removed ++ added).map(_.bucket).distinct.sorted
-        val (oldParts, oldFac) = BucketScan.scanParts(spark, removed,
-          buckets, schemaId, requiredCols = Some(keyNames))
-        val (newParts, newFac) = BucketScan.scanParts(spark, added,
-          buckets, schemaId, requiredCols = Some(keyNames))
+        val synthCols = Some(keyNames ++ Seq("lastSeq", "deleted"))
+        val oldScan = BucketScan.scanParts(spark, removed, buckets, schemaId,
+          requiredCols = synthCols)
+        val newScan = BucketScan.scanParts(spark, added, buckets, schemaId,
+          requiredCols = synthCols)
+        val (oldParts, newParts) = (oldScan.parts, newScan.parts)
         val sameLayout =
           t.bucketCountOf(Some(a)) == t.bucketCountOf(Some(b))
         val pairs: Seq[InputPartition] =
@@ -261,7 +263,7 @@ private object ChangeFeedScan {
               })
             Seq(FeedSynthPartition(merge(oldParts), merge(newParts)))
           }
-        (pairs, Some((oldFac, newFac)))
+        (pairs, Some((oldScan.factory, newScan.factory)))
       }
     }
 
@@ -270,8 +272,9 @@ private object ChangeFeedScan {
     val (parts, inner) =
       if (files.isEmpty) (Array.empty[InputPartition], EmptyFeedFactory)
       else {
-        val buckets = files.map(_.bucket).distinct.sorted
-        BucketScan.scanParts(spark, files, buckets, schemaId)
+        val scan = BucketScan.scanParts(spark, files,
+          BucketScan.occupiedBuckets(files), schemaId)
+        (scan.parts, scan.factory)
       }
     val factory = new FeedFactory(inner, BucketScan.canonicalSchema(schemaId),
       ChangeFeed.mergedFence(mStart), toVersion, schemaId,
@@ -418,7 +421,7 @@ private final case class FeedSynthPartition(
 /** Wraps canonical-row readers `[user..., bucket, lastSeq, deleted]` into
   * feed rows `[op, seq, user..., _commit_version, _schema_id]`, dropping
   * rows whose seq the START version already committed (carried, not
-  * changed). Fence test is a binary search over the merged interval array;
+  * changed). Fence test is [[ChangeFeed.spanFenced]] over one seq;
   * the projection is a codegen'd UnsafeProjection built on the executor.
   * Also serves [[FeedSynthPartition]]s: live keys of the removed files not
   * present in the end version's new files emit `'d'` rows with NULL
@@ -433,18 +436,6 @@ private final class FeedFactory(inner: PartitionReaderFactory,
   private val nUser = canonical.length - 3
   private val lastSeqIdx = canonical.length - 2
   private val deletedIdx = canonical.length - 1
-
-  private def fenced(seq: Long): Boolean = {
-    var lo = 0; var hi = fence.length - 1
-    while (lo <= hi) {
-      val mid = (lo + hi) >>> 1
-      val (flo, fhi) = fence(mid)
-      if (seq <= flo) hi = mid - 1
-      else if (seq > fhi) lo = mid + 1
-      else return true // flo < seq <= fhi
-    }
-    false
-  }
 
   private def metaLits: Seq[Expression] = Seq(
     Literal(endVersion, LongType), Literal(schemaId, IntegerType))
@@ -473,7 +464,10 @@ private final class FeedFactory(inner: PartitionReaderFactory,
       override def next(): Boolean = {
         while (in.next()) {
           val r = in.get()
-          val carried = !r.isNullAt(lastSeqIdx) && fenced(r.getLong(lastSeqIdx))
+          val carried = !r.isNullAt(lastSeqIdx) && {
+            val s = r.getLong(lastSeqIdx)
+            ChangeFeed.spanFenced(fence, s, s)
+          }
           if (!carried) { cur = proj(r); return true }
         }
         false

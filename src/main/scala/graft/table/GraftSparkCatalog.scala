@@ -10,7 +10,8 @@ import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, Un
 import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.sources.Filter
+import org.apache.spark.sql.types.{BooleanType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /**
@@ -36,7 +37,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
  * list), so concurrent commits never tear a running query.
  *
  * Reads are the user view (tombstones filtered, physical columns hidden)
- * served by the same canonical-row readers as [[BucketScan]] — mixed
+ * served by [[BucketScan]]'s own scan builder, narrowed per row — mixed
  * schema-vintage files are evolved per file by column-id projection, and
  * the scan is one DSv2 Batch with one input partition per occupied bucket
  * (driver plan size flat in bucket count). Time travel maps to the
@@ -169,8 +170,8 @@ private[table] final class GraftSqlTable(tableName: String, t: IceTable,
 
   private val schemaId =
     m.map(_.schemaId).getOrElse(SchemaRegistry.baseSchemaId)
-  private val canonical = BucketScan.canonicalSchema(schemaId)
-  private val userSchema = StructType(canonical.dropRight(3))
+  private val userSchema =
+    StructType(BucketScan.canonicalSchema(schemaId).dropRight(3))
 
   override def name(): String = tableName
   override def schema(): StructType = userSchema
@@ -207,92 +208,59 @@ private[table] final class GraftSqlTable(tableName: String, t: IceTable,
     }
   }
 
-  override def newScanBuilder(opts: CaseInsensitiveStringMap): ScanBuilder =
+  /** the bucket scan's own builder over this snapshot's files, one input
+    * partition per occupied bucket, asked for `deleted` besides the user's
+    * columns; its rows are then narrowed to the user view */
+  override def newScanBuilder(opts: CaseInsensitiveStringMap): ScanBuilder = {
+    val files = m.map(_.files).getOrElse(Nil)
+    val inner = new BucketScan.Builder(SparkSession.active, files,
+      BucketScan.occupiedBuckets(files), schemaId)
     new ScanBuilder with SupportsPushDownRequiredColumns
         with SupportsPushDownFilters {
-      private var required: Option[Seq[String]] = None
-      private var pushed: Array[org.apache.spark.sql.sources.Filter] =
-        Array.empty
+      private var user = userSchema
 
-      override def pruneColumns(requiredSchema: StructType): Unit =
-        required = Some(requiredSchema.fieldNames.toSeq)
-
-      /** parquet skipping is BEST-EFFORT (row groups / pages):
-        * every filter is handed to the readers as an IO hint AND returned
-        * here as a post-scan filter, so correctness never depends on the
-        * push (the stock parquet V2 source's contract). */
-      override def pushFilters(
-          filters: Array[org.apache.spark.sql.sources.Filter])
-          : Array[org.apache.spark.sql.sources.Filter] = {
-        pushed = filters
-        filters
+      override def pruneColumns(requiredSchema: StructType): Unit = {
+        val keep = requiredSchema.fieldNames.toSet
+        user = StructType(userSchema.fields.filter(f => keep(f.name)))
+        inner.pruneColumns(user.add("deleted", BooleanType))
       }
-      override def pushedFilters(): Array[org.apache.spark.sql.sources.Filter] =
-        pushed
-
+      override def pushFilters(filters: Array[Filter]): Array[Filter] =
+        inner.pushFilters(filters)
+      override def pushedFilters(): Array[Filter] = inner.pushedFilters()
       override def build(): Scan =
-        new GraftUserScan(userSchema, canonical,
-          m.map(_.files).getOrElse(Nil), schemaId, tableName, required,
-          pushed.toSeq)
+        new UserViewScan(inner.build(), user, tableName)
     }
+  }
 }
 
-private final class GraftUserScan(fullUserSchema: StructType,
-    fullCanonical: StructType, files: Seq[graft.model.DataFileEntry],
-    schemaId: Int, tableName: String, requiredCols: Option[Seq[String]],
-    filters: Seq[org.apache.spark.sql.sources.Filter])
-    extends Scan with Batch {
-
-  // pruned layouts preserve the ORIGINAL column order (scanParts prunes by
-  // filtering the target schema, so reader output matches these exactly)
-  private val userSchema = requiredCols match {
-    case Some(names) =>
-      val keep = names.toSet
-      StructType(fullUserSchema.fields.filter(f => keep(f.name)))
-    case None => fullUserSchema
-  }
-  private val canonical =
-    StructType(userSchema.fields ++ fullCanonical.takeRight(3))
-
-  // one partition per OCCUPIED bucket (an empty table scans one empty
-  // partition — BucketScan wants a non-empty bucket universe)
-  private lazy val (parts, innerFactory) = {
-    val spark = SparkSession.active
-    val buckets = files.map(_.bucket).distinct.sorted match {
-      case Seq() => Seq(0)
-      case bs => bs
-    }
-    BucketScan.scanParts(spark, files, buckets, schemaId,
-      requiredCols.map(_ => userSchema.fieldNames.toSeq), filters)
-  }
-
-  override def readSchema(): StructType = userSchema
+/** The user view of a bucket scan: its partitions and readers, rows with a
+  * set `deleted` flag skipped, the scan's leading `user` columns kept. It
+  * reports no partitioning. */
+private final class UserViewScan(inner: Scan, user: StructType,
+    tableName: String) extends Scan with Batch {
+  override def readSchema(): StructType = user
   override def toBatch: Batch = this
-  override def planInputPartitions(): Array[InputPartition] = parts
+  override def planInputPartitions(): Array[InputPartition] =
+    inner.toBatch.planInputPartitions()
   override def createReaderFactory(): PartitionReaderFactory =
-    new UserViewFactory(innerFactory, canonical)
+    new UserViewFactory(inner.toBatch.createReaderFactory(), user,
+      inner.readSchema().fieldIndex("deleted"))
   override def description(): String =
-    s"graft-table-scan[$tableName, ${files.size} files, " +
-      s"cols=${userSchema.fieldNames.mkString(",")}" +
-      (if (filters.nonEmpty) s", pushed=${filters.mkString(",")}" else "") +
-      "]"
+    s"graft-table-scan[$tableName, ${inner.description()}]"
 }
 
-/** Wraps the canonical-row readers in the user view: rows with a set
-  * `deleted` flag are skipped, physical trailing columns (bucket, lastSeq,
-  * deleted) are projected away. The projection is built per reader on the
-  * EXECUTOR (codegen'd UnsafeProjection over bound references). */
+/** Wraps the bucket scan's readers in the user view: rows with a set
+  * `deleted` flag (at `deletedIdx`) are skipped, the leading `user`
+  * columns are kept. The projection is built per reader on the EXECUTOR
+  * (codegen'd UnsafeProjection over bound references). */
 private final class UserViewFactory(inner: PartitionReaderFactory,
-    canonical: StructType) extends PartitionReaderFactory {
-
-  private val nUser = canonical.length - 3
-  private val deletedIdx = canonical.length - 1
+    user: StructType, deletedIdx: Int) extends PartitionReaderFactory {
 
   override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
     val in = inner.createReader(p)
     new PartitionReader[InternalRow] {
       private val proj = UnsafeProjection.create(
-        (0 until nUser).map(i => BoundReference(i, canonical(i).dataType,
+        user.fields.indices.map(i => BoundReference(i, user(i).dataType,
           nullable = true): Expression).toArray)
       private var cur: InternalRow = _
       override def next(): Boolean = {

@@ -54,10 +54,9 @@ import org.apache.spark.sql.functions._
  *                                         included)
  * }}}
  *
- * The single-level `data/bucket=<b>/` partition layout keeps Spark's
- * partition-column inference consistent for ANY subset of manifest files
- * (files from different epochs share one directory structure), and gives
- * partition pruning on `bucket` for free.
+ * Every read goes through [[BucketScan]], which takes each file's bucket
+ * from its manifest entry, never from the path: `bucket=<b>` names the
+ * directory for operators and for the orphan sweep's listing.
  */
 final class IceTable(val dir: String, val defaultNumBuckets: Int) {
   private val root = new HPath(dir)
@@ -229,7 +228,7 @@ final class IceTable(val dir: String, val defaultNumBuckets: Int) {
 
   /** Raw view incl. physical columns and tombstones (merge/maintenance). */
   def readRaw(spark: SparkSession): DataFrame = currentManifest() match {
-    case None => emptyDf(spark)
+    case None => readFiles(spark, Nil)
     case Some(m) => readFiles(spark, m.files, m.schemaId)
   }
 
@@ -345,13 +344,13 @@ final class IceTable(val dir: String, val defaultNumBuckets: Int) {
     if (files.isEmpty) return Nil
     import org.apache.spark.sql.sources.EqualTo
     import org.apache.spark.unsafe.types.UTF8String
-    val (parts, factory) = BucketScan.scanParts(spark, files,
+    val scan = BucketScan.scanParts(spark, files,
       files.map(_.bucket), m.schemaId,
       pushedFilters = Seq(EqualTo("repo", repo), EqualTo("path", path)))
     val (ri, pi) = (schema.fieldIndex("repo"), schema.fieldIndex("path"))
     val (r8, p8) = (UTF8String.fromString(repo), UTF8String.fromString(path))
-    parts.toSeq.flatMap { p =>
-      val reader = factory.createReader(p)
+    scan.parts.toSeq.flatMap { p =>
+      val reader = scan.factory.createReader(p)
       try Iterator.continually(reader).takeWhile(_.next()).map(_.get())
         .filter(r => r8 == r.getUTF8String(ri) && p8 == r.getUTF8String(pi))
         .map(_.copy()).toVector
@@ -375,7 +374,7 @@ final class IceTable(val dir: String, val defaultNumBuckets: Int) {
     * IcebergMetadataWriter.java:349-383). */
   def readChangesSince(spark: SparkSession, sinceSeq: Long): DataFrame =
     currentManifest() match {
-      case None => emptyDf(spark).filter(lit(false))
+      case None => readFiles(spark, Nil)
       case Some(m) =>
         readFiles(spark, filesTouchedSince(m.files, sinceSeq), m.schemaId)
           .filter(col("lastSeq") > sinceSeq)
@@ -619,26 +618,19 @@ final class IceTable(val dir: String, val defaultNumBuckets: Int) {
     (expired.size, removable.size + sweptData)
   }
 
+  /** The manifest files `files` evolved to `targetSchemaId`, in the
+    * canonical layout `[target cols..., bucket, lastSeq, deleted]`: the
+    * [[BucketScan]] over the buckets the files occupy (an empty file list
+    * scans an empty bucket 0), packed by [[IceTable.packBuckets]]. Column
+    * pruning and filters reach the scan through the packing's `coalesce`,
+    * so a projection decodes only its columns. */
   def readFiles(spark: SparkSession, files: Seq[DataFileEntry],
-                targetSchemaId: Int = SchemaRegistry.baseSchemaId): DataFrame =
-    if (files.isEmpty)
-      SchemaRegistry.evolve(emptyDf(spark), SchemaRegistry.baseSchemaId,
-        targetSchemaId)
-    else {
-      // group files by written schema, evolve each group, union by name;
-      // basePath = the single data root, so the bucket=<b> partition column
-      // infers consistently for any file subset. Each group declares the
-      // schema its vintage was written with (the one inference would read
-      // from a footer), so building the DataFrame runs no inference job.
-      files.groupBy(_.schemaId).toSeq.sortBy(_._1).map { case (sid, fl) =>
-        val df = spark.read
-          .schema(BucketScan.fileReadSchema(SchemaRegistry.schemaFor(sid))
-            .add("bucket", org.apache.spark.sql.types.IntegerType))
-          .option("basePath", dataDir.toString)
-          .parquet(fl.map(_.path): _*)
-        SchemaRegistry.evolve(df, sid, targetSchemaId)
-      }.reduce(_.unionByName(_))
-    }
+      targetSchemaId: Int = SchemaRegistry.baseSchemaId): DataFrame = {
+    val buckets = BucketScan.occupiedBuckets(files)
+    IceTable.packBuckets(
+      BucketScan.read(spark, files, buckets, targetSchemaId),
+      buckets.size, files)._1
+  }
 
   /** Bucket-aligned read: a DataSource-V2 scan over the manifest-listed
     * files reporting `KeyGroupedPartitioning(bucket)` — the storage-
@@ -663,14 +655,6 @@ final class IceTable(val dir: String, val defaultNumBuckets: Int) {
       "bucket-aligned read of an empty file set needs an explicit bucket list")
     val bs = buckets.getOrElse(files.map(_.bucket).distinct.sorted)
     BucketScan.read(spark, files, bs, targetSchemaId)
-  }
-
-  private def emptyDf(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    spark.emptyDataset[FileRow]
-      .withColumn("bucket", lit(0))
-      .withColumn("lastSeq", lit(null).cast("long"))
-      .withColumn("deleted", lit(false))
   }
 
   // ---- writes -------------------------------------------------------------

@@ -1,7 +1,5 @@
 package graft.table
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /**
@@ -13,8 +11,8 @@ import org.apache.spark.sql.types._
  * IcebergMetadataWriter.java:455-524, 1039). Here a schema version is a list
  * of `(colId, name, type)`; renames preserve the colId (Iceberg's field-id
  * trick), so a file written under any older schema can be projected to the
- * current schema purely at read time: match columns by id, `cast` to widen,
- * null-fill additions. No data rewrite on evolution — the new schema id is
+ * current schema purely at read time (BucketScan): match columns by id,
+ * `cast` to widen, null-fill additions. No data rewrite on evolution — the new schema id is
  * committed in the snapshot manifest, atomically with data (SURVEY.md
  * trap #6).
  */
@@ -28,8 +26,8 @@ object SchemaRegistry {
   val baseSchemaId = 1
 
   /** registry type name → Spark type — the ONE mapping every reader of
-    * registry schemas (Column-level evolve, BucketScan's Expression-level
-    * evolve) must share; adding a type here adds it everywhere. */
+    * registry schemas (BucketScan's read-time evolution, the change feed's
+    * delete synthesis) shares; adding a type here adds it everywhere. */
   def sparkType(t: String): DataType = t match {
     case "string" => StringType
     case "int" => IntegerType
@@ -71,31 +69,4 @@ object SchemaRegistry {
       }
     }
   }
-
-  /** Project a DataFrame written under `fileSchema` to `targetSchema`:
-    * column-id matched rename + widen cast + null-fill, as Column exprs
-    * (codegen'd, no UDF). Extra physical columns (e.g. `bucket`) pass through. */
-  /** physical (non-logical-schema) columns carried through evolution */
-  val physicalCols: Seq[String] = Seq("bucket", "lastSeq", "deleted")
-
-  def evolveProjection(fileSchema: SchemaDef, targetSchema: SchemaDef,
-                       passThrough: Seq[String] = physicalCols): Seq[Column] = {
-    val old = fileSchema.byColId
-    targetSchema.columns.map { tc =>
-      old.get(tc.colId) match {
-        case Some(oc) =>
-          val c = col(oc.name)
-          val cast = if (oc.dataType == tc.dataType) c
-                     else c.cast(sparkType(tc.dataType))
-          cast.as(tc.name)
-        case None => lit(null).cast(sparkType(tc.dataType)).as(tc.name)
-      }
-    } ++ passThrough.map(col)
-  }
-
-  def evolve(df: DataFrame, fromId: Int, toId: Int,
-             passThrough: Seq[String] = physicalCols): DataFrame =
-    if (fromId == toId) df
-    else df.select(evolveProjection(schemaFor(fromId), schemaFor(toId),
-      passThrough.filter(df.columns.contains)): _*)
 }

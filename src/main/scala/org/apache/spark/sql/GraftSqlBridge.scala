@@ -98,20 +98,12 @@ object GraftSqlBridge {
     * `partitionSchema` values carried on the PartitionedFile. Row-returning
     * mode (no ColumnarBatch leaking through the Iterator[InternalRow]
     * signature); the closure is executor-serializable (it captures a
-    * broadcast SerializableConfiguration). */
-  def parquetReaderFunction(
-      spark: SparkSession,
-      dataSchema: StructType,
-      partitionSchema: StructType)
-      : execution.datasources.PartitionedFile => Iterator[InternalRow] =
-    parquetReaderFunction(spark, dataSchema, partitionSchema, Nil)
-
-  /** Variant with parquet-level filter pushdown: `filters` (in terms of
-    * `dataSchema`'s column names) drive row-group / page skipping
-    * inside the parquet reader. Purely an IO optimization — parquet
-    * skipping is best-effort, so callers must still evaluate the
-    * predicates on the returned rows (Spark's V2 pushdown contract when
-    * `pushFilters` returns the filters back as post-scan filters). */
+    * broadcast SerializableConfiguration). `filters` (in terms of the
+    * file's column names) drive row-group / page skipping inside the
+    * parquet reader. Purely an IO optimization — parquet skipping is
+    * best-effort, so callers must still evaluate the predicates on the
+    * returned rows (Spark's V2 pushdown contract when `pushFilters` returns
+    * the filters back as post-scan filters). */
   def parquetReaderFunction(
       spark: SparkSession,
       dataSchema: StructType,

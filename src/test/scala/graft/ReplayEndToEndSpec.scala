@@ -169,7 +169,7 @@ class ReplayEndToEndSpec extends SparkSpec {
       // for tens of seconds under load (2.4x noise, see BENCH.md)
       val deadline = System.currentTimeMillis() + 120000
       def planOpt = captured.asScala.find(p =>
-        p.contains("FullOuter") && p.contains("graft_bucket_aligned"))
+        p.contains("FullOuter") && bucketScanReadsFiles(p))
       while (planOpt.isEmpty && System.currentTimeMillis() < deadline)
         Thread.sleep(100)
       val plan = planOpt.getOrElse(
@@ -220,7 +220,7 @@ class ReplayEndToEndSpec extends SparkSpec {
         nEpochs = 2, nLogPartitions = 4)
       val deadline = System.currentTimeMillis() + 120000
       def planOpt = captured.asScala.find(p =>
-        p.contains("FullOuter") && p.contains("graft_bucket_aligned"))
+        p.contains("FullOuter") && bucketScanReadsFiles(p))
       while (planOpt.isEmpty && System.currentTimeMillis() < deadline)
         Thread.sleep(100)
       val plan = planOpt.getOrElse(fail(s"no merge plan in ${captured.size}"))
@@ -272,7 +272,7 @@ class ReplayEndToEndSpec extends SparkSpec {
       assert(tableState(t) == want, "must match the oracle fold")
       val deadline = System.currentTimeMillis() + 120000
       def planOpt = captured.asScala.find(p =>
-        p.contains("FullOuter") && p.contains("graft_bucket_aligned"))
+        p.contains("FullOuter") && bucketScanReadsFiles(p))
       while (planOpt.isEmpty && System.currentTimeMillis() < deadline)
         Thread.sleep(100)
       val plan = planOpt.getOrElse(

@@ -167,15 +167,23 @@ class SchemaEvolutionSpec extends SparkSpec {
 
   test("evolution projection maps by colId, not by name") {
     import spark.implicits._
-    val old = Seq(("r", "p", "c", "scala", "body", "sha"))
-      .toDF("repo", "path", "commit", "lang", "content", "contentSha")
-    val out = SchemaRegistry.evolve(old, 1, 4, passThrough = Nil)
+    // one file written under schema 1 (lang, no sizeBytes), read at 4
+    val t = IceTable.create(tmpDir("evoproj"), numBuckets = 1)
+    val v1 = t.writeEpochFiles(Seq(("r", "p", "c", "scala", "body", "sha",
+        5L, false, 0))
+      .toDF("repo", "path", "commit", "lang", "content", "contentSha",
+        "lastSeq", "deleted", "bucket"), 0L)
+    assert(v1.map(_.schemaId) == Seq(1))
+    val out = t.readFiles(spark, v1, 4)
     assert(out.columns.toSeq ==
       Seq("repo", "path", "commit", "language", "content", "contentSha",
-        "sizeBytes"))
+        "sizeBytes", "bucket", "lastSeq", "deleted"))
+    assert(out.schema("sizeBytes").dataType ==
+      org.apache.spark.sql.types.LongType)
     val row = out.head()
     assert(row.getAs[String]("language") == "scala")
     assert(row.isNullAt(row.fieldIndex("sizeBytes")))
+    assert(row.getAs[Long]("lastSeq") == 5L)
   }
 
   test("schema drift in a batch evolves the table before merge (injector analog)") {

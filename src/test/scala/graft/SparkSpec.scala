@@ -24,4 +24,11 @@ abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
   def tmpDir(prefix: String): String =
     Files.createTempDirectory(prefix).toString
+
+  /** true iff printed plan `p` reads a file through the bucket scan: the
+    * merge into a non-empty target, not the first epoch's, whose empty
+    * target scans bucket 0 with no file */
+  def bucketScanReadsFiles(p: String): Boolean =
+    """graft-bucket-scan\[\d+ buckets, [1-9]\d* files""".r
+      .findFirstIn(p).nonEmpty
 }

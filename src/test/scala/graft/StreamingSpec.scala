@@ -113,7 +113,7 @@ class StreamingSpec extends SparkSpec {
       assert(t.currentVersion() >= 1, "need a batch merging a non-empty table")
       val deadline = System.currentTimeMillis() + 120000
       def planOpt = captured.asScala.find(p =>
-        p.contains("FullOuter") && p.contains("graft_bucket_aligned"))
+        p.contains("FullOuter") && bucketScanReadsFiles(p))
       while (planOpt.isEmpty && System.currentTimeMillis() < deadline)
         Thread.sleep(100)
       val plan = planOpt.getOrElse(

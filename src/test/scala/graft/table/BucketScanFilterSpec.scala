@@ -32,6 +32,14 @@ class BucketScanFilterSpec extends AnyFunSuite {
       Seq(GreaterThan("sizeBytes", 10L)))
   }
 
+  test("stored physical columns push under their own names; bucket drops") {
+    assert(tr(GreaterThan("lastSeq", 5L), v1) ==
+      Seq(GreaterThan("lastSeq", 5L)))
+    assert(tr(EqualTo("deleted", true), v4) == Seq(EqualTo("deleted", true)))
+    assert(tr(EqualTo("bucket", 3), v4).isEmpty,
+      "bucket is a partition value, not a file column")
+  }
+
   test("And keeps the surviving conjunct; Or is both-or-none; Not drops") {
     val and = And(EqualTo("repo", "r"), GreaterThan("sizeBytes", 1L))
     assert(tr(and, v1) == Seq(EqualTo("repo", "r")),
