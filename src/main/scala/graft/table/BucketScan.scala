@@ -8,7 +8,7 @@ import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapabil
 import org.apache.spark.sql.connector.expressions.{Expressions, Transform}
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.read.partitioning.{KeyGroupedPartitioning => ConnectorKeyGroupedPartitioning, Partitioning => ConnectorPartitioning}
-import org.apache.spark.sql.execution.datasources.PartitionedFile
+import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetPartitionReaderFactory
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -37,10 +37,12 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
  *    column-id projection (rename/widen/null-fill — SchemaRegistry), as a
  *    per-vintage `UnsafeProjection` applied inside the partition reader, so
  *    a mixed-vintage table still yields ONE uniform scan schema.
- *  - Parquet decoding reuses Spark's own reader
- *    (`ParquetFileFormat.buildReaderWithPartitionValues`, row-returning
- *    mode), so predicate/dictionary/vectorized handling match the stock
- *    parquet source.
+ *  - Parquet decoding reuses Spark's own reader (the V2 source's
+ *    `ParquetPartitionReaderFactory`, row-returning mode), so
+ *    predicate/dictionary/vectorized handling match the stock parquet
+ *    source. Its read conf is broadcast once per file layout and session
+ *    conf (`GraftSqlBridge.parquetReaderFactory`), not once per scan; the
+ *    pushed filters are set per scan.
  *  - It is the engine's ONE reader of manifest files: `IceTable.readFiles`
  *    (packed), the merge target, the version diff, the point lookup, the
  *    change feed and the SQL catalog all scan through it, so the column-id
@@ -151,8 +153,13 @@ object BucketScan {
   def canonicalSchema(targetSchemaId: Int): StructType =
     layout(SchemaRegistry.schemaFor(targetSchemaId), physical)
 
+  /** the user view's columns: the canonical output without the physical
+    * cols */
+  def userSchema(targetSchemaId: Int): StructType =
+    layout(SchemaRegistry.schemaFor(targetSchemaId), Nil)
+
   private final class BucketReaderFactory(
-      readers: Map[Int, PartitionedFile => Iterator[InternalRow]],
+      readers: Map[Int, ParquetPartitionReaderFactory],
       projections: Map[Int, Seq[Expression]])
       extends PartitionReaderFactory {
     override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
@@ -160,19 +167,28 @@ object BucketScan {
       new PartitionReader[InternalRow] {
         private val projCache =
           scala.collection.mutable.Map.empty[Int, UnsafeProjection]
-        private val it: Iterator[InternalRow] =
-          bp.files.iterator.flatMap { f =>
-            val proj = projCache.getOrElseUpdate(f.schemaId,
-              UnsafeProjection.create(projections(f.schemaId).toArray))
-            readers(f.schemaId)(GraftSqlBridge.makePartitionedFile(
-              new GenericInternalRow(Array[Any](bp.bucket)), f.path, f.length))
-              .map(proj)
-          }
+        private val files = bp.files.iterator
+        private var reader: PartitionReader[InternalRow] = _
+        private var proj: UnsafeProjection = _
         private var cur: InternalRow = _
-        override def next(): Boolean =
-          if (it.hasNext) { cur = it.next(); true } else false
+        override def next(): Boolean = {
+          while (reader == null || !reader.next()) {
+            close()
+            if (!files.hasNext) return false
+            val f = files.next()
+            proj = projCache.getOrElseUpdate(f.schemaId,
+              UnsafeProjection.create(projections(f.schemaId).toArray))
+            reader = readers(f.schemaId).buildReader(
+              GraftSqlBridge.makePartitionedFile(
+                new GenericInternalRow(Array[Any](bp.bucket)), f.path,
+                f.length))
+          }
+          cur = proj(reader.get())
+          true
+        }
         override def get(): InternalRow = cur
-        override def close(): Unit = ()
+        override def close(): Unit =
+          if (reader != null) { reader.close(); reader = null }
       }
     }
   }
@@ -269,7 +285,10 @@ object BucketScan {
     * vintage (rename-aware via colId; dropped where the vintage lacks the
     * column or widened its type) and pushed into the parquet readers for
     * row-group / page skipping — best-effort IO pruning only, callers
-    * still evaluate the predicates. */
+    * still evaluate the predicates. Each vintage's reader comes from
+    * `GraftSqlBridge.parquetReaderFactory`: its broadcast read conf is
+    * shared by every scan of that file layout under the same session conf,
+    * and only the filters are this call's. */
   def scanParts(spark: SparkSession, files: Seq[DataFileEntry],
                 buckets: Seq[Int], targetSchemaId: Int,
                 requiredCols: Option[Seq[String]] = None,
@@ -293,7 +312,7 @@ object BucketScan {
     }
     val vintages = files.map(_.schemaId).distinct
     val readers = vintages.map { sid =>
-      sid -> GraftSqlBridge.parquetReaderFunction(spark,
+      sid -> GraftSqlBridge.parquetReaderFactory(spark,
         layout(pruned(sid), stored(phys)),
         StructType(physical.take(1)),
         translateFilters(pushedFilters, fullTarget,

@@ -106,7 +106,7 @@ object ChangeFeed {
   /** `op`, `seq`, the user columns of `schemaId`, then the metadata
     * columns `_commit_version`, `_schema_id` */
   def feedSchema(schemaId: Int): StructType = {
-    val user = BucketScan.canonicalSchema(schemaId).fields.dropRight(3)
+    val user = BucketScan.userSchema(schemaId).fields
     StructType(
       (StructField("op", StringType, nullable = false) +:
         StructField("seq", LongType, nullable = true) +: user) ++ Seq(

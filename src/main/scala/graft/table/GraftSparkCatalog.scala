@@ -170,8 +170,7 @@ private[table] final class GraftSqlTable(tableName: String, t: IceTable,
 
   private val schemaId =
     m.map(_.schemaId).getOrElse(SchemaRegistry.baseSchemaId)
-  private val userSchema =
-    StructType(BucketScan.canonicalSchema(schemaId).dropRight(3))
+  private val userSchema = BucketScan.userSchema(schemaId)
 
   override def name(): String = tableName
   override def schema(): StructType = userSchema

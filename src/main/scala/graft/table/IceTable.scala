@@ -321,39 +321,50 @@ final class IceTable(val dir: String, val defaultNumBuckets: Int) {
     * when `lookup` is called (the snapshot is fixed then, not at the
     * caller's action), through the bucket scan's own reader (Spark's
     * parquet reader plus the per-vintage column-id evolution), and the
-    * answer is a local relation. Pruning, in order: the key's bucket (key
-    * hash), then parquet row groups and dictionaries via the pushed key
-    * predicate. At 100 TB a key lookup opens its bucket's one file, never
+    * answer is a local relation of the final user rows: tombstones and the
+    * physical columns are dropped on the driver, so the frame carries no
+    * Dataset operator for the caller's action to analyse. Pruning, in
+    * order: the key's bucket (key hash), then parquet row groups and
+    * dictionaries via the pushed key predicate. At 100 TB a key lookup opens its bucket's one file, never
     * the table. */
   def lookup(spark: SparkSession, repo: String, path: String): DataFrame = {
     val m = currentManifest()
-    val schema = BucketScan.canonicalSchema(
+    val schema = BucketScan.userSchema(
       m.fold(SchemaRegistry.baseSchemaId)(_.schemaId))
     val rows = m.toSeq.flatMap(lookupRows(spark, _, schema, repo, path))
     GraftSqlBridge.localDataFrame(spark, schema, rows)
-      .filter(!coalesce(col("deleted"), lit(false)))
-      .drop("bucket", "lastSeq", "deleted")
   }
 
-  /** The canonical-layout rows (`schema`, tombstones included) of key
-    * `(repo, path)` in its candidate files, copied out of the reader. */
+  /** The live user rows (`schema`) of key `(repo, path)` in its candidate
+    * files: tombstones dropped and the physical columns cut on the driver,
+    * each row copied out of the reader. */
   private def lookupRows(spark: SparkSession, m: EpochManifest,
       schema: org.apache.spark.sql.types.StructType, repo: String,
       path: String): Seq[org.apache.spark.sql.catalyst.InternalRow] = {
     val files = lookupFiles(spark, m, repo, path)
     if (files.isEmpty) return Nil
+    import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
     import org.apache.spark.sql.sources.EqualTo
     import org.apache.spark.unsafe.types.UTF8String
+    // scan layout: the user columns, then bucket, then deleted
     val scan = BucketScan.scanParts(spark, files,
       files.map(_.bucket), m.schemaId,
+      requiredCols = Some(schema.fieldNames.toSeq :+ "deleted"),
       pushedFilters = Seq(EqualTo("repo", repo), EqualTo("path", path)))
+    val types = schema.fields.map(_.dataType)
     val (ri, pi) = (schema.fieldIndex("repo"), schema.fieldIndex("path"))
+    val di = scan.schema.fieldIndex("deleted")
     val (r8, p8) = (UTF8String.fromString(repo), UTF8String.fromString(path))
     scan.parts.toSeq.flatMap { p =>
       val reader = scan.factory.createReader(p)
       try Iterator.continually(reader).takeWhile(_.next()).map(_.get())
-        .filter(r => r8 == r.getUTF8String(ri) && p8 == r.getUTF8String(pi))
-        .map(_.copy()).toVector
+        .filter(r => r8 == r.getUTF8String(ri) && p8 == r.getUTF8String(pi)
+          && (r.isNullAt(di) || !r.getBoolean(di)))
+        .map { r =>
+          val c = r.copy()
+          new GenericInternalRow(Array.tabulate[Any](types.length)(i =>
+            c.get(i, types(i)))): org.apache.spark.sql.catalyst.InternalRow
+        }.toVector
       finally reader.close()
     }
   }
@@ -697,7 +708,8 @@ final class IceTable(val dir: String, val defaultNumBuckets: Int) {
       else df.repartition(
         IceTable.packedTasks(df.sparkSession, nb, sourceFiles), col("bucket"))
     val writer = parted.sortWithinPartitions("bucket", "repo", "path")
-      .write.options(LocalFs.keys(df.sparkSession)).mode("overwrite")
+      .write.options(LocalFs.keys(df.sparkSession) ++
+        IceTable.noDictionary(schemaId)).mode("overwrite")
       .partitionBy("bucket")
     val t0 = System.nanoTime()
     writer.parquet(staging.toString)
@@ -896,6 +908,19 @@ object IceTable {
       files: Seq[DataFileEntry]): (DataFrame, Int) = {
     val k = packedTasks(df.sparkSession, bucketPartitions, files)
     (if (k < bucketPartitions) df.coalesce(k) else df, k)
+  }
+
+  /** Write options turning parquet's dictionary off for the columns whose
+    * values are unique per row: `content` (colId 5), `contentSha` (colId 6)
+    * and the physical `lastSeq`. Parquet hashed every such value into a
+    * dictionary, then dropped it at the page flush and wrote the chunk
+    * PLAIN. Looked up by colId, so a rename keeps the setting. `repo` and
+    * `path` keep theirs (lookups prune on them), and so do `commit` and
+    * `lang` (their values repeat across paths). */
+  private def noDictionary(schemaId: Int): Map[String, String] = {
+    val byId = SchemaRegistry.schemaFor(schemaId).byColId
+    (Seq(5, 6).flatMap(byId.get).map(_.name) :+ "lastSeq")
+      .map(c => s"parquet.enable.dictionary#$c" -> "false").toMap
   }
 
   def create(dir: String, numBuckets: Int = 32): IceTable =

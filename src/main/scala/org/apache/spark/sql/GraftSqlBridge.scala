@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression}
 import org.apache.spark.sql.catalyst.plans.physical.Partitioning
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.types.StructType
+import scala.jdk.CollectionConverters._
 
 /** Bridge into `private[sql]` Spark internals — the standard technique Spark
   * extension libraries use on Spark 4's split API. The escapes:
@@ -16,8 +17,9 @@ import org.apache.spark.sql.types.StructType
   *     distribution report it to Catalyst so downstream joins skip the
   *     Exchange entirely (the key-grouped winner layout of the merge), or
   *     that keeps a plan forced under scoped confs (the version diff)
-  *   - DSv2 plumbing for the bucket scan: Spark's own parquet row reader,
-  *     PartitionedFile construction, and DataFrame-over-Table wiring
+  *   - DSv2 plumbing for the bucket scan: Spark's own parquet row reader
+  *     (its read conf broadcast once per layout and conf), PartitionedFile
+  *     construction, and DataFrame-over-Table wiring
   *   - a DataFrame over driver-held rows (`LocalRelation`), for the point
   *     lookup's job-free answer */
 object GraftSqlBridge {
@@ -93,35 +95,98 @@ object GraftSqlBridge {
 
   // ---- DSv2 storage-partitioned-scan support ------------------------------
 
-  /** Spark's own parquet row reader (the function FileSourceScanExec feeds
-    * FileScanRDD): reads `dataSchema` columns of a file and appends
-    * `partitionSchema` values carried on the PartitionedFile. Row-returning
-    * mode (no ColumnarBatch leaking through the Iterator[InternalRow]
-    * signature); the closure is executor-serializable (it captures a
-    * broadcast SerializableConfiguration). `filters` (in terms of the
-    * file's column names) drive row-group / page skipping inside the
-    * parquet reader. Purely an IO optimization — parquet skipping is
-    * best-effort, so callers must still evaluate the predicates on the
+  /** Spark's own parquet row reader for files of one layout: the V2
+    * source's `ParquetPartitionReaderFactory`, whose `buildReader` reads
+    * `dataSchema` columns of a file and appends `partitionSchema` values
+    * carried on the PartitionedFile, one row at a time (no ColumnarBatch
+    * leaks out). The factory is executor-serializable: it carries a
+    * broadcast of the prepared read conf. `filters` (in terms of the
+    * file's column names) drive row-group / dictionary / page skipping
+    * inside the parquet reader. Purely an IO optimization: parquet skipping
+    * is best-effort, so callers must still evaluate the predicates on the
     * returned rows (Spark's V2 pushdown contract when `pushFilters` returns
-    * the filters back as post-scan filters). */
-  def parquetReaderFunction(
+    * the filters back as post-scan filters).
+    *
+    * The read conf is prepared and broadcast once per (layout, partition
+    * schema, contents of `newHadoopConf()`, SparkContext), not per call: a
+    * broadcast of the session's ~1,100-entry Hadoop conf cost ~8 ms, most
+    * of a point lookup. Each call copies the memoized factory with its own
+    * `filters` and the calling session's SQL conf, so a conf change reaches
+    * the next read through a new entry and the copied SQL conf. */
+  def parquetReaderFactory(
       spark: SparkSession,
       dataSchema: StructType,
       partitionSchema: StructType,
       filters: Seq[sources.Filter])
-      : execution.datasources.PartitionedFile => Iterator[InternalRow] = {
+      : execution.datasources.v2.parquet.ParquetPartitionReaderFactory = {
     val cs = spark.asInstanceOf[classic.SparkSession]
-    new execution.datasources.parquet.ParquetFileFormat()
-      .buildReaderWithPartitionValues(
+    val sqlConf = cs.sessionState.conf
+    val hadoopConf = cs.sessionState.newHadoopConf()
+    // the one read setting whose default is not fixed (the JVM's zone)
+    hadoopConf.set(internal.SQLConf.SESSION_LOCAL_TIMEZONE.key,
+      sqlConf.sessionLocalTimeZone)
+    val key = ReadConfs.Key(dataSchema, partitionSchema,
+      hadoopConf.iterator().asScala.map(e => e.getKey -> e.getValue).toMap)
+    ReadConfs.getOrBuild(cs.sparkContext, key) {
+      execution.datasources.v2.parquet.ParquetScan(
         sparkSession = cs,
+        hadoopConf = hadoopConf,
+        fileIndex = new execution.datasources.InMemoryFileIndex(
+          cs, Nil, Map.empty, None),
         dataSchema = dataSchema,
-        partitionSchema = partitionSchema,
-        requiredSchema = dataSchema,
-        filters = filters,
-        options = Map(
-          execution.datasources.FileFormat.OPTION_RETURNING_BATCH -> "false"),
-        hadoopConf = cs.sessionState.newHadoopConf())
+        readDataSchema = dataSchema,
+        readPartitionSchema = partitionSchema,
+        pushedFilters = Array.empty,
+        options = util.CaseInsensitiveStringMap.empty())
+        .createReaderFactory()
+        .asInstanceOf[
+          execution.datasources.v2.parquet.ParquetPartitionReaderFactory]
+    }.copy(sqlConf = sqlConf, filters = filters.toArray,
+      options = new execution.datasources.parquet.ParquetOptions(
+        Map.empty[String, String], sqlConf))
   }
+
+  /** The memoized read factories (each holding its broadcast read conf),
+    * a small LRU per SparkContext. An evicted entry's broadcast is never
+    * destroyed here: a scan still running may hold it, and Spark's
+    * `ContextCleaner` removes it once no factory references it. */
+  private object ReadConfs {
+    /** the conf's entries as a map: an exact, order-independent key */
+    final case class Key(dataSchema: StructType, partitionSchema: StructType,
+        conf: Map[String, String])
+    private val Capacity = 16
+    private type Factory =
+      execution.datasources.v2.parquet.ParquetPartitionReaderFactory
+    private final class Lru
+        extends java.util.LinkedHashMap[Key, Factory](Capacity, 0.75f, true) {
+      var broadcasts = 0L
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[Key, Factory]): Boolean =
+        this.size > Capacity
+    }
+    private val byContext =
+      new java.util.WeakHashMap[org.apache.spark.SparkContext, Lru]()
+
+    def getOrBuild(sc: org.apache.spark.SparkContext, key: Key)(
+        build: => Factory): Factory = synchronized {
+      val lru = byContext.computeIfAbsent(sc, _ => new Lru)
+      Option(lru.get(key)).getOrElse {
+        val f = build
+        lru.broadcasts += 1
+        lru.put(key, f)
+        f
+      }
+    }
+
+    def broadcasts(sc: org.apache.spark.SparkContext): Long = synchronized {
+      Option(byContext.get(sc)).fold(0L)(_.broadcasts)
+    }
+  }
+
+  /** How many read confs [[parquetReaderFactory]] has broadcast for
+    * `spark`'s SparkContext: one per memo miss. */
+  def readConfBroadcasts(spark: SparkSession): Long =
+    ReadConfs.broadcasts(spark.sparkContext)
 
   def makePartitionedFile(partitionValues: InternalRow, path: String,
       length: Long): execution.datasources.PartitionedFile =

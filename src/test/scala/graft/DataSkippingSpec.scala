@@ -4,7 +4,7 @@ import graft.driver.ReplayJob
 import graft.log.OracleFold
 import graft.merge.MergeEngine
 import graft.model._
-import graft.table.{FileStats, IceTable, ManifestJson}
+import graft.table.{BucketScan, FileStats, IceTable, ManifestJson}
 import java.nio.file.{Files, Paths}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge}
@@ -448,5 +448,117 @@ class DataSkippingSpec extends SparkSpec {
       "every live key must answer its row (k01 is a tombstone)")
     Seq("k00a", "zz").foreach(k =>
       assert(assertLookupAsRead(t, "r", k).isEmpty))
+  }
+
+  /** bytes read through `file:` paths while `body` runs (the JVM's
+    * FileSystem statistics; the suite runs one test at a time) */
+  private def fileBytesRead(body: => Unit): Long = {
+    def now: Long = org.apache.hadoop.fs.FileSystem.getGlobalStorageStatistics
+      .get("file").getLong("bytesRead")
+    val b0 = now
+    body
+    now - b0
+  }
+
+  test("lookups share one broadcast read conf per layout and conf, keep " +
+      "the key pushdown, and read with a changed conf at once") {
+    import org.apache.spark.sql.sources.EqualTo
+    val t = IceTable.create(tmpDir("lkpconf"), numBuckets = 1)
+    // paths repeat across repos, as in real repositories, so the key
+    // columns are dictionary-encoded and a pushed key can skip a row group
+    val keys = for (r <- 0 until 10; p <- 0 until 200)
+      yield (f"r$r%02d", f"p$p%03d")
+    val content = (k: (String, String)) =>
+      (0 until 6).map(j => OracleFold.sha256Hex(s"$k/$j")).mkString
+    val fs0 = t.writeEpochFiles(keys.map(k => (k._1, k._2, commit40, "scala",
+        content(k), OracleFold.sha256Hex(content(k))))
+      .toDF("repo", "path", "commit", "lang", "content", "contentSha")
+      .withColumn("bucket", lit(0))
+      .withColumn("lastSeq", lit(5L))
+      .withColumn("deleted", lit(false)), 0)
+    t.commit(EpochManifest(0, 0, 1, fs0, offsets2(5L),
+      EpochStats(2000, 0, 0, 2000, 0, 0), -1L, completeUntilSeq = 5L,
+      numBuckets = 1))
+    assert(fs0.size == 1)
+    val fileBytes = fs0.head.bytes
+    // an absent repo inside the file's repo range: only the pushed
+    // predicate against the repo dictionary can skip the row group
+    val absent = ("r05a", "p007")
+    def lookupAsRead(k: (String, String)) = assertLookupAsRead(t, k._1, k._2)
+
+    // warm: every layout this test reads has its read conf memoized
+    Seq(keys(7), absent).foreach(lookupAsRead)
+    val b0 = GraftSqlBridge.readConfBroadcasts(spark)
+    (0 until 20).foreach { i =>
+      val (r, p) = keys(i * 97)
+      assert(lookupAsRead((r, p)).length == 1)
+      assert(lookupAsRead((s"${r}a", p)).isEmpty)
+    }
+    assert(GraftSqlBridge.readConfBroadcasts(spark) == b0,
+      "repeated lookups on an unchanged session must reuse their read conf")
+    val layout = BucketScan.userSchema(1)
+    val part = org.apache.spark.sql.types.StructType(Nil)
+    val (a, b) = (
+      GraftSqlBridge.parquetReaderFactory(spark, layout, part,
+        Seq(EqualTo("path", "a"))),
+      GraftSqlBridge.parquetReaderFactory(spark, layout, part,
+        Seq(EqualTo("path", "b"))))
+    assert(a.broadcastedConf eq b.broadcastedConf)
+    assert(a.filters.toSeq == Seq(EqualTo("path", "a")) &&
+      b.filters.toSeq == Seq(EqualTo("path", "b")))
+
+    // parquet's vectored reads bypass the local FileSystem's statistics, so
+    // read through the stream path, where every byte is counted; that conf
+    // change must itself reach the reader
+    val vectored = "parquet.hadoop.vectored.io.enabled"
+    val pushdown = "spark.sql.parquet.filterPushdown"
+    def absentRead(): Long =
+      fileBytesRead(assert(t.lookup(spark, absent._1, absent._2).isEmpty))
+    spark.conf.set(vectored, "false")
+    try {
+      val pushed = absentRead()
+      assert(pushed > 0 && pushed < fileBytes / 4,
+        s"absent key read $pushed of the file's $fileBytes bytes")
+      spark.conf.set(pushdown, "false")
+      val unpushed = try absentRead() finally spark.conf.unset(pushdown)
+      assert(unpushed > fileBytes / 2,
+        s"without pushdown the lookup must read the data pages: " +
+          s"$unpushed of $fileBytes bytes")
+      assert(absentRead() == pushed, "the restored conf reads as before")
+    } finally spark.conf.unset(vectored)
+    assert(lookupAsRead(absent).isEmpty)
+  }
+
+  test("epoch files write content, contentSha and lastSeq without a " +
+      "dictionary; repo, path, commit and lang keep theirs") {
+    import scala.jdk.CollectionConverters._
+    val t = IceTable.create(tmpDir("nodict"), numBuckets = 1)
+    // every column repeats its values, so parquet keeps a dictionary
+    // wherever one is allowed
+    val df = (0 until 200).map(i =>
+        ("r", f"p${i % 10}%02d", commit40, "scala", "same", "sha", 1))
+      .toDF("repo", "path", "commit", "language", "content", "contentSha",
+        "sizeBytes")
+      .withColumn("bucket", lit(0))
+      .withColumn("lastSeq", lit(7L))
+      .withColumn("deleted", lit(false))
+    // v3 renamed lang to `language`: the columns are found by colId
+    val Seq(f) = t.writeEpochFiles(df, 0, schemaId = 3)
+    val conf = spark.sessionState.newHadoopConf()
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(f.path), conf),
+      org.apache.parquet.HadoopReadOptions.builder(conf).build())
+    val encodings = try reader.getFooter.getBlocks.asScala
+      .flatMap(_.getColumns.asScala)
+      .map(c => c.getPath.toDotString -> c.getEncodings.asScala.map(_.toString))
+      .toMap
+    finally reader.close()
+    def dictionary(c: String): Boolean =
+      encodings(c).exists(_.contains("DICTIONARY"))
+    Seq("content", "contentSha", "lastSeq").foreach(c =>
+      assert(!dictionary(c), s"$c: ${encodings(c)}"))
+    Seq("repo", "path", "commit", "language").foreach(c =>
+      assert(dictionary(c), s"$c: ${encodings(c)}"))
   }
 }
