@@ -68,10 +68,17 @@ final case class EpochStats(
   * everywhere and simply never skipped. The entry records no key bounds: a
   * key's bucket holds one file whose hashed keys span the key space, so a
   * key range could exclude it for almost no key. A legacy entry's key
-  * bounds and retired salt fields parse and are ignored. */
+  * bounds and retired salt fields parse and are ignored.
+  *
+  * `sortedByKey` records that the file's rows are in `(repo, path)` order:
+  * `IceTable.writeEpochFilesTimed` sorts every file it writes and sets it,
+  * byte copies (mirror sync, `IceTable.copyFilesFrom`) keep it, and a legacy
+  * entry without the field parses as `false`. The bucket scan reports key
+  * order only for buckets held in one such file. */
 final case class DataFileEntry(path: String, bucket: Int, rows: Long,
     schemaId: Int, bytes: Long = -1L,
-    minSeq: Option[Long] = None, maxSeq: Option[Long] = None)
+    minSeq: Option[Long] = None, maxSeq: Option[Long] = None,
+    sortedByKey: Boolean = false)
 
 /**
  * Snapshot manifest: the unit of atomic commit, stored whole (file list

@@ -3,15 +3,16 @@ package graft.table
 import graft.model.DataFileEntry
 import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, Expression, GenericInternalRow, Literal, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability}
-import org.apache.spark.sql.connector.expressions.{Expressions, Transform}
+import org.apache.spark.sql.connector.expressions.{Expressions, NullOrdering, SortDirection, SortOrder, Transform}
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.read.partitioning.{KeyGroupedPartitioning => ConnectorKeyGroupedPartitioning, Partitioning => ConnectorPartitioning}
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetPartitionReaderFactory
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.sql.vectorized.ColumnarBatch
 
 /**
  * DataSource V2 scan over an IceTable's manifest-listed files reporting
@@ -33,16 +34,28 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
  *    into `KeyGroupedPartitioning` with one partition per bucket value.
  *  - Driver plan size is flat in bucket count: ONE BatchScan node; the file
  *    lists ride the serialized input partitions.
- *  - Files written under older schema vintages are evolved at read time by
- *    column-id projection (rename/widen/null-fill — SchemaRegistry), as a
- *    per-vintage `UnsafeProjection` applied inside the partition reader, so
- *    a mixed-vintage table still yields ONE uniform scan schema.
- *  - Parquet decoding reuses Spark's own reader (the V2 source's
- *    `ParquetPartitionReaderFactory`, row-returning mode), so
- *    predicate/dictionary/vectorized handling match the stock parquet
- *    source. Its read conf is broadcast once per file layout and session
- *    conf (`GraftSqlBridge.parquetReaderFactory`), not once per scan; the
+ *  - Reads are columnar: each file is decoded by Spark's own vectorized
+ *    parquet reader (the V2 source's `ParquetPartitionReaderFactory`,
+ *    `buildColumnarReader`), so predicate/dictionary handling match the
+ *    stock parquet source, and Spark turns the batches into rows once, in
+ *    its `ColumnarToRow`. Row readers (the lookup, the change feed, the SQL
+ *    catalog's user view) iterate the same batches' row views.
+ *  - Files written under older schema vintages are evolved by column id
+ *    (rename/widen/null-fill — SchemaRegistry) in each vintage's READ
+ *    SCHEMA: the target columns at the target types under the names that
+ *    vintage wrote, a column it lacks under a name no file holds (read as
+ *    nulls), widening left to the reader. Every vintage's batches thus come
+ *    out in ONE scan layout, and no row is copied. The read conf is
+ *    broadcast once per read schema and session conf
+ *    (`GraftSqlBridge.parquetReaderFactory`), not once per scan; the
  *    pushed filters are set per scan.
+ *  - It reports its rows' order (`SupportsReportOrdering`):
+ *    `(bucket, repo, path)` ascending, trimmed to the columns it outputs,
+ *    when every bucket is read from at most one file and every file's
+ *    entry says it was written key-sorted (`DataFileEntry.sortedByKey`). A
+ *    sort-merge join on those keys (the merge target, the version diff)
+ *    then sorts nothing on this side; otherwise the scan reports no order
+ *    and Spark sorts as usual.
  *  - It is the engine's ONE reader of manifest files: `IceTable.readFiles`
  *    (packed), the merge target, the version diff, the point lookup, the
  *    change feed and the SQL catalog all scan through it, so the column-id
@@ -74,29 +87,27 @@ object BucketScan {
     StructField("lastSeq", LongType, nullable = true),
     StructField("deleted", BooleanType, nullable = true))
 
-  /** per-row evolution: reader output layout is
-    * [vintage logical cols..., stored physical cols..., bucket]; project to
-    * the scan layout [target cols..., `phys`] with column-id matched
-    * rename / widen cast / null-fill (bound expressions — built on the
-    * driver, codegen'd on the executor via UnsafeProjection). */
-  private def evolveExprs(vintage: SchemaDef, target: SchemaDef,
-      phys: Seq[StructField]): Seq[Expression] = {
-    val inTypes: Seq[(String, DataType)] =
-      (vintage.columns.map(c => c.name -> sparkType(c.dataType)) ++
-        stored(phys).map(f => f.name -> f.dataType)) :+
-        ("bucket" -> IntegerType)
-    val ord: Map[String, Int] = inTypes.map(_._1).zipWithIndex.toMap
-    def ref(name: String): Expression =
-      BoundReference(ord(name), inTypes(ord(name))._2, nullable = true)
+  /** the order the engine writes each file's rows in (`sortedByKey`) */
+  private val KeyOrder: Seq[String] = Seq("bucket", "repo", "path")
+
+  /** One vintage's parquet read schema: the `target` columns in target
+    * order and at the target type, each named as `vintage` wrote it (matched
+    * by colId), then the stored physical columns of `phys`. A column the
+    * vintage lacks gets [[absentName]], which no file holds, so the reader
+    * fills it with nulls. Widening is the reader's own: it reads a file's
+    * `int` column as `long` or `double` (`long` -> `double` it refuses, and
+    * so does `SchemaRegistry.validateEvolution`). */
+  private def vintageReadSchema(vintage: SchemaDef, target: SchemaDef,
+      phys: Seq[StructField]): StructType = {
     val old = vintage.byColId
-    target.columns.map { tc =>
-      old.get(tc.colId) match {
-        case Some(oc) if oc.dataType == tc.dataType => ref(oc.name)
-        case Some(oc) => Cast(ref(oc.name), sparkType(tc.dataType), None)
-        case None => Literal(null, sparkType(tc.dataType))
-      }
-    } ++ phys.map(f => ref(f.name))
+    StructType(target.columns.map(tc => StructField(
+      old.get(tc.colId).fold(absentName(tc.colId))(_.name),
+      sparkType(tc.dataType), nullable = true)) ++ stored(phys))
   }
+
+  /** the read-schema name of a column a vintage lacks: registry names are
+    * identifiers, so no engine-written file holds it */
+  private def absentName(colId: Int): String = s"__graft_absent_col$colId"
 
   private def stored(phys: Seq[StructField]): Seq[StructField] =
     phys.filterNot(_.name == "bucket")
@@ -143,8 +154,7 @@ object BucketScan {
     fs.flatMap(tr)
   }
 
-  /** `target` cols then the physical cols `phys`: a scan's output, or
-    * (with the stored `phys` only) the file columns it reads */
+  /** `target` cols then the physical cols `phys`: a scan's output */
   private def layout(target: SchemaDef, phys: Seq[StructField]): StructType =
     StructType(target.columns.map(c =>
       StructField(c.name, sparkType(c.dataType), nullable = true)) ++ phys)
@@ -158,47 +168,78 @@ object BucketScan {
   def userSchema(targetSchemaId: Int): StructType =
     layout(SchemaRegistry.schemaFor(targetSchemaId), Nil)
 
+  /** Reads a bucket's files as column batches in the scan layout. Each
+    * file's reader (Spark's vectorized parquet reader, at the file's
+    * vintage read schema) returns `[target cols..., stored cols..., bucket]`;
+    * the scan layout puts `bucket` before the stored cols, so a batch is the
+    * reader's own vectors in `order`, with nothing copied. Rows are the
+    * batches' row views: a row is valid until the next `next()`. */
   private final class BucketReaderFactory(
-      readers: Map[Int, ParquetPartitionReaderFactory],
-      projections: Map[Int, Seq[Expression]])
+      readers: Map[Int, ParquetPartitionReaderFactory], order: Array[Int])
       extends PartitionReaderFactory {
-    override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
+    override def supportColumnarReads(p: InputPartition): Boolean = true
+
+    override def createColumnarReader(
+        p: InputPartition): PartitionReader[ColumnarBatch] = {
       val bp = p.asInstanceOf[BucketInputPartition]
-      new PartitionReader[InternalRow] {
-        private val projCache =
-          scala.collection.mutable.Map.empty[Int, UnsafeProjection]
+      new PartitionReader[ColumnarBatch] {
         private val files = bp.files.iterator
-        private var reader: PartitionReader[InternalRow] = _
-        private var proj: UnsafeProjection = _
-        private var cur: InternalRow = _
+        private var reader: PartitionReader[ColumnarBatch] = _
+        // the reader reuses one batch (and its vectors) per file
+        private var readerBatch: ColumnarBatch = _
+        private var cur: ColumnarBatch = _
         override def next(): Boolean = {
           while (reader == null || !reader.next()) {
             close()
             if (!files.hasNext) return false
             val f = files.next()
-            proj = projCache.getOrElseUpdate(f.schemaId,
-              UnsafeProjection.create(projections(f.schemaId).toArray))
-            reader = readers(f.schemaId).buildReader(
+            reader = readers(f.schemaId).buildColumnarReader(
               GraftSqlBridge.makePartitionedFile(
                 new GenericInternalRow(Array[Any](bp.bucket)), f.path,
                 f.length))
           }
-          cur = proj(reader.get())
+          val b = reader.get()
+          if (b ne readerBatch) {
+            readerBatch = b
+            cur = new ColumnarBatch(order.map(b.column), b.numRows())
+          } else cur.setNumRows(b.numRows())
           true
         }
-        override def get(): InternalRow = cur
+        override def get(): ColumnarBatch = cur
         override def close(): Unit =
           if (reader != null) { reader.close(); reader = null }
       }
     }
+
+    override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
+      val batches = createColumnarReader(p)
+      new PartitionReader[InternalRow] {
+        private var rows: java.util.Iterator[InternalRow] =
+          java.util.Collections.emptyIterator()
+        private var cur: InternalRow = _
+        override def next(): Boolean = {
+          while (!rows.hasNext) {
+            if (!batches.next()) return false
+            rows = batches.get().rowIterator()
+          }
+          cur = rows.next()
+          true
+        }
+        override def get(): InternalRow = cur
+        override def close(): Unit = batches.close()
+      }
+    }
   }
 
-  /** A planned scan: its output schema, input partitions and readers. */
+  /** A planned scan: its output schema, input partitions and readers.
+    * `sortedBy` names the leading output columns every partition's rows are
+    * ascending in (empty: no order is known). */
   final case class ScanParts(schema: StructType, parts: Array[InputPartition],
-      factory: PartitionReaderFactory)
+      factory: PartitionReaderFactory, sortedBy: Seq[String])
 
   private final class GraftBucketScan(sp: ScanParts, pushed: Seq[Filter])
-      extends Scan with Batch with SupportsReportPartitioning {
+      extends Scan with Batch with SupportsReportPartitioning
+      with SupportsReportOrdering {
     override def readSchema(): StructType = sp.schema
     override def toBatch: Batch = this
     override def planInputPartitions(): Array[InputPartition] = sp.parts
@@ -206,12 +247,17 @@ object BucketScan {
     override def outputPartitioning(): ConnectorPartitioning =
       new ConnectorKeyGroupedPartitioning(
         Array(Expressions.identity("bucket")), sp.parts.length)
+    override def outputOrdering(): Array[SortOrder] =
+      sp.sortedBy.map(c => Expressions.sort(Expressions.column(c),
+        SortDirection.ASCENDING, NullOrdering.NULLS_FIRST)).toArray
     override def description(): String = {
       val nFiles = sp.parts.collect {
         case p: BucketInputPartition => p.files.size
       }.sum
       s"graft-bucket-scan[${sp.parts.length} buckets, $nFiles files, " +
         s"cols=${sp.schema.fieldNames.mkString(",")}" +
+        (if (sp.sortedBy.nonEmpty) s", sorted=${sp.sortedBy.mkString(",")}"
+         else "") +
         (if (pushed.nonEmpty) s", pushed=${pushed.mkString(",")}" else "") +
         "]"
     }
@@ -276,7 +322,9 @@ object BucketScan {
 
   /** The planned scan behind [[Builder]] — also read directly by the point
     * lookup and the change feed. Rows come out in the layout
-    * `[target cols..., bucket, lastSeq, deleted]`.
+    * `[target cols..., bucket, lastSeq, deleted]`, and in key order
+    * (`sortedBy`) when each bucket has at most one file, flagged
+    * `sortedByKey`.
     *
     * `requiredCols` prunes that layout to the named columns (order kept;
     * `bucket` always stays) AND the per-vintage parquet read schemas
@@ -305,22 +353,19 @@ object BucketScan {
     val target =
       SchemaDef(fullTarget.id, fullTarget.columns.filter(c => keep(c.name)))
     val phys = physical.filter(f => f.name == "bucket" || keep(f.name))
-    val neededIds = target.columns.map(_.colId).toSet
-    def pruned(sid: Int): SchemaDef = {
-      val v = SchemaRegistry.schemaFor(sid)
-      SchemaDef(v.id, v.columns.filter(c => neededIds(c.colId)))
-    }
-    val vintages = files.map(_.schemaId).distinct
-    val readers = vintages.map { sid =>
+    val readers = files.map(_.schemaId).distinct.map { sid =>
+      val vintage = SchemaRegistry.schemaFor(sid)
       sid -> GraftSqlBridge.parquetReaderFactory(spark,
-        layout(pruned(sid), stored(phys)),
+        vintageReadSchema(vintage, target, phys),
         StructType(physical.take(1)),
-        translateFilters(pushedFilters, fullTarget,
-          SchemaRegistry.schemaFor(sid)))
+        translateFilters(pushedFilters, fullTarget, vintage))
     }.toMap
-    val projections = vintages.map { sid =>
-      sid -> evolveExprs(pruned(sid), target, phys)
-    }.toMap
+    // reader batch: [target..., stored..., bucket]; scan layout puts bucket
+    // first among the physical cols
+    val nTarget = target.columns.size
+    val nStored = stored(phys).size
+    val order = ((0 until nTarget) ++ Seq(nTarget + nStored) ++
+      (nTarget until nTarget + nStored)).toArray
     // resolve unknown lengths (legacy manifests record bytes = -1) — a
     // PartitionedFile's length bounds the read, so 0 would read nothing
     lazy val hconf = spark.sessionState.newHadoopConf()
@@ -336,7 +381,14 @@ object BucketScan {
         .map(f => FileSpec(f.path, len(f), f.schemaId)))
         : InputPartition
     }.toArray
-    ScanParts(layout(target, phys), parts,
-      new BucketReaderFactory(readers, projections))
+    // every file the engine writes is sorted by (repo, path) and says so;
+    // a bucket's rows keep that order only while it is read from one file
+    val schema = layout(target, phys)
+    val sortedBy =
+      if (byBucket.values.forall(_.size <= 1) && files.forall(_.sortedByKey))
+        KeyOrder.takeWhile(schema.fieldNames.contains)
+      else Nil
+    ScanParts(schema, parts, new BucketReaderFactory(readers, order),
+      sortedBy)
   }
 }

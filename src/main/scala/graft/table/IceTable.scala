@@ -320,8 +320,8 @@ final class IceTable(val dir: String, val defaultNumBuckets: Int) {
     * runs NO Spark job: the candidate files are read on the calling thread
     * when `lookup` is called (the snapshot is fixed then, not at the
     * caller's action), through the bucket scan's own reader (Spark's
-    * parquet reader plus the per-vintage column-id evolution), and the
-    * answer is a local relation of the final user rows: tombstones and the
+    * vectorized parquet reader at each vintage's column-id read schema),
+    * and the answer is a local relation of the final user rows: tombstones and the
     * physical columns are dropped on the driver, so the frame carries no
     * Dataset operator for the caller's action to analyse. Pruning, in
     * order: the key's bucket (key hash), then parquet row groups and
@@ -687,7 +687,9 @@ final class IceTable(val dir: String, val defaultNumBuckets: Int) {
     * already sits whole in one input partition (bucket-aligned MERGE or
     * compaction output, possibly packed by [[IceTable.packBuckets]]).
     * Published entries carry footer stats (rows + lastSeq min-max) from one
-    * pooled metadata pass — the feed-pruning/verifier inputs. */
+    * pooled metadata pass — the feed-pruning/verifier inputs. Every file's
+    * rows are sorted by `(repo, path)`, and its entry says so
+    * (`sortedByKey`), so a scan of it can report that order. */
   def writeEpochFiles(df: DataFrame, epochId: Long,
       schemaId: Int = SchemaRegistry.baseSchemaId,
       alignedByBucket: Boolean = false,
@@ -728,7 +730,8 @@ final class IceTable(val dir: String, val defaultNumBuckets: Int) {
             val dest = new HPath(destDir, s"e$epochId-" + s.getPath.getName)
             if (!f.rename(s.getPath, dest))
               throw new IllegalStateException(s"publish failed: $dest")
-            DataFileEntry(dest.toString, bucket, -1L, schemaId, s.getLen)
+            DataFileEntry(dest.toString, bucket, -1L, schemaId, s.getLen,
+              sortedByKey = true)
           }
       }.toSeq.sortBy(e => (e.bucket, e.path))
     f.delete(staging, true)

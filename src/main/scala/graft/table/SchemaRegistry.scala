@@ -12,9 +12,9 @@ import org.apache.spark.sql.types._
  * of `(colId, name, type)`; renames preserve the colId (Iceberg's field-id
  * trick), so a file written under any older schema can be projected to the
  * current schema purely at read time (BucketScan): match columns by id,
- * `cast` to widen, null-fill additions. No data rewrite on evolution — the new schema id is
- * committed in the snapshot manifest, atomically with data (SURVEY.md
- * trap #6).
+ * let the parquet reader widen, null-fill additions. No data rewrite on
+ * evolution — the new schema id is committed in the snapshot manifest,
+ * atomically with data (SURVEY.md trap #6).
  */
 final case class ColumnDef(colId: Int, name: String, dataType: String)
 final case class SchemaDef(id: Int, columns: Seq[ColumnDef]) {
@@ -52,10 +52,12 @@ object SchemaRegistry {
 
   def schemaFor(id: Int): SchemaDef = versions(id)
 
-  /** Validate an evolution step: only add / rename / widen are legal. */
+  /** Validate an evolution step: only add / rename / widen are legal. The
+    * widenings are the ones the bucket scan's vectorized parquet reader
+    * performs itself: `int` -> `long` and `int` -> `double`. It refuses a
+    * `long` file column read as `double`, so that step is refused here. */
   def validateEvolution(from: SchemaDef, to: SchemaDef): Unit = {
-    val widenOk = Set(("int", "long"), ("int", "double"), ("long", "double"),
-      ("float", "double"))
+    val widenOk = Set(("int", "long"), ("int", "double"))
     from.columns.foreach { fc =>
       to.byColId.get(fc.colId) match {
         case None =>

@@ -185,7 +185,7 @@ class ReplayEndToEndSpec extends SparkSpec {
       // storage-partitioned join: Catalyst recognises the DSv2 scan's
       // KeyGroupedPartitioning and the winner side's identical claimed
       // layout — ZERO planner exchanges in the merge plan. The target is
-      // read IN PLACE (BatchScan directly under the join-side sort); the
+      // read IN PLACE (BatchScan under the join, unsorted: see below); the
       // winner side's single layout shuffle lives inside its RDD lineage
       // (dataFrameWithKeyGroupedPartitioning), not as an Exchange node.
       val nShuffles = "Exchange".r.findAllIn(mergeSection).length
@@ -196,6 +196,21 @@ class ReplayEndToEndSpec extends SparkSpec {
         s"the merge target must be the DSv2 bucket scan:\n$plan")
       assert(mergeSection.contains("ExistingRDD"),
         s"the winner side must be the key-grouped-laid RDD:\n$plan")
+      // the target's files are key-sorted and flagged, one per bucket: the
+      // scan reports the join's order, so nothing between it and the join
+      // sorts
+      val lines = mergeSection.linesIterator.toVector
+      def depth(x: String): Int = x.prefixLength(" :+-|".contains(_))
+      val scanAt = lines.indexWhere(_.contains("BatchScan graft_bucket_aligned"))
+      val belowJoin = (scanAt - 1 to 0 by -1)
+        .foldLeft((depth(lines(scanAt)), Vector.empty[String], false)) {
+          case ((d, acc, done), i) =>
+            if (done || depth(lines(i)) >= d) (d, acc, done)
+            else if (lines(i).contains("SortMergeJoin")) (d, acc, true)
+            else (depth(lines(i)), acc :+ lines(i), false)
+        }._2
+      assert(belowJoin.nonEmpty && !belowJoin.exists(_.contains("Sort [")),
+        s"no Sort may sit between the target scan and the join:\n$plan")
     } finally spark.listenerManager.unregister(l)
   }
 

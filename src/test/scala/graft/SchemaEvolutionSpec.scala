@@ -163,6 +163,12 @@ class SchemaEvolutionSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       SchemaRegistry.validateEvolution(v4, narrowed)
     }
+    // the parquet reader cannot read a long column as double
+    val toDouble = v4.copy(id = 97, columns = v4.columns.map(c =>
+      if (c.name == "sizeBytes") c.copy(dataType = "double") else c))
+    intercept[IllegalArgumentException] {
+      SchemaRegistry.validateEvolution(v4, toDouble)
+    }
   }
 
   test("evolution projection maps by colId, not by name") {
