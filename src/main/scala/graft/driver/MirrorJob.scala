@@ -16,15 +16,15 @@ import org.apache.spark.sql.functions.{col, max}
  * serving-path lookups, change feeds, and SQL-catalog access.
  *
  * A sync converges the mirror to the upstream's state at `vTo` by
- * copy-then-commit, on the calling thread, with no Spark job:
+ * copy-then-commit on the driver, with no Spark job:
  *  - read the upstream's `vTo` manifest;
  *  - every listed file the mirror's CURRENT manifest already lists under
  *    the same bucket and name is reused (names `e<epoch>-part-<task>-
  *    <job uuid>….parquet` are unique within a bucket; one write task's
  *    files share a name across buckets); every other one is copied into
  *    the mirror's staging dir and published by rename into
- *    `data/bucket=<b>/<same name>`
- *    ([[IceTable.copyFilesFrom]]);
+ *    `data/bucket=<b>/<same name>`, the files in parallel on the driver
+ *    IO pool ([[IceTable.copyFilesFrom]]);
  *  - one rename-CAS commit ([[IceTable.commit]]) of a manifest that takes
  *    the file list (mirror paths, footer stats kept), offsets, schema,
  *    bucket count and completeness watermark from `vTo`, keeps the purge

@@ -138,7 +138,13 @@ object ChangeLogGen {
     * the envelope-pruned dedup scan never materializes content bytes at
     * all (a closure-built Dataset computes every field for every row). */
   def generateExprSlice(spark: SparkSession, spec: LogSpec, fromSeq: Long,
-                        untilSeq: Long): org.apache.spark.sql.DataFrame = {
+                        untilSeq: Long): org.apache.spark.sql.DataFrame =
+    generateRange(spec, spark.range(fromSeq, untilSeq))
+
+  /** The events of the seqs in `ids` (a `spark.range`), partition by
+    * partition: no shuffle, so each partition keeps its seq range. */
+  private def generateRange(spec: LogSpec,
+      ids: Dataset[java.lang.Long]): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.Column
     import org.apache.spark.sql.functions._
     val cdf = zipfCdf(spec.nRepos, spec.zipfExponent)
@@ -151,8 +157,7 @@ object ChangeLogGen {
 
     val langs = array(lit("scala"), lit("java"), lit("py"), lit("md"))
 
-    spark.range(fromSeq, untilSeq)
-      .select(col("id").as("seq"))
+    ids.select(col("id").as("seq"))
       .withColumn("h0", mixC(lit(spec.seed).bitwiseXOR(col("seq"))))
       .withColumn("repoIdx",
         graft.functions.ZipfPick.zipfPick(col("h0"), cdf.toIndexedSeq))
@@ -191,12 +196,11 @@ object ChangeLogGen {
     Iterator.range(0L, spec.nEvents).map(seq => eventAt(spec, cdf, seq))
   }
 
-  /** Materialize the log as a partitioned parquet directory (the "binlog").
-    * Files are bucketed by `seq` range so that offset-range reads prune. */
+  /** Materialize the log as a partitioned parquet directory (the "binlog")
+    * in one pass: `nFiles` files, each one contiguous `seq` range straight
+    * from `spark.range`'s slices, so that offset-range reads prune. */
   def writeLog(spark: SparkSession, spec: LogSpec, dir: String,
-               nFiles: Int = 32): Unit = {
-    generate(spark, spec)
-      .repartitionByRange(nFiles, org.apache.spark.sql.functions.col("seq"))
+               nFiles: Int = 32): Unit =
+    generateRange(spec, spark.range(0L, spec.nEvents, 1L, nFiles))
       .write.options(LocalFs.keys(spark)).mode("overwrite").parquet(dir)
-  }
 }

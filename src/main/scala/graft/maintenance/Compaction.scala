@@ -102,7 +102,7 @@ object Compaction {
     // Verifier gate (audit-count analog) — two independent checks, neither
     // a data re-read:
     //  1. the PUBLISHED files' footer record counts (metadata-only —
-    //     every write fills them via FileStats.fillAll's bounded pool)
+    //     every write fills them via FileStats.fillAll on the driver IO pool)
     //     must sum to the rows the rewrite observed — catches loss between
     //     the filter and the publish;
     //  2. an end-to-end live-row recount over the published files must

@@ -1,5 +1,9 @@
 package graft.table
 
+import java.util.concurrent.{Executors, TimeUnit, TimeoutException}
+import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger,
+  AtomicReference, AtomicReferenceArray}
+
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 
 /**
@@ -31,6 +35,71 @@ private[graft] object FsIO {
       while (n >= 0) { bytes.write(buf, 0, n); n = in.read(buf) }
       new String(bytes.toByteArray, "UTF-8")
     } finally in.close()
+  }
+
+  /** Tasks one [[parMap]] call keeps in flight. */
+  val MaxInFlight = 16
+
+  /** Driver threads for per-file metadata IO (copies, renames, listings,
+    * deletes, footer reads). Cached, so a hung call holds only its own
+    * thread and a later call never waits behind it; daemon, so an
+    * abandoned hung read never keeps the JVM alive. */
+  private val pool = Executors.newCachedThreadPool {
+    (r: Runnable) =>
+      val t = new Thread(r, "graft-driver-io")
+      t.setDaemon(true)
+      t
+  }
+
+  /** `f` over `items` on the driver IO pool, at most [[MaxInFlight]] at a
+    * time, results in input order. Waits for every started task; after a
+    * failure no further item starts, and the first failure's own
+    * exception is rethrown. */
+  def parMap[A, B](items: Seq[A])(f: A => B): Seq[B] =
+    parMapWithin(items, Long.MaxValue)(f).map(_.get)
+
+  /** [[parMap]] under one shared deadline of `timeoutMs` for the whole
+    * batch: an item not finished by then is None, and the tasks still
+    * running are cancelled (interrupted). */
+  def parMapWithin[A, B](items: Seq[A], timeoutMs: Long)(
+      f: A => B): Seq[Option[B]] = {
+    val in = items.toIndexedSeq
+    val n = in.size
+    val out = new AtomicReferenceArray[Option[B]](n)
+    val next = new AtomicInteger(0)
+    val failure = new AtomicReference[Throwable]()
+    val stopped = new AtomicBoolean(false)
+    // MaxInFlight runners pull items in order: the bound holds without a
+    // thread per item
+    val runners = Seq.fill(math.min(MaxInFlight, n))(pool.submit(new Runnable {
+      def run(): Unit = {
+        var i = next.getAndIncrement()
+        while (i < n && !stopped.get && failure.get == null) {
+          try out.set(i, Some(f(in(i))))
+          catch { case t: Throwable => failure.compareAndSet(null, t) }
+          i = next.getAndIncrement()
+        }
+      }
+    }))
+    val deadline =
+      if (timeoutMs == Long.MaxValue) None
+      else Some(System.nanoTime() + timeoutMs * 1000000L)
+    try runners.foreach { r =>
+      deadline match {
+        case None => r.get()
+        case Some(d) =>
+          r.get(math.max(0L, d - System.nanoTime()), TimeUnit.NANOSECONDS)
+      }
+    } catch {
+      case _: TimeoutException => ()
+    } finally stopped.set(true)
+    // the outcome as of the deadline: a task cancelled below cannot
+    // change it, nor turn its interrupt into a failure of the call
+    val err = failure.get
+    val res = (0 until n).map(i => Option(out.get(i)).flatten)
+    runners.foreach(_.cancel(true))
+    Option(err).foreach(e => throw e)
+    res
   }
 }
 

@@ -27,11 +27,12 @@ import org.apache.parquet.column.statistics.Statistics
  * dictionary-encoded column chunk, and `repo`/`path` chunks are
  * dictionary-encoded whenever keys repeat across files.
  *
- * All footers of one write are read through one bounded driver thread pool
- * under a shared deadline: one hung object-store metadata read must not
- * stall the job forever (the pool aborts with `shutdownNow` and surfaces
- * the failing path). Missing/truncated footer stats degrade to None — a
- * file without stats is simply never skipped.
+ * All footers of one write are read on the engine's driver IO pool
+ * ([[FsIO.parMapWithin]]) under a shared deadline: one hung object-store
+ * metadata read must not stall the job forever (the reads still running
+ * at the deadline are cancelled and the failing path is surfaced).
+ * Missing/truncated footer stats degrade to None — a file without stats
+ * is simply never skipped.
  */
 object FileStats {
 
@@ -86,10 +87,13 @@ object FileStats {
   }
 
   /** Fill `rows` + stats bounds into each entry via one pooled footer pass.
-    * Bounded: at most 16 concurrent metadata reads under ONE shared
-    * `timeoutSec` deadline for the whole batch, and the pool is
-    * `shutdownNow`n on exit — a hung object-store read (or a full outage
-    * hanging every read) can never stall the job past the deadline.
+    * Bounded: the reads run on the driver IO pool ([[FsIO.parMapWithin]],
+    * at most [[FsIO.MaxInFlight]] at once) under ONE shared `timeoutSec`
+    * deadline for the whole batch, and the reads still running at the
+    * deadline are cancelled — a hung object-store read (or a full outage
+    * hanging every read) can never stall the job past the deadline, and
+    * holds only its own pool thread, so a later call does not queue
+    * behind it.
     *
     * Failure policy follows the stats' role. By default (`failFast=false`,
     * the ingest write path) a per-file timeout/error DEGRADES that entry to
@@ -104,41 +108,29 @@ object FileStats {
   def fillAll(conf: Configuration, files: Seq[DataFileEntry],
               timeoutSec: Long = 120L,
               failFast: Boolean = false): Seq[DataFileEntry] = {
-    if (files.isEmpty) return files
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(16, files.size))
-    try {
-      val futs = files.map(f => f -> pool.submit(
-        new java.util.concurrent.Callable[Stats] {
-          def call(): Stats = read(conf, f.path)
-        }))
-      // ONE shared deadline across the whole batch — per-future timeouts
-      // would stack (a store outage over N hung files would stall
-      // N × timeoutSec before the degrade completed)
-      val deadline = System.nanoTime() + timeoutSec * 1000000000L
-      futs.map { case (f, fut) =>
-        val remainingMs =
-          math.max(1L, (deadline - System.nanoTime()) / 1000000L)
-        val s: Option[Stats] =
-          try Some(fut.get(remainingMs,
-            java.util.concurrent.TimeUnit.MILLISECONDS))
-          catch {
-            case e: java.util.concurrent.TimeoutException =>
-              if (failFast) throw new IllegalStateException(
-                s"footer read timed out after ${timeoutSec}s: ${f.path}", e)
-              System.err.println(s"[graft] footer read timed out " +
-                s"(${timeoutSec}s): ${f.path}; entry left stats-less")
-              None
-            case e: java.util.concurrent.ExecutionException =>
-              if (failFast) throw new IllegalStateException(
-                s"footer read failed: ${f.path}", e.getCause)
-              System.err.println(s"[graft] footer read failed: ${f.path} " +
-                s"(${e.getCause}); entry left stats-less")
-              None
-          }
-        s.fold(f)(st =>
-          f.copy(rows = st.rows, minSeq = st.minSeq, maxSeq = st.maxSeq))
+    // ONE shared deadline across the whole batch — per-file timeouts
+    // would stack (a store outage over N hung files would stall
+    // N × timeoutSec before the degrade completed)
+    val results = FsIO.parMapWithin(files, timeoutSec * 1000L)(f =>
+      scala.util.Try(read(conf, f.path)))
+    files.zip(results).map { case (f, r) =>
+      val s: Option[Stats] = r match {
+        case Some(scala.util.Success(st)) => Some(st)
+        case None =>
+          if (failFast) throw new IllegalStateException(
+            s"footer read timed out after ${timeoutSec}s: ${f.path}")
+          System.err.println(s"[graft] footer read timed out " +
+            s"(${timeoutSec}s): ${f.path}; entry left stats-less")
+          None
+        case Some(scala.util.Failure(e)) =>
+          if (failFast) throw new IllegalStateException(
+            s"footer read failed: ${f.path}", e)
+          System.err.println(s"[graft] footer read failed: ${f.path} " +
+            s"($e); entry left stats-less")
+          None
       }
-    } finally { pool.shutdownNow(); () }
+      s.fold(f)(st =>
+        f.copy(rows = st.rows, minSeq = st.minSeq, maxSeq = st.maxSeq))
+    }
   }
 }

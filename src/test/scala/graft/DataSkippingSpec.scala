@@ -386,6 +386,21 @@ class DataSkippingSpec extends SparkSpec {
     assert(e.getMessage.contains("timed out") &&
       e.getMessage.contains("x.parquet"),
       s"error must name the stuck file: ${e.getMessage}")
+    // a hung read holds only its own pool thread: with a full call's worth
+    // of reads still stuck past their deadline, a later fillAll over
+    // healthy files does not queue behind them
+    val stuck = (0 until graft.table.FsIO.MaxInFlight).map(i =>
+      DataFileEntry(s"slowfs:///nowhere/h$i.parquet", 0, -1L, 1))
+    assert(FileStats.fillAll(conf, stuck, timeoutSec = 1L).forall(_.rows == -1L))
+    val t = IceTable.create(tmpDir("hung-then-healthy"), numBuckets = 4)
+    val written = t.writeEpochFiles(rows(t, (0 until 40).map(i => s"k$i"), 3L), 0)
+    val t1 = System.nanoTime()
+    val filled = FileStats.fillAll(conf,
+      written.map(_.copy(rows = -1L, minSeq = None, maxSeq = None)),
+      timeoutSec = 60L)
+    val secs = (System.nanoTime() - t1) / 1e9
+    assert(secs < 10.0, s"a healthy fillAll after hung reads took $secs s")
+    assert(filled == written, "healthy footers fill every entry")
   }
 
   test("legacy manifests without the new fields parse with safe defaults") {
@@ -529,8 +544,7 @@ class DataSkippingSpec extends SparkSpec {
     assert(lookupAsRead(absent).isEmpty)
   }
 
-  test("epoch files write content, contentSha and lastSeq without a " +
-      "dictionary; repo, path, commit and lang keep theirs") {
+  test("only repo, path and lang keep a parquet dictionary in epoch files") {
     import scala.jdk.CollectionConverters._
     val t = IceTable.create(tmpDir("nodict"), numBuckets = 1)
     // every column repeats its values, so parquet keeps a dictionary
@@ -556,9 +570,9 @@ class DataSkippingSpec extends SparkSpec {
     finally reader.close()
     def dictionary(c: String): Boolean =
       encodings(c).exists(_.contains("DICTIONARY"))
-    Seq("content", "contentSha", "lastSeq").foreach(c =>
+    Seq("commit", "content", "contentSha", "lastSeq").foreach(c =>
       assert(!dictionary(c), s"$c: ${encodings(c)}"))
-    Seq("repo", "path", "commit", "language").foreach(c =>
+    Seq("repo", "path", "language").foreach(c =>
       assert(dictionary(c), s"$c: ${encodings(c)}"))
   }
 }

@@ -31,6 +31,43 @@ class GeneratorParitySpec extends SparkSpec {
       contentWords = 1))
   }
 
+  test("writeLog writes one contiguous seq range per file in one Spark " +
+      "job, bit-identical to eventAt") {
+    val spec = LogSpec(seed = 9L, nEvents = 1000, nRepos = 20,
+      nPathsPerRepo = 30, contentWords = 5)
+    val dir = tmpDir("genlog")
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    assert(org.apache.spark.sql.GraftSqlBridge.drainListenerBus(spark, 10000L))
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      ChangeLogGen.writeLog(spark, spec, dir, nFiles = 4)
+      assert(org.apache.spark.sql.GraftSqlBridge.drainListenerBus(spark,
+        10000L))
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(jobs.get == 1, s"the log write ran ${jobs.get} Spark jobs")
+    val files = new java.io.File(dir).listFiles().toSeq
+      .filter(_.getName.endsWith(".parquet")).map(_.getPath).sorted
+    assert(files.size == 4, s"files: $files")
+    val ranges = files.map { f =>
+      val seqs = spark.read.parquet(f).select("seq").as[Long].collect().sorted
+      assert(seqs.nonEmpty && seqs.toSeq == (seqs.head to seqs.last),
+        s"$f must hold one contiguous seq range")
+      (seqs.head, seqs.last)
+    }.sortBy(_._1)
+    assert(ranges.head._1 == 0L && ranges.last._2 == spec.nEvents - 1 &&
+      ranges.sliding(2).forall { case Seq(a, b) => b._1 == a._2 + 1 },
+      s"the files' ranges must tile the log: $ranges")
+    val written = spark.read.parquet(dir).as[graft.model.ChangeEvent]
+      .collect().sortBy(_.seq).toSeq
+    assert(written == ChangeLogGen.generateLocal(spec).toSeq)
+  }
+
   test("slice generation is bit-identical to eventAt at the bench shape") {
     // ReplayJob feeds the engine EPOCH SLICES of the expression generator
     // (generateExprSlice) — parity must hold on interior ranges (fromSeq >

@@ -28,19 +28,28 @@ class CountingGraftFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
 }
 
 /** Failure-injection FS: every `open` hangs far longer than any test
-  * timeout — models a stuck object-store metadata read (FileStats must
-  * abort with a bounded timeout instead of stalling the job). */
+  * timeout, ignoring interrupts like a stuck socket read — models a stuck
+  * object-store metadata read (FileStats must abort with a bounded
+  * timeout instead of stalling the job, and the stuck thread stays
+  * stuck). */
+object SlowGraftFileSystem {
+  def hang(): Unit = {
+    val end = System.nanoTime() + 600000000000L
+    while (System.nanoTime() < end)
+      try Thread.sleep(1000L) catch { case _: InterruptedException => () }
+  }
+}
 class SlowGraftFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
   override def getScheme: String = "slowfs"
   override def getUri: URI = URI.create("slowfs:///")
   override def getFileStatus(f: org.apache.hadoop.fs.Path)
       : org.apache.hadoop.fs.FileStatus = {
-    Thread.sleep(600000L)
+    SlowGraftFileSystem.hang()
     super.getFileStatus(f)
   }
   override def open(f: org.apache.hadoop.fs.Path, bufferSize: Int)
       : org.apache.hadoop.fs.FSDataInputStream = {
-    Thread.sleep(600000L)
+    SlowGraftFileSystem.hang()
     super.open(f, bufferSize)
   }
 }

@@ -65,7 +65,9 @@ class MetricsSpec extends SparkSpec {
         nLogPartitions = 2, claimedRange = Some((49L, 60L))))
       assert(outE.skipped && outE.manifest.version == out0.manifest.version + 1)
       graft.maintenance.Compaction.compact(spark, t)
+      val expireT0 = System.nanoTime()
       t.expireSnapshots(keepLast = 1)
+      val expireWall = (System.nanoTime() - expireT0) / 1000000L
 
       // local ChecksumFileSystem buffers until close: close reporters
       // (= the consumer contract on file://) before reading the lines
@@ -106,8 +108,15 @@ class MetricsSpec extends SparkSpec {
         mo("writeMs") == "0")
       assert(events.exists(e => e._1 == "graft.maintenance" &&
         e._2 == "CompactionFinished" && e._3("table") == t.dir))
-      assert(events.exists(e => e._1 == "graft.maintenance" &&
-        e._2 == "SnapshotsExpired"))
+      val expiry = events.filter(e => e._1 == "graft.maintenance" &&
+        e._2 == "SnapshotsExpired").map(_._3)
+      assert(expiry.size == 1, s"one expiry event: $events")
+      // wall ms, split into listing and deletes, within the caller's time
+      val Seq(wallMs, listMs, deleteMs) =
+        Seq("wallMs", "listMs", "deleteMs").map(expiry.head(_).toLong)
+      assert(listMs >= 0 && deleteMs >= 0 &&
+        math.abs(wallMs - listMs - deleteMs) <= 1 && wallMs <= expireWall,
+        s"expiry took $expireWall ms: ${expiry.head}")
     } finally Metrics.clearReporters()
   }
 

@@ -8,6 +8,7 @@ import graft.table.IceTable
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.GraftSqlBridge
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 /**
  * Table mirroring by file copy (MirrorJob.sync): state, offset and
@@ -450,6 +451,71 @@ class MirrorSpec extends SparkSpec {
     assertConverged(up, mir)
   }
 
+  /** (bucket dir, name) of every file under a table's data/ */
+  private def onDisk(dir: String): Set[String] =
+    Option(new java.io.File(s"$dir/data").listFiles()).toSeq.flatten
+      .flatMap(b => b.listFiles().toSeq.map(f => s"${b.getName}/${f.getName}"))
+      .toSet
+
+  /** every file and dir under a table's data/ and staging/, with its
+    * length and mtime */
+  private def tree(dir: String): Set[(String, Long, Long)] =
+    Seq("data", "staging").flatMap { sub =>
+      val root = new java.io.File(s"$dir/$sub")
+      if (!root.exists) Nil
+      else {
+        val walk = java.nio.file.Files.walk(root.toPath)
+        try walk.iterator().asScala.map { p =>
+          val f = p.toFile
+          (p.toString, if (f.isFile) f.length else -1L, f.lastModified)
+        }.toList
+        finally walk.close()
+      }
+    }.toSet
+
+  test("copy-then-commit crash points over a parallel copy of 8 files: the " +
+      "injected fault surfaces as itself, nothing is committed, and no copy " +
+      "outlives the failed sync") {
+    spark.sparkContext.hadoopConfiguration.set("fs.faultfs.impl",
+      classOf[FaultFileSystem].getName)
+    val up = IceTable.create(tmpDir("pcrash-up"), numBuckets = 8)
+    apply(up, 0, -1, 64, (1 to 64).map(i =>
+      ev("i", i.toLong, "r", s"p$i", s"A$i")): _*)
+    assert(up.currentManifest().get.files.size == 8,
+      "fixture must fill all 8 buckets")
+    var k = 0
+    var failed = true
+    while (failed) {
+      k += 1
+      val dir = s"${tmpDir(s"pcrash-$k")}/m"
+      val mir = IceTable.create(s"faultfs:$dir", numBuckets = 8)
+      FaultFileSystem.arm(k)
+      val thrown =
+        try { sync(up, mir); None }
+        catch { case e: java.io.IOException => Some(e) }
+        finally FaultFileSystem.disarm()
+      failed = thrown.isDefined
+      thrown.foreach { e =>
+        assert(e.getClass == classOf[java.io.IOException] &&
+          e.getMessage.startsWith(FaultFileSystem.Injected), s"k=$k: $e")
+        assert(mir.currentManifest().isEmpty, s"k=$k: nothing is committed")
+        val atThrow = tree(dir)
+        Thread.sleep(200L)
+        assert(tree(dir) == atThrow,
+          s"k=$k: data/ and staging/ changed after sync threw")
+        // heal: a healthy re-sync converges and the sweep leaves only
+        // the referenced files
+        sync(up, mir)
+        assert(names(mir) == names(up), s"k=$k")
+        mir.expireSnapshots(orphanDataGraceMillis = 0L)
+        assert(onDisk(dir) == names(mir), s"k=$k: data/ after the sweep")
+      }
+      if (!failed) assertConverged(up, mir)
+    }
+    // 8 copies of create + mkdirs + rename each, then the commit
+    assert(k > 3 * 8, s"the sync made only ${k - 1} mutating calls")
+  }
+
   test("copy-then-commit crash points: a sync failing at its k-th " +
       "mutating file call, then a healthy re-sync, converges and leaves " +
       "only referenced files, for every k") {
@@ -461,11 +527,6 @@ class MirrorSpec extends SparkSpec {
     val v0 = up.currentVersion()
     apply(up, 1, 4, 6, ev("u", 5, "r", "p1", "B1"), ev("d", 6, "r", "p2", ""))
     val v1 = up.currentVersion()
-    /** (bucket dir, name) of every file under the mirror's data/ */
-    def onDisk(dir: String): Set[String] =
-      Option(new java.io.File(s"$dir/data").listFiles()).toSeq.flatten
-        .flatMap(b => b.listFiles().toSeq.map(f => s"${b.getName}/${f.getName}"))
-        .toSet
     Seq("bootstrap" -> None, "incremental" -> Some(v0)).foreach {
       case (phase, from) =>
         var k = 0
