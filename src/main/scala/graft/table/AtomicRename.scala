@@ -1,6 +1,6 @@
 package graft.table
 
-import java.util.concurrent.{Executors, TimeUnit, TimeoutException}
+import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
 import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger,
   AtomicReference, AtomicReferenceArray}
 
@@ -54,7 +54,9 @@ private[graft] object FsIO {
   /** `f` over `items` on the driver IO pool, at most [[MaxInFlight]] at a
     * time, results in input order. Waits for every started task; after a
     * failure no further item starts, and the first failure's own
-    * exception is rethrown. */
+    * exception is rethrown. An interrupt of the caller also stops further
+    * items and still waits for the started ones, then raises
+    * `InterruptedException`. */
   def parMap[A, B](items: Seq[A])(f: A => B): Seq[B] =
     parMapWithin(items, Long.MaxValue)(f).map(_.get)
 
@@ -71,33 +73,43 @@ private[graft] object FsIO {
     val stopped = new AtomicBoolean(false)
     // MaxInFlight runners pull items in order: the bound holds without a
     // thread per item
-    val runners = Seq.fill(math.min(MaxInFlight, n))(pool.submit(new Runnable {
-      def run(): Unit = {
+    val k = math.min(MaxInFlight, n)
+    val ended = new CountDownLatch(k)
+    val runners = Seq.fill(k)(pool.submit(new Runnable {
+      def run(): Unit = try {
         var i = next.getAndIncrement()
         while (i < n && !stopped.get && failure.get == null) {
           try out.set(i, Some(f(in(i))))
           catch { case t: Throwable => failure.compareAndSet(null, t) }
           i = next.getAndIncrement()
         }
-      }
+      } finally ended.countDown()
     }))
     val deadline =
       if (timeoutMs == Long.MaxValue) None
       else Some(System.nanoTime() + timeoutMs * 1000000L)
-    try runners.foreach { r =>
-      deadline match {
-        case None => r.get()
-        case Some(d) =>
-          r.get(math.max(0L, d - System.nanoTime()), TimeUnit.NANOSECONDS)
+    var interrupted = false
+    var waiting = true
+    while (waiting) {
+      try {
+        deadline match {
+          case None => ended.await()
+          case Some(d) => ended.await(math.max(0L, d - System.nanoTime()),
+            TimeUnit.NANOSECONDS)
+        }
+        waiting = false
+      } catch {
+        case _: InterruptedException => interrupted = true; stopped.set(true)
       }
-    } catch {
-      case _: TimeoutException => ()
-    } finally stopped.set(true)
+    }
+    stopped.set(true)
     // the outcome as of the deadline: a task cancelled below cannot
     // change it, nor turn its interrupt into a failure of the call
     val err = failure.get
     val res = (0 until n).map(i => Option(out.get(i)).flatten)
     runners.foreach(_.cancel(true))
+    if (interrupted)
+      throw new InterruptedException("interrupted while awaiting driver IO")
     Option(err).foreach(e => throw e)
     res
   }

@@ -564,8 +564,8 @@ final class IceTable(val dir: String, val defaultNumBuckets: Int) {
       v < cutoff && manifests(v).commitTimeMillis < olderThanMillis)
     val expiredSet = expired.toSet
     val retained = versions.filterNot(expiredSet)
-    // listings and deletes run on the driver IO pool; deleteNs sums the
-    // delete phases, the rest of the wall time is listing
+    // deleteNs sums the delete phases, the rest of the wall time is
+    // manifest reads and listings
     var deleteNs = 0L
     def deleting[T](body: => T): T = {
       val d0 = System.nanoTime()
@@ -589,13 +589,13 @@ final class IceTable(val dir: String, val defaultNumBuckets: Int) {
       val nowD = System.currentTimeMillis()
       val candidates: Seq[HPath] =
         if (!f.exists(dataDir)) Nil
-        else FsIO.parMap(f.listStatus(dataDir).toSeq.filter(s =>
-            s.isDirectory && s.getPath.getName.startsWith("bucket=")))(d =>
-          f.listStatus(d.getPath).toSeq).flatten
+        else f.listStatus(dataDir).iterator
+          .filter(s => s.isDirectory && s.getPath.getName.startsWith("bucket="))
+          .flatMap(d => f.listStatus(d.getPath).iterator)
           .filter(s => s.isFile &&
             !referenced.contains(qual(s.getPath.toString)) &&
             nowD - s.getModificationTime >= dataGrace)
-          .map(_.getPath)
+          .map(_.getPath).toSeq
       val swept =
         if (candidates.isEmpty) 0
         else {
@@ -608,15 +608,14 @@ final class IceTable(val dir: String, val defaultNumBuckets: Int) {
               try readManifest(v).files.map(e => qual(e.path))
               catch { case _: java.io.FileNotFoundException => Nil }
             }.toSet
-          val doomed =
-            candidates.filterNot(p => lateRefs.contains(qual(p.toString)))
-          deleting(FsIO.parMap(doomed)(p => f.delete(p, false)).count(identity))
+          deleting(candidates.filterNot(p => lateRefs.contains(qual(p.toString)))
+            .count(p => f.delete(p, false)))
         }
       // staging leftovers (crashed mid-write epochs) age out the same way
       if (f.exists(stagingDir)) {
         val stale = f.listStatus(stagingDir).toSeq
           .filter(s => nowD - s.getModificationTime >= dataGrace)
-        deleting(FsIO.parMap(stale)(s => f.delete(s.getPath, true)))
+        deleting(stale.foreach(s => f.delete(s.getPath, true)))
       }
       swept
     }
@@ -625,14 +624,13 @@ final class IceTable(val dir: String, val defaultNumBuckets: Int) {
       retained.flatMap(v => manifests(v).files.map(_.path)).toSet
     val expiredFiles: Set[String] =
       expired.flatMap(v => manifests(v).files.map(_.path)).toSet
-    val removable = (expiredFiles -- retainedFiles).toSeq
-    // ORDERING (crash safety): expired snapshot JSONS go FIRST — every one
-    // is gone before any data file goes, so a crash later in this method
-    // only leaks unreferenced data files (invisible to readers; the orphan
-    // sweep collects them next run)
+    val removable = expiredFiles -- retainedFiles
+    // ORDERING (crash safety): expired snapshot JSONS go FIRST — a crash
+    // later in this method only leaks unreferenced data files (invisible to
+    // readers; the orphan sweep collects them next run)
     deleting {
-      FsIO.parMap(expired)(v => f.delete(snapPath(v), false))
-      FsIO.parMap(removable)(p => f.delete(new HPath(p), false))
+      expired.foreach(v => f.delete(snapPath(v), false))
+      removable.foreach(p => f.delete(new HPath(p), false))
     }
     val wallNs = System.nanoTime() - t0
     graft.metrics.Metrics.emit("graft.maintenance", "SnapshotsExpired", Map(
@@ -734,24 +732,23 @@ final class IceTable(val dir: String, val defaultNumBuckets: Int) {
     writer.parquet(staging.toString)
     val t1 = System.nanoTime()
     // publish: move every staged file under the flat single-level data
-    // layout, its name tagged with the epoch; one bucket dir per task on
-    // the driver IO pool, and staging goes only after every rename
-    val bucketDirs = f.listStatus(staging).toSeq
+    // layout, its name tagged with the epoch
+    val sortedEntries = f.listStatus(staging).iterator
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("bucket="))
-    val sortedEntries = FsIO.parMap(bucketDirs) { d =>
-      val bucket = d.getPath.getName.stripPrefix("bucket=").toInt
-      val destDir = new HPath(dataDir, s"bucket=$bucket")
-      f.mkdirs(destDir)
-      f.listStatus(d.getPath).toSeq
-        .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-        .map { s =>
-          val dest = new HPath(destDir, s"e$epochId-" + s.getPath.getName)
-          if (!f.rename(s.getPath, dest))
-            throw new IllegalStateException(s"publish failed: $dest")
-          DataFileEntry(dest.toString, bucket, -1L, schemaId, s.getLen,
-            sortedByKey = true)
-        }
-    }.flatten.sortBy(e => (e.bucket, e.path))
+      .flatMap { d =>
+        val bucket = d.getPath.getName.stripPrefix("bucket=").toInt
+        val destDir = new HPath(dataDir, s"bucket=$bucket")
+        f.mkdirs(destDir)
+        f.listStatus(d.getPath).iterator
+          .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
+          .map { s =>
+            val dest = new HPath(destDir, s"e$epochId-" + s.getPath.getName)
+            if (!f.rename(s.getPath, dest))
+              throw new IllegalStateException(s"publish failed: $dest")
+            DataFileEntry(dest.toString, bucket, -1L, schemaId, s.getLen,
+              sortedByKey = true)
+          }
+      }.toSeq.sortBy(e => (e.bucket, e.path))
     f.delete(staging, true)
     val t2 = System.nanoTime()
     val files = FileStats.fillAll(hconf, sortedEntries)
@@ -761,11 +758,11 @@ final class IceTable(val dir: String, val defaultNumBuckets: Int) {
 
   /** Publish byte copies of `source`'s data `files` into this table's
     * layout under their own bucket and name, in parallel on the driver IO
-    * pool ([[FsIO.parMap]]): each file is copied into one fresh staging
-    * dir, then renamed into `data/bucket=<b>/<name>`, replacing a
-    * same-named file that a crashed earlier copy left there (never
-    * adopting it, so every published file carries a fresh mtime for the
-    * orphan sweep's grace). Every copy has ended before this returns or
+    * pool ([[FsIO.parMap]]): each file is copied flat into this call's one
+    * staging dir (`staging/copy-<t>/b<bucket>-<name>`), then renamed into
+    * `data/bucket=<b>/<name>`, replacing a same-named file that a crashed
+    * earlier copy left there (never adopting it, so every published file
+    * carries a fresh mtime for the orphan sweep's grace). Every copy has ended before this returns or
     * throws; a failed copy's own exception is rethrown. Returns the
     * entries at their new paths with their footer stats kept; the caller
     * commits them. */
@@ -935,14 +932,12 @@ object IceTable {
   }
 
   /** Write options turning parquet's dictionary off for the columns whose
-    * values do not repeat within a bucket file: `commit` (colId 3),
-    * `content` (colId 5), `contentSha` (colId 6) and the physical
-    * `lastSeq`. Parquet hashed every such value into a dictionary, then
-    * dropped it at the page flush and wrote the chunk PLAIN. A commit's
-    * paths hash to different buckets, so its id does not repeat inside
-    * one file either. Looked up by colId, so a rename keeps the setting.
-    * `repo` and `path` keep theirs (lookups prune on them), and so does
-    * `lang` (four values). */
+    * values are unique per event: `commit` (colId 3), `content` (colId 5),
+    * `contentSha` (colId 6) and the physical `lastSeq`. Parquet hashed
+    * every such value into a dictionary, then dropped it at the page flush
+    * and wrote the chunk PLAIN. Looked up by colId, so a rename keeps the
+    * setting. `repo` and `path` keep theirs (lookups prune on them), and
+    * so does `lang` (four values). */
   private def noDictionary(schemaId: Int): Map[String, String] = {
     val byId = SchemaRegistry.schemaFor(schemaId).byColId
     (Seq(3, 5, 6).flatMap(byId.get).map(_.name) :+ "lastSeq")
